@@ -260,17 +260,6 @@ object Cli {
       if (keysFlagged) s"error: $cmd resolved an empty bibcode set"
       else s"error: $cmd needs -b or -n"
 
-    // One distributed pass over a sink-status frame → (ok, total). A
-    // single agg job so the underlying mapPartitions transports fire
-    // exactly once; nothing per-record ever reaches the driver (the old
-    // .collect()-to-count here was an OOM at the reference's 28.8M rows)
-    def sinkCounts(status: org.apache.spark.sql.Dataset[Sinks.SinkStatus]): (Long, Long) = {
-      val r = status.toDF().agg(
-        coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-        count(lit(1))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
     // --solr-collection (run.py:734-738, 1050): rewrite this run's SOLR
     // sink targets — the T22 URL rewrite applied to the configured update
     // URLs — and fan the batch out to every resolved target. Absent, the
@@ -430,7 +419,7 @@ object Cli {
       val doomed = namedBibcodesDS().getOrElse(
         { out(needKeys("--delete")); return 2 })
       val sm = sitemapStore
-      val (sinkOk, total) = sinkCounts(Sinks.deleteByBibcodes(doomed,
+      val (sinkOk, total) = Sinks.counts(Sinks.deleteByBibcodes(doomed,
         Seq(deps.solrTransport, deps.bulkTransport)))
       // each store CAS-merges its own delete against ITS current
       // snapshot (per-store deletes depend only on that store + the
@@ -782,7 +771,7 @@ object Cli {
         .as[graft.records.MasterRecord]
         .map(r => (r.bibcode, org.json4s.jackson.JsonMethods.compact(
           org.json4s.jackson.JsonMethods.render(IndexJob.boostRequest(r)))))
-      val (okCnt, total) = sinkCounts(Sinks.writeBulk(
+      val (okCnt, total) = Sinks.counts(Sinks.writeBulk(
         requests.map { case (b, p) => (b, p, "", true) }
           .toDF("bibcode", "payload", "checksum", "changed"),
         deps.bulkTransport, batchSize = batchSize))
@@ -809,7 +798,7 @@ object Cli {
           selected.flatMap(r => IndexJob.affAugmentRequest(r).map(j =>
             org.json4s.jackson.JsonMethods.compact(
               org.json4s.jackson.JsonMethods.render(j))))
-      val (okCnt, total) = sinkCounts(Sinks.writeBulk(
+      val (okCnt, total) = Sinks.counts(Sinks.writeBulk(
         requests.map(p => ("", p, "", true)).toDF("bibcode", "payload", "checksum", "changed"),
         deps.bulkTransport))
       out(s"${if (a.contains("boost")) "boost" else "augment"} requests sent: " +
@@ -873,7 +862,7 @@ object Cli {
           out(s"classifier request written to $path")
           return 0
         }
-        val (okCnt, total) = sinkCounts(Sinks.writeBulk(
+        val (okCnt, total) = Sinks.counts(Sinks.writeBulk(
           entries.map(p => ("", p, "", true))
             .toDF("bibcode", "payload", "checksum", "changed"),
           deps.bulkTransport, batchSize = batch))
@@ -890,7 +879,7 @@ object Cli {
         .flatMap(r => IndexJob.classifyRequest(r, step).map(j =>
           org.json4s.jackson.JsonMethods.compact(
             org.json4s.jackson.JsonMethods.render(j))))
-      val (okCnt, total) = sinkCounts(Sinks.writeBulk(
+      val (okCnt, total) = Sinks.counts(Sinks.writeBulk(
         requests.map(p => ("", p, "", true)).toDF("bibcode", "payload", "checksum", "changed"),
         deps.bulkTransport))
       out(s"classify requests ($step) sent: $okCnt/$total")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -12,9 +12,12 @@ import graft.streaming.Watermark
 /** The whole reference topology as one batch job (SURVEY.md §3):
   * ingest messages → merge into the master snapshot → eligibility gate →
   * build the three sink payloads → push with retry ladders → stamp
-  * processed/checksum/status → next snapshot. What took the reference 13
-  * Celery queues and three databases is three Spark jobs over one
-  * snapshot store; every stage is an operator tested on its own.
+  * processed/checksum/status in one keyed join → next snapshot. What took
+  * the reference 13 Celery queues and three databases is one batch over
+  * one snapshot store; every stage is an operator tested on its own. In
+  * perfbench's traced `bulk_reindex` run (4 cores) a forced full reindex
+  * of a 3,000-record store runs 11 Spark jobs, a queue consumer's
+  * micro-batch 29 and a feed-driven sweep 35.
   */
 object Pipeline {
 
@@ -58,9 +61,10 @@ object Pipeline {
     // bench-facing stage attribution (OpsBench's wave decomposition):
     // wall time between this batch's ACTIONS — "merge_read" covers the
     // keyed lookup + upsert compute up to the merged-count
-    // materialization, "publish" the gate/transform/stamp compute forced
-    // by the layer write plus the CAS + auto-compaction, "report" the
-    // cached status aggregations. Zero cost when left defaulted.
+    // materialization, "publish" the gate/transform/sink compute forced
+    // by the delivery counts, then the stamp, the layer write and the
+    // CAS + auto-compaction, "report" what the report reads after the
+    // publish. Zero cost when left defaulted.
     var stageT0 = System.nanoTime()
     def stage(name: String): Unit = {
       stageTimer(name, (System.nanoTime() - stageT0) / 1e9)
@@ -158,12 +162,8 @@ object Pipeline {
           .map(r => (r.bibcode, org.json4s.jackson.JsonMethods.compact(
             org.json4s.jackson.JsonMethods.render(IndexJob.boostRequest(r)))))
           .toDF("bibcode", "payload")
-        // one distributed agg fires the partition-local batched sends and
-        // counts outcomes without collecting per-record statuses
-        val r = Sinks.writeBulk(requests, bulkTransport).toDF().agg(
-          coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-          count(lit(1))).head()
-        (r.getLong(0), r.getLong(1) - r.getLong(0))
+        val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
+        (ok, total - ok)
       }
 
     // a metadata update additionally requests affiliation augmentation
@@ -185,17 +185,12 @@ object Pipeline {
             (r.bibcode, org.json4s.jackson.JsonMethods.compact(
               org.json4s.jackson.JsonMethods.render(j)))))
           .toDF("bibcode", "payload")
-        val r = Sinks.writeBulk(requests, bulkTransport).toDF().agg(
-          coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-          count(lit(1))).head()
-        (r.getLong(0), r.getLong(1) - r.getLong(0))
+        val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
+        (ok, total - ok)
       }
 
-    // P1-P3 gate + payload builds + P4 checksum suppression. The payload
-    // frames are cached: each is consumed three times (sink write, stamp
-    // join, report count) and rebuilding one means a full JSON-parse +
-    // transform pass over the selection
-    // the reference's `-f` sets force AND ignore_checksums together
+    // P1-P3 gate + payload builds + P4 checksum suppression. The
+    // reference's `-f` sets force AND ignore_checksums together
     // (run.py:82-86): force widens eligibility, ignoreChecksums re-sends
     // payloads whose checksum still matches the stored one; a -b/-n
     // bibcode list (restrictTo) narrows the sweep to the named records
@@ -209,51 +204,50 @@ object Pipeline {
         gated.join(keys.toDF("bibcode"), Seq("bibcode"), "left_semi").as[MasterRecord]
       case None => gated
     }
-    val batch0 = IndexJob.run(selected, ignoreChecksums = ignoreChecksums)
-    val batch = IndexJob.IndexBatch(
-      batch0.solr.cache(), batch0.metrics.cache(), batch0.links.cache())
+    val batch = IndexJob.run(selected, ignoreChecksums = ignoreChecksums)
+    // each payload frame is read once, by its sink write, except metrics,
+    // which the metrics store leg below reads again
+    val cacheMetrics = metricsStore.isDefined && sinks("metrics")
+    if (cacheMetrics) batch.metrics.cache()
 
-    // S6/S7/S8 with retry ladders — cached so re-reads normally hit the
-    // materialized statuses instead of re-firing transports. NOTE: cache
-    // is best-effort; an evicted/lost partition recomputes and re-sends.
+    // S6/S7/S8 with retry ladders, tagged by sink and unioned into the
+    // batch's delivery outcomes. The -r letters (s/m/l, run.py:687-694)
+    // choose which sinks this run updates; an unselected sink neither
+    // sends nor stamps, so it simply has no part in the union. Cached: the
+    // stamp, the publish key set and the report all read the outcomes,
+    // and a re-read must not re-fire the transports. NOTE: cache is
+    // best-effort; an evicted/lost partition recomputes and re-sends.
     // That is safe here because the sinks are idempotent by design (ST4:
     // upsert semantics + checksum change-suppression make duplicate
     // deliveries no-ops); a strict once-only guarantee would require
-    // persisting the status frame to durable storage first.
-    // the -r letters (s/m/l, run.py:687-694) choose which sinks this run
-    // updates; an unselected sink neither sends nor stamps
-    def emptyStatus = spark.emptyDataset[Sinks.SinkStatus]
-    val solrStatus = (if (sinks("solr")) Sinks.writeSolr(batch.solr, solrTransport)
-      else emptyStatus).cache()
-    val metricsStatus = (if (sinks("metrics")) Sinks.writeBulk(batch.metrics, bulkTransport)
-      else emptyStatus).cache()
-    val linksStatus = (if (sinks("links")) Sinks.writeBulk(batch.links, bulkTransport)
-      else emptyStatus).cache()
-
-    // M4/ST6 stamping: successes carry their checksum, failures a status
-    def stamp(m: DataFrame, status: Dataset[Sinks.SinkStatus],
-        payloads: DataFrame, sinkType: String): DataFrame = {
-      val okKeys = status.filter(_.ok).toDF().select(col("bibcode"))
-        .join(payloads.select(col("bibcode"), col("checksum")), Seq("bibcode"))
-      val failKeys = status.filter(!_.ok).toDF().select(col("bibcode"),
-        lit(null).cast("string").as("checksum"))
-      val afterOk = MergeEngine.markProcessed(m, okKeys, sinkType, Some("success"), now)
-      MergeEngine.markProcessed(afterOk, failKeys, sinkType,
-        Some(sinkType match {
-          case "solr" => "solr-failed"
-          case "metrics" => "metrics-failed"
-          case _ => "links-failed"
-        }), now)
+    // persisting the outcomes to durable storage first.
+    val outcomes: Option[DataFrame] = Seq(
+        "solr" -> Sinks.writeSolr(batch.solr, solrTransport),
+        "metrics" -> Sinks.writeBulk(batch.metrics, bulkTransport),
+        "links" -> Sinks.writeBulk(batch.links, bulkTransport))
+      .collect { case (s, status) if sinks(s) => Sinks.outcomes(s, status) }
+      .reduceOption(_ unionByName _)
+      .map(_.cache())
+    // every delivery count in one aggregation over the outcomes, run first:
+    // it fires the transports and fills the cache, so the stamp below is
+    // planned against the outcomes' measured size — a broadcast join for
+    // a batch-sized outcome set, a shuffle join for a corpus-sized one.
+    // `indexed` counts the due solr payloads, one outcome each when solr
+    // is selected
+    val counts = outcomes.map { o =>
+      def n(sink: String, cond: Column) = count_if(col("sink") === sink && cond)
+      o.agg(n("solr", lit(true)), n("solr", col("ok")), n("solr", !col("ok")),
+        n("metrics", col("ok")), n("links", col("ok"))).head()
     }
 
-    // update_processed=False (app.py:381-430, run.py --update-processed):
-    // deliveries still happen but NO records-table state is touched —
-    // no processed timestamps, checksums, or statuses, success or failure
-    val stamped =
-      if (!updateProcessed) master
-      else stamp(stamp(stamp(master, solrStatus, batch.solr, "solr"),
-        metricsStatus, batch.metrics, "metrics"),
-        linksStatus, batch.links, "links")
+    // M4/ST6 stamping in one keyed join. update_processed=False
+    // (app.py:381-430, run.py --update-processed): deliveries still happen
+    // but NO records-table state is touched — no processed timestamps,
+    // checksums, or statuses, success or failure
+    val stamped = outcomes match {
+      case Some(o) if updateProcessed => MergeEngine.stampSinks(master, o, now)
+      case _ => master
+    }
 
     // S7's store leg: merge the due metrics payloads into the metrics
     // snapshot (whole-row replace per bibcode, MetricsTable semantics).
@@ -311,10 +305,8 @@ object Pipeline {
       else {
         val stampKeys =
           if (!updateProcessed) updates.select(col("bibcode"))
-          else updates.select(col("bibcode"))
-            .unionByName(solrStatus.toDF().select(col("bibcode")))
-            .unionByName(metricsStatus.toDF().select(col("bibcode")))
-            .unionByName(linksStatus.toDF().select(col("bibcode")))
+          else outcomes.foldLeft(updates.select(col("bibcode")).toDF())(
+            (keys, o) => keys.unionByName(o.select(col("bibcode"))))
         if (keyLocal)
           // queue batch: keys are the batch's — always a delta layer
           store.writeMergeKeyed(spark, stampKeys, _ =>
@@ -374,30 +366,21 @@ object Pipeline {
     }
     watermarkDir.foreach(Watermark.advance(spark, _, "last.reindex.normal", now))
 
-    // one aggregation job per status frame, not one per count — the
-    // micro-batch wall has a fixed driver-job floor and the report was
-    // paying six jobs where three carry the same numbers
-    def okFail(status: Dataset[Sinks.SinkStatus]): (Long, Long) = {
-      val r = status.toDF().agg(
-        coalesce(sum(when(col("ok"), 1L).otherwise(0L)), lit(0L)),
-        count(lit(1))).head()
-      (r.getLong(0), r.getLong(1) - r.getLong(0))
-    }
-    val (sOk, sFail) = okFail(solrStatus)
+    def got(i: Int): Long = counts.fold(0L)(_.getLong(i))
     val report = RunReport(version, mergedCount,
-      indexed = batch.solr.count(),
-      solrOk = sOk,
-      solrFailed = sFail,
-      metricsOk = okFail(metricsStatus)._1,
-      linksOk = okFail(linksStatus)._1,
+      indexed = if (sinks("solr")) got(0) else batch.solr.count(),
+      solrOk = got(1),
+      solrFailed = got(2),
+      metricsOk = got(3),
+      linksOk = got(4),
       boostOk = boostOk, boostFailed = boostFailed,
       augmentOk = augmentOk, augmentFailed = augmentFailed)
 
     stage("report")
     // release this batch's caches — in runStream a leak here would grow
-    // executor storage by four datasets per micro-batch
-    Seq(batch.solr, batch.metrics, batch.links).foreach(_.unpersist())
-    Seq(solrStatus, metricsStatus, linksStatus).foreach(_.unpersist())
+    // executor storage per micro-batch
+    outcomes.foreach(_.unpersist())
+    if (cacheMetrics) batch.metrics.unpersist()
     master.unpersist()
     report
   }

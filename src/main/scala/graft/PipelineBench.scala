@@ -427,25 +427,17 @@ object PipelineBench {
         metricsB.count(); linksB.count()
         val stTransformSec = secs(tb)
         tb = System.nanoTime()
-        val sSolrB = graft.sources.Sinks.writeSolr(solrB, SolrTransport).cache()
-        val sMetB = graft.sources.Sinks.writeBulk(metricsB, BulkTransport).cache()
-        val sLnkB = graft.sources.Sinks.writeBulk(linksB, BulkTransport).cache()
+        val sSolrB = Sinks.writeSolr(solrB, SolrTransport).cache()
+        val sMetB = Sinks.writeBulk(metricsB, BulkTransport).cache()
+        val sLnkB = Sinks.writeBulk(linksB, BulkTransport).cache()
         require(sSolrB.filter(_.ok).count() == 2500, "breakdown sink drifted")
         sMetB.count(); sLnkB.count()
         val stSinkSec = secs(tb)
         tb = System.nanoTime()
-        def okStampB(m: org.apache.spark.sql.DataFrame,
-            status: org.apache.spark.sql.Dataset[graft.sources.Sinks.SinkStatus],
-            payloads: org.apache.spark.sql.DataFrame, sinkType: String) =
-          graft.operators.MergeEngine.markProcessed(m,
-            status.filter(_.ok).toDF().select(col("bibcode"))
-              .join(payloads.select(col("bibcode"), col("checksum")), Seq("bibcode")),
-            sinkType, Some("success"), nowB)
-        val stampedB = okStampB(okStampB(okStampB(feedB, sSolrB, solrB, "solr"),
-          sMetB, metricsB, "metrics"), sLnkB, linksB, "links")
-        val stampKeysB = sSolrB.toDF().select(col("bibcode"))
-          .unionByName(sMetB.toDF().select(col("bibcode")))
-          .unionByName(sLnkB.toDF().select(col("bibcode"))).distinct()
+        val outcomesB = Seq("solr" -> sSolrB, "metrics" -> sMetB, "links" -> sLnkB)
+          .map { case (s, st) => Sinks.outcomes(s, st) }.reduce(_ unionByName _)
+        val stampedB = graft.operators.MergeEngine.stampSinks(feedB, outcomesB, nowB)
+        val stampKeysB = outcomesB.select(col("bibcode")).distinct()
         storeL.writeMergeKeyed(spark, stampKeysB, _ =>
           stampedB.join(stampKeysB, Seq("bibcode"), "left_semi"))
         val stPublishSec = secs(tb)

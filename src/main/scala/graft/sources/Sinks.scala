@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, count, count_if, lit}
 import org.json4s._
 
 import graft.functions.CanonicalJson
@@ -17,10 +18,12 @@ import graft.transform.SolrTransform
   *
   * Spark shape: `mapPartitions` — each partition drains its rows in
   * transport batches, so RPC amortization and the retry ladder are
-  * partition-local control flow; the returned status frame joins back to
-  * the master table (MergeEngine.markProcessed). The transport is a
-  * pluggable serializable function so tests inject faults and production
-  * supplies an HTTP client built once per partition.
+  * partition-local control flow. Each status row carries the checksum of
+  * the payload it delivered, so the pipeline stamps the master table from
+  * the status frames alone (MergeEngine.stampSinks), with no join back to
+  * the payloads. The transport is a pluggable serializable function so
+  * tests inject faults and production supplies an HTTP client built once
+  * per partition.
   */
 object Sinks {
 
@@ -30,9 +33,24 @@ object Sinks {
     def send(payloads: Seq[String]): Unit
   }
 
-  /** Per-document outcome of a sink write (ST6 input). */
+  /** Per-document outcome of a sink write (ST6 input). `checksum` is the
+    * delivered payload's (null for rows without one, such as deletes). */
   case class SinkStatus(bibcode: String, ok: Boolean,
-      retriedSolo: Boolean, bodyStripped: Boolean)
+      retriedSolo: Boolean, bodyStripped: Boolean, checksum: String = null)
+
+  /** (ok, total) of a status frame in one aggregation job, so the
+    * transports behind it fire exactly once and nothing per-record reaches
+    * the driver (collecting statuses to count them is an OOM at the
+    * reference's 28.8M rows). */
+  def counts(status: Dataset[SinkStatus]): (Long, Long) = {
+    val r = status.toDF().agg(count_if(col("ok")), count(lit(1))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** A sink's status frame as stamp input: the (bibcode, sink, ok,
+    * checksum) rows MergeEngine.stampSinks reads, tagged with `sink`. */
+  def outcomes(sink: String, status: Dataset[SinkStatus]): DataFrame =
+    status.toDF().select(col("bibcode"), lit(sink).as("sink"), col("ok"), col("checksum"))
 
   /** run.py:235-255 `collection_to_urls`: resolve a `--solr-collection`
     * value against the configured SOLR update URLs. A full http(s) URL
@@ -97,21 +115,26 @@ object Sinks {
       onSoloFailure: (String, String, Throwable) => SinkStatus): Dataset[SinkStatus] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.select("bibcode", "payload").as[(String, String)]
+    // request frames (boost, augment) have no checksum column
+    val checksum =
+      if (rows.columns.contains("checksum")) col("checksum")
+      else lit(null).cast("string")
+    rows.select(col("bibcode"), col("payload"), checksum.as("checksum"))
+      .as[(String, String, String)]
       .mapPartitions { it =>
         it.grouped(batchSize).flatMap { batch =>
           try {
             transport.send(batch.map(_._2))
-            batch.iterator.map { case (b, _) =>
-              SinkStatus(b, ok = true, retriedSolo = false, bodyStripped = false) }
+            batch.iterator.map { case (b, _, c) =>
+              SinkStatus(b, ok = true, retriedSolo = false, bodyStripped = false, c) }
           } catch {
             case _: Throwable =>
-              batch.iterator.map { case (bibcode, payload) =>
+              batch.iterator.map { case (bibcode, payload, c) =>
                 try {
                   transport.send(Seq(payload))
-                  SinkStatus(bibcode, ok = true, retriedSolo = true, bodyStripped = false)
+                  SinkStatus(bibcode, ok = true, retriedSolo = true, bodyStripped = false, c)
                 } catch {
-                  case e: Throwable => onSoloFailure(bibcode, payload, e)
+                  case e: Throwable => onSoloFailure(bibcode, payload, e).copy(checksum = c)
                 }
               }
           }
