@@ -27,8 +27,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // drop any caches a query materialized so timings stay independent
-    // (incl. the sitemap ordinal pins, whose queue must drain too)
+    // drop every cache and pin a query took so timings stay independent
     def cleanup(): Unit = graft.catalog.Catalog.unpersistAll(spark)
     // Untimed warmup pass: every query compiles its codegen and JITs its
     // UDFs once, so the timed pass measures steady-state execution — the

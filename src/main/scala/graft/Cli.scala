@@ -507,6 +507,8 @@ object Cli {
         case other =>
           out(s"error: unknown --action $other"); return 2
       }
+      // the published state no longer reads its ordinal pins
+      Pins.release(Sitemap.OrdinalPins)
       // modifying actions chain the file regeneration (run.py:500-510)
       if (Set("add", "force-update", "remove", "bootstrap")(action)) {
         val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)
@@ -663,6 +665,7 @@ object Cli {
               .join(flagged, Seq("bibcode"), "left_anti")
             SitemapState.add(state, store.read(spark), due)
           })
+          Pins.release(Sitemap.OrdinalPins)
           graft.streaming.Watermark.advanceGen(spark, wmDir, smCursorKey, preGen)
           store.registerConsumerCursor("sitemaps", preGen)
           // the full render also rebuilds + persists the summary AND the

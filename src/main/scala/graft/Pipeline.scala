@@ -53,7 +53,6 @@ object Pipeline {
       forwardAugmentRequests: Boolean = false,
       keyLocal: Boolean = false,
       changeLogDir: Option[String] = None,
-      workKeys: Option[DataFrame] = None,
       workRows: Option[DataFrame] = None,
       keyedPublish: Boolean = false,
       stageTimer: (String, Double) => Unit = (_, _) => ()): RunReport = {
@@ -84,17 +83,10 @@ object Pipeline {
     // a full-table write from a subset frame would truncate the table.
     require(!keyLocal || restrictTo.isEmpty,
       "keyLocal reads the updates' keys; a restrictTo sweep is table-scoped")
-    // workKeys widens a keyLocal batch's working set beyond the updates'
-    // own keys — the feed-driven sweep's shape, where the work was
-    // DISCOVERED (from the store's change feed) rather than delivered as
-    // messages. Meaningless outside keyLocal: the table-wide gate already
-    // sees every row
-    require(workKeys.isEmpty || keyLocal,
-      "workKeys is the key-local working set; a table-wide sweep scans anyway")
-    // workRows goes one further than workKeys: the caller already HOLDS the
-    // working set's live rows (the change feed's rows for changed keys ARE
-    // the live rows — latest-generation-wins on both sides), so the keyed
-    // store lookup is skipped entirely. Caller contract: master-schema
+    // workRows: the caller already HOLDS the key-local working set's live
+    // rows (the change feed's rows for changed keys ARE the live rows —
+    // latest-generation-wins on both sides), so the keyed store lookup is
+    // skipped entirely. Caller contract: master-schema
     // rows, exactly the live row per working key, covering the updates'
     // keys too (the feed sweep's updates are empty). Same snapshot-then-
     // publish race window as the keyed lookup it replaces — both read
@@ -127,13 +119,8 @@ object Pipeline {
     val anyDoomed = doomed.head(1).nonEmpty
 
     // M1 merge (over the batch's keyed working set when keyLocal)
-    val keySrc = workKeys match {
-      case Some(k) => updates.select(col("bibcode"))
-        .unionByName(k.select(col(k.columns.head).as("bibcode")))
-      case None => updates.select(col("bibcode")).toDF()
-    }
     val baseMaster =
-      if (keyLocal) workRows.getOrElse(store.lookupFrame(spark, keySrc))
+      if (keyLocal) workRows.getOrElse(store.lookupFrame(spark, updates.select(col("bibcode"))))
       else store.read(spark)
     val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
     val master0 =
@@ -669,7 +656,7 @@ object Pipeline {
       mi.commit(stateStore.currentVersion.getOrElse(0L))
     }
     work.unpersist(); state0.unpersist()
-    Sitemap.releasePinned()
+    Pins.release(Sitemap.OrdinalPins)
     (files.length.toLong,
       summary0.copy(generation = stateStore.currentVersion.getOrElse(0L)))
   }
@@ -912,7 +899,7 @@ object Pipeline {
       phase("publish-index")
       newRows.unpersist(blocking = false)
       renderMembers.unpersist(); members.unpersist()
-      Sitemap.releasePinned()
+      Pins.release(Sitemap.OrdinalPins)
       (renderSet.size.toLong,
         next.copy(generation = stateStore.currentVersion.getOrElse(0L)))
     } finally {
@@ -949,7 +936,7 @@ object Pipeline {
     rendered.unpersist()
     // writeFiles + the collect above fully materialized the ordinal frame,
     // so the partition-pinning cache inside withGlobalOrdinal is releasable
-    Sitemap.releasePinned()
+    Pins.release(Sitemap.OrdinalPins)
     val today = java.time.LocalDate.now.toString
     // driver-side writes go through the same Hadoop FileSystem as the
     // distributed bib files — outDir may be HDFS/S3, and an empty corpus

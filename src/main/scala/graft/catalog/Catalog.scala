@@ -21,19 +21,16 @@ trait Catalog {
 }
 
 object Catalog {
-  /** Release every catalog-held cached/pinned resource in one call — the
-    * explicit teardown for long-lived sessions that the per-query caches
-    * (LM vocab tables, funnel flags, PQ slices, …) otherwise leave to LRU
-    * eviction under the documented session-scoped discipline. Bench and
-    * Verify call this between queries so timings and memory stay
-    * independent; an interactive service should call it between corpus
-    * swaps. Covers the plan-keyed memo maps (connected components), the
-    * pinned ordinal frames (sitemap/packing), and every `.cache()`d
-    * relation in the session (`spark.catalog.clearCache`). */
+  /** Release every pin ([[graft.Pins.releaseAll]]: partition caches,
+    * checkpoints, memoized components) and every `.cache()`d relation in
+    * the session (`spark.catalog.clearCache`). Unlike a cache, a released
+    * checkpoint cannot be recomputed: a frame planned over one fails when
+    * evaluated, so call this only between queries, never while a result
+    * frame is still to be read. Bench and Verify call it after each query
+    * so timings and memory stay independent; a long-lived service calls it
+    * between requests or corpus swaps. */
   def unpersistAll(spark: SparkSession): Unit = {
-    graft.operators.Sitemap.releasePinned()
-    graft.operators.Packing.releasePinned()
-    DedupCatalog.clearMemos()
+    graft.Pins.releaseAll()
     spark.catalog.clearCache()
   }
 }

@@ -352,28 +352,16 @@ object DedupCatalog extends Catalog {
 
   /** Memoized connected components over the simhash pair graph, shared by
     * dd_cluster_assign and dd_compact: Components.assign runs a driver-
-    * side iteration (per-round localCheckpoints), which Spark's plan
-    * cache cannot dedupe across queries the way it dedupes identical
+    * side iteration (per-round checkpoints), which Spark's plan cache
+    * cannot dedupe across queries the way it dedupes identical
     * declarative subtrees — so without this, every consumer re-runs the
-    * whole loop. Session-scoped by design (the catalog-cache discipline);
-    * keyed per (session, dir). The label frame is |paired docs| rows. */
-  private val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Drop the memoized components (graft.Bench's per-query isolation:
-    * a memo surviving its cleanup would let the SECOND cluster query
-    * time only the label join, not the algorithm it claims to measure). */
-  def clearMemos(): Unit = {
-    componentsCache.forEach((_, df) => { df.unpersist(); () })
-    componentsCache.clear()
-  }
-
+    * whole loop. Held in [[graft.Pins]] per (session, dir) until the
+    * catalog teardown releases it, so a timed query never reuses an
+    * earlier query's loop. The label frame is |paired docs| rows. */
   private def simhashComponents(s: SparkSession, d: String): DataFrame =
-    componentsCache.computeIfAbsent(
-      System.identityHashCode(s) + ":" + d,
-      _ => graft.operators.Components.assign(
-        simhashPairs(s, d).select(col("doc_a").as("src"), col("doc_b").as("dst")))
-        .cache())
+    graft.Pins.memo(s, s"components.simhash:$d")(
+      graft.operators.Components.assign(
+        simhashPairs(s, d).select(col("doc_a").as("src"), col("doc_b").as("dst"))))
 
   /** Union of the three modality pair graphs — image/audio banded-Hamming
     * and video frame-set overlap — as (src, dst) edges. Shared by
@@ -392,9 +380,8 @@ object DedupCatalog extends Catalog {
     * [[simhashComponents]] — the cluster pass runs once however many
     * catalog rows consume it (dd_media_cluster, pl_media_prep). */
   private[graft] def mediaComponents(s: SparkSession, d: String): DataFrame =
-    componentsCache.computeIfAbsent(
-      "media:" + System.identityHashCode(s) + ":" + d,
-      _ => graft.operators.Components.assign(mediaEdges(s, d)).cache())
+    graft.Pins.memo(s, s"components.media:$d")(
+      graft.operators.Components.assign(mediaEdges(s, d)))
 
   def queries: Map[String, QFn] = Map(
 

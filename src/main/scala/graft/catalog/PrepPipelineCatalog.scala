@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.PortableHash
 
 /** The composed corpus-preparation pipeline — the catalog's operators
@@ -173,19 +173,18 @@ object PrepPipelineCatalog extends Catalog {
       // the packing prefix sum each fire their own driver action over the
       // kept set; three narrow columns, so materializing once is cheap
       // and keeps those actions from re-running the funnel.
-      // r17: eager localCheckpoint instead of cache — the cache kept the
-      // funnel's FULL logical tree (the final plan ran to ~3,900 lines /
-      // 354 Exchanges), and the packing subtotal collect plus the final
+      // an eager checkpoint pin, not a cache — a cache keeps the funnel's
+      // FULL logical tree (the final plan ran to ~3,900 lines / 354
+      // Exchanges), and the packing subtotal collect plus the final
       // aggregation each re-planned it end to end. The checkpoint
       // truncates lineage to the materialized kept rows (same rows,
       // recomputed from parquet on every invocation), so the sampling/
-      // packing phase plans against a 3-column RDD (guide §3.3/§5:
-      // materialize an intermediate to cut planning cost).
-      val kept = funnelFlags(s, d)
+      // packing phase plans against a 3-column RDD (materialize an
+      // intermediate to cut planning cost).
+      val kept = Pins.checkpoint(funnelFlags(s, d)
         .filter(col("pass_filter") && col("canonical") &&
           !col("contaminated") && col("clf_keep"))
-        .select(col("doc_id"), col("lang"), col("n_words"))
-        .localCheckpoint(true)
+        .select(col("doc_id"), col("lang"), col("n_words")), "pl_train_manifest")
       val counts = kept.groupBy(col("lang")).agg(count(lit(1)).as("cnt")).cache()
       val withShare = counts
         .crossJoin(counts.agg(sum(col("cnt")).as("total")))

@@ -1,9 +1,10 @@
 package graft.catalog
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.records._
 import graft.operators.{IndexJob, MergeEngine, Sitemap, SitemapState}
 import graft.streaming.{IngestStream, QueueDecode}
@@ -133,7 +134,7 @@ object RecordCatalog extends Catalog {
         lit(null).cast("string").as("status"))
       // each action eagerly inspects its input state (fill level, remove
       // stats), so every intermediate state is materialized ONCE with its
-      // lineage truncated (eager localCheckpoint): the later actions'
+      // lineage truncated (an eager checkpoint pin): the later actions'
       // inspection collects and the final plan then scan a few hundred
       // in-memory rows instead of re-deriving the bootstrap→generate→
       // remove chain (three ordinal shuffles deep) per job. A real driver
@@ -142,20 +143,18 @@ object RecordCatalog extends Catalog {
       // coalesce(8): the state is a few hundred rows — without it every
       // downstream inspection job schedules 32 tasks per stage just to
       // touch a handful of rows each
-      val boot = SitemapState.bootstrap(SitemapState.empty(s),
-        master.filter(col("id") % 7 =!= 0), maxPerFile = 64)
-        .coalesce(8).localCheckpoint()
-      val gen = SitemapState.markGenerated(boot,
-        boot.select(col("sitemap_filename")), ts("2024-06-01T00:00:00Z"))
-        .coalesce(8).localCheckpoint()
-      val removed = SitemapState.remove(gen,
-        master.filter(col("id") % 5 === 0).select(col("bibcode"))).state
-        .coalesce(8).localCheckpoint()
+      def pin(st: DataFrame) = Pins.checkpoint(st.coalesce(8), "smx_sitemap_state")
+      val boot = pin(SitemapState.bootstrap(SitemapState.empty(s),
+        master.filter(col("id") % 7 =!= 0), maxPerFile = 64))
+      val gen = pin(SitemapState.markGenerated(boot,
+        boot.select(col("sitemap_filename")), ts("2024-06-01T00:00:00Z")))
+      val removed = pin(SitemapState.remove(gen,
+        master.filter(col("id") % 5 === 0).select(col("bibcode"))).state)
       val added = SitemapState.add(removed, master,
         master.filter(col("id") % 7 === 0).select(col("bibcode")), maxPerFile = 64)
       // NB: the LAST action's ordinal pin stays cached until the caller
-      // materializes this frame — releasePinned() here would un-pin the
-      // partitioning the lazy plan still depends on
+      // materializes this frame — releasing Sitemap.OrdinalPins here would
+      // un-pin the partitioning the lazy plan still depends on
       added.select(col("bibcode"), col("sitemap_filename"), col("update_flag"))
         .orderBy("bibcode")
     }),
@@ -176,19 +175,17 @@ object RecordCatalog extends Catalog {
           lit("{}").as("bib_data"),
           lit("2024-01-01 00:00:00").cast("timestamp").as("bib_data_updated"),
           lit(null).cast("string").as("status"))
-      val boot = SitemapState.bootstrap(SitemapState.empty(s), cls(0), maxPerFile)
-        .coalesce(8).localCheckpoint()
-      val gen = SitemapState.markGenerated(boot,
-        boot.select(col("sitemap_filename")), ts("2024-06-01T00:00:00Z"))
-        .coalesce(8).localCheckpoint()
+      def pin(st: DataFrame) = Pins.checkpoint(st.coalesce(8), "smx_cadence_fill")
+      val boot = pin(SitemapState.bootstrap(SitemapState.empty(s), cls(0), maxPerFile))
+      val gen = pin(SitemapState.markGenerated(boot,
+        boot.select(col("sitemap_filename")), ts("2024-06-01T00:00:00Z")))
       val fill0 = SitemapState.currentFill(gen, maxPerFile)
       val w1 = cls(1)
       // disjoint waves: the due keys hold no current state rows, so the
       // key-local form receives an empty curRows frame — the cron's
       // brand-new-records shape
-      val add1 = SitemapState.addKeyed(SitemapState.empty(s), w1,
-        w1.select(col("bibcode")), fill0, maxPerFile)
-        .coalesce(8).localCheckpoint()
+      val add1 = pin(SitemapState.addKeyed(SitemapState.empty(s), w1,
+        w1.select(col("bibcode")), fill0, maxPerFile))
       val n1 = SitemapState.countNewAssignments(w1, w1.select(col("bibcode")),
         gen.select(col("bibcode")))
       val fill1 = SitemapState.advanceFill(fill0, n1, maxPerFile)

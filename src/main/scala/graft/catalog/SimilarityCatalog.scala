@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -415,13 +415,13 @@ object SimilarityCatalog extends Catalog {
     // is shared by the query side, the probe side, and the truth side —
     // the corpus never re-trains or shuffles. ──
     "sim_ann_ivf_trained" -> ((s, d) => {
-      // r17: same lineage truncation as sim_ann_stack — three consumers
-      // (query side, probe side, truth side) each carried the full
-      // 3-round training tree in the final plan; the eager localCheckpoint
+      // same lineage truncation as sim_ann_stack — three consumers (query
+      // side, probe side, truth side) would each carry the full 3-round
+      // training tree in the final plan; the eager checkpoint pin
       // materializes the assignment once per invocation and the search
       // plans against the checkpointed rows.
       val (_, trained) = lloydTrain(s, d, rounds = 3)
-      val assigned = trained.localCheckpoint(true)
+      val assigned = Pins.checkpoint(trained, "sim_ann_ivf_trained")
       val qs = assigned.filter(col("vec_id") >= 3 && col("vec_id") < 13)
         .select(col("vec_id").as("query_id"), col("label").as("qcell"),
           col("v").as("qv"))
@@ -620,19 +620,18 @@ object SimilarityCatalog extends Catalog {
     "sim_ann_stack" -> ((s, d) => {
       def dot(a: Column, b: Column) =
         org.apache.spark.sql.graftnative.NativeExpressions.dotCol(a, b)
-      // r17: the trained assignment is consumed by SIX downstream branches
+      // the trained assignment is consumed by SIX downstream branches
       // (cent, qualifying/occ, qs, qcodes, raw-vector fetch, truth); with
       // the Lloyd rounds left as a lazy cached tree, every branch's plan
       // carries the full 3-round subtree — a ~5,600-line physical plan
       // that AQE re-optimizes per stage, which a warm re-run measured as
-      // the query's dominant residual (orchestration, not data; guide
-      // §3.3 "planning time itself can become the bottleneck" /
-      // §5 localCheckpoint to cut lineage). The eager localCheckpoint
-      // materializes the SAME rows once per invocation — nothing persists
-      // across runs — and every consumer now plans against the
+      // the query's dominant residual (orchestration, not data; planning
+      // time itself becomes the bottleneck). The eager checkpoint pin
+      // materializes the SAME rows once per invocation, held until the
+      // catalog teardown, and every consumer plans against the
       // checkpointed blocks instead of the training tree.
       val (_, trained) = lloydTrain(s, d, rounds = 3)
-      val assigned = trained.localCheckpoint(true)
+      val assigned = Pins.checkpoint(trained, "sim_ann_stack")
       val cent = assigned
         .select(col("label").as("clabel"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("clabel"), col("i")).agg(avg(col("x")).as("m"))

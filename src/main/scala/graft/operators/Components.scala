@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * O(diameter); near-dup graphs are mostly dense, but the
   * synthetic-corpus near-dup graph showed exactly the chain-y tail that
   * needs it) — three exchanges per round. Every round ends in an EAGER
-  * localCheckpoint: an iterative frame that merely caches keeps its whole
+  * checkpoint: an iterative frame that merely caches keeps its whole
   * logical plan, and since each round references the previous frame
   * several times the plan tree grows geometrically — 15 rounds of that
   * OOMed an 8 GB driver on a 50-document corpus before any executor did
@@ -24,12 +24,15 @@ import org.apache.spark.sql.functions._
   * checkpoint window benched consistently SLOWER at sf0.1 — 5.2 s vs
   * 3.2 s — so the per-round checkpoint stays.) The
   * checkpoint truncates lineage to the materialized blocks, making plan
-  * size (and driver memory) constant per round. On a multi-node cluster
-  * where executor loss mid-algorithm must be survivable, set
-  * spark.graft.components.reliableCheckpoint=true (plus a
-  * SparkContext.setCheckpointDir) and every round checkpoints to the
-  * reliable store instead of executor-local blocks; the algorithm is
-  * unchanged.
+  * size (and driver memory) constant per round. Every checkpoint is a
+  * [[graft.Pins]] pin: each round's pin is released as soon as the next
+  * one is materialized, the edge pin with the cached edge partitioning at
+  * the end of the loop, and the last round's pin (the result) by the
+  * caller's release. On a multi-node cluster where executor loss
+  * mid-algorithm must be survivable, set spark.graft.reliableCheckpoint=true
+  * in the caller's session (plus a SparkContext.setCheckpointDir) and every
+  * pin checkpoints to the reliable store instead of executor-local blocks;
+  * the algorithm is unchanged.
   *
   * Convergence detection rides the propagation step only: when no node saw
   * a smaller neighbor label, every edge's endpoints already carry equal
@@ -38,33 +41,34 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Loop sessions, one per (parent session, shuffle width), reused across
-    * assign() calls: a session is cheap to create but registers an
-    * execution-listener bus on the shared SparkContext bus FOREVER, so a
-    * clone per call would accumulate listeners (every query event fans
-    * out to all of them — measured as a progressive ~20% drag on the CC
-    * family after a few dozen calls). Reused sessions are IMMUTABLE after
-    * creation (the width is baked in), so nothing mutates shared state
-    * mid-query. Single parent slot, same discipline as Tables.memo: a new
-    * parent session swaps the map wholesale. */
-  private val loopSessions = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession,
-      Map[Int, org.apache.spark.sql.SparkSession])]()
+  /** Loop sessions, one per (parent session, shuffle width, reliable
+    * checkpoints), reused across assign() calls: a session is cheap to
+    * create but registers an execution-listener bus on the shared
+    * SparkContext bus FOREVER, so a clone per call would accumulate
+    * listeners (every query event fans out to all of them — measured as a
+    * progressive ~20% drag on the CC family after a few dozen calls).
+    * Reused sessions are IMMUTABLE after creation (the width and the
+    * checkpoint mode are baked in), so nothing mutates shared state
+    * mid-query. Created under the lock, so no racing caller builds a
+    * session that is then dropped with its listener still registered.
+    * Single parent slot, same discipline as Tables.memo: a new parent
+    * session swaps the map wholesale. */
+  private var loopParent: org.apache.spark.sql.SparkSession = null
+  private val loopSessions =
+    scala.collection.mutable.Map.empty[(Int, Boolean), org.apache.spark.sql.SparkSession]
 
   private def loopSessionFor(parent: org.apache.spark.sql.SparkSession,
-      parts: Int): org.apache.spark.sql.SparkSession = {
-    while (true) {
-      val cur = loopSessions.get()
-      val sameParent = cur != null && (cur._1 eq parent)
-      if (sameParent && cur._2.contains(parts)) return cur._2(parts)
+      parts: Int): org.apache.spark.sql.SparkSession = synchronized {
+    if (!(loopParent eq parent)) { loopSessions.clear(); loopParent = parent }
+    // the clone sees only SparkConf-level settings, not the caller's
+    // spark.conf.set values, so the checkpoint mode is carried over
+    val reliable = graft.Pins.reliable(parent)
+    loopSessions.getOrElseUpdate((parts, reliable), {
       val sess = parent.newSession()
       sess.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val base = if (sameParent) cur._2
-        else Map.empty[Int, org.apache.spark.sql.SparkSession]
-      if (loopSessions.compareAndSet(cur, (parent, base + (parts -> sess))))
-        return sess
-    }
-    throw new IllegalStateException("unreachable")
+      if (reliable) sess.conf.set(graft.Pins.ReliableCheckpoint, "true")
+      sess
+    })
   }
 
   /** Edges (undirected, any orientation, self-loops/dups tolerated) →
@@ -73,20 +77,20 @@ object Components {
     * callers left-join and coalesce to self for singletons. */
   def assign(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     val runId = java.util.UUID.randomUUID().toString.take(8)
-    // r17: the WHOLE loop plans at the graph-derived width, but inside a
+    // The WHOLE loop plans at the graph-derived width, but inside a
     // CLONED session instead of by mutating the caller session's
-    // spark.sql.shuffle.partitions (the r16 form): session conf is shared
-    // across threads, so a concurrent query planned during a CC loop
-    // would silently plan at the graph's width. newSession() shares the
+    // spark.sql.shuffle.partitions: session conf is shared across
+    // threads, so a concurrent query planned during a CC loop would
+    // silently plan at the graph's width. newSession() shares the
     // SparkContext, the cache manager and the global-temp-view catalog,
     // but has its own SQLConf — the width set below is invisible outside
-    // the loop. This keeps r16's plans byte-identical inside the loop:
-    // the alternative (pinning only the join side with an explicit
-    // repartition and leaving the aggregation/self-join exchanges at the
-    // session width) was measured 2.0x SLOWER per round at the
-    // sf1.0-class fixture (17.9 s vs 8.9 s for dd_cluster_assign — a
-    // 32-wide AQE stage per exchange per round on a 1-partition graph is
-    // pure orchestration overhead), and an explicit repartition below
+    // the loop, and the loop's plans are those of a mutated caller
+    // conf, byte for byte. The alternative (pinning only the join side
+    // with an explicit repartition and leaving the aggregation/self-join
+    // exchanges at the session width) was measured 2.0x SLOWER per round
+    // at the sf1.0-class fixture (17.9 s vs 8.9 s for dd_cluster_assign —
+    // a 32-wide AQE stage per exchange per round on a 1-partition graph
+    // is pure orchestration overhead), and an explicit repartition below
     // each groupBy would forfeit map-side partial aggregation. Frames
     // cross sessions via a global temp view (Dataset analysis is eager,
     // so the registration is dropped as soon as the other side's Dataset
@@ -98,21 +102,20 @@ object Components {
       df.sparkSession.catalog.dropGlobalTempView(name)
       out
     }
-    // pin the directed edges first (eager localCheckpoint in the CALLER
+    // pin the directed edges first (eager checkpoint in the CALLER
     // session, at the corpus width — the candidate pipeline is
     // corpus-sized work and the loop width isn't known yet): the
     // bidirectional union reads them twice, and when the caller's `edges`
     // is itself a join pipeline (simhash band collisions, LSH candidates)
     // an unpinned union would re-run that pipeline once per direction.
-    // A checkpoint rather than the r16 cache because the loop session
-    // reads these rows THROUGH the view rebinding, and cross-session
+    // A checkpoint rather than a cache because the loop session reads
+    // these rows THROUGH the view rebinding, and cross-session
     // cached-plan substitution does not fire (measured: the candidate
     // pipeline silently re-ran inside round 0, +1-3 s per CC query at
     // the sf1.0 fixture) — checkpointed blocks need no substitution.
     val tB = System.nanoTime()
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint(true)
+    val e = graft.Pins.checkpoint(edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")), "components.edges")
     val m = e.count() // over checkpointed blocks: metadata-cheap
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       println(f"[cc] epin=${(System.nanoTime()-tB)/1e9}%.3f")
@@ -135,43 +138,12 @@ object Components {
     val parts = math.max(1L,
       math.min(confParts.toLong, (2 * m + 1999999) / 2000000)).toInt
     val loopSess = loopSessionFor(edges.sparkSession, parts)
-    // per-round lineage pin: executor-local blocks by default (fastest),
-    // or the reliable checkpoint store when the caller opts in for
-    // executor-loss survivability on a real cluster
-    // the opt-in is the CALLER's runtime conf (a cloned session only sees
-    // SparkConf-level settings, not the caller's spark.conf.set values)
-    val reliable = edges.sparkSession.conf
-      .getOption("spark.graft.components.reliableCheckpoint")
-      .exists(_.equalsIgnoreCase("true")) &&
-      edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    // reliable mode is a managed parquet round-trip rather than
-    // df.checkpoint: RDD checkpoint files are only reclaimed by the
-    // GC-driven cleaner (off by default), so a 50-round run would leave
-    // O(rounds × |nodes|) dead files in the store. Here each round's
-    // snapshot is deleted as soon as the next one is on disk — the store
-    // holds at most two live snapshots during a round and exactly one
-    // (the result the caller reads) after the loop.
-    val ckRoot = edges.sparkSession.sparkContext.getCheckpointDir
-    var prevReliable: Option[org.apache.hadoop.fs.Path] = None
-    var round = 0
-    def pin(df: DataFrame): DataFrame =
-      if (reliable) {
-        val spark = df.sparkSession
-        val dir = new org.apache.hadoop.fs.Path(ckRoot.get, s"graft-cc-$runId-r$round")
-        round += 1
-        df.write.mode("overwrite").parquet(dir.toString)
-        prevReliable.foreach { p =>
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-        prevReliable = Some(dir)
-        spark.read.parquet(dir.toString)
-      } else df.localCheckpoint(true)
     val eLoop = rebind(e, loopSess)
     val bidir = eLoop
       .union(eLoop.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(parts, col("src"))
       .cache()
-    // r16: the seed aggregation is NOT separately checkpointed — round
+    // the seed aggregation is NOT separately checkpointed — round
     // 0's pin materializes seed + first propagation in one job (one less
     // checkpoint per run; the seed subtree appears twice in round 0's
     // plan but ends in an exchange, which ReusedExchange dedupes). Its
@@ -181,6 +153,7 @@ object Components {
       .agg(min(col("dst")).as("__nbr"))
       .select(col("src").as("node"),
         least(col("__nbr"), col("src")).as("cluster_id"))
+    var pinned: Option[DataFrame] = None
     var converged = false
     var iters = 0
     while (!converged && iters < maxIters) {
@@ -219,8 +192,12 @@ object Components {
       // job each round used to pay (observe is exact for batch actions)
       val t0 = System.nanoTime()
       val obs = new org.apache.spark.sql.Observation(s"cc-changed-$iters")
-      val next = pin(flat.observe(obs,
-        sum(when(col("__changed"), 1L).otherwise(0L)).as("n_changed")))
+      val next = graft.Pins.checkpoint(flat.observe(obs,
+        sum(when(col("__changed"), 1L).otherwise(0L)).as("n_changed")),
+        "components.round")
+      // the previous round's rows live on only in `next`
+      pinned.foreach(graft.Pins.release)
+      pinned = Some(next)
       val nChanged = obs.get("n_changed") match {
         case null => 0L  // empty frame: no rows, no changes
         case v    => v.asInstanceOf[Long]
@@ -234,7 +211,9 @@ object Components {
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds")
+    // together: a lost bidir block recomputes from the edge pin
     bidir.unpersist(blocking = false)
+    graft.Pins.release(e)
     // re-anchor the (checkpoint-backed) result to the caller's session so
     // downstream plans use the caller's width and conf
     rebind(comp, edges.sparkSession)

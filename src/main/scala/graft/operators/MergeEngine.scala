@@ -211,6 +211,7 @@ object MergeEngine {
     * (pointer doubling), so cycles/deep chains converge in log rounds. */
   def resolveAliases(aliases: Dataset[IdentifierAlias], maxIters: Int = 20): DataFrame = {
     var current = aliases.toDF("key", "target")
+    var pinned: Option[DataFrame] = None
     var i = 0
     var converged = false
     while (i < maxIters && !converged) {
@@ -222,25 +223,25 @@ object MergeEngine {
           // hop into a self-loop terminal lands on the same target and
           // must not count, or fixpoints would never be detected)
           (col("b.target").isNotNull && col("b.target") =!= col("a.target")).as("changed"))
-      // r17 (the Components.assign round shape): convergence detection
-      // rides the SAME job that materializes the round — an Observation
-      // on the eager localCheckpoint counts moved rows as they stream
-      // past (exact for batch actions), replacing the per-round
-      // cache + filter/limit probe job, whose limit(1) scheduled
-      // incremental sub-jobs and, on the converged round, scanned the
-      // whole frame. The checkpoint also truncates lineage: each round's
-      // self-join previously DOUBLED the logical plan (cache keeps the
-      // whole tree), so the caller's final plan carried 2^rounds copies
-      // of the seed — ~1,000 lines for m3_rename_alias's 5-row graph.
+      // the Components.assign round shape: convergence detection rides
+      // the SAME job that materializes the round — an Observation on the
+      // eager checkpoint counts moved rows as they stream past (exact for
+      // batch actions), so no separate probe job runs per round. The
+      // checkpoint also truncates lineage: a cached round keeps its whole
+      // plan, and each round's self-join DOUBLES it, so the caller's final
+      // plan would carry 2^rounds copies of the seed (~1,000 lines for
+      // m3_rename_alias's 5-row graph). Each round's pin is released once
+      // the next one holds its rows; the last one is the result.
       val obs = new org.apache.spark.sql.Observation(s"alias-moved-$i")
-      val pinned = step.observe(obs,
-        sum(when(col("changed"), 1L).otherwise(0L)).as("n_moved"))
-        .localCheckpoint(true)
+      val next = graft.Pins.checkpoint(step.observe(obs,
+        sum(when(col("changed"), 1L).otherwise(0L)).as("n_moved")), "alias.round")
+      pinned.foreach(graft.Pins.release)
+      pinned = Some(next)
       val moved = obs.get("n_moved") match {
         case null => 0L // empty frame: no rows, nothing moved
         case v    => v.asInstanceOf[Long]
       }
-      current = pinned.drop("changed")
+      current = next.drop("changed")
       converged = moved == 0
       i += 1
     }

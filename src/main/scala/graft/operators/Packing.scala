@@ -22,19 +22,13 @@ import scala.jdk.CollectionConverters._
   * partition-LOCAL, so no task ever sees more than one partition's rows.
   * The partitioning is pinned by a cache between the subtotal job and the
   * window job (range partitioning samples, so an uncached recompute could
-  * move rows between partitions); callers release it via
-  * [[Sitemap.releasePinned]]-style unpersist once the result is
-  * materialized downstream.
+  * move rows between partitions); callers release it (label
+  * [[CumsumPins]] in [[graft.Pins]]) once the result is materialized
+  * downstream.
   */
 object Packing {
 
-  /** Pinned partitioning caches (same contract as [[Sitemap.releasePinned]]):
-    * release only after the cumsum-bearing frame is fully materialized. */
-  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  def releasePinned(): Unit = {
-    var df = pinned.poll()
-    while (df != null) { df.unpersist(); df = pinned.poll() }
-  }
+  val CumsumPins = "packing.cumsum"
 
   /** `out` = sum of `valueCol` over all rows of the same `groupCol` that
     * sort strictly before this row by `orderCol` (exclusive running sum;
@@ -45,10 +39,8 @@ object Packing {
     val spark = df.sparkSession
     val n = if (numPartitions > 0) numPartitions
       else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val parts = df.repartitionByRange(n, col(groupCol), col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .cache()
-    pinned.add(parts)
+    val parts = graft.Pins.cache(df.repartitionByRange(n, col(groupCol), col(orderCol))
+      .withColumn("__pid", spark_partition_id()), CumsumPins)
     // one subtotal per (partition, group): groups are contiguous under
     // range partitioning, so this is ≤ numPartitions + #groups rows
     val subs = parts.groupBy(col("__pid"), col(groupCol))

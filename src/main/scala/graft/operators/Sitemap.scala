@@ -50,24 +50,16 @@ object Sitemap {
       (col("bib_data_updated").cast("long") - col("solr_processed").cast("long") >
         lit(5L * 24 * 3600))
 
-  /** Caches pinned by [[withGlobalOrdinal]] that are still live. The pin is
-    * load-bearing until the ordinal frame is materialized (the range
-    * partitioning is sampling-based, so an uncached recompute could change
-    * partition boundaries between the count job and the rank job); it can
-    * only be released by the CALLER once downstream consumption has forced
-    * the frame. [[releasePinned]] does that — `Pipeline.runSitemaps` calls
-    * it after the rendered files are written, so a long-running multi-site
-    * driver no longer grows executor storage by one cached frame per
-    * `assignFilenames` call. */
-  private val pinned = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist every cache pinned by [[withGlobalOrdinal]] since the last
-    * release. Only call after the ordinal-bearing frames have been fully
-    * materialized (written, collected, or re-cached downstream). */
-  def releasePinned(): Unit = {
-    var df = pinned.poll()
-    while (df != null) { df.unpersist(); df = pinned.poll() }
-  }
+  /** Label of the partition pins [[withGlobalOrdinalBy]] holds in
+    * [[graft.Pins]]. A pin is load-bearing until the ordinal frame is
+    * materialized (the range partitioning is sampling-based, so an
+    * uncached recompute could change partition boundaries between the
+    * count job and the rank job), so only the CALLER can release it, once
+    * downstream consumption has forced the frame: `Pipeline.runSitemaps`
+    * releases the label after the rendered files are written, so a
+    * long-running multi-site driver does not grow executor storage by one
+    * cached frame per `assignFilenames` call. */
+  val OrdinalPins = "sitemap.ordinal"
 
   /** Distributed global ordinal (0-based) ordered by `orderCol`.
     * One range shuffle + one tiny count job; no single-partition window. */
@@ -86,10 +78,9 @@ object Sitemap {
       numPartitions: Int = 0): DataFrame = {
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val parts = df.repartitionByRange(n, keys: _*)
-      .withColumn("__pid", spark_partition_id())
-      .cache() // pin partitioning: the count job and the rank job must agree
-    pinned.add(parts)
+    // pin partitioning: the count job and the rank job must agree
+    val parts = graft.Pins.cache(df.repartitionByRange(n, keys: _*)
+      .withColumn("__pid", spark_partition_id()), OrdinalPins)
     val counts = parts.groupBy(col("__pid")).count().collect()
       .map(r => r.getAs[Int]("__pid") -> r.getAs[Long]("count")).sortBy(_._1)
     val offsetsByPid = counts.map(_._1).zip(counts.scanLeft(0L)(_ + _._2).init).toMap

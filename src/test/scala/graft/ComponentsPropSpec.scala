@@ -95,16 +95,36 @@ class ComponentsPropSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val chain = (0L until 12L).map(i => (i + 1, i)) ++ Seq((20L, 21L), (21L, 22L))
+    val aliases = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"),
+      ("p", "q"), ("q", "p"))
+      .map { case (k, t) => graft.records.IdentifierAlias(k, t) }.toDS()
+    // one run over every kind of checkpoint pin: the CC edge and round
+    // pins, the alias fixpoint's round pins, a catalog query's pin
+    def run() = (
+      Components.assign(chain.toDF("src", "dst"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      graft.operators.MergeEngine.resolveAliases(aliases)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap,
+      SparkEntry.queries("pl_train_manifest")(spark, "/root/testdata/sf0.001")
+        .collect().toSeq)
+    val local = run()
+    graft.catalog.Catalog.unpersistAll(spark)
     try {
       spark.sparkContext.setCheckpointDir(dir)
-      spark.conf.set("spark.graft.components.reliableCheckpoint", "true")
-      val got = Components.assign(chain.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      spark.conf.set(Pins.ReliableCheckpoint, "true")
+      val got = run()
       val want = (0L to 12L).map(_ -> 0L).toMap ++
         Seq(20L, 21L, 22L).map(_ -> 20L).toMap
-      assert(got == want)
+      assert(got._1 == want)
+      assert(got == local, "reliable pins must not change any result")
+      val ckRoot = new java.io.File(new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+      assert(ckRoot.list().exists(_.startsWith("graft-pin-")),
+        "reliable pins are parquet directories under the checkpoint dir")
+      graft.catalog.Catalog.unpersistAll(spark)
+      assert(!ckRoot.list().exists(_.startsWith("graft-pin-")),
+        s"release-all deletes every pin directory: ${ckRoot.list().mkString(", ")}")
     } finally {
-      spark.conf.set("spark.graft.components.reliableCheckpoint", "false")
+      spark.conf.set(Pins.ReliableCheckpoint, "false")
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

@@ -28,7 +28,7 @@ class PackingSpec extends AnyFunSuite with SparkSpec {
       coalesce(sum(col("v")).over(w), lit(0L)).as("cum"))
     assert(got.except(want).count() == 0 && want.except(got).count() == 0,
       "distributed cumsum must equal the windowed reference")
-    Packing.releasePinned()
+    Pins.release(Packing.CumsumPins)
   }
 
   test("packByBudget: first-fit shards, boundary-straddling doc stays in " +
@@ -48,6 +48,6 @@ class PackingSpec extends AnyFunSuite with SparkSpec {
     assert(got(("en", 4L)) == 1, "cum 2700 opens shard 1")
     assert(got(("fr", 10L)) == 0, "each group restarts at shard 0")
     assert(got(("fr", 11L)) == 1, "oversized doc fills shard 0 alone")
-    Packing.releasePinned()
+    Pins.release(Packing.CumsumPins)
   }
 }

@@ -1,0 +1,71 @@
+package graft
+
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
+
+import graft.catalog.Catalog
+import graft.operators.{Packing, Sitemap}
+
+/** A long-lived driver must hold flat resources. Cycling the operators
+  * that pin state (connected components, the alias fixpoint, the sitemap
+  * ordinal, the packing prefix sum) in one session, with
+  * `Catalog.unpersistAll` after each cycle, must leave no persistent RDD
+  * and no RDD block in the block manager behind. No GC is forced: a
+  * released pin frees its blocks itself instead of waiting for the context
+  * cleaner. (Broadcast blocks of the queries' broadcast joins are not
+  * pins; only the cleaner frees them, after a GC, so they are not
+  * counted.) */
+class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private def persistentRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def rddBlocks: Map[String, Long] =
+    org.apache.spark.graftprobe.BlockProbe.rddBlocks()
+
+  test("five cycles of every pinning operator leave no persistent RDD and " +
+    "no RDD block after each Catalog.unpersistAll") {
+    import spark.implicits._
+    Catalog.unpersistAll(spark)
+    // suites that ran earlier in this JVM may hold RDDs of their own
+    val before = persistentRdds
+    val baseBlocks = rddBlocks.keySet
+    val records = (1L to 300L).map(i => (i, s"b$i")).toDF("id", "bibcode")
+    val docs = (1L to 300L).map(i => (s"l${i % 3}", i, 10L + i % 17))
+      .toDF("lang", "doc_id", "n_tokens")
+    for (cycle <- 1 to 5) {
+      SparkEntry.queries("dd_cluster_assign")(spark, sf).count()
+      SparkEntry.queries("j7_alias_fixpoint")(spark, sf).count()
+      Sitemap.assignFilenames(records, maxPerFile = 16).count()
+      Packing.packByBudget(docs, "lang", "doc_id", "n_tokens", budget = 500L).count()
+      assert((persistentRdds -- before).nonEmpty, s"cycle $cycle pinned nothing")
+      Catalog.unpersistAll(spark)
+      val left = persistentRdds -- before
+      assert(left.isEmpty, s"cycle $cycle left persistent RDDs $left")
+      eventually(timeout(Span(10, Seconds))) {
+        val blocks = rddBlocks -- baseBlocks
+        assert(blocks.isEmpty,
+          s"cycle $cycle left ${blocks.values.sum} bytes in RDD blocks $blocks")
+      }
+    }
+  }
+
+  test("Pins is the only src/main code that checkpoints or keeps pins") {
+    val root = new java.io.File("src/main/scala")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val owners = for {
+      f <- files(root) if f.getName != "Pins.scala"
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      marker <- Seq("localCheckpoint(", "ConcurrentLinkedQueue[DataFrame]",
+        "releasePinned", "clearMemos", "componentsCache")
+      if text.contains(marker)
+    } yield s"${f.getPath}: $marker"
+    assert(files(root).exists(_.getName == "Pins.scala"))
+    assert(owners.isEmpty, owners.mkString("\n"))
+  }
+}

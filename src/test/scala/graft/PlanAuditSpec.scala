@@ -364,7 +364,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     "nothing goes cartesian") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    graft.catalog.DedupCatalog.clearMemos()
+    Pins.releaseAll()
     val df = SparkEntry.queries("pl_media_prep")(spark, sf)
     df.count() // finalize AQE
     // live scans only: cached subtrees (the banded fingerprint frames,

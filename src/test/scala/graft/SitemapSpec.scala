@@ -156,13 +156,13 @@ class SitemapSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     // relative to the session's baseline: other suites share this session
     // and may legitimately hold caches of their own
-    Sitemap.releasePinned() // clear pins from earlier tests in this suite
+    Pins.release(Sitemap.OrdinalPins) // clear pins from earlier tests in this suite
     val base = spark.sparkContext.getPersistentRDDs.size
     val records = (1L to 50L).map(i => (i, s"b$i")).toDF("id", "bibcode")
     Sitemap.assignFilenames(records, maxPerFile = 10).collect()
     assert(spark.sparkContext.getPersistentRDDs.size == base + 1,
       "ordinal pin is cached while in use")
-    Sitemap.releasePinned()
+    Pins.release(Sitemap.OrdinalPins)
     assert(spark.sparkContext.getPersistentRDDs.size == base,
       "releasePinned drops every ordinal pin — a multi-site driver run stays flat")
   }

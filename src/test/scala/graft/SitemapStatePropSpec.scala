@@ -88,7 +88,7 @@ class SitemapStatePropSpec extends AnyFunSuite with SparkSpec {
         state = checkpointed
         assigned = now
       }
-      graft.operators.Sitemap.releasePinned()
+      Pins.release(graft.operators.Sitemap.OrdinalPins)
       ok
     }
     val res = SCTest.check(

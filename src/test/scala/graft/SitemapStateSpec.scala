@@ -401,6 +401,6 @@ class SitemapStateSpec extends AnyFunSuite with SparkSpec {
       worklist.select(col("sitemap_filename")), ts("2024-06-01 00:00:00"))
     assert(SitemapState.renderable(st2, "2024-06-01").count() == 0)
     assert(st2.filter(col("filename_lastmoddate").isNull).count() == 0)
-    Sitemap.releasePinned()
+    Pins.release(Sitemap.OrdinalPins)
   }
 }

@@ -174,6 +174,6 @@ class TemplatesSpec extends AnyFunSuite with SparkSpec {
     parseXml(Sitemap.renderIndex(ads,
       rendered.map(r => r.getAs[String]("sitemap_filename") -> "2024-01-02").toSeq,
       staticFirst = Seq("sitemap_static.xml" -> "2024-01-02")))
-    Sitemap.releasePinned()
+    Pins.release(Sitemap.OrdinalPins)
   }
 }
