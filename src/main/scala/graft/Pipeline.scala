@@ -17,12 +17,15 @@ import graft.streaming.Watermark
   * one snapshot store; every stage is an operator tested on its own. In
   * perfbench's traced `bulk_reindex` run (4 cores) a forced full reindex
   * of a 3,000-record store runs 11 Spark jobs, a queue consumer's
-  * micro-batch 29 and a feed-driven sweep 35.
+  * merge-only micro-batch 27 and a feed-driven sweep 35.
   */
 object Pipeline {
 
   /** `merged` counts the batch's post-merge working set: the whole table
-    * for a sweep-shaped run, the touched keys for a keyLocal queue batch. */
+    * for a sweep-shaped run, the touched keys for a keyLocal queue batch.
+    * `indexed` counts the due solr payloads, also when only the metrics or
+    * links sink is selected; a merge-only run (no sink) builds no payload
+    * and reports 0. */
   case class RunReport(
       version: Long,
       merged: Long,
@@ -355,7 +358,7 @@ object Pipeline {
 
     def got(i: Int): Long = counts.fold(0L)(_.getLong(i))
     val report = RunReport(version, mergedCount,
-      indexed = if (sinks("solr")) got(0) else batch.solr.count(),
+      indexed = if (sinks("solr")) got(0) else if (sinks.isEmpty) 0L else batch.solr.count(),
       solrOk = got(1),
       solrFailed = got(2),
       metricsOk = got(3),

@@ -351,13 +351,15 @@ object DedupCatalog extends Catalog {
       maxHamming = 6)
 
   /** Memoized connected components over the simhash pair graph, shared by
-    * dd_cluster_assign and dd_compact: Components.assign runs a driver-
-    * side iteration (per-round checkpoints), which Spark's plan cache
-    * cannot dedupe across queries the way it dedupes identical
-    * declarative subtrees — so without this, every consumer re-runs the
-    * whole loop. Held in [[graft.Pins]] per (session, dir) until the
+    * dd_cluster_assign and dd_compact: Components.assign collects a graph
+    * within the broadcast threshold and labels it on the driver, and runs
+    * a loop of per-round checkpoints only above it. Neither is a plan
+    * Spark's cache can dedupe across queries the way it dedupes identical
+    * declarative subtrees (both start with an eager pin of the pair
+    * graph), so without this every consumer re-runs the pair search and
+    * the labelling. Held in [[graft.Pins]] per (session, dir) until the
     * catalog teardown releases it, so a timed query never reuses an
-    * earlier query's loop. The label frame is |paired docs| rows. */
+    * earlier query's result. The label frame is |paired docs| rows. */
   private def simhashComponents(s: SparkSession, d: String): DataFrame =
     graft.Pins.memo(s, s"components.simhash:$d")(
       graft.operators.Components.assign(

@@ -1,17 +1,20 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed connected components by min-label propagation, the cluster
   * step of a near-dup pipeline: pair detection (simhash/minhash/Jaccard)
   * yields edges, this collapses them into per-document cluster labels so
   * dedup keeps one canonical representative per cluster.
   *
-  * Scale design: each round pushes every node's label to its neighbors
-  * and unions in the own-label rows so one map-side-combined min
-  * aggregation both propagates and detects change, then compresses paths
-  * by re-pointing each node at its label's label (pointer doubling, so
+  * Scale design, above the driver-size rule (last paragraph): each round
+  * pushes every node's label to its neighbors and unions in the own-label
+  * rows so one map-side-combined min aggregation both propagates and
+  * detects change, then compresses paths by re-pointing each node at
+  * its label's label (pointer doubling, so
   * chain-shaped components converge in O(log diameter) rounds instead of
   * O(diameter); near-dup graphs are mostly dense, but the
   * synthetic-corpus near-dup graph showed exactly the chain-y tail that
@@ -38,6 +41,15 @@ import org.apache.spark.sql.functions._
   * a smaller neighbor label, every edge's endpoints already carry equal
   * labels (the condition is symmetric), so each component is
   * constant-labeled and compression is a no-op — stopping there is exact.
+  *
+  * The loop runs only for graphs the driver should not hold. A graph whose
+  * edges fit the rule of [[driverRows]] (the size Spark itself would
+  * broadcast to every executor) is collected once and labelled by
+  * union-find on the driver. That is exact, not an approximation: the
+  * loop's converged label is the min node id of the component, which is
+  * what union-find keeping the smaller root yields. On such graphs each
+  * loop round costs seconds of job scheduling and code generation for
+  * milliseconds of compute.
   */
 object Components {
 
@@ -69,6 +81,38 @@ object Components {
       if (reliable) sess.conf.set(graft.Pins.ReliableCheckpoint, "true")
       sess
     })
+  }
+
+  /** The most rows of `df`'s columns an iterative operator may collect and
+    * solve on the driver: the rows whose estimated size (Spark's per-row
+    * estimate for the columns' types, as for a relation without
+    * statistics) stays within the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the size at which Spark
+    * itself ships a join side to every executor. A threshold ≤ 0 turns
+    * broadcasts off and gives -1: nothing is solved on the driver. */
+  private[graft] def driverRows(df: DataFrame): Long = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold <= 0) -1L
+    else threshold / EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output).toLong
+  }
+
+  /** Union-find over `edges`, keeping the smaller root: every node of an
+    * edge → the min node id of its component. */
+  private def unionFind(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val p = parent(y); parent(y) = r; y = p }
+      r
+    }
+    for ((a, b) <- edges) {
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(v => v -> find(v))
   }
 
   /** Edges (undirected, any orientation, self-loops/dups tolerated) →
@@ -119,6 +163,15 @@ object Components {
     val m = e.count() // over checkpointed blocks: metadata-cheap
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       println(f"[cc] epin=${(System.nanoTime()-tB)/1e9}%.3f")
+    // a graph the driver may hold is labelled there, from one collect of
+    // the pin; the result is a local frame in the caller's session
+    if (e.schema.forall(_.dataType == LongType) && m <= driverRows(e)) {
+      val rows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
+      graft.Pins.release(e)
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return unionFind(rows).toDF("node", "cluster_id")
+    }
     // pinned hash partitioning on src, cached ONCE: the edge list is the
     // largest frame in the algorithm and every round joins it on src — a
     // plain cache would still re-exchange it per round, while the explicit

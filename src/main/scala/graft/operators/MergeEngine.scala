@@ -206,11 +206,69 @@ object MergeEngine {
 
   /** J7 — alias-chain resolution to fixpoint (adsmp/app.py:287-294,
     * 325-332): repoint every key to the terminal target of its chain.
-    * Tiny table (identifier graph), so a driver loop of self-joins with a
-    * convergence check; each step halves the maximum chain depth
-    * (pointer doubling), so cycles/deep chains converge in log rounds. */
+    * A driver loop of self-joins with a convergence check; each step
+    * halves the maximum chain depth (pointer doubling), so cycles/deep
+    * chains converge in log rounds.
+    *
+    * An alias graph within the driver-size rule of
+    * [[Components.driverRows]] (the usual case: identifier graphs are
+    * small) is instead collected by one job and the same rounds are
+    * replayed on the driver: each row joins every row whose key equals
+    * its target, as the left-outer self-join does (so duplicate keys
+    * multiply rows alike, and a null key or target never matches), with
+    * the same `changed` rule and the same `maxIters` cap. The result is
+    * the loop's multiset of rows, as a local frame. Should a replay round
+    * outgrow the rule (duplicate keys multiply rows), the loop runs
+    * instead, from the input. */
   def resolveAliases(aliases: Dataset[IdentifierAlias], maxIters: Int = 20): DataFrame = {
-    var current = aliases.toDF("key", "target")
+    val input = aliases.toDF("key", "target")
+    val cap = Components.driverRows(input)
+    val local =
+      if (cap < 0) None
+      else {
+        val rows = input.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+          .map(r => (r.getString(0), r.getString(1)))
+        if (rows.length > cap) None else replayAliases(rows, maxIters, cap)
+      }
+    local match {
+      case Some(rows) =>
+        val spark = aliases.sparkSession
+        import spark.implicits._
+        rows.toSeq.toDF("key", "target")
+      case None => aliasLoop(input, maxIters)
+    }
+  }
+
+  /** [[resolveAliases]]' rounds over collected rows; None once a round
+    * would hold more than `cap` rows (sized before it is built). */
+  private def replayAliases(rows: Array[(String, String)], maxIters: Int,
+      cap: Long): Option[Array[(String, String)]] = {
+    var current = rows
+    var i = 0
+    var converged = false
+    while (i < maxIters && !converged) {
+      val byKey = current.filter(_._1 != null).groupBy(_._1)
+      if (current.iterator.map(r => byKey.get(r._2).fold(1L)(_.length)).sum > cap)
+        return None
+      var moved = 0L
+      val next = current.flatMap { case (k, t) =>
+        byKey.get(t) match {
+          case None => Array((k, t)) // t is null or no key matches
+          case Some(hops) => hops.map { case (_, bt) =>
+            if (bt == null) (k, t)
+            else { if (bt != t) moved += 1; (k, bt) }
+          }
+        }
+      }
+      current = next
+      converged = moved == 0
+      i += 1
+    }
+    Some(current)
+  }
+
+  private def aliasLoop(input: DataFrame, maxIters: Int): DataFrame = {
+    var current = input
     var pinned: Option[DataFrame] = None
     var i = 0
     var converged = false

@@ -15,7 +15,10 @@ import graft.operators.{Packing, Sitemap}
   * released pin frees its blocks itself instead of waiting for the context
   * cleaner. (Broadcast blocks of the queries' broadcast joins are not
   * pins; only the cleaner frees them, after a GC, so they are not
-  * counted.) */
+  * counted.) The cycles run in the shared session, where the small CC and
+  * alias graphs are solved on the driver, and again in a clone whose
+  * broadcast threshold of -1 sends them through their loops' round
+  * pins. */
 class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
@@ -28,27 +31,32 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
 
   test("five cycles of every pinning operator leave no persistent RDD and " +
     "no RDD block after each Catalog.unpersistAll") {
-    import spark.implicits._
-    Catalog.unpersistAll(spark)
-    // suites that ran earlier in this JVM may hold RDDs of their own
-    val before = persistentRdds
-    val baseBlocks = rddBlocks.keySet
-    val records = (1L to 300L).map(i => (i, s"b$i")).toDF("id", "bibcode")
-    val docs = (1L to 300L).map(i => (s"l${i % 3}", i, 10L + i % 17))
-      .toDF("lang", "doc_id", "n_tokens")
-    for (cycle <- 1 to 5) {
-      SparkEntry.queries("dd_cluster_assign")(spark, sf).count()
-      SparkEntry.queries("j7_alias_fixpoint")(spark, sf).count()
-      Sitemap.assignFilenames(records, maxPerFile = 16).count()
-      Packing.packByBudget(docs, "lang", "doc_id", "n_tokens", budget = 500L).count()
-      assert((persistentRdds -- before).nonEmpty, s"cycle $cycle pinned nothing")
-      Catalog.unpersistAll(spark)
-      val left = persistentRdds -- before
-      assert(left.isEmpty, s"cycle $cycle left persistent RDDs $left")
-      eventually(timeout(Span(10, Seconds))) {
-        val blocks = rddBlocks -- baseBlocks
-        assert(blocks.isEmpty,
-          s"cycle $cycle left ${blocks.values.sum} bytes in RDD blocks $blocks")
+    val noBroadcast = spark.newSession()
+    noBroadcast.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    for (sess <- Seq(spark, noBroadcast)) {
+      import sess.implicits._
+      val path = if (sess eq spark) "driver" else "loop"
+      Catalog.unpersistAll(sess)
+      // suites that ran earlier in this JVM may hold RDDs of their own
+      val before = persistentRdds
+      val baseBlocks = rddBlocks.keySet
+      val records = (1L to 300L).map(i => (i, s"b$i")).toDF("id", "bibcode")
+      val docs = (1L to 300L).map(i => (s"l${i % 3}", i, 10L + i % 17))
+        .toDF("lang", "doc_id", "n_tokens")
+      for (cycle <- 1 to 5) {
+        SparkEntry.queries("dd_cluster_assign")(sess, sf).count()
+        SparkEntry.queries("j7_alias_fixpoint")(sess, sf).count()
+        Sitemap.assignFilenames(records, maxPerFile = 16).count()
+        Packing.packByBudget(docs, "lang", "doc_id", "n_tokens", budget = 500L).count()
+        assert((persistentRdds -- before).nonEmpty, s"$path cycle $cycle pinned nothing")
+        Catalog.unpersistAll(sess)
+        val left = persistentRdds -- before
+        assert(left.isEmpty, s"$path cycle $cycle left persistent RDDs $left")
+        eventually(timeout(Span(10, Seconds))) {
+          val blocks = rddBlocks -- baseBlocks
+          assert(blocks.isEmpty,
+            s"$path cycle $cycle left ${blocks.values.sum} bytes in RDD blocks $blocks")
+        }
       }
     }
   }

@@ -281,6 +281,27 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(r3.solrOk == 1, "ignore_checksums re-sends the unchanged payload")
   }
 
+  test("a merge-only batch (no sink) merges and reports indexed = 0; a " +
+    "metrics-only run still counts the due solr docs, as -r m prints them") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_store_mo").toString
+    val store = new MasterStore(root, numBuckets = 2)
+    val sent = spark.sparkContext.longAccumulator("merge-only sends")
+    val counting = new Sinks.Transport { def send(p: Seq[String]): Unit = sent.add(p.size) }
+    val merged = Pipeline.runBatch(spark, store,
+      (msgs("mo1", "2024-01-01 00:00:00") ++ msgs("mo2", "2024-01-01 00:00:00")).toDS(),
+      counting, counting, sinks = Set.empty, now = ts("2024-01-02 00:00:00"))
+    assert((merged.merged, merged.indexed, merged.solrOk, merged.metricsOk,
+      merged.linksOk) == ((2L, 0L, 0L, 0L, 0L)), s"$merged")
+    assert(sent.sum == 0L, "no sink is sent to")
+    assert(store.read(spark).count() == 2L, "the merge is published")
+
+    val metricsOnly = Pipeline.runBatch(spark, store,
+      spark.emptyDataset[UpdateMessage], okTransport, okTransport,
+      sinks = Set("metrics"), now = ts("2024-01-03 00:00:00"))
+    assert(metricsOnly.indexed == 2L && metricsOnly.metricsOk == 2L, s"$metricsOnly")
+  }
+
   test("links sink alone: failure nulls only the datalinks checksum " +
     "(test_index_datalinks_success, test_index_datalinks_service_failure, " +
     "test_index_datalinks_service_only_batch_failure, " +
