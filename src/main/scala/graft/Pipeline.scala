@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -11,13 +11,11 @@ import graft.streaming.Watermark
 
 /** The whole reference topology as one batch job (SURVEY.md §3):
   * ingest messages → merge into the master snapshot → eligibility gate →
-  * build the three sink payloads → push with retry ladders → stamp
-  * processed/checksum/status in one keyed join → next snapshot. What took
-  * the reference 13 Celery queues and three databases is one batch over
-  * one snapshot store; every stage is an operator tested on its own. In
-  * perfbench's traced `bulk_reindex` run (4 cores) a forced full reindex
-  * of a 3,000-record store runs 11 Spark jobs, a queue consumer's
-  * merge-only micro-batch 27 and a feed-driven sweep 35.
+  * one index pass that builds the three sink payloads, pushes them with
+  * retry ladders and stamps processed/checksum/status per chunk of
+  * records → next snapshot. What took the reference 13 Celery queues and
+  * three databases is one batch over one snapshot store; every stage is
+  * an operator tested on its own.
   */
 object Pipeline {
 
@@ -36,7 +34,19 @@ object Pipeline {
       augmentOk: Long = 0L, augmentFailed: Long = 0L)
 
   /** One micro-batch: the batch analog of the reference's
-    * `cron → reindex → task_index_records → sinks → mark_processed`. */
+    * `cron → reindex → task_index_records → sinks → mark_processed`.
+    *
+    * The merged master is read once, by one index pass
+    * (IndexJob.deliver): each partition takes its due records in chunks
+    * of the sink batch size, builds their payloads, sends them and emits
+    * every row stamped, as reindex_records does per chunk
+    * (adsmp/tasks.py:317-460). The pass is cached; one aggregation over it
+    * fires the transports and gives every count of the report, and the
+    * publish and the boost, augment and metrics-store legs read the cache.
+    * A forced full reindex runs 6 Spark jobs (PipelineSpec guards the
+    * bound): the store read's footer read, the pass's aggregation and four
+    * for the bucketed snapshot write. Every frame the batch caches is
+    * released on every exit, exceptions included. */
   def runBatch(
       spark: SparkSession,
       store: MasterStore,
@@ -62,11 +72,11 @@ object Pipeline {
     import spark.implicits._
     // bench-facing stage attribution (OpsBench's wave decomposition):
     // wall time between this batch's ACTIONS — "merge_read" covers the
-    // keyed lookup + upsert compute up to the merged-count
-    // materialization, "publish" the gate/transform/sink compute forced
-    // by the delivery counts, then the stamp, the layer write and the
-    // CAS + auto-compaction, "report" what the report reads after the
-    // publish. Zero cost when left defaulted.
+    // doomed-key probe and any sink deletes, "publish" the index pass
+    // (merge, gate, transform, sinks and stamp in the one job its counts
+    // fire), then the layer write and the CAS + auto-compaction, "report"
+    // what the report reads after the publish. Zero cost when left
+    // defaulted.
     var stageT0 = System.nanoTime()
     def stage(name: String): Unit = {
       stageTimer(name, (System.nanoTime() - stageT0) / 1e9)
@@ -116,263 +126,250 @@ object Pipeline {
     // the doomed set stays a Dataset end-to-end: anti-join for the row
     // drop, distributed count to fire the sink deletes — a mass-deletion
     // batch must never become a driver list or an isin literal (the same
-    // scale bug class the -n/--index_failed paths already fixed)
-    val doomed = updates.filter(isFullDelete)
-      .select(col("bibcode")).distinct().as[String].cache()
-    val anyDoomed = doomed.head(1).nonEmpty
+    // scale bug class the -n/--index_failed paths already fixed). A probe
+    // for one full delete comes first, so the usual batch, which has
+    // none, caches nothing and shuffles nothing for it
+    val doomed =
+      if (updates.filter(isFullDelete).head(1).isEmpty) None
+      else Some(updates.filter(isFullDelete)
+        .select(col("bibcode")).distinct().as[String].cache())
+    // every frame this batch caches is released on every exit: a batch
+    // that throws in a long-lived driver (`Cli --consume`) must not leave
+    // its working set in executor storage
+    var held: Option[DataFrame] = None
+    try {
+      // M1 merge (over the batch's keyed working set when keyLocal)
+      val baseMaster =
+        if (keyLocal) workRows.getOrElse(store.lookupFrame(spark, updates.select(col("bibcode"))))
+        else store.read(spark)
+      val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
+      val master = doomed.fold(merged.master)(d =>
+        merged.master.join(d.toDF("bibcode"), Seq("bibcode"), "left_anti"))
+      doomed.foreach(Sinks.deleteByBibcodes(_, Seq(solrTransport, bulkTransport)).count())
+      stage("merge_read")
 
-    // M1 merge (over the batch's keyed working set when keyLocal)
-    val baseMaster =
-      if (keyLocal) workRows.getOrElse(store.lookupFrame(spark, updates.select(col("bibcode"))))
-      else store.read(spark)
-    val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
-    val master0 =
-      if (!anyDoomed) merged.master
-      else merged.master.join(doomed.toDF("bibcode"), Seq("bibcode"), "left_anti")
-    if (anyDoomed)
-      Sinks.deleteByBibcodes(doomed, Seq(solrTransport, bulkTransport)).count()
-    val master = master0.cache()
-    val mergedCount = master.count()
-    stage("merge_read")
-    doomed.unpersist(blocking = false)
-
-    // the reference queues a boost-pipeline request for every record an
-    // ingest message touched (task_update_record/task_augment_record →
-    // task_boost_request, adsmp/tasks.py:104-111), except for boost
-    // responses themselves — forwarding those would loop the pipeline.
-    // Delivery counts surface in the report: a dead bulk endpoint must
-    // not silently lose the whole boost leg
-    val (boostOk, boostFailed) =
-      if (!forwardBoostRequests) (0L, 0L)
-      else {
-        val touched = updates.filter(!isFullDelete && col("mtype") =!= "boost")
-          .select(col("bibcode")).distinct()
-        val requests = master.join(touched, Seq("bibcode"), "left_semi")
-          .as[MasterRecord]
-          .map(r => (r.bibcode, org.json4s.jackson.JsonMethods.compact(
-            org.json4s.jackson.JsonMethods.render(IndexJob.boostRequest(r)))))
-          .toDF("bibcode", "payload")
-        val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
-        (ok, total - ok)
+      // P1-P3 gate as a per-row due flag. The reference's `-f` sets force
+      // AND ignore_checksums together (run.py:82-86): force widens
+      // eligibility, ignoreChecksums re-sends payloads whose checksum still
+      // matches the stored one. A -b/-n bibcode list (restrictTo) narrows
+      // the due rows to the named records through a marker join against the
+      // key frame, never an isin literal: a hand-list stays a broadcast
+      // join (AQE sees a tiny side), while a mass --index_failed re-drive
+      // shuffles on bibcode like any other join — no million-literal plan,
+      // no driver list
+      val gate = IndexJob.eligible(since, force)
+      val (rows, due) = restrictTo match {
+        case Some(keys) =>
+          (master.join(keys.toDF("bibcode").distinct().withColumn("__named", lit(true)),
+            Seq("bibcode"), "left_outer"), gate && coalesce(col("__named"), lit(false)))
+        case None => (master, gate)
       }
+      // the index pass: every master row once, the due ones built into
+      // payloads, delivered per chunk and stamped; the -r letters (s/m/l,
+      // run.py:687-694) choose which sinks it sends to and stamps.
+      // update_processed=False (app.py:381-430, run.py --update-processed)
+      // still delivers but touches NO records-table state — no processed
+      // timestamps, checksums, or statuses, success or failure. Cached: the
+      // report, the publish and the request legs all read it, and a re-read
+      // must not re-fire the transports. NOTE: cache is best-effort; an
+      // evicted/lost partition recomputes and re-sends. That is safe here
+      // because the sinks are idempotent by design (ST4: upsert semantics +
+      // checksum change-suppression make duplicate deliveries no-ops); a
+      // strict once-only guarantee would require persisting the pass to
+      // durable storage first.
+      val pass = IndexJob.deliver(rows, due, sinks, solrTransport, bulkTransport,
+        ignoreChecksums, stampAt = if (updateProcessed) Some(now) else None).cache()
+      held = Some(pass)
+      val stamped = pass.select(MergeEngine.masterColumns.map(col): _*)
+      // the batch's counts in one aggregation over the pass, run first: it
+      // fires the transports and fills the cache that every later read uses.
+      // `merged` counts the rows, `indexed` the due solr docs (built but not
+      // sent when solr is not selected, so -r m / -r l print the same count)
+      val counts = pass.agg(count(lit(1)), count_if(col("indexed")),
+        count_if(col("solrOk")), count_if(!col("solrOk")), count_if(col("metricsOk")),
+        count_if(col("linksOk")), count_if(col("metricsOk").isNotNull)).head()
+      def got(i: Int): Long = counts.getLong(i)
+      val mergedCount = got(0)
 
-    // a metadata update additionally requests affiliation augmentation
-    // (tasks.py:192-196 — the aff pipeline answers with its own augment
-    // message later); only records whose bib data carries a non-empty aff
-    // list produce a request (app.py:628-653), so the builder's None rows
-    // drop out before the send. In the reference this fires UNCONDITIONALLY
-    // on metadata updates — only the boost leg is gated (by
-    // IGNORED_BOOST_PAYLOAD_TYPES/TESTING_MODE) — so augment has its OWN
-    // gate here rather than riding the boost flag
-    val (augmentOk, augmentFailed) =
-      if (!forwardAugmentRequests) (0L, 0L)
-      else {
-        val metaTouched = updates.filter(!isFullDelete && col("mtype") === "metadata")
-          .select(col("bibcode")).distinct()
-        val requests = master.join(metaTouched, Seq("bibcode"), "left_semi")
-          .as[MasterRecord]
-          .flatMap(r => IndexJob.affAugmentRequest(r).map(j =>
-            (r.bibcode, org.json4s.jackson.JsonMethods.compact(
-              org.json4s.jackson.JsonMethods.render(j)))))
-          .toDF("bibcode", "payload")
-        val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
-        (ok, total - ok)
-      }
-
-    // P1-P3 gate + payload builds + P4 checksum suppression. The
-    // reference's `-f` sets force AND ignore_checksums together
-    // (run.py:82-86): force widens eligibility, ignoreChecksums re-sends
-    // payloads whose checksum still matches the stored one; a -b/-n
-    // bibcode list (restrictTo) narrows the sweep to the named records
-    val gated = master.as[MasterRecord].filter(IndexJob.eligible(since, force))
-    // a -b/-n restriction is a left_semi join against the key frame, never
-    // an isin literal: a hand-list stays a broadcast-hash semi (AQE sees a
-    // tiny side), while a mass --index_failed re-drive shuffles on bibcode
-    // like any other join — no million-literal plan, no driver list
-    val selected = restrictTo match {
-      case Some(keys) =>
-        gated.join(keys.toDF("bibcode"), Seq("bibcode"), "left_semi").as[MasterRecord]
-      case None => gated
-    }
-    val batch = IndexJob.run(selected, ignoreChecksums = ignoreChecksums)
-    // each payload frame is read once, by its sink write, except metrics,
-    // which the metrics store leg below reads again
-    val cacheMetrics = metricsStore.isDefined && sinks("metrics")
-    if (cacheMetrics) batch.metrics.cache()
-
-    // S6/S7/S8 with retry ladders, tagged by sink and unioned into the
-    // batch's delivery outcomes. The -r letters (s/m/l, run.py:687-694)
-    // choose which sinks this run updates; an unselected sink neither
-    // sends nor stamps, so it simply has no part in the union. Cached: the
-    // stamp, the publish key set and the report all read the outcomes,
-    // and a re-read must not re-fire the transports. NOTE: cache is
-    // best-effort; an evicted/lost partition recomputes and re-sends.
-    // That is safe here because the sinks are idempotent by design (ST4:
-    // upsert semantics + checksum change-suppression make duplicate
-    // deliveries no-ops); a strict once-only guarantee would require
-    // persisting the outcomes to durable storage first.
-    val outcomes: Option[DataFrame] = Seq(
-        "solr" -> Sinks.writeSolr(batch.solr, solrTransport),
-        "metrics" -> Sinks.writeBulk(batch.metrics, bulkTransport),
-        "links" -> Sinks.writeBulk(batch.links, bulkTransport))
-      .collect { case (s, status) if sinks(s) => Sinks.outcomes(s, status) }
-      .reduceOption(_ unionByName _)
-      .map(_.cache())
-    // every delivery count in one aggregation over the outcomes, run first:
-    // it fires the transports and fills the cache, so the stamp below is
-    // planned against the outcomes' measured size — a broadcast join for
-    // a batch-sized outcome set, a shuffle join for a corpus-sized one.
-    // `indexed` counts the due solr payloads, one outcome each when solr
-    // is selected
-    val counts = outcomes.map { o =>
-      def n(sink: String, cond: Column) = count_if(col("sink") === sink && cond)
-      o.agg(n("solr", lit(true)), n("solr", col("ok")), n("solr", !col("ok")),
-        n("metrics", col("ok")), n("links", col("ok"))).head()
-    }
-
-    // M4/ST6 stamping in one keyed join. update_processed=False
-    // (app.py:381-430, run.py --update-processed): deliveries still happen
-    // but NO records-table state is touched — no processed timestamps,
-    // checksums, or statuses, success or failure
-    val stamped = outcomes match {
-      case Some(o) if updateProcessed => MergeEngine.stampSinks(master, o, now)
-      case _ => master
-    }
-
-    // S7's store leg: merge the due metrics payloads into the metrics
-    // snapshot (whole-row replace per bibcode, MetricsTable semantics).
-    // Skipped for idle batches — otherwise every checksum-suppressed
-    // micro-batch would rewrite the whole metrics table to a new version.
-    metricsStore.foreach { ms =>
-      if (sinks("metrics") && batch.metrics.limit(1).count() > 0) {
-        // IndexJob emits at most one metrics payload per bibcode, so the
-        // in-batch arrival order is vacuous and a constant seq is exact —
-        // but only under that invariant. Guard it loudly: if a future
-        // multi-source metrics path ever emits duplicates, the upsert
-        // would silently become nondeterministic again. One tiny job over
-        // the already-cached payload frame.
-        val dup = batch.metrics.groupBy(col("bibcode")).count()
-          .filter(col("count") > 1).limit(1).count()
-        require(dup == 0, "metrics batch carries multiple rows per bibcode; " +
-          "derive a real arrival seq before upserting")
-        val incoming = batch.metrics.select(col("bibcode"), col("payload"))
-          .as[(String, String)]
-          .map { case (b, p) => graft.operators.MetricsTable.fromJson(b, p, now) }
-          .toDF().withColumn("seq", lit(0L))
-        // keyed merge: only the due payloads' rows move, so the store
-        // appends a delta layer ∝ batch instead of rewriting the table
-        ms.writeMergeKeyed(spark, incoming.select(col("bibcode")), cur =>
-          graft.operators.MetricsTable.upsert(cur, incoming))
-      }
-    }
-
-    // Publish. The batch's net effect on the table is KEY-LOCAL: rows it
-    // upserted (the update messages' bibcodes, incl. full-deletes) plus
-    // rows it stamped (the sinks' delivery statuses). A keyed CAS merge
-    // rebases exactly those rows over the LIVE snapshot, so a CLI sweep
-    // that CAS-published mid-batch keeps its changes to every other key —
-    // the lost-update window the old blind write left open is closed, and
-    // the store appends a delta layer ∝ batch instead of rewriting the
-    // table. For the batch's own keys the batch wins (its payloads were
-    // delivered from its input snapshot — same per-row last-writer-wins
-    // the reference's row-level transactions give). The one remaining
-    // blind write is the forced FULL sweep (rebuild-collection's loop),
-    // whose key set IS the corpus: a keyed rebase would write the table
-    // twice (layer + immediate size-triggered compaction) for the same
-    // outcome, so it keeps the primary-writer full-write contract.
-    // keyedPublish forces the delta-layer publish even for sweep-shaped
-    // batches: whole-table writeMerge/write RESET the store's change-feed
-    // horizon (a rewritten base is not separable into per-key layers), so
-    // a feed-driven cadence that fell back to a table-wide sweep would
-    // otherwise knock out its own feed and fall back forever. The price —
-    // a table-sized layer plus the auto-compaction that folds it — is
-    // paid once per fallback (bootstrap, or a consumer that outslept the
-    // feed retention), and the retained fold history keeps the feed
-    // continuous across it.
-    val version =
-      if (force && restrictTo.isEmpty && !keyLocal && !keyedPublish)
-        store.write(stamped)
-      else {
-        val stampKeys =
-          if (!updateProcessed) updates.select(col("bibcode"))
-          else outcomes.foldLeft(updates.select(col("bibcode")).toDF())(
-            (keys, o) => keys.unionByName(o.select(col("bibcode"))))
-        if (keyLocal)
-          // queue batch: keys are the batch's — always a delta layer
-          store.writeMergeKeyed(spark, stampKeys, _ =>
-            stamped.join(stampKeys.distinct(), Seq("bibcode"), "left_semi"))
+      // the reference queues a boost-pipeline request for every record an
+      // ingest message touched (task_update_record/task_augment_record →
+      // task_boost_request, adsmp/tasks.py:104-111), except for boost
+      // responses themselves — forwarding those would loop the pipeline.
+      // Delivery counts surface in the report: a dead bulk endpoint must
+      // not silently lose the whole boost leg. The requests read the pass:
+      // the stamp leaves every column they project as it was
+      val (boostOk, boostFailed) =
+        if (!forwardBoostRequests) (0L, 0L)
         else {
-          val sk = stampKeys.distinct().cache()
-          val nKeys = sk.count()
-          try {
-            if (!keyedPublish && nKeys > 0 && nKeys * 2 >= mergedCount)
-              // sweep-shaped: the touched set IS most of the table, so a
-              // delta layer would trip the size-triggered fold and write
-              // the table TWICE (layer + compaction). One CAS whole-table
-              // merge writes it once and still rebases the batch's rows
-              // onto the live snapshot — concurrent key-local writers'
-              // other keys survive a lost race (their changes re-apply
-              // under writeMerge's re-resolve)
-              store.writeMerge(spark, cur =>
-                cur.join(sk, Seq("bibcode"), "left_anti")
-                  .unionByName(stamped.join(sk, Seq("bibcode"), "left_semi")))
-            else
-              store.writeMergeKeyed(spark, sk, _ =>
-                stamped.join(sk, Seq("bibcode"), "left_semi"))
-          } finally sk.unpersist(blocking = false)
+          val touched = updates.filter(!isFullDelete && col("mtype") =!= "boost")
+            .select(col("bibcode")).distinct()
+          val requests = stamped.join(touched, Seq("bibcode"), "left_semi")
+            .as[MasterRecord]
+            .map(r => (r.bibcode, org.json4s.jackson.JsonMethods.compact(
+              org.json4s.jackson.JsonMethods.render(IndexJob.boostRequest(r)))))
+            .toDF("bibcode", "payload")
+          val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
+          (ok, total - ok)
+        }
+
+      // a metadata update additionally requests affiliation augmentation
+      // (tasks.py:192-196 — the aff pipeline answers with its own augment
+      // message later); only records whose bib data carries a non-empty aff
+      // list produce a request (app.py:628-653), so the builder's None rows
+      // drop out before the send. In the reference this fires UNCONDITIONALLY
+      // on metadata updates — only the boost leg is gated (by
+      // IGNORED_BOOST_PAYLOAD_TYPES/TESTING_MODE) — so augment has its OWN
+      // gate here rather than riding the boost flag
+      val (augmentOk, augmentFailed) =
+        if (!forwardAugmentRequests) (0L, 0L)
+        else {
+          val metaTouched = updates.filter(!isFullDelete && col("mtype") === "metadata")
+            .select(col("bibcode")).distinct()
+          val requests = stamped.join(metaTouched, Seq("bibcode"), "left_semi")
+            .as[MasterRecord]
+            .flatMap(r => IndexJob.affAugmentRequest(r).map(j =>
+              (r.bibcode, org.json4s.jackson.JsonMethods.compact(
+                org.json4s.jackson.JsonMethods.render(j)))))
+            .toDF("bibcode", "payload")
+          val (ok, total) = Sinks.counts(Sinks.writeBulk(requests, bulkTransport))
+          (ok, total - ok)
+        }
+
+      // S7's store leg: merge the due metrics payloads into the metrics
+      // snapshot (whole-row replace per bibcode, MetricsTable semantics).
+      // Skipped for idle batches — otherwise every checksum-suppressed
+      // micro-batch would rewrite the whole metrics table to a new version.
+      // The payloads are rebuilt from the pass's rows that delivered one
+      // (the stamp leaves the metrics slot as it was)
+      metricsStore.foreach { ms =>
+        if (sinks("metrics") && got(6) > 0) {
+          val metrics = pass.filter(col("metricsOk").isNotNull)
+            .select(MergeEngine.masterColumns.map(col): _*).as[MasterRecord]
+            .flatMap(IndexJob.payload("metrics", _))
+          // one metrics payload per master row, so the in-batch arrival
+          // order is vacuous and a constant seq is exact — but only while
+          // the master holds one row per bibcode. Guard it loudly: if a
+          // duplicate ever reaches here, the upsert would silently become
+          // nondeterministic. One tiny job over the cached pass.
+          val dup = metrics.groupBy(col("bibcode")).count()
+            .filter(col("count") > 1).limit(1).count()
+          require(dup == 0, "metrics batch carries multiple rows per bibcode; " +
+            "derive a real arrival seq before upserting")
+          val incoming = metrics
+            .map(p => graft.operators.MetricsTable.fromJson(p.bibcode, p.payload, now))
+            .toDF().withColumn("seq", lit(0L))
+          // keyed merge: only the due payloads' rows move, so the store
+          // appends a delta layer ∝ batch instead of rewriting the table
+          ms.writeMergeKeyed(spark, incoming.select(col("bibcode")), cur =>
+            graft.operators.MetricsTable.upsert(cur, incoming))
         }
       }
-    stage("publish")
-    // The audit log the reference appends on every mutation in the same
-    // transaction (ChangeLog, adsmp/models.py:127-141; written at
-    // app.py:175 for upserts and :250 for deletes with the serialized old
-    // record). Here the batch is the transaction: written AFTER the CAS
-    // publish lands, stamped with the published generation so an auditor
-    // can join log rows to snapshots. Pre-images come from the batch's
-    // input snapshot (the generation retention window keeps it readable).
-    // Append-only parquet, rows ∝ batch; auditors must treat it as
-    // AT-LEAST-ONCE keyed by (key, version): redelivery appends the
-    // replayed batch's rows again — the same property the reference's
-    // per-task-run inserts have, and the `version` stamp makes replays
-    // distinguishable instead of silently merged. The append is not
-    // atomic with the CAS publish (the reference gets that from its DB
-    // transaction); writing the log BEFORE the watermark advance closes
-    // the loss window — a crash between publish and append leaves the
-    // watermark un-advanced, so the redriven batch re-emits the missing
-    // rows (as duplicates of any that did land, per the keying above)
-    changeLogDir.foreach { dir =>
-      val upsertLog = merged.changeLog
-      val deleteLog =
-        if (!anyDoomed) None
-        else Some(baseMaster
-          .join(doomed.toDF("bibcode"), Seq("bibcode"), "left_semi")
+
+      // Publish. The batch's net effect on the table is KEY-LOCAL: rows it
+      // upserted (the update messages' bibcodes, incl. full-deletes) plus
+      // rows it stamped (the rows with any delivery outcome). A keyed CAS
+      // merge rebases exactly those rows over the LIVE snapshot, so a CLI
+      // sweep that CAS-published mid-batch keeps its changes to every other
+      // key — the lost-update window the old blind write left open is
+      // closed, and the store appends a delta layer ∝ batch instead of
+      // rewriting the table. For the batch's own keys the batch wins (its
+      // payloads were delivered from its input snapshot — same per-row
+      // last-writer-wins the reference's row-level transactions give). The
+      // one remaining blind write is the forced FULL sweep
+      // (rebuild-collection's loop), whose key set IS the corpus: a keyed
+      // rebase would write the table twice (layer + immediate size-triggered
+      // compaction) for the same outcome, so it keeps the primary-writer
+      // full-write contract.
+      // keyedPublish forces the delta-layer publish even for sweep-shaped
+      // batches: whole-table writeMerge/write RESET the store's change-feed
+      // horizon (a rewritten base is not separable into per-key layers), so
+      // a feed-driven cadence that fell back to a table-wide sweep would
+      // otherwise knock out its own feed and fall back forever. The price —
+      // a table-sized layer plus the auto-compaction that folds it — is
+      // paid once per fallback (bootstrap, or a consumer that outslept the
+      // feed retention), and the retained fold history keeps the feed
+      // continuous across it.
+      val version =
+        if (force && restrictTo.isEmpty && !keyLocal && !keyedPublish)
+          store.write(stamped)
+        else {
+          val delivered = col("solrOk").isNotNull || col("metricsOk").isNotNull ||
+            col("linksOk").isNotNull
+          val stampKeys =
+            if (!updateProcessed) updates.select(col("bibcode"))
+            else updates.select(col("bibcode")).toDF()
+              .unionByName(pass.filter(delivered).select(col("bibcode")))
+          if (keyLocal)
+            // queue batch: keys are the batch's — always a delta layer
+            store.writeMergeKeyed(spark, stampKeys, _ =>
+              stamped.join(stampKeys.distinct(), Seq("bibcode"), "left_semi"))
+          else {
+            val sk = stampKeys.distinct().cache()
+            val nKeys = sk.count()
+            try {
+              if (!keyedPublish && nKeys > 0 && nKeys * 2 >= mergedCount)
+                // sweep-shaped: the touched set IS most of the table, so a
+                // delta layer would trip the size-triggered fold and write
+                // the table TWICE (layer + compaction). One CAS whole-table
+                // merge writes it once and still rebases the batch's rows
+                // onto the live snapshot — concurrent key-local writers'
+                // other keys survive a lost race (their changes re-apply
+                // under writeMerge's re-resolve)
+                store.writeMerge(spark, cur =>
+                  cur.join(sk, Seq("bibcode"), "left_anti")
+                    .unionByName(stamped.join(sk, Seq("bibcode"), "left_semi")))
+              else
+                store.writeMergeKeyed(spark, sk, _ =>
+                  stamped.join(sk, Seq("bibcode"), "left_semi"))
+            } finally sk.unpersist(blocking = false)
+          }
+        }
+      stage("publish")
+      // The audit log the reference appends on every mutation in the same
+      // transaction (ChangeLog, adsmp/models.py:127-141; written at
+      // app.py:175 for upserts and :250 for deletes with the serialized old
+      // record). Here the batch is the transaction: written AFTER the CAS
+      // publish lands, stamped with the published generation so an auditor
+      // can join log rows to snapshots. Pre-images come from the batch's
+      // input snapshot (the generation retention window keeps it readable).
+      // Append-only parquet, rows ∝ batch; auditors must treat it as
+      // AT-LEAST-ONCE keyed by (key, version): redelivery appends the
+      // replayed batch's rows again — the same property the reference's
+      // per-task-run inserts have, and the `version` stamp makes replays
+      // distinguishable instead of silently merged. The append is not
+      // atomic with the CAS publish (the reference gets that from its DB
+      // transaction); writing the log BEFORE the watermark advance closes
+      // the loss window — a crash between publish and append leaves the
+      // watermark un-advanced, so the redriven batch re-emits the missing
+      // rows (as duplicates of any that did land, per the keying above)
+      changeLogDir.foreach { dir =>
+        val upsertLog = merged.changeLog
+        val deleteLog = doomed.map(d => baseMaster
+          .join(d.toDF("bibcode"), Seq("bibcode"), "left_semi")
           .select(col("bibcode").as("key"), lit("deleted").as("ctype"),
             to_json(struct(baseMaster.columns.map(col).toIndexedSeq: _*))
               .as("oldvalue"),
             lit(false).as("permanent"), lit(now).as("ts")))
-      deleteLog.foldLeft(upsertLog)(_ unionByName _)
-        .withColumn("version", lit(version))
-        .write.mode("append").parquet(dir)
+        deleteLog.foldLeft(upsertLog)(_ unionByName _)
+          .withColumn("version", lit(version))
+          .write.mode("append").parquet(dir)
+      }
+      watermarkDir.foreach(Watermark.advance(spark, _, "last.reindex.normal", now))
+
+      val report = RunReport(version, mergedCount,
+        indexed = got(1),
+        solrOk = got(2),
+        solrFailed = got(3),
+        metricsOk = got(4),
+        linksOk = got(5),
+        boostOk = boostOk, boostFailed = boostFailed,
+        augmentOk = augmentOk, augmentFailed = augmentFailed)
+      stage("report")
+      report
+    } finally {
+      held.foreach(_.unpersist())
+      doomed.foreach(_.unpersist())
     }
-    watermarkDir.foreach(Watermark.advance(spark, _, "last.reindex.normal", now))
-
-    def got(i: Int): Long = counts.fold(0L)(_.getLong(i))
-    val report = RunReport(version, mergedCount,
-      indexed = if (sinks("solr")) got(0) else if (sinks.isEmpty) 0L else batch.solr.count(),
-      solrOk = got(1),
-      solrFailed = got(2),
-      metricsOk = got(3),
-      linksOk = got(4),
-      boostOk = boostOk, boostFailed = boostFailed,
-      augmentOk = augmentOk, augmentFailed = augmentFailed)
-
-    stage("report")
-    // release this batch's caches — in runStream a leak here would grow
-    // executor storage per micro-batch
-    outcomes.foreach(_.unpersist())
-    if (cacheMetrics) batch.metrics.unpersist()
-    master.unpersist()
-    report
   }
 
   /** What a feed-driven sweep did: the underlying run report, the

@@ -403,11 +403,14 @@ object PipelineBench {
         // ── phase 6b: STAGE BREAKDOWN of the feed sweep — the same batch
         // shape re-run stage-isolated with materialization barriers
         // (cache + count per stage), so each number is one stage's wall
-        // alone. The live sweep fuses the stages into fewer jobs, so the
-        // stage SUM is an upper bound on (and should sit close to)
-        // feed_sweep_sec; the changelog leg is off here, as in phase 6.
-        // Mirrors runBatch's keyLocal success path: feed rows ARE the
-        // working set (workRows — no store gate read since r15) ──
+        // alone; the changelog leg is off here, as in phase 6. Mirrors
+        // runBatch's keyLocal success path: feed rows ARE the working set
+        // (workRows — no store gate read since r15). The live sweep builds,
+        // sends and stamps in ONE index pass, so the transform stage times
+        // the payload builds alone and the sink stage times the whole pass
+        // (builds again, sends, stamps): sink − transform is the delivery
+        // and stamp, and discover + sink + publish should sit close to
+        // feed_sweep_sec ──
         val gCursorB = storeL.currentVersion.get
         mergePending(9600000L, 2500L)
         val nowB = new java.sql.Timestamp(System.currentTimeMillis())
@@ -417,32 +420,29 @@ object PipelineBench {
         require(feedB.count() == 2500, "breakdown wave discovery drifted")
         val stDiscoverSec = secs(tb)
         tb = System.nanoTime()
-        val gatedB = feedB.as[graft.records.MasterRecord](
-            Encoders.product[graft.records.MasterRecord])
-          .filter(graft.operators.IndexJob.eligible(None, force = false))
-        val batchB = graft.operators.IndexJob.run(gatedB)
+        val gate = graft.operators.IndexJob.eligible(None, force = false)
+        val batchB = graft.operators.IndexJob.run(feedB.filter(gate)
+          .as[graft.records.MasterRecord](Encoders.product[graft.records.MasterRecord]))
         val (solrB, metricsB, linksB) =
           (batchB.solr.cache(), batchB.metrics.cache(), batchB.links.cache())
         require(solrB.count() == 2500, "breakdown gate+transform drifted")
         metricsB.count(); linksB.count()
         val stTransformSec = secs(tb)
+        Seq(solrB, metricsB, linksB).foreach(_.unpersist())
         tb = System.nanoTime()
-        val sSolrB = Sinks.writeSolr(solrB, SolrTransport).cache()
-        val sMetB = Sinks.writeBulk(metricsB, BulkTransport).cache()
-        val sLnkB = Sinks.writeBulk(linksB, BulkTransport).cache()
-        require(sSolrB.filter(_.ok).count() == 2500, "breakdown sink drifted")
-        sMetB.count(); sLnkB.count()
+        val passB = graft.operators.IndexJob.deliver(feedB, gate,
+            Set("solr", "metrics", "links"), SolrTransport, BulkTransport,
+            ignoreChecksums = false, stampAt = Some(nowB)).cache()
+        require(passB.filter(col("solrOk")).count() == 2500, "breakdown sink drifted")
         val stSinkSec = secs(tb)
         tb = System.nanoTime()
-        val outcomesB = Seq("solr" -> sSolrB, "metrics" -> sMetB, "links" -> sLnkB)
-          .map { case (s, st) => Sinks.outcomes(s, st) }.reduce(_ unionByName _)
-        val stampedB = graft.operators.MergeEngine.stampSinks(feedB, outcomesB, nowB)
-        val stampKeysB = outcomesB.select(col("bibcode")).distinct()
+        val stampKeysB = passB.filter(col("solrOk").isNotNull ||
+          col("metricsOk").isNotNull || col("linksOk").isNotNull).select(col("bibcode"))
         storeL.writeMergeKeyed(spark, stampKeysB, _ =>
-          stampedB.join(stampKeysB, Seq("bibcode"), "left_semi"))
+          passB.select(graft.operators.MergeEngine.masterColumns.map(col): _*)
+            .join(stampKeysB, Seq("bibcode"), "left_semi"))
         val stPublishSec = secs(tb)
-        Seq(solrB, metricsB, linksB).foreach(_.unpersist())
-        Seq(sSolrB, sMetB, sLnkB).foreach(_.unpersist())
+        passB.unpersist()
         feedB.unpersist()
 
         // ── phase 7: the bucket-count growth lever at the standing

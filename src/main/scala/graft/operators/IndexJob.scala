@@ -1,25 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import java.sql.Timestamp
 
 import graft.records.MasterRecord
+import graft.sources.Sinks
 import graft.transform.SolrTransform
 import graft.functions.CanonicalJson
 
 /** The §3.2 index job: select changed+complete records, build the three
   * sink payloads (SOLR doc, metrics row, resolver links), suppress
-  * unchanged ones by checksum, and stamp the master table
+  * unchanged ones by checksum, deliver them and stamp the master table
   * (reference: run.py:103-232 + adsmp/tasks.py:317-460).
   *
-  * Spark shape: the eligibility predicates (P1-P3) are Column expressions
-  * that Catalyst pushes into the parquet scan of the master table; the
-  * per-record transform runs in `Dataset.map` (no shuffle); checksum
-  * change-suppression (P4) is a row-local comparison against the stored
-  * checksum column. The reference's queue fan-out disappears — the three
-  * payload builds share one scan.
+  * Spark shape: the eligibility predicates (P1-P3) are Column expressions;
+  * one per-record builder ([[payload]]) makes every payload, with
+  * checksum change-suppression (P4) a row-local comparison against the
+  * stored checksum column. [[deliver]] is the pipeline's index pass: one
+  * `mapPartitions` over the master that takes due records in chunks of
+  * the sink batch size, builds their payloads, sends them through the
+  * sinks' retry ladder and emits every row stamped — the reference's
+  * per-chunk reindex_records loop, with no shuffle and no join back.
+  * [[run]] builds payload streams alone, for the catalog queries.
   */
 object IndexJob {
 
@@ -173,24 +177,16 @@ object IndexJob {
     p0 && p1 && p2 && p3
   }
 
-  /** Build the requested payload streams for one selection of master
-    * records. `ignoreChecksums` mirrors --force_indexing (ST4 idempotence:
-    * replaying a batch yields changed=false everywhere). `modes` mirrors
-    * the reference's P9 per-mode `load_only` lists (adsmp/tasks.py:349-357):
-    * a metrics-only run never references the other payload columns, so
-    * Catalyst prunes them out of the parquet scan entirely. */
-  def run(selected: Dataset[MasterRecord], ignoreChecksums: Boolean = false,
-      modes: Set[String] = Set("solr", "metrics", "links")): IndexBatch = {
-    val spark = selected.sparkSession
-    import spark.implicits._
-
-    def empty = spark.emptyDataset[SinkPayload].toDF()
-
-    val solr = if (!modes("solr")) empty else selected.map { rec =>
+  /** One record's payload for `sink` (solr, metrics or links; None when
+    * the record has none: no metrics slot, no links), with `changed` set
+    * when its checksum differs from the stored one. The one payload
+    * builder: [[run]] maps it over a selection, [[deliver]] over each
+    * chunk of records. */
+  def payload(sink: String, rec: MasterRecord): Option[SinkPayload] = sink match {
+    case "solr" =>
       val doc = SolrTransform.transform(rec)
       // identifier completeness (T16, adsmp/tasks.py:398-402)
-      val m = doc.obj.toMap
-      val ids = m.get("identifier") match {
+      val ids = doc.obj.toMap.get("identifier") match {
         case Some(JArray(xs)) => xs
         case _                => Nil
       }
@@ -198,36 +194,124 @@ object IndexJob {
         if (ids.contains(JString(rec.bibcode))) doc
         else JObject(doc.obj.filterNot(_._1 == "identifier") :+
           ("identifier" -> (JArray(ids :+ JString(rec.bibcode)): JValue)))
-      val cks = CanonicalJson.checksumOf(withId)
-      SinkPayload(rec.bibcode, CanonicalJson.serialize(withId), cks,
-        !rec.solr_checksum.contains(cks))
-    }.toDF()
-
-    val metrics = if (!modes("metrics")) empty else selected.flatMap { rec =>
+      Some(built(rec.bibcode, withId, CanonicalJson.checksumOf(withId), rec.solr_checksum))
+    case "metrics" =>
       rec.metrics.map { m =>
         val parsed = SolrTransform.parse(m)
-        val cks = CanonicalJson.checksumOf(parsed)
         val withBib = parsed match {
           case JObject(fs) => JObject(fs.filterNot(_._1 == "bibcode") :+
             ("bibcode" -> (JString(rec.bibcode): JValue)))
           case other => other
         }
-        SinkPayload(rec.bibcode, CanonicalJson.serialize(withBib), cks,
-          !rec.metrics_checksum.contains(cks))
+        // the checksum is the stored metrics document's, before the bibcode
+        built(rec.bibcode, withBib, CanonicalJson.checksumOf(parsed), rec.metrics_checksum)
       }
-    }.toDF()
+    case "links" =>
+      linksForResolver(rec).map(p =>
+        built(rec.bibcode, p, CanonicalJson.checksumOf(p), rec.datalinks_checksum))
+  }
 
-    val links = if (!modes("links")) empty else selected.flatMap { rec =>
-      linksForResolver(rec).map { payload =>
-        val cks = CanonicalJson.checksumOf(payload)
-        SinkPayload(rec.bibcode, CanonicalJson.serialize(payload), cks,
-          !rec.datalinks_checksum.contains(cks))
+  private def built(bibcode: String, doc: JValue, cks: String,
+      stored: Option[String]): SinkPayload =
+    SinkPayload(bibcode, CanonicalJson.serialize(doc), cks, !stored.contains(cks))
+
+  /** Build the requested payload streams for one selection of master
+    * records. `ignoreChecksums` mirrors --force_indexing (ST4 idempotence:
+    * replaying a batch yields changed=false everywhere). `modes` mirrors
+    * the reference's P9 per-mode `load_only` lists (adsmp/tasks.py:349-357):
+    * an unselected mode builds nothing. */
+  def run(selected: Dataset[MasterRecord], ignoreChecksums: Boolean = false,
+      modes: Set[String] = Set("solr", "metrics", "links")): IndexBatch = {
+    val spark = selected.sparkSession
+    import spark.implicits._
+    def stream(sink: String): DataFrame =
+      if (!modes(sink)) spark.emptyDataset[SinkPayload].toDF()
+      else selected.flatMap(payload(sink, _).filter(ignoreChecksums || _.changed)).toDF()
+    IndexBatch(stream("solr"), stream("metrics"), stream("links"))
+  }
+
+  /** One master row out of [[deliver]]'s pass. */
+  case class Indexed(rec: MasterRecord, indexed: Boolean,
+      solrOk: Option[Boolean], metricsOk: Option[Boolean], linksOk: Option[Boolean])
+
+  /** The index pass over master-schema `rows`, `due` flagging the rows to
+    * index (the P1-P3 gate and any -b/-n restriction): the per-chunk loop
+    * of the reference's reindex_records (adsmp/tasks.py:317-460). Rows
+    * that are not due pass through as they came. Due rows are taken in
+    * chunks of `batchSize`; for each chunk the pass builds every selected
+    * sink's due payloads ([[payload]]; due = changed, or any with
+    * `ignoreChecksums`), sends each sink's through the retry ladder
+    * (`Sinks.ladder`: solr with the body-strip rung on `solrTransport`,
+    * metrics and links on `bulkTransport`), and emits the chunk's rows
+    * stamped with the outcomes at `stampAt` (MergeEngine.stamp; None
+    * stamps nothing, the update_processed=False run). With no sink selected
+    * nothing is built.
+    *
+    * The result has the master columns (stamped) and four more: `indexed`,
+    * whether the row has a due solr doc (built for the count also when
+    * solr is not selected), and per sink `solrOk`, `metricsOk`, `linksOk`,
+    * the delivery outcome of its payload (null: no due payload, or the
+    * sink is not selected). Every action over it re-runs the transports,
+    * so a caller that reads it more than once caches it and fills the
+    * cache with its first action. */
+  def deliver(rows: DataFrame, due: Column, sinks: Set[String],
+      solrTransport: Sinks.Transport, bulkTransport: Sinks.Transport,
+      ignoreChecksums: Boolean, stampAt: Option[Timestamp],
+      batchSize: Int = 1000): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    // solr is built for the `indexed` count whenever any sink runs
+    val builds = MergeEngine.sinkColumns.map(_._1)
+      .filter(s => sinks(s) || (s == "solr" && sinks.nonEmpty))
+    def send(chunk: Seq[MasterRecord]): Iterator[Indexed] = {
+      val built = builds.map(s => s -> chunk.map(payload(s, _)
+        .filter(ignoreChecksums || _.changed))).toMap
+      val outcome = builds.filter(sinks).map { s =>
+        val statuses = Sinks.ladder(
+          built(s).flatten.map(p => (p.bibcode, p.payload, p.checksum)),
+          if (s == "solr") solrTransport else bulkTransport, stripBodies = s == "solr")
+          .iterator
+        s -> built(s).map(_.map(_ => statuses.next()))
+      }.toMap
+      chunk.indices.iterator.map { i =>
+        def o(s: String) = outcome.get(s).flatMap(_(i)).map(st => (st.ok, st.checksum))
+        val rec = stampAt.fold(chunk(i))(now =>
+          MergeEngine.stamp(chunk(i), o("solr"), o("metrics"), o("links"), now))
+        Indexed(rec, built.get("solr").exists(_(i).isDefined),
+          o("solr").map(_._1), o("metrics").map(_._1), o("links").map(_._1))
       }
-    }.toDF()
+    }
+    // a null gate (a null `updated` under a since-window) is not due, as
+    // a filter on it would drop the row
+    rows.select(struct(MergeEngine.masterColumns.map(col): _*).as("_1"),
+        coalesce(due, lit(false)).as("_2"))
+      .as[(MasterRecord, Boolean)]
+      .mapPartitions { it =>
+        if (sinks.isEmpty) it.map(r => Indexed(r._1, false, None, None, None))
+        else new Chunked(it, batchSize, send)
+      }
+      .select(col("rec.*"), col("indexed"), col("solrOk"), col("metricsOk"), col("linksOk"))
+  }
 
-    def due(df: DataFrame): DataFrame =
-      if (ignoreChecksums) df else df.filter(col("changed"))
-
-    IndexBatch(due(solr), due(metrics), due(links))
+  /** A partition's rows with the due ones sent in chunks: a row that is
+    * not due passes through at once, so a sparse sweep holds at most one
+    * chunk of due records and still sends full batches. */
+  private final class Chunked(it: Iterator[(MasterRecord, Boolean)], size: Int,
+      send: Seq[MasterRecord] => Iterator[Indexed]) extends Iterator[Indexed] {
+    private val due = scala.collection.mutable.ArrayBuffer.empty[MasterRecord]
+    private var out: Iterator[Indexed] = Iterator.empty
+    def hasNext: Boolean = {
+      while (!out.hasNext && (it.hasNext || due.nonEmpty))
+        if (!it.hasNext || due.size == size) {
+          out = send(due.toVector)
+          due.clear()
+        } else it.next() match {
+          case (rec, true) => due += rec
+          case (rec, false) => out = Iterator.single(Indexed(rec, false, None, None, None))
+        }
+      out.hasNext
+    }
+    def next(): Indexed =
+      if (hasNext) out.next() else throw new NoSuchElementException("end of partition")
   }
 }

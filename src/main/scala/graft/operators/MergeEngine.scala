@@ -364,65 +364,37 @@ object MergeEngine {
     "metrics" -> ("metrics_processed", "metrics_checksum"),
     "links" -> ("datalinks_processed", "datalinks_checksum"))
 
-  /** M4/ST6 — stamp a batch's delivery outcomes onto the master
-    * (adsmp/app.py:381-468). `outcomes` has one row per delivered payload,
-    * (bibcode, sink, ok, checksum) with `sink` one of [[sinkColumns]]. A
-    * bibcode with outcomes gets `processed` = now and, for each sink it has
-    * outcomes for, `<sink>_processed` = now and either
-    *   - on any failure: a NULL checksum and status `<sink>-failed`. The
+  /** M4/ST6 — stamp one record with its delivery outcomes
+    * (adsmp/app.py:381-468), per sink None (nothing delivered) or
+    * (ok, delivered checksum). A record with any outcome gets `processed`
+    * = now and, for each sink with one, `<sink>_processed` = now and either
+    *   - on a failure: a None checksum and status `<sink>-failed`. The
     *     reference's `mark_processed(checksums=None)` nulls the column
     *     (app.py:465-468) so that a failed delivery re-drives: P4
     *     change-suppression cannot match a null;
-    *   - otherwise the delivered checksum (the largest, should a sink
-    *     deliver two payloads) and status `success`.
-    * `status` ends as the last stamped sink's, in [[sinkColumns]] order.
-    *
-    * One aggregation per bibcode and one left join onto the master, with
-    * no broadcast hint: a forced sweep's key set is the corpus, so the
-    * planner chooses the join from the outcomes' size. */
-  def stampSinks(master: DataFrame, outcomes: DataFrame,
-      now: java.sql.Timestamp): DataFrame = {
-    val sinks = sinkColumns.map(_._1)
-    val aggs = sinks.flatMap { s =>
-      val mine = col("sink") === s
-      Seq(count_if(mine).as(s"__n_$s"),
-        count_if(mine && !col("ok")).as(s"__failed_$s"),
-        max(when(mine && col("ok"), col("checksum"))).as(s"__checksum_$s"))
+    *   - otherwise the delivered checksum and status `success`.
+    * `status` ends as the last stamped sink's, in [[sinkColumns]] order. A
+    * record without outcomes comes back as it was. */
+  def stamp(rec: MasterRecord, solr: Option[(Boolean, String)],
+      metrics: Option[(Boolean, String)], links: Option[(Boolean, String)],
+      now: java.sql.Timestamp): MasterRecord = {
+    val outcomes = sinkColumns.map(_._1).zip(Seq(solr, metrics, links))
+    if (outcomes.forall(_._2.isEmpty)) rec
+    else {
+      def at(o: Option[(Boolean, String)], old: Option[java.sql.Timestamp]) =
+        if (o.isDefined) Some(now) else old
+      def checksum(o: Option[(Boolean, String)], old: Option[String]) =
+        o.fold(old) { case (ok, c) => if (ok) Option(c) else None }
+      rec.copy(processed = Some(now),
+        solr_processed = at(solr, rec.solr_processed),
+        metrics_processed = at(metrics, rec.metrics_processed),
+        datalinks_processed = at(links, rec.datalinks_processed),
+        solr_checksum = checksum(solr, rec.solr_checksum),
+        metrics_checksum = checksum(metrics, rec.metrics_checksum),
+        datalinks_checksum = checksum(links, rec.datalinks_checksum),
+        status = outcomes.foldLeft(rec.status) { case (status, (sink, o)) =>
+          o.fold(status) { case (ok, _) => Some(if (ok) "success" else s"$sink-failed") }
+        })
     }
-    val per = outcomes.groupBy(col("bibcode").as("__stamp_key"))
-      .agg(aggs.head, aggs.tail: _*)
-    // unmatched master rows carry null counts: coalesce keeps them unhit
-    def hit(s: String) = coalesce(col(s"__n_$s") > 0, lit(false))
-    def failed(s: String) = coalesce(col(s"__failed_$s") > 0, lit(false))
-    val stamps = sinkColumns.flatMap { case (s, (tsCol, cksCol)) =>
-      Seq(tsCol -> when(hit(s), lit(now)).otherwise(col(tsCol)),
-        cksCol -> when(failed(s), lit(null).cast("string"))
-          .when(hit(s), col(s"__checksum_$s")).otherwise(col(cksCol)))
-    } ++ Seq(
-      "processed" -> when(sinks.map(hit).reduce(_ || _), lit(now))
-        .otherwise(col("processed")),
-      "status" -> sinks.foldLeft(col("status")) { (earlier, s) =>
-        when(failed(s), lit(s"$s-failed")).when(hit(s), lit("success")).otherwise(earlier)
-      })
-    val byName = stamps.toMap
-    master.join(per, col("bibcode") === col("__stamp_key"), "left_outer")
-      .select(master.columns.toIndexedSeq.map(c => byName.getOrElse(c, col(c)).as(c)): _*)
-  }
-
-  /** M4 for one sink (adsmp/app.py:432-468 `mark_processed`): stamp
-    * `processed`, `<type>_processed`, `<type>_checksum` and `status` for
-    * the (bibcode, checksum) rows of `done`. The status is one of the two
-    * the reference stamps: `success`, or `<type>-failed`, which stamps a
-    * null checksum. The one-sink case of [[stampSinks]]. */
-  def markProcessed(master: DataFrame, done: DataFrame, sinkType: String,
-      status: Option[String], now: java.sql.Timestamp): DataFrame = {
-    require(sinkColumns.exists(_._1 == sinkType), s"invalid sink type $sinkType")
-    val failure = s"$sinkType-failed"
-    require(status.exists(Set("success", failure)),
-      s"status must be success or $failure, got $status")
-    stampSinks(master,
-      done.select(col("bibcode"), lit(sinkType).as("sink"),
-        lit(!status.contains(failure)).as("ok"), col("checksum")),
-      now)
   }
 }

@@ -16,14 +16,16 @@ import graft.transform.SolrTransform
   * failing document once more with the giant `body` field stripped.
   * Successes and failures then stamp `status` per record (ST6).
   *
-  * Spark shape: `mapPartitions` — each partition drains its rows in
-  * transport batches, so RPC amortization and the retry ladder are
-  * partition-local control flow. Each status row carries the checksum of
-  * the payload it delivered, so the pipeline stamps the master table from
-  * the status frames alone (MergeEngine.stampSinks), with no join back to
-  * the payloads. The transport is a pluggable serializable function so
-  * tests inject faults and production supplies an HTTP client built once
-  * per partition.
+  * Spark shape: partition-local control flow. [[ladder]] is the one
+  * per-batch core: the index pass (IndexJob.deliver) runs it per chunk of
+  * master records, inside the same pass that builds the payloads and
+  * stamps the records, as the reference's reindex_records does per chunk
+  * (adsmp/tasks.py:317-460); `writeSolr`/`writeBulk` run it over a
+  * prepared payload frame (the boost, augment and classify request legs
+  * use `writeBulk`).
+  * The transport is a pluggable serializable function so tests inject
+  * faults and production supplies an HTTP client built once per
+  * partition.
   */
 object Sinks {
 
@@ -46,11 +48,6 @@ object Sinks {
     val r = status.toDF().agg(count_if(col("ok")), count(lit(1))).head()
     (r.getLong(0), r.getLong(1))
   }
-
-  /** A sink's status frame as stamp input: the (bibcode, sink, ok,
-    * checksum) rows MergeEngine.stampSinks reads, tagged with `sink`. */
-  def outcomes(sink: String, status: Dataset[SinkStatus]): DataFrame =
-    status.toDF().select(col("bibcode"), lit(sink).as("sink"), col("ok"), col("checksum"))
 
   /** run.py:235-255 `collection_to_urls`: resolve a `--solr-collection`
     * value against the configured SOLR update URLs. A full http(s) URL
@@ -105,14 +102,42 @@ object Sinks {
     Option(e.getMessage).exists(m => m.contains("body") ||
       m.contains("not all arguments converted during string formatting"))
 
-  /** The shared retry ladder: batch send, and on a batch failure a per-doc
-    * solo retry whose failure handling is the one place the two sinks
-    * differ — `onSoloFailure` decides the final status for a doc whose
-    * solo send threw. Runs inside mapPartitions so RPC amortization and
-    * the fallback are partition-local control flow. */
+  /** The retry ladder over one transport batch of (bibcode, payload,
+    * checksum) rows: a batch send, and on a batch failure a solo retry per
+    * doc. A doc whose solo send throws fails finally, except that with
+    * `stripBodies` (the SOLR sink, app.py:381-430) a body-related error
+    * earns one more attempt with `body` stripped. The one per-batch core
+    * of every sink write: `writeSolr`/`writeBulk` run it per partition
+    * chunk, and the index pass (IndexJob.deliver) per chunk of records. */
+  def ladder(batch: Seq[(String, String, String)], transport: Transport,
+      stripBodies: Boolean): Seq[SinkStatus] =
+    if (batch.isEmpty) Nil
+    else try {
+      transport.send(batch.map(_._2))
+      batch.map { case (b, _, c) =>
+        SinkStatus(b, ok = true, retriedSolo = false, bodyStripped = false, c) }
+    } catch {
+      case _: Throwable =>
+        batch.map { case (bibcode, payload, c) =>
+          def attempt(p: String, stripped: Boolean): SinkStatus = {
+            transport.send(Seq(p))
+            SinkStatus(bibcode, ok = true, retriedSolo = true, bodyStripped = stripped, c)
+          }
+          def failed(stripped: Boolean) =
+            SinkStatus(bibcode, ok = false, retriedSolo = true, bodyStripped = stripped, c)
+          try attempt(payload, stripped = false) catch {
+            case e: Throwable if stripBodies && bodyRelated(e) =>
+              try attempt(stripBody(payload), stripped = true)
+              catch { case _: Throwable => failed(stripped = true) }
+            case _: Throwable => failed(stripped = false)
+          }
+        }
+    }
+
+  /** [[ladder]] over every partition of `rows` (bibcode, payload and an
+    * optional checksum), in transport batches of `batchSize`. */
   private def writeWithLadder(rows: DataFrame, transport: Transport,
-      batchSize: Int)(
-      onSoloFailure: (String, String, Throwable) => SinkStatus): Dataset[SinkStatus] = {
+      batchSize: Int, stripBodies: Boolean): Dataset[SinkStatus] = {
     val spark = rows.sparkSession
     import spark.implicits._
     // request frames (boost, augment) have no checksum column
@@ -121,25 +146,7 @@ object Sinks {
       else lit(null).cast("string")
     rows.select(col("bibcode"), col("payload"), checksum.as("checksum"))
       .as[(String, String, String)]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          try {
-            transport.send(batch.map(_._2))
-            batch.iterator.map { case (b, _, c) =>
-              SinkStatus(b, ok = true, retriedSolo = false, bodyStripped = false, c) }
-          } catch {
-            case _: Throwable =>
-              batch.iterator.map { case (bibcode, payload, c) =>
-                try {
-                  transport.send(Seq(payload))
-                  SinkStatus(bibcode, ok = true, retriedSolo = true, bodyStripped = false, c)
-                } catch {
-                  case e: Throwable => onSoloFailure(bibcode, payload, e).copy(checksum = c)
-                }
-              }
-          }
-        }
-      }
+      .mapPartitions(_.grouped(batchSize).flatMap(ladder(_, transport, stripBodies)))
   }
 
   /** S6 — SOLR-style sink: batch send; on failure per-doc retry; on a
@@ -147,25 +154,14 @@ object Sinks {
     * (app.py:381-430). Expects columns (bibcode, payload). */
   def writeSolr(docs: DataFrame, transport: Transport,
       batchSize: Int = 1000): Dataset[SinkStatus] =
-    writeWithLadder(docs, transport, batchSize) { (bibcode, payload, e) =>
-      if (bodyRelated(e))
-        try {
-          transport.send(Seq(stripBody(payload)))
-          SinkStatus(bibcode, ok = true, retriedSolo = true, bodyStripped = true)
-        } catch {
-          case _: Throwable =>
-            SinkStatus(bibcode, ok = false, retriedSolo = true, bodyStripped = true)
-        }
-      else SinkStatus(bibcode, ok = false, retriedSolo = true, bodyStripped = false)
-    }
+    writeWithLadder(docs, transport, batchSize, stripBodies = true)
 
-  /** S7/S8 — bulk-then-per-row sink (metrics upsert / links PUT): batch
-    * send, per-row fallback, no body-strip ladder. */
+  /** S7/S8 — bulk-then-per-row sink (metrics upsert / links PUT, and the
+    * boost, augment and classify request legs): batch send, per-row
+    * fallback, no body-strip rung. */
   def writeBulk(rows: DataFrame, transport: Transport,
       batchSize: Int = 1000): Dataset[SinkStatus] =
-    writeWithLadder(rows, transport, batchSize) { (bibcode, _, _) =>
-      SinkStatus(bibcode, ok = false, retriedSolo = true, bodyStripped = false)
-    }
+    writeWithLadder(rows, transport, batchSize, stripBodies = false)
 
   /** S11 — delete sink: per-bibcode delete command against every URL; a
     * bibcode counts deleted only when all endpoints succeed

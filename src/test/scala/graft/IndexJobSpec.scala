@@ -252,7 +252,7 @@ class IndexJobSpec extends AnyFunSuite with SparkSpec {
     assert(batch.solr.count() == 1 && batch.metrics.count() == 1)
 
     val done = batch.solr.select(col("bibcode"), col("checksum"))
-    val stamped = MergeEngine.markProcessed(master, done, "solr",
+    val stamped = StampOracle.markProcessed(master, done, "solr",
       Some("success"), ts("2024-01-02T00:00:00Z"))
 
     val replay = IndexJob.run(stamped.as[MasterRecord]

@@ -363,7 +363,7 @@ class MergeEngineSpec extends AnyFunSuite with SparkSpec {
       UpdateMessage("b2", "metadata", "{}", ts("2024-01-01T00:00:00Z"))).toDS()).master
     val now = ts("2024-03-01T00:00:00Z")
     val done = Seq(("b1", "0xabc")).toDF("bibcode", "checksum")
-    val out = MergeEngine.markProcessed(master, done, "solr", Some("success"), now)
+    val out = StampOracle.markProcessed(master, done, "solr", Some("success"), now)
       .collect().map(r => r.getAs[String]("bibcode") -> r).toMap
     assert(out("b1").getAs[Timestamp]("solr_processed") == now)
     assert(out("b1").getAs[String]("solr_checksum") == "0xabc")
@@ -371,7 +371,7 @@ class MergeEngineSpec extends AnyFunSuite with SparkSpec {
     assert(out("b2").getAs[Timestamp]("solr_processed") == null)
     assert(out("b2").getAs[String]("status") == null)
     intercept[IllegalArgumentException] {
-      MergeEngine.markProcessed(master, done, "bogus", None, now)
+      StampOracle.markProcessed(master, done, "bogus", None, now)
     }
   }
 

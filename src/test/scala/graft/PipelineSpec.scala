@@ -442,4 +442,86 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       new java.io.File(s"$multiDir/scix", "sitemap_bib_1.xml").toPath), "UTF-8")
     assert(adsXml.contains("ui.adsabs.harvard.edu") && scixXml.contains("scixplorer.org"))
   }
+
+  test("a batch that throws after its publish releases every frame it cached") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_store_throw").toString
+    val store = new MasterStore(root, numBuckets = 2)
+    // a regular file where the change log's directory should be: the
+    // append after the publish throws
+    val notADir = java.nio.file.Files.createTempFile("graft_changelog", ".parquet").toString
+    spark.catalog.clearCache()
+    val e = intercept[Exception] {
+      Pipeline.runBatch(spark, store,
+        (msgs("th1", "2024-01-01 00:00:00") :+ UpdateMessage("th2", "metadata", "",
+          ts("2024-01-01 00:00:00"), status = Some("deleted"))).toDS(),
+        okTransport, okTransport, now = ts("2024-01-02 00:00:00"),
+        changeLogDir = Some(notADir))
+    }
+    assert(store.currentVersion.contains(1L), s"the publish landed before the append threw: $e")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      s"runBatch threw ($e) with cached data left in the session")
+  }
+
+  test("a forced full reindex runs at most 6 Spark jobs and delivers every " +
+    "record to every sink exactly once") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val root = java.nio.file.Files.createTempDirectory("graft_store_jobs").toString
+    val store = new MasterStore(root, numBuckets = 2)
+    val bibs = (1 to 40).map(i => f"jobs$i%02d")
+    // nonbib data_links_rows give every record a links payload too
+    Pipeline.runBatch(spark, store, bibs.flatMap(b => msgs(b, "2024-01-01 00:00:00").map(m =>
+        if (m.mtype == "nonbib_data") m.copy(payload = """{"data_links_rows": [{"baz": 0}]}""")
+        else m)).toDS(),
+      okTransport, okTransport, now = ts("2024-01-02 00:00:00"))
+
+    // the transports record (sink, bibcode) per delivered payload; an
+    // accumulator adds once per task run, so a second read of an
+    // uncached pass shows as a second delivery
+    val delivered = sc.collectionAccumulator[(String, String)]("deliveries")
+    def counting(solr: Boolean) = new Sinks.Transport {
+      def send(p: Seq[String]): Unit = p.foreach { doc =>
+        val sink = if (solr) "solr" else if (doc.contains("data_links_rows")) "links" else "metrics"
+        val bib = graft.transform.SolrTransform.parse(doc) \ "bibcode" match {
+          case org.json4s.JString(b) => b
+          case other => other.toString
+        }
+        delivered.add((sink, bib))
+      }
+    }
+    val group = "pipeline-spec-forced-reindex"
+    val marker = group + "-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "forced full reindex")
+      val report = try Pipeline.runBatch(spark, store, spark.emptyDataset[UpdateMessage],
+          counting(solr = true), counting(solr = false), force = true,
+          ignoreChecksums = true, now = ts("2024-01-03 00:00:00"))
+        finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job of the reindex has been counted
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "the listener saw the marker job")
+      val jobs = groups.asScala.count(_ == group)
+      assert(jobs <= 6, s"$jobs Spark jobs for one forced full reindex")
+
+      assert((report.merged, report.indexed, report.solrOk, report.metricsOk,
+        report.linksOk) == ((40L, 40L, 40L, 40L, 40L)), s"$report")
+      val got = delivered.value.asScala.toSeq
+      val want = for (s <- Seq("solr", "metrics", "links"); b <- bibs) yield (s, b)
+      assert(got.sorted == want.sorted, "each record reached each sink exactly once")
+    } finally sc.removeSparkListener(listener)
+  }
 }

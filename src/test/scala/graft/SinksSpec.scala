@@ -64,7 +64,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
       graft.records.UpdateMessage("b2", "metadata", "{}", Timestamp.valueOf("2024-01-01 00:00:00"))).toDS()).master
     val failed = spark.createDataset(st.values.filter(!_.ok).toSeq).toDF()
       .select(col("bibcode"), lit(null).cast("string").as("checksum"))
-    val stamped = MergeEngine.markProcessed(master, failed, "solr",
+    val stamped = StampOracle.markProcessed(master, failed, "solr",
       Some("solr-failed"), Timestamp.valueOf("2024-01-02 00:00:00"))
     val statuses = stamped.collect().map(r =>
       r.getAs[String]("bibcode") -> r.getAs[String]("status")).toMap

@@ -3,10 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.Files
@@ -50,19 +49,23 @@ object LadderTransport {
   val Markers: Seq[String] = Seq("Solo", "Strip", "Body", "Metric", "Dead")
 }
 
-/** Parity of the one-join sink stamp (`MergeEngine.stampSinks`, as
-  * `Pipeline.runBatch` drives it) with the chain it replaced: six
-  * `markProcessed` joins, ok then failed for solr, metrics and links in
+/** Parity of the sink stamps with the chain they replaced: the
+  * frame-level stamp kept as `StampOracle.stampSinks` and the per-record
+  * one `Pipeline.runBatch`'s index pass applies (`MergeEngine.stamp`)
+  * against six `markProcessed` joins, ok then failed for solr, metrics and links in
   * that order, each joining its sink's status frame back to the payloads
   * for the checksum and broadcasting its key set. That chain is kept here,
   * verbatim in behaviour, as the oracle.
   *
   * Cases: all 8 `-r` sink subsets; transports that fail a whole batch,
   * recover solo, recover only after the body strip, and fail finally;
-  * duplicate status rows for one bibcode; and, through `runBatch`,
-  * `updateProcessed` on and off, with the `RunReport` counts checked
-  * against the statuses. Every comparison is one batched collect, as in
-  * `SolrColumnarPropSpec`. */
+  * duplicate status rows for one bibcode. Through `runBatch`, whose index
+  * pass stamps per record (`MergeEngine.stamp`): every subset with
+  * `updateProcessed` on and off under both transports, with the
+  * `RunReport` counts checked against the statuses; a non-forced
+  * table-wide sweep whose gated-out rows must come out unchanged; a
+  * `restrictTo` list; and a `keyLocal` batch. Every comparison is one
+  * batched collect, as in `SolrColumnarPropSpec`. */
 class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -170,11 +173,12 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
       .collect().toSeq.groupBy(_._1)
 
     def status(sink: String, failBatches: Boolean): Seq[SinkStatus] =
-      rows(s"$sink/$failBatches").map(r => SinkStatus(r._2, r._3, r._4, r._5, r._6))
+      rows.getOrElse(s"$sink/$failBatches", Nil)
+        .map(r => SinkStatus(r._2, r._3, r._4, r._5, r._6))
 
     /** The payloads' (bibcode, checksum), as the old chain joined them. */
     def checksums(sink: String): DataFrame =
-      rows(sink).map(r => (r._2, r._6)).toDF("bibcode", "checksum")
+      rows.getOrElse(sink, Nil).map(r => (r._2, r._6)).toDF("bibcode", "checksum")
   }
 
   private def label(s: Set[String]) = sinkNames.filter(s).map(_.head).mkString match {
@@ -207,11 +211,11 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
     } yield {
       val delivered = sinkNames.filter(subset).map(s =>
         (s, d.status(s, failBatches).toDS(), d.checksums(s)))
-      val outcomes = delivered.map { case (s, st, _) => Sinks.outcomes(s, st) }
+      val outcomes = delivered.map { case (s, st, _) => StampOracle.outcomes(s, st) }
         .reduceOption(_ unionByName _)
-        .getOrElse(Sinks.outcomes("solr", spark.emptyDataset[SinkStatus]))
+        .getOrElse(StampOracle.outcomes("solr", spark.emptyDataset[SinkStatus]))
       val id = s"${label(subset)}/failBatches=$failBatches"
-      (id, MergeEngine.stampSinks(master, outcomes, now), oracleStamp(master, delivered))
+      (id, StampOracle.stampSinks(master, outcomes, now), oracleStamp(master, delivered))
     }
     val compared = collectCases(cases)
     assert(compared.size == 16)
@@ -242,7 +246,6 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
 
   test("runBatch stamps and reports what the sinks returned, for every sink " +
     "subset with updateProcessed on and off, and leaves no cached data") {
-    val t = LadderTransport(failBatches = false)
     // the master as a store holds it, parquet round trip included
     val stored = new MasterStore(Files.createTempDirectory("graft_stamp0").toString,
       numBuckets = 1)
@@ -251,10 +254,12 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
     val cacheManager = spark.sharedState.cacheManager
     spark.catalog.clearCache()
     val runs = for {
+      failBatches <- Seq(false, true)
       updateProcessed <- Seq(true, false)
       subset <- subsets
     } yield {
-      val id = s"${label(subset)}/updateProcessed=$updateProcessed"
+      val id = s"${label(subset)}/updateProcessed=$updateProcessed/failBatches=$failBatches"
+      val t = LadderTransport(failBatches)
       val store = new MasterStore(Files.createTempDirectory("graft_stamp").toString,
         numBuckets = 1)
       store.write(m0)
@@ -263,20 +268,24 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
         updateProcessed = updateProcessed)
       assert(cacheManager.isEmpty,
         s"case $id: runBatch returned with cached data left in the session")
-      (id, subset, updateProcessed, store, report)
+      (id, subset, updateProcessed, failBatches, store, report)
     }
 
     // the oracle stamps the statuses the same transport gives the same
     // payloads; its outcomes depend on each doc alone, not on batching
     val batch = payloads(m0)
     val d = new Delivered(
-      Map("solr" -> batch.solr, "metrics" -> batch.metrics, "links" -> batch.links), Seq(false))
-    val statuses = sinkNames.map(s => s -> d.status(s, failBatches = false)).toMap
-    val compared = collectCases(runs.map { case (id, subset, up, store, _) =>
+      Map("solr" -> batch.solr, "metrics" -> batch.metrics, "links" -> batch.links),
+      Seq(false, true))
+    def statusesOf(failBatches: Boolean) =
+      sinkNames.map(s => s -> d.status(s, failBatches)).toMap
+    val compared = collectCases(runs.map { case (id, subset, up, fb, store, _) =>
       (id, store.read(spark), if (!up) m0 else oracleStamp(m0, sinkNames.filter(subset).map(s =>
-        (s, statuses(s).toDS(), d.checksums(s)))))
+        (s, statusesOf(fb)(s).toDS(), d.checksums(s)))))
     })
-    runs.foreach { case (id, subset, _, _, report) =>
+    assert(compared.size == 32)
+    runs.foreach { case (id, subset, _, fb, _, report) =>
+      val statuses = statusesOf(fb)
       assert(compared(id)._1 == compared(id)._2, s"case $id")
       def n(sink: String, ok: Boolean) =
         if (subset(sink)) statuses(sink).count(_.ok == ok).toLong else 0L
@@ -287,37 +296,105 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
         ((n("solr", true), n("solr", false), n("metrics", true), n("links", true))),
         s"case $id: $report")
     }
+    val statuses = statusesOf(false)
     assert(statuses("solr").count(!_.ok) == 2 && statuses("metrics").count(!_.ok) == 2 &&
       statuses("links").count(!_.ok) == 1, s"the ladder's failures: $statuses")
+    def outcomes(st: Map[String, Seq[SinkStatus]]) =
+      st.map { case (s, xs) => s -> xs.map(x => (x.bibcode, x.ok, x.checksum)) }
+    assert(outcomes(statusesOf(true)) == outcomes(statuses),
+      "a transport that fails every batch ends with the same per-doc outcomes")
     assert(statuses("solr").exists(st => st.bibcode.endsWith("Strip") && st.ok &&
       st.bodyStripped), "the strip rung recovered the body-laden doc")
   }
 
-  test("the stamp of a sweep-sized batch joins the master once, unhinted") {
+  test("runBatch's index pass equals the six-join chain for a non-forced " +
+    "sweep with gated-out rows, a restrictTo list and a keyLocal batch") {
+    val t = LadderTransport(failBatches = false)
+    val later = Timestamp.valueOf("2024-01-02 00:00:00")
+    val none = spark.emptyDataset[UpdateMessage]
+    // these records were processed after their last update: the
+    // non-forced gate skips them
+    val skipped = bibcodes.filter(b => Seq("Ok2", "Strip", "Metric", "Bare").exists(b.endsWith))
+    val m0 = local(master0.withColumn("processed",
+      when(col("bibcode").isin(skipped: _*), lit(later)).otherwise(col("processed"))))
+    def storeOf(m: DataFrame): MasterStore = {
+      val s = new MasterStore(Files.createTempDirectory("graft_stamp_path").toString,
+        numBuckets = 1)
+      s.write(m)
+      s
+    }
+    /** The chain's stamp of the payloads `select` picks from `m`. */
+    def oracle(m: DataFrame, select: DataFrame => DataFrame, ignoreChecksums: Boolean) = {
+      val b = IndexJob.run(select(m).as[MasterRecord], ignoreChecksums = ignoreChecksums)
+      val d = new Delivered(Map("solr" -> b.solr, "metrics" -> b.metrics, "links" -> b.links),
+        Seq(false))
+      oracleStamp(m, sinkNames.map(s => (s, d.status(s, failBatches = false).toDS(),
+        d.checksums(s))))
+    }
+    val gate = IndexJob.eligible(None, force = false)
+
+    // a table-wide, non-forced sweep
+    val sweepStore = storeOf(m0)
+    val sweep = Pipeline.runBatch(spark, sweepStore, none, t, t, now = now)
+    // a -n list, one of its bibcodes unknown to the store
+    val named = Seq("2024StampOk1", "2024StampStrip", "2024StampGhost")
+    val namedStore = storeOf(m0)
+    val restricted = Pipeline.runBatch(spark, namedStore, none, t, t, force = true,
+      ignoreChecksums = true, now = now, restrictTo = Some(named.toDS()))
+    // a queue batch: later metadata for two records of a store whose
+    // records were all processed after their last update
+    val quiet = local(m0.withColumn("processed", lit(later)))
+    val updates = Seq("Ok1", "Body").map { k =>
+      val b = "2024Stamp" + k
+      UpdateMessage(b, "metadata",
+        s"""{"bibcode": "$b", "title": ["T2 $b"], "database": ["astronomy"]}""",
+        Timestamp.valueOf("2024-02-01 00:00:00"))
+    }.toDS()
+    val keyedStore = storeOf(quiet)
+    val keyed = Pipeline.runBatch(spark, keyedStore, updates, t, t, now = now, keyLocal = true)
+    val upserted = local(MergeEngine.upsert(quiet, updates).master)
+
+    val compared = collectCases(Seq(
+      ("sweep", sweepStore.read(spark), oracle(m0, _.filter(gate), ignoreChecksums = false)),
+      ("restrictTo", namedStore.read(spark), oracle(m0, _.filter(IndexJob.eligible(None,
+        force = true)).filter(col("bibcode").isin(named: _*)), ignoreChecksums = true)),
+      ("keyLocal", keyedStore.read(spark), oracle(upserted, _.filter(gate),
+        ignoreChecksums = false))))
+    compared.foreach { case (id, (got, want)) => assert(got == want, s"case $id") }
+    assert((sweep.merged, sweep.indexed) == ((8L, 4L)), s"$sweep")
+    assert((restricted.merged, restricted.indexed) == ((8L, 2L)), s"$restricted")
+    assert((keyed.merged, keyed.indexed) == ((2L, 2L)), s"$keyed")
+
+    // the rows the pass did not index come out as they went in
+    val before = collectCases(Seq(("m0", m0, m0)))("m0")._1
+      .map(r => r.getAs[String]("bibcode") -> r).toMap
+    def untouched(id: String, keep: String => Boolean): Unit =
+      compared(id)._1.filter(r => keep(r.getAs[String]("bibcode"))).foreach { r =>
+        assert(r == before(r.getAs[String]("bibcode")), s"case $id: $r")
+      }
+    untouched("sweep", skipped.contains)
+    untouched("restrictTo", b => !named.contains(b))
+    assert(compared("sweep")._1.count(_.getAs[Timestamp]("processed") == now) == 4)
+  }
+
+  test("the index pass of a sweep-sized batch plans no join or exchange") {
     // a session that never broadcasts stands in for a corpus too large to
-    // broadcast: the stamp must then shuffle, where the old chain's
-    // broadcast() hint forced the whole key set onto every executor
+    // broadcast: the frame-level stamp then shuffled the master to join
+    // the outcomes back; the index pass stamps each row where it reads it
     val big = spark.newSession()
     big.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val root = Files.createTempDirectory("graft_stamp_plan").toString
     new MasterStore(root).write(master0)
     val master = new MasterStore(root).read(big)
-    val batch = payloads(master)
     val t = LadderTransport(failBatches = false)
-    val outcomes = Seq("solr" -> Sinks.writeSolr(batch.solr, t),
-      "metrics" -> Sinks.writeBulk(batch.metrics, t),
-      "links" -> Sinks.writeBulk(batch.links, t))
-      .map { case (s, st) => Sinks.outcomes(s, st) }.reduce(_ unionByName _)
-    val stamped = MergeEngine.stampSinks(master, outcomes, now)
-    val joins = stamped.queryExecution.optimizedPlan.collect { case j: Join => j }
-    assert(joins.size == 1 && joins.head.hint == JoinHint.NONE,
-      s"one unhinted join: ${stamped.queryExecution.optimizedPlan}")
-    assert(stamped.collect().length == bibcodes.size)
-    val finalPlan = stamped.queryExecution.executedPlan
-    val joinExecs = collect(finalPlan) {
-      case j @ (_: SortMergeJoinExec | _: ShuffledHashJoinExec | _: BroadcastHashJoinExec) => j
-    }
-    assert(joinExecs.size == 1 &&
-      collect(finalPlan) { case b: BroadcastExchangeExec => b }.isEmpty, s"$finalPlan")
+    val pass = IndexJob.deliver(master, IndexJob.eligible(None, force = true),
+      sinkNames.toSet, t, t, ignoreChecksums = true, stampAt = Some(now))
+    val joins = pass.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.isEmpty, s"no join: ${pass.queryExecution.optimizedPlan}")
+    val rows = pass.collect()
+    assert(rows.length == bibcodes.size &&
+      rows.forall(_.getAs[Timestamp]("processed") == now))
+    val finalPlan = pass.queryExecution.executedPlan
+    assert(collect(finalPlan) { case e: Exchange => e }.isEmpty, s"$finalPlan")
   }
 }
