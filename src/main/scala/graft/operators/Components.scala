@@ -177,21 +177,19 @@ object Components {
     // plain cache would still re-exchange it per round, while the explicit
     // repartition makes the cached blocks satisfy the join's distribution
     // so only the (shrinking) label frame moves each round. The width is
-    // the cluster's parallelism, growing with the graph beyond it (~2M
-    // edges ≈ 32 MB per partition), capped at the session's configured
-    // shuffle width: a graph big enough to leave the driver uses every
-    // core from its first round (sized from the edge count alone, a
-    // 450k-edge graph ran each round as one task), while a trillion-edge
-    // graph uses everything the cluster is configured for.
+    // sized to the graph (~2M edges ≈ 32 MB per partition), capped at the
+    // session's configured shuffle width: a near-dup graph of tens of
+    // thousands of edges runs its rounds on a couple of partitions (each
+    // round's cost is task-scheduling latency, not compute), while a
+    // trillion-edge graph uses everything the cluster is configured for.
     // some managed runtimes set shuffle.partitions to a non-numeric value
     // (e.g. "auto"); the sizing heuristic degrades to defaultParallelism
     // there instead of crashing before any work
-    val cores = edges.sparkSession.sparkContext.defaultParallelism
     val confParts = scala.util.Try(
       edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(cores)
-    val parts = math.max(1L, math.min(confParts.toLong,
-      math.max(cores.toLong, (2 * m + 1999999) / 2000000))).toInt
+      .getOrElse(edges.sparkSession.sparkContext.defaultParallelism)
+    val parts = math.max(1L,
+      math.min(confParts.toLong, (2 * m + 1999999) / 2000000)).toInt
     val loopSess = loopSessionFor(edges.sparkSession, parts)
     val eLoop = rebind(e, loopSess)
     val bidir = eLoop

@@ -238,7 +238,7 @@ object IndexJob {
     * index (the P1-P3 gate and any -b/-n restriction): the per-chunk loop
     * of the reference's reindex_records (adsmp/tasks.py:317-460). Rows
     * that are not due pass through as they came. Due rows are taken in
-    * chunks of `batchSize`; for each chunk the pass builds every selected
+    * chunks of `Sinks.BatchSize`; for each chunk the pass builds every selected
     * sink's due payloads ([[payload]]; due = changed, or any with
     * `ignoreChecksums`), sends each sink's through the retry ladder
     * (`Sinks.ladder`: solr with the body-strip rung on `solrTransport`,
@@ -256,8 +256,7 @@ object IndexJob {
     * cache with its first action. */
   def deliver(rows: DataFrame, due: Column, sinks: Set[String],
       solrTransport: Sinks.Transport, bulkTransport: Sinks.Transport,
-      ignoreChecksums: Boolean, stampAt: Option[Timestamp],
-      batchSize: Int = 1000): DataFrame = {
+      ignoreChecksums: Boolean, stampAt: Option[Timestamp]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     // solr is built for the `indexed` count whenever any sink runs
@@ -288,7 +287,7 @@ object IndexJob {
       .as[(MasterRecord, Boolean)]
       .mapPartitions { it =>
         if (sinks.isEmpty) it.map(r => Indexed(r._1, false, None, None, None))
-        else new Chunked(it, batchSize, send)
+        else new Chunked(it, send)
       }
       .select(col("rec.*"), col("indexed"), col("solrOk"), col("metricsOk"), col("linksOk"))
   }
@@ -296,13 +295,13 @@ object IndexJob {
   /** A partition's rows with the due ones sent in chunks: a row that is
     * not due passes through at once, so a sparse sweep holds at most one
     * chunk of due records and still sends full batches. */
-  private final class Chunked(it: Iterator[(MasterRecord, Boolean)], size: Int,
+  private final class Chunked(it: Iterator[(MasterRecord, Boolean)],
       send: Seq[MasterRecord] => Iterator[Indexed]) extends Iterator[Indexed] {
     private val due = scala.collection.mutable.ArrayBuffer.empty[MasterRecord]
     private var out: Iterator[Indexed] = Iterator.empty
     def hasNext: Boolean = {
       while (!out.hasNext && (it.hasNext || due.nonEmpty))
-        if (!it.hasNext || due.size == size) {
+        if (!it.hasNext || due.size == Sinks.BatchSize) {
           out = send(due.toVector)
           due.clear()
         } else it.next() match {

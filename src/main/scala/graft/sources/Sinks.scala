@@ -35,6 +35,11 @@ object Sinks {
     def send(payloads: Seq[String]): Unit
   }
 
+  /** Docs per transport batch (the reference's per-task chunk of
+    * records): the default of `writeSolr`/`writeBulk` and the chunk the
+    * index pass (IndexJob.deliver) sends. */
+  val BatchSize = 1000
+
   /** Per-document outcome of a sink write (ST6 input). `checksum` is the
     * delivered payload's (null for rows without one, such as deletes). */
   case class SinkStatus(bibcode: String, ok: Boolean,
@@ -153,14 +158,14 @@ object Sinks {
     * body-related doc failure one more attempt with `body` stripped
     * (app.py:381-430). Expects columns (bibcode, payload). */
   def writeSolr(docs: DataFrame, transport: Transport,
-      batchSize: Int = 1000): Dataset[SinkStatus] =
+      batchSize: Int = BatchSize): Dataset[SinkStatus] =
     writeWithLadder(docs, transport, batchSize, stripBodies = true)
 
   /** S7/S8 — bulk-then-per-row sink (metrics upsert / links PUT, and the
     * boost, augment and classify request legs): batch send, per-row
     * fallback, no body-strip rung. */
   def writeBulk(rows: DataFrame, transport: Transport,
-      batchSize: Int = 1000): Dataset[SinkStatus] =
+      batchSize: Int = BatchSize): Dataset[SinkStatus] =
     writeWithLadder(rows, transport, batchSize, stripBodies = false)
 
   /** S11 — delete sink: per-bibcode delete command against every URL; a

@@ -64,7 +64,9 @@ object LadderTransport {
   * `updateProcessed` on and off under both transports, with the
   * `RunReport` counts checked against the statuses; a non-forced
   * table-wide sweep whose gated-out rows must come out unchanged; a
-  * `restrictTo` list; and a `keyLocal` batch. Every comparison is one
+  * `restrictTo` list; and a `keyLocal` batch. The pass alone: more due
+  * rows than one sink batch in one partition, and the plan of a sweep.
+  * Every comparison is one
   * batched collect, as in `SolrColumnarPropSpec`. */
 class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -375,6 +377,64 @@ class StampParitySpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPlanH
     untouched("sweep", skipped.contains)
     untouched("restrictTo", b => !named.contains(b))
     assert(compared("sweep")._1.count(_.getAs[Timestamp]("processed") == now) == 4)
+  }
+
+  test("the index pass sends full batches across a chunk boundary and " +
+    "stamps every row once") {
+    import scala.jdk.CollectionConverters._
+    // 2,400 copies of one record in one partition; every fourth is not
+    // due, so 1,800 due rows fill one chunk with not-due rows between them
+    // and leave a partial second one
+    val proto = master0.filter(col("bibcode") === "2024StampOk1")
+    val rows = spark.range(0, 2400, 1, 1).withColumnRenamed("id", "n").crossJoin(proto)
+      .withColumn("bibcode", format_string("2024Chunk%05d", col("n")))
+      // the solr doc takes its bibcode from the bib data
+      .withColumn("bib_data", expr("replace(bib_data, '2024StampOk1', bibcode)"))
+      .coalesce(1)
+    val isDue = col("n") % 4 =!= 3
+    // (sink, bibcode) per delivered payload and (transport, size) per send
+    val delivered = spark.sparkContext.collectionAccumulator[(String, String)]("chunk docs")
+    val sends = spark.sparkContext.collectionAccumulator[(String, Int)]("chunk sends")
+    def recording(solr: Boolean) = new Sinks.Transport {
+      def send(p: Seq[String]): Unit = {
+        sends.add((if (solr) "solr" else "bulk", p.size))
+        p.foreach { doc =>
+          val sink = if (solr) "solr" else if (doc.contains("data_links_rows")) "links" else "metrics"
+          val bib = graft.transform.SolrTransform.parse(doc) \ "bibcode" match {
+            case org.json4s.JString(b) => b
+            case other => other.toString
+          }
+          delivered.add((sink, bib))
+        }
+      }
+    }
+    val out = IndexJob.deliver(rows, isDue, sinkNames.toSet, recording(solr = true),
+      recording(solr = false), ignoreChecksums = true, stampAt = Some(now)).collect()
+
+    val sent = sends.value.asScala.toSeq
+    assert(sent.filter(_._1 == "solr").map(_._2) == Seq(1000, 800), s"$sent")
+    // each chunk sends its metrics, then its links
+    assert(sent.filter(_._1 == "bulk").map(_._2) == Seq(1000, 1000, 800, 800), s"$sent")
+    val dueBibs = (0 until 2400).filter(_ % 4 != 3).map(i => f"2024Chunk$i%05d").toSet
+    val want = for (s <- sinkNames; b <- dueBibs.toSeq) yield (s, b)
+    assert(delivered.value.asScala.toSeq.sorted == want.sorted,
+      "each due record reached each sink exactly once")
+
+    val byBib = out.groupBy(_.getAs[String]("bibcode"))
+    assert(out.length == 2400 && byBib.size == 2400, "every row comes out exactly once")
+    val input = rows.select(MergeEngine.masterColumns.map(col): _*).collect()
+      .map(r => r.getAs[String]("bibcode") -> r).toMap
+    val master = MergeEngine.masterColumns
+    out.foreach { r =>
+      val b = r.getAs[String]("bibcode")
+      if (dueBibs.contains(b)) {
+        assert(r.getAs[Timestamp]("processed") == now && r.getAs[String]("status") == "success",
+          s"due row stamped: $r")
+        assert(Seq("solrOk", "metricsOk", "linksOk").forall(r.getAs[Boolean](_)), s"$r")
+      } else
+        assert(Row.fromSeq(master.map(c => r.get(r.fieldIndex(c)))) ==
+          Row.fromSeq(input(b).toSeq), s"not-due row passes through: $r")
+    }
   }
 
   test("the index pass of a sweep-sized batch plans no join or exchange") {
