@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -40,13 +40,25 @@ object Pipeline {
     * (IndexJob.deliver): each partition takes its due records in chunks
     * of the sink batch size, builds their payloads, sends them and emits
     * every row stamped, as reindex_records does per chunk
-    * (adsmp/tasks.py:317-460). The pass is cached; one aggregation over it
-    * fires the transports and gives every count of the report, and the
-    * publish and the boost, augment and metrics-store legs read the cache.
-    * A forced full reindex runs 6 Spark jobs (PipelineSpec guards the
-    * bound): the store read's footer read, the pass's aggregation and four
-    * for the bucketed snapshot write. Every frame the batch caches is
-    * released on every exit, exceptions included. */
+    * (adsmp/tasks.py:317-460). The pass is read once, in one of two shapes:
+    *  - a forced full sweep (`force`, no `restrictTo`, neither `keyLocal`
+    *    nor `keyedPublish`) with no messages and no metrics store: the
+    *    snapshot write is the pass's only action. The store reads the
+    *    snapshot, the pass rewrites every row and the bucketed write
+    *    stores them with no cache and no repartition (MasterStore.rewrite),
+    *    while a Spark Observation gathers the report's counts. Over a store
+    *    with no live delta layer that is one Spark job with no shuffle,
+    *    which PipelineSpec guards. A vanished-input retry inside the write
+    *    re-runs the uncached pass and re-sends its payloads, safe because
+    *    the sinks are idempotent (ST4); the report keeps the counts of the
+    *    first complete run.
+    *  - every other batch (keyed publishes, which need the outcome columns
+    *    before the publish; a metrics store; messages): the pass is cached,
+    *    one aggregation over it fires the transports and gives every count
+    *    of the report, and the publish and the boost, augment and
+    *    metrics-store legs read the cache.
+    * Every frame the batch caches is released on every exit, exceptions
+    * included. */
   def runBatch(
       spark: SparkSession,
       store: MasterStore,
@@ -74,7 +86,8 @@ object Pipeline {
     // wall time between this batch's ACTIONS — "merge_read" covers the
     // doomed-key probe and any sink deletes, "publish" the index pass
     // (merge, gate, transform, sinks and stamp in the one job its counts
-    // fire), then the layer write and the CAS + auto-compaction, "report"
+    // fire, or in the snapshot write itself for the forced full sweep),
+    // then the layer write and the CAS + auto-compaction, "report"
     // what the report reads after the publish. Zero cost when left
     // defaulted.
     var stageT0 = System.nanoTime()
@@ -123,6 +136,9 @@ object Pipeline {
     // is NULL, which !filter would silently DROP — not keep
     val isFullDelete = col("mtype") === "metadata" &&
       coalesce(col("status") === "deleted", lit(false))
+    // a batch whose plan holds no rows (the sweeps' empty batch) is known
+    // empty without a job
+    val noMessages = updates.queryExecution.optimizedPlan.maxRows.contains(0L)
     // the doomed set stays a Dataset end-to-end: anti-join for the row
     // drop, distributed count to fire the sink deletes — a mass-deletion
     // batch must never become a driver list or an isin literal (the same
@@ -130,66 +146,145 @@ object Pipeline {
     // for one full delete comes first, so the usual batch, which has
     // none, caches nothing and shuffles nothing for it
     val doomed =
-      if (updates.filter(isFullDelete).head(1).isEmpty) None
+      if (noMessages || updates.filter(isFullDelete).head(1).isEmpty) None
       else Some(updates.filter(isFullDelete)
         .select(col("bibcode")).distinct().as[String].cache())
+    // the forced full sweep (run.py -f over the whole table, the
+    // rebuild-collection loop) with no messages and no metrics store: the
+    // snapshot write is the only reader of the index pass
+    val oneAction = force && restrictTo.isEmpty && !keyLocal && !keyedPublish &&
+      noMessages && metricsStore.isEmpty
     // every frame this batch caches is released on every exit: a batch
     // that throws in a long-lived driver (`Cli --consume`) must not leave
     // its working set in executor storage
     var held: Option[DataFrame] = None
     try {
-      // M1 merge (over the batch's keyed working set when keyLocal)
+      // M1 merge, P1-P3 gate and the index pass over one read of the master
+      def indexPass(baseMaster: DataFrame): (MergeEngine.UpsertResult, DataFrame) = {
+        val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
+        val master = doomed.fold(merged.master)(d =>
+          merged.master.join(d.toDF("bibcode"), Seq("bibcode"), "left_anti"))
+        // P1-P3 gate as a per-row due flag. The reference's `-f` sets force
+        // AND ignore_checksums together (run.py:82-86): force widens
+        // eligibility, ignoreChecksums re-sends payloads whose checksum still
+        // matches the stored one. A -b/-n bibcode list (restrictTo) narrows
+        // the due rows to the named records through a marker join against the
+        // key frame, never an isin literal: a hand-list stays a broadcast
+        // join (AQE sees a tiny side), while a mass --index_failed re-drive
+        // shuffles on bibcode like any other join — no million-literal plan,
+        // no driver list
+        val gate = IndexJob.eligible(since, force)
+        val (rows, due) = restrictTo match {
+          case Some(keys) =>
+            (master.join(keys.toDF("bibcode").distinct().withColumn("__named", lit(true)),
+              Seq("bibcode"), "left_outer"), gate && coalesce(col("__named"), lit(false)))
+          case None => (master, gate)
+        }
+        // the index pass: every master row once, the due ones built into
+        // payloads, delivered per chunk and stamped; the -r letters (s/m/l,
+        // run.py:687-694) choose which sinks it sends to and stamps.
+        // update_processed=False (app.py:381-430, run.py --update-processed)
+        // still delivers but touches NO records-table state — no processed
+        // timestamps, checksums, or statuses, success or failure. Every
+        // action over the pass re-sends its payloads. That is safe, because
+        // the sinks are idempotent by design (ST4: upsert semantics +
+        // checksum change-suppression make duplicate deliveries no-ops),
+        // but each read is a full delivery, so the pass is read once:
+        // either cached or as the snapshot write's input
+        (merged, IndexJob.deliver(rows, due, sinks, solrTransport, bulkTransport,
+          ignoreChecksums, stampAt = if (updateProcessed) Some(now) else None))
+      }
+      // the batch's counts over the pass: `merged` counts the rows,
+      // `indexed` the due solr docs (built but not sent when solr is not
+      // selected, so -r m / -r l print the same count)
+      val counted = Seq(count(lit(1)).as("merged"), count_if(col("indexed")).as("indexed"),
+        count_if(col("solrOk")).as("solrOk"), count_if(!col("solrOk")).as("solrFailed"),
+        count_if(col("metricsOk")).as("metricsOk"), count_if(col("linksOk")).as("linksOk"),
+        count_if(col("metricsOk").isNotNull).as("metricsSent"))
+      doomed.foreach(Sinks.deleteByBibcodes(_, Seq(solrTransport, bulkTransport)).count())
+
+      // the batch's tail once its publish has landed: the change log, the
+      // watermark and the report
+      def finish(version: Long, counts: Map[String, Long], changeLog: DataFrame,
+          boost: (Long, Long), augment: (Long, Long)): RunReport = {
+        stage("publish")
+        // The audit log the reference appends on every mutation in the same
+        // transaction (ChangeLog, adsmp/models.py:127-141; written at
+        // app.py:175 for upserts and :250 for deletes with the serialized old
+        // record). Here the batch is the transaction: written AFTER the CAS
+        // publish lands, stamped with the published generation so an auditor
+        // can join log rows to snapshots. Pre-images come from the batch's
+        // input snapshot (the generation retention window keeps it readable).
+        // Append-only parquet, rows ∝ batch; auditors must treat it as
+        // AT-LEAST-ONCE keyed by (key, version): redelivery appends the
+        // replayed batch's rows again — the same property the reference's
+        // per-task-run inserts have, and the `version` stamp makes replays
+        // distinguishable instead of silently merged. The append is not
+        // atomic with the CAS publish (the reference gets that from its DB
+        // transaction); writing the log BEFORE the watermark advance closes
+        // the loss window — a crash between publish and append leaves the
+        // watermark un-advanced, so the redriven batch re-emits the missing
+        // rows (as duplicates of any that did land, per the keying above)
+        changeLogDir.foreach { dir =>
+          changeLog.withColumn("version", lit(version))
+            .write.mode("append").parquet(dir)
+        }
+        watermarkDir.foreach(Watermark.advance(spark, _, "last.reindex.normal", now))
+
+        val report = RunReport(version, counts("merged"),
+          indexed = counts("indexed"),
+          solrOk = counts("solrOk"),
+          solrFailed = counts("solrFailed"),
+          metricsOk = counts("metricsOk"),
+          linksOk = counts("linksOk"),
+          boostOk = boost._1, boostFailed = boost._2,
+          augmentOk = augment._1, augmentFailed = augment._2)
+        stage("report")
+        report
+      }
+
+      if (oneAction) {
+        // one Spark action: the store reads the snapshot, the pass rewrites
+        // every row and the bucketed write stores them, while an
+        // Observation gathers the counts (MasterStore.rewrite: one job, no
+        // shuffle, over a snapshot with no live delta layer). Nothing is
+        // cached and nothing else reads the pass. A vanished-input retry
+        // re-runs the pass and re-sends its payloads (the idempotent sinks
+        // above); the report keeps the counts of the first complete run
+        stage("merge_read")
+        val observed = scala.collection.mutable.ArrayBuffer.empty[Observation]
+        var changeLog: DataFrame = null
+        val v = store.rewrite(spark, { base =>
+          val (merged, pass) = indexPass(base)
+          changeLog = merged.changeLog
+          val o = Observation()
+          observed += o
+          pass.observe(o, counted.head, counted.tail: _*)
+            .select(MergeEngine.masterColumns.map(col): _*)
+        })
+        val first = observed.find(_.future.isCompleted).getOrElse(observed.last)
+        return finish(v, first.get.map { case (k, c) => k -> c.asInstanceOf[Long] },
+          changeLog, (0L, 0L), (0L, 0L))
+      }
+
+      // M1 merge over the batch's keyed working set when keyLocal
       val baseMaster =
         if (keyLocal) workRows.getOrElse(store.lookupFrame(spark, updates.select(col("bibcode"))))
         else store.read(spark)
-      val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
-      val master = doomed.fold(merged.master)(d =>
-        merged.master.join(d.toDF("bibcode"), Seq("bibcode"), "left_anti"))
-      doomed.foreach(Sinks.deleteByBibcodes(_, Seq(solrTransport, bulkTransport)).count())
+      val (merged, uncached) = indexPass(baseMaster)
       stage("merge_read")
-
-      // P1-P3 gate as a per-row due flag. The reference's `-f` sets force
-      // AND ignore_checksums together (run.py:82-86): force widens
-      // eligibility, ignoreChecksums re-sends payloads whose checksum still
-      // matches the stored one. A -b/-n bibcode list (restrictTo) narrows
-      // the due rows to the named records through a marker join against the
-      // key frame, never an isin literal: a hand-list stays a broadcast
-      // join (AQE sees a tiny side), while a mass --index_failed re-drive
-      // shuffles on bibcode like any other join — no million-literal plan,
-      // no driver list
-      val gate = IndexJob.eligible(since, force)
-      val (rows, due) = restrictTo match {
-        case Some(keys) =>
-          (master.join(keys.toDF("bibcode").distinct().withColumn("__named", lit(true)),
-            Seq("bibcode"), "left_outer"), gate && coalesce(col("__named"), lit(false)))
-        case None => (master, gate)
-      }
-      // the index pass: every master row once, the due ones built into
-      // payloads, delivered per chunk and stamped; the -r letters (s/m/l,
-      // run.py:687-694) choose which sinks it sends to and stamps.
-      // update_processed=False (app.py:381-430, run.py --update-processed)
-      // still delivers but touches NO records-table state — no processed
-      // timestamps, checksums, or statuses, success or failure. Cached: the
-      // report, the publish and the request legs all read it, and a re-read
-      // must not re-fire the transports. NOTE: cache is best-effort; an
-      // evicted/lost partition recomputes and re-sends. That is safe here
-      // because the sinks are idempotent by design (ST4: upsert semantics +
-      // checksum change-suppression make duplicate deliveries no-ops); a
-      // strict once-only guarantee would require persisting the pass to
-      // durable storage first.
-      val pass = IndexJob.deliver(rows, due, sinks, solrTransport, bulkTransport,
-        ignoreChecksums, stampAt = if (updateProcessed) Some(now) else None).cache()
+      // cached: the report, the publish and the request legs all read the
+      // pass. NOTE: cache is best-effort; an evicted/lost partition
+      // recomputes and re-sends (the idempotent sinks above); a strict
+      // once-only guarantee would require persisting the pass to durable
+      // storage first
+      val pass = uncached.cache()
       held = Some(pass)
       val stamped = pass.select(MergeEngine.masterColumns.map(col): _*)
-      // the batch's counts in one aggregation over the pass, run first: it
-      // fires the transports and fills the cache that every later read uses.
-      // `merged` counts the rows, `indexed` the due solr docs (built but not
-      // sent when solr is not selected, so -r m / -r l print the same count)
-      val counts = pass.agg(count(lit(1)), count_if(col("indexed")),
-        count_if(col("solrOk")), count_if(!col("solrOk")), count_if(col("metricsOk")),
-        count_if(col("linksOk")), count_if(col("metricsOk").isNotNull)).head()
-      def got(i: Int): Long = counts.getLong(i)
-      val mergedCount = got(0)
+      // the counts in one aggregation over the pass, run first: it fires
+      // the transports and fills the cache that every later read uses
+      val row = pass.agg(counted.head, counted.tail: _*).head()
+      val counts = row.getValuesMap[Long](row.schema.fieldNames.toIndexedSeq)
 
       // the reference queues a boost-pipeline request for every record an
       // ingest message touched (task_update_record/task_augment_record →
@@ -198,8 +293,8 @@ object Pipeline {
       // Delivery counts surface in the report: a dead bulk endpoint must
       // not silently lose the whole boost leg. The requests read the pass:
       // the stamp leaves every column they project as it was
-      val (boostOk, boostFailed) =
-        if (!forwardBoostRequests) (0L, 0L)
+      val boost =
+        if (!forwardBoostRequests || noMessages) (0L, 0L)
         else {
           val touched = updates.filter(!isFullDelete && col("mtype") =!= "boost")
             .select(col("bibcode")).distinct()
@@ -220,8 +315,8 @@ object Pipeline {
       // on metadata updates — only the boost leg is gated (by
       // IGNORED_BOOST_PAYLOAD_TYPES/TESTING_MODE) — so augment has its OWN
       // gate here rather than riding the boost flag
-      val (augmentOk, augmentFailed) =
-        if (!forwardAugmentRequests) (0L, 0L)
+      val augment =
+        if (!forwardAugmentRequests || noMessages) (0L, 0L)
         else {
           val metaTouched = updates.filter(!isFullDelete && col("mtype") === "metadata")
             .select(col("bibcode")).distinct()
@@ -242,7 +337,7 @@ object Pipeline {
       // The payloads are rebuilt from the pass's rows that delivered one
       // (the stamp leaves the metrics slot as it was)
       metricsStore.foreach { ms =>
-        if (sinks("metrics") && got(6) > 0) {
+        if (sinks("metrics") && counts("metricsSent") > 0) {
           val metrics = pass.filter(col("metricsOk").isNotNull)
             .select(MergeEngine.masterColumns.map(col): _*).as[MasterRecord]
             .flatMap(IndexJob.payload("metrics", _))
@@ -275,11 +370,12 @@ object Pipeline {
       // rewriting the table. For the batch's own keys the batch wins (its
       // payloads were delivered from its input snapshot — same per-row
       // last-writer-wins the reference's row-level transactions give). The
-      // one remaining blind write is the forced FULL sweep
-      // (rebuild-collection's loop), whose key set IS the corpus: a keyed
-      // rebase would write the table twice (layer + immediate size-triggered
-      // compaction) for the same outcome, so it keeps the primary-writer
-      // full-write contract.
+      // one remaining blind write is the forced FULL sweep (the
+      // one-action shape above when it has no messages and no metrics
+      // store), whose key set IS the corpus: a keyed rebase would write
+      // the table twice (layer + immediate size-triggered compaction) for
+      // the same outcome, so it keeps the primary-writer full-write
+      // contract.
       // keyedPublish forces the delta-layer publish even for sweep-shaped
       // batches: whole-table writeMerge/write RESET the store's change-feed
       // horizon (a rewritten base is not separable into per-key layers), so
@@ -307,7 +403,7 @@ object Pipeline {
             val sk = stampKeys.distinct().cache()
             val nKeys = sk.count()
             try {
-              if (!keyedPublish && nKeys > 0 && nKeys * 2 >= mergedCount)
+              if (!keyedPublish && nKeys > 0 && nKeys * 2 >= counts("merged"))
                 // sweep-shaped: the touched set IS most of the table, so a
                 // delta layer would trip the size-triggered fold and write
                 // the table TWICE (layer + compaction). One CAS whole-table
@@ -324,48 +420,16 @@ object Pipeline {
             } finally sk.unpersist(blocking = false)
           }
         }
-      stage("publish")
-      // The audit log the reference appends on every mutation in the same
-      // transaction (ChangeLog, adsmp/models.py:127-141; written at
-      // app.py:175 for upserts and :250 for deletes with the serialized old
-      // record). Here the batch is the transaction: written AFTER the CAS
-      // publish lands, stamped with the published generation so an auditor
-      // can join log rows to snapshots. Pre-images come from the batch's
-      // input snapshot (the generation retention window keeps it readable).
-      // Append-only parquet, rows ∝ batch; auditors must treat it as
-      // AT-LEAST-ONCE keyed by (key, version): redelivery appends the
-      // replayed batch's rows again — the same property the reference's
-      // per-task-run inserts have, and the `version` stamp makes replays
-      // distinguishable instead of silently merged. The append is not
-      // atomic with the CAS publish (the reference gets that from its DB
-      // transaction); writing the log BEFORE the watermark advance closes
-      // the loss window — a crash between publish and append leaves the
-      // watermark un-advanced, so the redriven batch re-emits the missing
-      // rows (as duplicates of any that did land, per the keying above)
-      changeLogDir.foreach { dir =>
-        val upsertLog = merged.changeLog
-        val deleteLog = doomed.map(d => baseMaster
-          .join(d.toDF("bibcode"), Seq("bibcode"), "left_semi")
-          .select(col("bibcode").as("key"), lit("deleted").as("ctype"),
-            to_json(struct(baseMaster.columns.map(col).toIndexedSeq: _*))
-              .as("oldvalue"),
-            lit(false).as("permanent"), lit(now).as("ts")))
-        deleteLog.foldLeft(upsertLog)(_ unionByName _)
-          .withColumn("version", lit(version))
-          .write.mode("append").parquet(dir)
-      }
-      watermarkDir.foreach(Watermark.advance(spark, _, "last.reindex.normal", now))
-
-      val report = RunReport(version, mergedCount,
-        indexed = got(1),
-        solrOk = got(2),
-        solrFailed = got(3),
-        metricsOk = got(4),
-        linksOk = got(5),
-        boostOk = boostOk, boostFailed = boostFailed,
-        augmentOk = augmentOk, augmentFailed = augmentFailed)
-      stage("report")
-      report
+      // the change log's rows: the upserts' pre-images and, for full
+      // deletes, the deleted records as the input snapshot held them
+      val deleteLog = doomed.map(d => baseMaster
+        .join(d.toDF("bibcode"), Seq("bibcode"), "left_semi")
+        .select(col("bibcode").as("key"), lit("deleted").as("ctype"),
+          to_json(struct(baseMaster.columns.map(col).toIndexedSeq: _*))
+            .as("oldvalue"),
+          lit(false).as("permanent"), lit(now).as("ts")))
+      finish(version, counts, deleteLog.foldLeft(merged.changeLog)(_ unionByName _),
+        boost, augment)
     } finally {
       held.foreach(_.unpersist())
       doomed.foreach(_.unpersist())

@@ -253,7 +253,11 @@ object IndexJob {
     * the delivery outcome of its payload (null: no due payload, or the
     * sink is not selected). Every action over it re-runs the transports,
     * so a caller that reads it more than once caches it and fills the
-    * cache with its first action. */
+    * cache with its first action. A caller that reads it once makes it the
+    * input of that action: the forced full sweep's bucketed snapshot write
+    * (MasterStore.rewrite), one Spark job over a layer-free snapshot. The
+    * pass keeps every row in the partition it came from (only their order
+    * within it changes), so bucket-aligned input splits stay aligned. */
   def deliver(rows: DataFrame, due: Column, sinks: Set[String],
       solrTransport: Sinks.Transport, bulkTransport: Sinks.Transport,
       ignoreChecksums: Boolean, stampAt: Option[Timestamp]): DataFrame = {

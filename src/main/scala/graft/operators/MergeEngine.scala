@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -41,8 +41,39 @@ object MergeEngine {
     * (intra-batch: the previous message's payload — a lag window seeded
     * with the master value), matching adsmp/app.py:174 where only the
     * bib/nonbib/orcid slots store old values.
+    *
+    * A batch whose plan holds no rows (`maxRows == Some(0)`, read without
+    * running a job) plans no join: the merge then only fills `id` and
+    * `scix_id` where they are missing, as the join would, and the change
+    * log is empty.
     */
-  def upsert(master: DataFrame, updates: Dataset[UpdateMessage]): UpsertResult = {
+  def upsert(master: DataFrame, updates: Dataset[UpdateMessage]): UpsertResult =
+    if (updates.queryExecution.optimizedPlan.maxRows.contains(0L))
+      UpsertResult(
+        master.select(masterColumns.map {
+          case "id" => filledId(col("id"), col("bibcode")).as("id")
+          case "scix_id" => filledScixId(col("scix_id"), col("bib_data")).as("scix_id")
+          case c => col(c)
+        }: _*),
+        updates.select(col("bibcode").as("key"), col("mtype").as("ctype"),
+          lit(null).cast("string").as("oldvalue"), lit(false).as("permanent"), col("ts")))
+    else mergeBatch(master, updates)
+
+  /** The stored id, or a synthetic stable one for a fresh bibcode
+    * (reference: DB sequence); xxhash64 keeps it deterministic and
+    * cluster-safe. Masked to the positive range (abs(Long.MinValue) stays
+    * negative); 64-bit collisions at 28.8M keys are ~2e-5-probable and
+    * harmless here — bibcode, not id, is the engine's key. */
+  private def filledId(id: Column, key: Column): Column =
+    coalesce(id, xxhash64(key).bitwiseAND(lit(Long.MaxValue)))
+
+  /** The stored scix_id, or one assigned when bib_data first appears
+    * (adsmp/app.py:181-186). */
+  private def filledScixId(scixId: Column, bibData: Column): Column =
+    when(scixId.isNotNull, scixId)
+      .otherwise(when(bibData.isNotNull, scixUdf(bibData)))
+
+  private def mergeBatch(master: DataFrame, updates: Dataset[UpdateMessage]): UpsertResult = {
     val slotOf = MasterRecord.typeToSlot
     val typed = updates
       .withColumn("slot", element_at(typedLit(slotOf), col("mtype")))
@@ -79,15 +110,8 @@ object MergeEngine {
     }
     val newestArrival = greatest(slots.map(s => col(s"u.${s}_ts")): _*)
 
-    val scixUdf = MergeEngine.scixUdf
-
     val merged = joined.select(Seq(
-      // synthetic stable id for fresh bibcodes (reference: DB sequence);
-      // xxhash64 keeps it deterministic and cluster-safe. Masked to the
-      // positive range (abs(Long.MinValue) stays negative); 64-bit
-      // collisions at 28.8M keys are ~2e-5-probable and harmless here —
-      // bibcode, not id, is the engine's key
-      coalesce(col("m.id"), xxhash64(key).bitwiseAND(lit(Long.MaxValue))).as("id"),
+      filledId(col("m.id"), key).as("id"),
       key.as("bibcode"),
       col("m.scix_id").as("scix_id_old")) ++ slotCols ++ Seq(
       coalesce(col("m.created"), newestArrival).as("created"),
@@ -100,9 +124,7 @@ object MergeEngine {
       col("m.metrics_checksum").as("metrics_checksum"),
       col("m.datalinks_checksum").as("datalinks_checksum"),
       col("m.status").as("status")): _*)
-      .withColumn("scix_id",
-        when(col("scix_id_old").isNotNull, col("scix_id_old"))
-          .otherwise(when(col("bib_data").isNotNull, scixUdf(col("bib_data")))))
+      .withColumn("scix_id", filledScixId(col("scix_id_old"), col("bib_data")))
       .drop("scix_id_old")
       .select(masterColumns.map(col): _*)
 

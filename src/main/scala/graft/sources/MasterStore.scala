@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructType}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import graft.operators.MergeEngine
@@ -207,11 +208,18 @@ object MasterStore {
   * time travel until `vacuum` (whose `retain` parameter keeps a window of
   * superseded generations alive for slow in-flight readers).
   *
-  * Scale: base buckets are written `repartition(n, keyCol)` so every
-  * merge-on-write join against a delta keyed by keyCol co-partitions with
-  * AQE, and keyCol point-lookups prune to the matching buckets' files. At
-  * cluster scale `n` tracks corpus size (the 28.8M-row reference corpus at
-  * ~2 KB/row → ~60 GB → a few hundred buckets).
+  * Scale: base buckets are hash-partitioned by keyCol into `__b=<b>`
+  * directories so every merge-on-write join against a delta keyed by
+  * keyCol co-partitions with AQE, and keyCol point-lookups prune to the
+  * matching buckets' files. A bucket may hold several files: a write
+  * shuffled with `repartition(n, keyCol)` leaves one file per bucket,
+  * while [[rewrite]] over a snapshot with no live delta layer writes the
+  * rows back with no shuffle, one file per bucket per input split (a
+  * split holds whole bucket files or part of one, so unless a file is
+  * larger than a split the rewrite leaves at most as many files as it
+  * read). Either way every file holds exactly its bucket's keys, sorted.
+  * At cluster scale `n` tracks corpus size (the 28.8M-row reference
+  * corpus at ~2 KB/row → ~60 GB → a few hundred buckets).
   *
   * @param maxLayers      auto-compact after this many un-folded layers
   * @param layerFraction  auto-compact when layer bytes exceed this
@@ -539,12 +547,26 @@ class MasterStore(val root: String, numBuckets: Int = 8,
 
   // ---------------------------------------------------------------- reads
 
-  private def masterCols(spark: SparkSession): Array[String] = empty(spark).columns
+  // the store's schema, taken from `empty` once per store
+  @volatile private var schemaMemo: StructType = _
 
+  private def masterSchema(spark: SparkSession): StructType = {
+    if (schemaMemo == null) schemaMemo = empty(spark).schema
+    schemaMemo
+  }
+
+  private def masterCols(spark: SparkSession): Array[String] = masterSchema(spark).fieldNames
+
+  /** The files at `relPaths`, read with the store's known schema (plus
+    * `_deleted` for delta-layer files) instead of one inferred from their
+    * footers: building the frame lists the files and runs no Spark job. */
   private def readFiles(spark: SparkSession, relPaths: Seq[String],
-      cols: Seq[Column]): DataFrame =
-    spark.read.parquet(relPaths.map(Paths.get(root, _).toString): _*)
-      .select(cols: _*)
+      layer: Boolean): DataFrame = {
+    val schema =
+      if (layer) masterSchema(spark).add(Deleted, BooleanType) else masterSchema(spark)
+    spark.read.schema(schema).parquet(relPaths.map(Paths.get(root, _).toString): _*)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+  }
 
   /** Latest-generation-wins reconcile of the delta layers over the base.
     * `bucketFilter` prunes BOTH sides to the named buckets (layer rows by
@@ -564,12 +586,11 @@ class MasterStore(val root: String, numBuckets: Int = 8,
     }
     val base =
       if (baseFiles.isEmpty) empty(spark)
-      else readFiles(spark, baseFiles, cols.map(col).toIndexedSeq)
+      else readFiles(spark, baseFiles, layer = false)
     // a layer with zero files held zero rows — nothing to overlay
     val neLayers = m.layers.filter(_.files.nonEmpty)
     if (neLayers.isEmpty) return base
 
-    val layerCols = (cols.map(col) :+ col(Deleted)).toIndexedSeq
     // layer pruning mirrors base pruning: a bucketed layer contributes
     // only the touched buckets' FILES (untouched layer files never open);
     // a pre-format layer falls back to opening its files and pruning rows
@@ -580,11 +601,11 @@ class MasterStore(val root: String, numBuckets: Int = 8,
           val fs = bs.toSeq.sorted
             .flatMap(b => if (b < l.buckets.length) l.buckets(b) else Nil)
           if (fs.isEmpty) None
-          else Some(readFiles(spark, fs, layerCols))
+          else Some(readFiles(spark, fs, layer = true))
         case Some(bs) if m.n > 1 =>
-          Some(readFiles(spark, l.files, layerCols)
+          Some(readFiles(spark, l.files, layer = true)
             .filter(bucketExpr(m.n).isin(bs.toSeq.map(Int.box): _*)))
-        case _ => Some(readFiles(spark, l.files, layerCols))
+        case _ => Some(readFiles(spark, l.files, layer = true))
       }).map(_.withColumn("_seq", lit(l.seq)))
     }
     if (layerFrames.isEmpty) return base
@@ -762,7 +783,6 @@ class MasterStore(val root: String, numBuckets: Int = 8,
     * layers ARE the index. */
   def changesSince(spark: SparkSession, fromGen: Long): DataFrame = {
     val cols = masterCols(spark)
-    val layerCols = (cols.map(col) :+ col(Deleted)).toIndexedSeq
     def emptyFeed = empty(spark)
       .withColumn(Deleted, lit(false)).withColumn("_gen", lit(0L)).limit(0)
     val (g, mOpt) = snapshot()
@@ -784,7 +804,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
       .filter(l => l.seq > fromGen && l.files.nonEmpty)
     if (sel.isEmpty) return emptyFeed
     val all = sel.map(l =>
-        readFiles(spark, l.files, layerCols).withColumn("_gen", lit(l.seq)))
+        readFiles(spark, l.files, layer = true).withColumn("_gen", lit(l.seq)))
       .reduce(_.unionByName(_))
     val others = cols.filterNot(_ == keyCol)
     all.groupBy(col(keyCol))
@@ -805,36 +825,48 @@ class MasterStore(val root: String, numBuckets: Int = 8,
 
   private def deleteTree(p: Path): Unit = FsUtil.deleteTree(p)
 
-  /** Full-table write into a fresh dir; the bucket id is computed as a
-    * column and materialized as `partitionBy` directories (see
-    * [[bucketOfFile]] for why part-file indexes can't be trusted). The
-    * repartition on the bucket column keeps one task per bucket in the
-    * common case (one file per bucket, no per-task dynamic-partition
-    * sort), but correctness never depends on it. */
   /** The bucket-id expression this store's physical layout uses — the
     * key-hash default, or the [[MasterStore.Layout]] override for a
     * secondary-index store. */
   private def bucketExpr(n: Int): Column =
     layout.map(_.bucket(n)).getOrElse(pmod(hash(col(keyCol)), lit(n)))
 
-  private def writeBucketed(df: DataFrame, n: Int, dir: String): Unit =
-    df.withColumn(BucketCol, bucketExpr(n).cast("int"))
-      .repartition(n, col(BucketCol))
+  /** Bucketed write into `dir`: the bucket id is computed as a column and
+    * materialized as `partitionBy` directories (see [[bucketOfFile]] for
+    * why part-file indexes can't be trusted), so every row lands in its
+    * bucket's directory whatever the input's partitioning. With
+    * `repartition` the rows are first shuffled on the bucket column, one
+    * task per bucket (one file per bucket, no per-task dynamic-partition
+    * sort); without it each input partition writes one file per bucket it
+    * holds. */
+  private def writeBucketed(df: DataFrame, n: Int, dir: String,
+      repartition: Boolean = true): Unit = {
+    val keyed = df.withColumn(BucketCol, bucketExpr(n).cast("int"))
+    (if (repartition) keyed.repartition(n, col(BucketCol)) else keyed)
       // key-sorted WITHIN each bucket (after any layout sort columns):
       // row-group min/max stats become disjoint key (or layout-column)
       // ranges, so a keyed/layout read's pushed predicate skips row
       // groups instead of scanning the whole bucket — the classic
-      // bucketed-sorted table, paid once per write (the shuffle already
-      // happened; the sort is per-bucket CPU)
+      // bucketed-sorted table, paid once per write (per-partition CPU,
+      // no shuffle of its own)
       .sortWithinPartitions(
         (col(BucketCol) +: layout.toSeq.flatMap(_.sort.map(col)) :+ col(keyCol))
           .toIndexedSeq: _*)
       .write.mode("overwrite").partitionBy(BucketCol)
       .parquet(Paths.get(root, dir).toString)
+  }
 
-  private def writeBase(df: DataFrame): (String, Manifest) = {
+  /** Full-table write of `df` into a fresh dir. `readFrom` is the manifest
+    * `df` was read through, when its rows are that snapshot's rows
+    * rewritten in place: with no live delta layer the read is a plain scan
+    * of the base files, whose splits are bucket-aligned, and the rows go
+    * back with no repartition (the layout rule in the class doc). Any
+    * other input (a frame from elsewhere, or a reconcile whose layer join
+    * scattered the buckets) is repartitioned on the bucket column. */
+  private def writeBase(df: DataFrame, readFrom: Option[Manifest] = None): (String, Manifest) = {
     val dir = freshDir("v_")
-    writeBucketed(df, numBuckets, dir)
+    writeBucketed(df, numBuckets, dir, repartition = readFrom.forall(m =>
+      m.n != numBuckets || m.layers.exists(_.files.nonEmpty)))
     val files = listParquet(dir)
     val byBucket = files.groupBy(f => bucketOfFile(f._1))
     val buckets = Vector.tabulate(numBuckets)(b =>
@@ -851,7 +883,35 @@ class MasterStore(val root: String, numBuckets: Int = 8,
     * merges must use `writeMerge`/`writeMergeKeyed` — `write(read()
     * merged delta)` re-opens the lost-update window this store exists to
     * close. */
-  def write(master: DataFrame, maxRetries: Int = 64): Long = {
+  def write(master: DataFrame, maxRetries: Int = 64): Long =
+    blindWrite(maxRetries, "write")(() => writeBase(master))
+
+  /** Replace the whole table with `rewriteRows` of the live snapshot, a
+    * blind write like [[write]] whose input the store reads itself: the
+    * primary writer's full sweep, which reads every row, rewrites it and
+    * stores it back. `rewriteRows` must keep each row's key (it may stamp
+    * or rebuild a row, not move it) and is the input's only consumer, so
+    * the sweep and the write are ONE Spark action: over a snapshot with no
+    * live delta layer, a single job with no shuffle (see [[writeBase]]).
+    * Correctness never depends on that shape: a moved key still lands in
+    * its bucket, in one more file.
+    *
+    * A lost CAS re-publishes the same directory. An input file vanished
+    * mid-write (a concurrent vacuum) re-reads the snapshot and re-runs
+    * `rewriteRows` in full, so any side effect it has runs again. */
+  def rewrite(spark: SparkSession, rewriteRows: DataFrame => DataFrame,
+      maxRetries: Int = 64): Long =
+    blindWrite(maxRetries, "rewrite") { () =>
+      // read INSIDE the retry: the read lists its files eagerly
+      val m = snapshot()._2.getOrElse(emptyManifest)
+      writeBase(rewriteRows(reconcile(spark, m, None)), Some(m))
+    }
+
+  /** The blind-publish loop behind [[write]] and [[rewrite]]: `attempt`
+    * writes a fresh base directory, which is published at whatever
+    * generation is live. */
+  private def blindWrite(maxRetries: Int, what: String)(
+      attempt: () => (String, Manifest)): Long = {
     var attempts = 0
     // if any attempt published a generation later found torn, retry
     // exhaustion must say THAT (the store needs the operator recovery the
@@ -862,7 +922,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
     while (attempts <= maxRetries) {
       attempts += 1
       try {
-        val (dir, m) = writeBase(master)
+        val (dir, m) = attempt()
         var g = snapshot()._1
         // a blind write REPLACES the table: per-key history relative to
         // prior generations is not expressible as layers, so the feed
@@ -890,19 +950,20 @@ class MasterStore(val root: String, numBuckets: Int = 8,
         }
         return g + 1
       } catch {
-        // the fresh dir was orphan-swept during a stall: re-write it
+        // the fresh dir (or, for a rewrite, an input file) was swept
+        // during a stall: write it again
         case t: Throwable if isVanishedInput(t) => ()
       }
     }
     if (tornGen >= 0)
       throw new TornGenerationException(
-        s"CRITICAL: MasterStore.write at $root exhausted $attempts " +
+        s"CRITICAL: MasterStore.$what at $root exhausted $attempts " +
           s"attempts while generation $tornGen remains TORN (published " +
           "referencing a swept data dir; every self-heal attempt also " +
           s"failed). Re-publish the intended table from the previous " +
           s"generation, or vacuum generation $tornGen's pointer, before " +
           "resuming writes")
-    failLoudly(attempts, "write")
+    failLoudly(attempts, what)
   }
 
   /** The pre-publish liveness check behind the grace-window orphan sweep:
@@ -1034,7 +1095,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
           val currentForKeys = reconcile(spark, m, touched)
             .join(keyFrame, Seq(keyCol), "left_semi")
           val merged = applyDelta(currentForKeys)
-          val schema = empty(spark).schema
+          val schema = masterSchema(spark)
           val others = schema.filterNot(_.name == keyCol)
           val tombstones = keyFrame
             .join(merged.select(col(keyCol)), Seq(keyCol), "left_anti")
@@ -1139,7 +1200,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
             // ever didn't, folding all buckets is correct, just unpruned)
             else if (layout.isDefined) (0 until m.n).toSet
             else neLayers.map(l =>
-                readFiles(spark, l.files, Seq(col(keyCol))))
+                readFiles(spark, l.files, layer = true).select(col(keyCol)))
               .reduce(_.unionByName(_))
               .select(pmod(hash(col(keyCol)), lit(m.n)).cast("int").as("b"))
               .distinct().collect().map(_.getInt(0)).toSet

@@ -1004,4 +1004,23 @@ class MasterStoreSpec extends AnyFunSuite with SparkSpec {
     assert(store.read(spark).count() == 3)
     assert(!Files.exists(Paths.get(s"$root-backup")))
   }
+
+  test("building read and lookup frames runs no Spark job: the store reads " +
+    "its files with its known schema, not one inferred from their footers") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_nojob").toString
+    val store = seeded(root)
+    // a delta layer, so the frames read layer files too
+    store.writeMergeKeyed(spark, Seq("ms3").toDF("bibcode"), _ =>
+      upsert(MergeEngine.emptyMaster(spark), Seq(msg("ms3"))))
+    val ((read, lookup, buckets, feed), jobs) = countingJobs("master-store-spec-frames") {
+      (store.read(spark), store.lookup(spark, Seq("ms1", "ms3")),
+        store.readBuckets(spark, Set(0, 1)), store.changesSince(spark, 1L))
+    }
+    assert(jobs == 0, s"$jobs Spark jobs while building the frames")
+    assert(read.select("bibcode").as[String].collect().toSet == Set("ms1", "ms2", "ms3"))
+    assert(lookup.select("bibcode").as[String].collect().toSet == Set("ms1", "ms3"))
+    assert(buckets.count() == 3)
+    assert(feed.select("bibcode").as[String].collect().toSeq == Seq("ms3"))
+  }
 }

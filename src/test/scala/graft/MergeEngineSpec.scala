@@ -451,6 +451,47 @@ class MergeEngineSpec extends AnyFunSuite with SparkSpec {
     assert(del.changeLog.count() == 0)
   }
 
+  test("an upsert of a batch planned empty plans no join and fills id and " +
+    "scix_id exactly as the full merge does") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val t = ts("2024-01-01T00:00:00Z")
+    val seeded = MergeEngine.upsert(MergeEngine.emptyMaster(spark), Seq(
+      UpdateMessage("e1", "metadata", """{"title": ["one"]}""", t),
+      UpdateMessage("e2", "metadata", """{"title": ["two"]}""", t),
+      UpdateMessage("e3", "nonbib_data", """{"boost": 0.1}""", t)).toDS()).master
+    // rows stored before their ids were assigned: e1 and e3 lack an id,
+    // every row lacks a scix_id
+    val master = seeded
+      .withColumn("id", when(col("bibcode") =!= "e2", lit(null).cast("long")).otherwise(col("id")))
+      .withColumn("scix_id", lit(null).cast("string"))
+    val planned = spark.emptyDataset[UpdateMessage]
+    // an RDD-backed batch's row count is unknown to the planner: it takes
+    // the full merge
+    val unknown = spark.createDataset(spark.sparkContext.emptyRDD[UpdateMessage])
+    assert(planned.queryExecution.optimizedPlan.maxRows.contains(0L))
+    assert(unknown.queryExecution.optimizedPlan.maxRows.isEmpty)
+    val shortcut = MergeEngine.upsert(master, planned)
+    val full = MergeEngine.upsert(master, unknown)
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case j: Join => j }.size
+    assert(joins(shortcut.master) == joins(master), "the empty batch plans no join")
+    assert(joins(full.master) > joins(master), "the RDD-backed batch takes the full merge")
+
+    assert(shortcut.master.columns.toSeq == full.master.columns.toSeq)
+    val got = shortcut.master.collect()
+    assert(got.toSet == full.master.collect().toSet, "both paths give the same rows")
+    val byBib = got.map(r => r.getAs[String]("bibcode") -> r).toMap
+    assert(byBib.values.forall(r => !r.isNullAt(r.fieldIndex("id"))), "every id is filled")
+    assert(byBib("e2").getAs[Long]("id") == seeded.filter(col("bibcode") === "e2")
+      .select("id").as[Long].head(), "a stored id is kept")
+    assert(byBib("e1").getAs[String]("scix_id") != null &&
+      byBib("e2").getAs[String]("scix_id") != null, "scix_id assigned where bib_data is")
+    assert(byBib("e3").getAs[String]("scix_id") == null, "and not without bib_data")
+    assert(shortcut.changeLog.columns.toSeq == full.changeLog.columns.toSeq)
+    assert(shortcut.changeLog.isEmpty && full.changeLog.isEmpty)
+  }
+
   private def bibsEmpty = {
     import spark.implicits._
     Seq.empty[String].toDF("bibcode")

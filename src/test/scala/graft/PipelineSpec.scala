@@ -463,25 +463,11 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
       s"runBatch threw ($e) with cached data left in the session")
   }
 
-  test("a forced full reindex runs at most 6 Spark jobs and delivers every " +
-    "record to every sink exactly once") {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val root = java.nio.file.Files.createTempDirectory("graft_store_jobs").toString
-    val store = new MasterStore(root, numBuckets = 2)
-    val bibs = (1 to 40).map(i => f"jobs$i%02d")
-    // nonbib data_links_rows give every record a links payload too
-    Pipeline.runBatch(spark, store, bibs.flatMap(b => msgs(b, "2024-01-01 00:00:00").map(m =>
-        if (m.mtype == "nonbib_data") m.copy(payload = """{"data_links_rows": [{"baz": 0}]}""")
-        else m)).toDS(),
-      okTransport, okTransport, now = ts("2024-01-02 00:00:00"))
-
-    // the transports record (sink, bibcode) per delivered payload; an
-    // accumulator adds once per task run, so a second read of an
-    // uncached pass shows as a second delivery
-    val delivered = sc.collectionAccumulator[(String, String)]("deliveries")
+  /** Transports that record (sink, bibcode) per delivered payload in an
+    * accumulator, which adds once per task run: a second read of an
+    * uncached pass shows as a second delivery. */
+  private def countingTransports() = {
+    val delivered = spark.sparkContext.collectionAccumulator[(String, String)]("deliveries")
     def counting(solr: Boolean) = new Sinks.Transport {
       def send(p: Seq[String]): Unit = p.foreach { doc =>
         val sink = if (solr) "solr" else if (doc.contains("data_links_rows")) "links" else "metrics"
@@ -492,36 +478,95 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
         delivered.add((sink, bib))
       }
     }
-    val group = "pipeline-spec-forced-reindex"
-    val marker = group + "-marker"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "forced full reindex")
-      val report = try Pipeline.runBatch(spark, store, spark.emptyDataset[UpdateMessage],
-          counting(solr = true), counting(solr = false), force = true,
-          ignoreChecksums = true, now = ts("2024-01-03 00:00:00"))
-        finally sc.clearJobGroup()
-      // listener events arrive in order: once the marker job's start is
-      // seen, every job of the reindex has been counted
-      sc.setJobGroup(marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(marker), "the listener saw the marker job")
-      val jobs = groups.asScala.count(_ == group)
-      assert(jobs <= 6, s"$jobs Spark jobs for one forced full reindex")
+    (delivered, counting(solr = true), counting(solr = false))
+  }
 
-      assert((report.merged, report.indexed, report.solrOk, report.metricsOk,
-        report.linksOk) == ((40L, 40L, 40L, 40L, 40L)), s"$report")
-      val got = delivered.value.asScala.toSeq
-      val want = for (s <- Seq("solr", "metrics", "links"); b <- bibs) yield (s, b)
-      assert(got.sorted == want.sorted, "each record reached each sink exactly once")
-    } finally sc.removeSparkListener(listener)
+  /** Every base file of the live generation lies under `__b=<b>` and holds
+    * only keys with pmod(hash(bibcode), n) == b. */
+  private def assertBucketed(store: MasterStore, n: Int): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val lists = store.bucketFileLists.getOrElse(fail("no live generation"))
+    assert(lists.size == n)
+    for ((files, b) <- lists.zipWithIndex; f <- files) {
+      assert(f.split('/').contains(s"__b=$b"), s"$f is listed under bucket $b")
+      val got = spark.read.parquet(java.nio.file.Paths.get(store.root, f).toString)
+        .select(pmod(hash(col("bibcode")), lit(n))).distinct().as[Int].collect().toSet
+      assert(got.subsetOf(Set(b)), s"$f holds keys of buckets $got")
+    }
+  }
+
+  /** 40 records with a links payload each (nonbib data_links_rows). */
+  private def seedForReindex(store: MasterStore, prefix: String): Seq[String] = {
+    import spark.implicits._
+    val bibs = (1 to 40).map(i => f"$prefix$i%02d")
+    Pipeline.runBatch(spark, store, bibs.flatMap(b => msgs(b, "2024-01-01 00:00:00").map(m =>
+        if (m.mtype == "nonbib_data") m.copy(payload = """{"data_links_rows": [{"baz": 0}]}""")
+        else m)).toDS(),
+      okTransport, okTransport, now = ts("2024-01-02 00:00:00"))
+    bibs
+  }
+
+  test("a forced full reindex runs as one Spark job and delivers every " +
+    "record to every sink exactly once") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_store_jobs").toString
+    val store = new MasterStore(root, numBuckets = 2)
+    val bibs = seedForReindex(store, "jobs")
+    assert(store.stats.exists(_.layerCount == 0), "the seed publishes a layer-free base")
+    val (delivered, solr, bulk) = countingTransports()
+    val (report, jobs) = countingJobs("pipeline-spec-forced-reindex") {
+      Pipeline.runBatch(spark, store, spark.emptyDataset[UpdateMessage],
+        solr, bulk, force = true, ignoreChecksums = true, now = ts("2024-01-03 00:00:00"))
+    }
+    assert(jobs == 1, s"$jobs Spark jobs for one forced full reindex")
+    assert((report.merged, report.indexed, report.solrOk, report.metricsOk,
+      report.linksOk) == ((40L, 40L, 40L, 40L, 40L)), s"$report")
+    val got = delivered.value.asScala.toSeq
+    val want = for (s <- Seq("solr", "metrics", "links"); b <- bibs) yield (s, b)
+    assert(got.sorted == want.sorted, "each record reached each sink exactly once")
+    assertBucketed(store, 2)
+    assert(store.read(spark).filter($"processed" === ts("2024-01-03 00:00:00")).count() == 40,
+      "every record is stamped")
+  }
+
+  test("a forced full reindex over a store with a live delta layer delivers " +
+    "every record once, reports what the sinks received and rewrites the base " +
+    "bucketed") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_store_layer").toString
+    val store = new MasterStore(root, numBuckets = 2)
+    val seeded = seedForReindex(store, "lay")
+    // a queue batch: two new records and one update, published as a layer
+    val fresh = Seq("layx1", "layx2")
+    Pipeline.runBatch(spark, store,
+      (fresh.flatMap(msgs(_, "2024-01-02 00:00:00")) :+ UpdateMessage("lay01", "metadata",
+        """{"bibcode": "lay01", "title": ["T2"], "database": ["astronomy"]}""",
+        ts("2024-01-02 00:00:00"))).toDS(),
+      okTransport, okTransport, now = ts("2024-01-02 12:00:00"), keyLocal = true)
+    assert(store.stats.exists(_.layerCount == 1), "the queue batch left a live layer")
+    val bibs = seeded ++ fresh
+
+    val (delivered, solr, bulk) = countingTransports()
+    val report = Pipeline.runBatch(spark, store, spark.emptyDataset[UpdateMessage],
+      solr, bulk, force = true, ignoreChecksums = true, now = ts("2024-01-03 00:00:00"))
+    val got = delivered.value.asScala.toSeq
+    def sent(sink: String) = got.count(_._1 == sink).toLong
+    // the fresh records' nonbib data carries no links rows
+    val want = (for (s <- Seq("solr", "metrics"); b <- bibs) yield (s, b)) ++
+      seeded.map(("links", _))
+    assert(got.sorted == want.sorted, "each record reached each sink exactly once")
+    assert((report.merged, report.indexed, report.solrOk, report.metricsOk, report.linksOk) ==
+      ((bibs.size.toLong, sent("solr"), sent("solr"), sent("metrics"), sent("links"))),
+      s"the report counts what the sinks received: $report")
+    assert(store.stats.exists(_.layerCount == 0), "the rewrite replaces base and layer")
+    assertBucketed(store, 2)
+    val rows = store.read(spark).collect()
+    assert(rows.map(_.getAs[String]("bibcode")).sorted.toSeq == bibs.sorted)
+    assert(rows.forall(_.getAs[java.sql.Timestamp]("processed") == ts("2024-01-03 00:00:00")))
+    assert(rows.find(_.getAs[String]("bibcode") == "lay01").get
+      .getAs[String]("bib_data").contains("T2"), "the layer's update survives the rewrite")
   }
 }

@@ -16,4 +16,32 @@ object SparkSpec {
 
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** `body`'s result and the number of Spark jobs it started, counted by a
+    * listener under a job group of its own. */
+  def countingJobs[T](group: String)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = group + "-marker"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      // listener events arrive in order: once the marker job's start is
+      // seen, every job `body` started has been counted
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.contains(marker), "the listener saw the marker job")
+      import scala.jdk.CollectionConverters._
+      (result, groups.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 }
