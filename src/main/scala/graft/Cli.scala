@@ -156,17 +156,13 @@ object Cli {
     if (rc != 0) sys.exit(rc)
   }
 
-  /** Parse + dispatch; returns a process exit code. The cached -b/-n key
-    * dataset (if any command materialized one) is unpersisted on every
-    * exit path so spec-shared sessions don't accumulate cache entries. */
-  def run(spark: SparkSession, argv: Seq[String], deps: Deps): Int = {
-    val keysCache = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Dataset[String]]
-    try dispatch(spark, argv, deps, keysCache)
-    finally keysCache.foreach(_.unpersist(blocking = false))
-  }
+  /** Parse + dispatch; returns a process exit code. The command runs in one
+    * [[Pins.scope]]: every frame it pins (the -b/-n key set, the sitemap
+    * ordinals) is released on every exit path. */
+  def run(spark: SparkSession, argv: Seq[String], deps: Deps): Int =
+    Pins.scope("Cli.run")(dispatch(spark, argv, deps))
 
-  private def dispatch(spark: SparkSession, argv: Seq[String], deps: Deps,
-      keysCache: scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Dataset[String]]): Int = {
+  private def dispatch(spark: SparkSession, argv: Seq[String], deps: Deps): Int = {
     import deps.out
     val a = parse(argv) match {
       case Right(v) => v
@@ -248,8 +244,7 @@ object Cli {
         case _                  => None
       }
       combined.flatMap { ds =>
-        val pinned = ds.cache()
-        keysCache += pinned
+        val pinned = Pins.cache(ds, "cli.keys")
         if (pinned.head(1).isEmpty) None else Some(pinned)
       }
     }
@@ -507,8 +502,6 @@ object Cli {
         case other =>
           out(s"error: unknown --action $other"); return 2
       }
-      // the published state no longer reads its ordinal pins
-      Pins.release(Sitemap.OrdinalPins)
       // modifying actions chain the file regeneration (run.py:500-510)
       if (Set("add", "force-update", "remove", "bootstrap")(action)) {
         val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)
@@ -631,8 +624,8 @@ object Cli {
           // cadence summary — rebuilt in ONE scan whenever anything else
           // mutated the state since the last cron (surfacing stale flags
           // a crashed run left), instead of a full reconcile EVERY cron
-          val dueMaster = dueMaster0.drop("_deleted", "_gen").cache()
-          try {
+          Pins.scope("sitemapCadence") {
+            val dueMaster = Pins.cache(dueMaster0.drop("_deleted", "_gen"), "cadence.dueMaster")
             val smVer = sm.currentVersion.getOrElse(0L)
             val (summary, stale) =
               graft.operators.SitemapCadence.load(spark, wmDir)
@@ -649,7 +642,7 @@ object Cli {
             store.registerConsumerCursor("sitemaps", preGen)
             graft.operators.SitemapCadence.save(spark, wmDir, next)
             nf
-          } finally dueMaster.unpersist(blocking = false)
+          }
         case None =>
           sm.writeMerge(spark, { state =>
             val flagged = state.filter(col("update_flag")).select(col("bibcode"))
@@ -665,7 +658,6 @@ object Cli {
               .join(flagged, Seq("bibcode"), "left_anti")
             SitemapState.add(state, store.read(spark), due)
           })
-          Pins.release(Sitemap.OrdinalPins)
           graft.streaming.Watermark.advanceGen(spark, wmDir, smCursorKey, preGen)
           store.registerConsumerCursor("sitemaps", preGen)
           // the full render also rebuilds + persists the summary AND the
@@ -981,43 +973,45 @@ object Cli {
     // suppression on the sink side. Returns (report, rejectCount).
     def ingestBatch(lines: org.apache.spark.sql.Dataset[String],
         nowB: Timestamp, quarantineDir: String): (Pipeline.RunReport, Long) = {
-      val decoded = graft.streaming.QueueDecode.decode(lines, nowB).cache()
-      val messages = graft.streaming.QueueDecode.messages(decoded)
-      val rejects = graft.streaming.QueueDecode.rejects(decoded)
-      val nRejects = rejects.count()
-      // Written unconditionally: a re-run of a since-corrected input must
-      // CLEAR its previous rejects, not leave them misrepresenting the
-      // latest run. nRejects == 0 deletes the subdir outright (an absent
-      // dir is the unambiguous "clean run" signal; an empty JSON write
-      // would leave Spark marker files a reader must interpret).
-      if (nRejects > 0)
-        rejects.toDF("raw", "reason").write.mode("overwrite").json(quarantineDir)
-      else {
-        val p = new org.apache.hadoop.fs.Path(quarantineDir)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true)
+      val (report, nRejects) = Pins.scope("ingestBatch") {
+        val decoded = Pins.cache(graft.streaming.QueueDecode.decode(lines, nowB), "ingest.decoded")
+        val messages = graft.streaming.QueueDecode.messages(decoded)
+        val rejects = graft.streaming.QueueDecode.rejects(decoded)
+        val nRejects = rejects.count()
+        // Written unconditionally: a re-run of a since-corrected input must
+        // CLEAR its previous rejects, not leave them misrepresenting the
+        // latest run. nRejects == 0 deletes the subdir outright (an absent
+        // dir is the unambiguous "clean run" signal; an empty JSON write
+        // would leave Spark marker files a reader must interpret).
+        if (nRejects > 0)
+          rejects.toDF("raw", "reason").write.mode("overwrite").json(quarantineDir)
+        else {
+          val p = new org.apache.hadoop.fs.Path(quarantineDir)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(p, true)
+        }
+        // ingest forwards a boost request per touched record, the queue
+        // topology's task_update_record → task_boost_request edge
+        // (tasks.py:104-111); --no-boost-requests turns it off. Affiliation
+        // augment is gated SEPARATELY (--no-augment-requests): the reference
+        // fires it on every metadata update regardless of the boost gate.
+        // Queue-batch shape: work, scans, and the published delta are all
+        // ∝ this batch's records
+        val rep = Pipeline.runBatch(spark, store, messages,
+          deps.solrTransport, deps.bulkTransport, now = nowB,
+          forwardBoostRequests = !a.contains("no-boost-requests"),
+          forwardAugmentRequests = !a.contains("no-augment-requests"),
+          metricsStore = metricsStoreOpt, keyLocal = true,
+          // the reference's ChangeLog lives beside the records table and is
+          // written by update_storage on every ingest mutation — same here:
+          // on by default for the ingest/consume front door, appended only
+          // after the batch's CAS publish lands (--no-changelog opts out,
+          // --changelog DIR relocates)
+          changeLogDir =
+            if (a.contains("no-changelog")) None
+            else Some(a.getOrElse("changelog", s"$storeRoot-changelog")))
+        (rep, nRejects)
       }
-      // ingest forwards a boost request per touched record, the queue
-      // topology's task_update_record → task_boost_request edge
-      // (tasks.py:104-111); --no-boost-requests turns it off. Affiliation
-      // augment is gated SEPARATELY (--no-augment-requests): the reference
-      // fires it on every metadata update regardless of the boost gate.
-      // Queue-batch shape: work, scans, and the published delta are all
-      // ∝ this batch's records
-      val report = Pipeline.runBatch(spark, store, messages,
-        deps.solrTransport, deps.bulkTransport, now = nowB,
-        forwardBoostRequests = !a.contains("no-boost-requests"),
-        forwardAugmentRequests = !a.contains("no-augment-requests"),
-        metricsStore = metricsStoreOpt, keyLocal = true,
-        // the reference's ChangeLog lives beside the records table and is
-        // written by update_storage on every ingest mutation — same here:
-        // on by default for the ingest/consume front door, appended only
-        // after the batch's CAS publish lands (--no-changelog opts out,
-        // --changelog DIR relocates)
-        changeLogDir =
-          if (a.contains("no-changelog")) None
-          else Some(a.getOrElse("changelog", s"$storeRoot-changelog")))
-      decoded.unpersist()
       // retention-driven maintenance on the batch cadence (same contract
       // as runStream's): superseded generations beyond the retain window
       // are dropped so a long-running consumer's disk is steady-state,

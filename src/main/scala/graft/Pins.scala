@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -18,10 +18,21 @@ import org.apache.spark.storage.StorageLevel
   *    geometrically growing) the subtree under them.
   *
   * Every pin is held here under a label until it is released by handle,
-  * by label or all at once. Releasing a cache unpersists it (it can still
-  * be recomputed); releasing a checkpoint frees its blocks, after which a
-  * frame planned over it cannot be evaluated, so a pin is released only
-  * once every frame that reads it has been materialized.
+  * by label, by its [[scope]] or all at once. Releasing a cache unpersists
+  * it (it can still be recomputed); releasing a checkpoint frees its
+  * blocks, after which a frame planned over it cannot be evaluated, so a
+  * pin is released only once every frame that reads it has been
+  * materialized.
+  *
+  * A [[scope]] (a batch, a sitemap cadence, a CLI command) owns the pins
+  * taken on its thread inside it and releases them when it exits:
+  * normally, by an exception or by a `return` out of the block. Scopes
+  * nest, and the innermost open one on the thread owns a pin; a pin taken
+  * on another thread (a streaming micro-batch) belongs to that thread's
+  * scope, or to none. No frame that reads a scoped pin may escape the
+  * scope. A pin taken outside every scope (a catalog query's, a memo, the
+  * result pin `operators.Components.assign` hands its caller) is held
+  * until it is released by handle, by label or by [[releaseAll]].
   *
   * Checkpoints are executor-local blocks by default. With
   * `spark.graft.reliableCheckpoint=true` in the pinning session's conf and
@@ -33,10 +44,30 @@ import org.apache.spark.storage.StorageLevel
 object Pins {
   val ReliableCheckpoint = "spark.graft.reliableCheckpoint"
 
-  private final class Pin(val label: String, val df: DataFrame, val free: () => Unit)
+  private final class Scope(val label: String)
+  private final class Pin(val label: String, val df: Dataset[_], val owner: Option[Scope],
+      val free: () => Unit)
   private val live = scala.collection.mutable.ArrayBuffer.empty[Pin]
-  private def hold(label: String, df: DataFrame)(free: => Unit): DataFrame =
-    live.synchronized { live += new Pin(label, df, () => free); df }
+  private val scopes = ThreadLocal.withInitial[List[Scope]](() => Nil)
+  private def hold[T](label: String, df: Dataset[T])(free: => Unit): Dataset[T] =
+    live.synchronized { live += new Pin(label, df, scopes.get.headOption, () => free); df }
+
+  /** `body`, run in a scope named `label` that releases every pin taken on
+    * this thread inside it when `body` exits, however it exits. */
+  def scope[A](label: String)(body: => A): A = {
+    val s = new Scope(label)
+    scopes.set(s :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      drop(_.owner.contains(s))
+    }
+  }
+
+  /** The live pins, each as its label, after its scope's label when a
+    * scope owns it. */
+  private[graft] def held: Seq[String] = live.synchronized(
+    live.map(p => p.owner.fold(p.label)(o => s"${o.label}/${p.label}")).toSeq)
 
   private[graft] def reliable(spark: SparkSession): Boolean =
     spark.conf.getOption(ReliableCheckpoint).exists(_.equalsIgnoreCase("true")) &&
@@ -45,7 +76,7 @@ object Pins {
   /** `df` cached and held under `label`. A plan that is already cached is
     * already pinned by its owner and is returned as it is: a second
     * `cache()` would only log "Asked to cache already cached data". */
-  def cache(df: DataFrame, label: String): DataFrame =
+  def cache[T](df: Dataset[T], label: String): Dataset[T] =
     if (df.storageLevel != StorageLevel.NONE) df
     else hold(label, df.cache())(df.unpersist())
 
@@ -73,9 +104,9 @@ object Pins {
     * may both build; both pins are held and released alike.) */
   def memo(spark: SparkSession, label: String)(build: => DataFrame): DataFrame =
     live.synchronized(live.find(p => p.label == label && (p.df.sparkSession eq spark)))
-      .fold(cache(build, label))(_.df)
+      .fold(cache(build, label))(_.df.toDF())
 
-  def release(pin: DataFrame): Unit = drop(_.df eq pin)
+  def release(pin: Dataset[_]): Unit = drop(_.df eq pin)
   def release(label: String): Unit = drop(_.label == label)
   def releaseAll(): Unit = drop(_ => true)
 

@@ -57,8 +57,8 @@ object Pipeline {
     *    one aggregation over it fires the transports and gives every count
     *    of the report, and the publish and the boost, augment and
     *    metrics-store legs read the cache.
-    * Every frame the batch caches is released on every exit, exceptions
-    * included. */
+    * The batch runs in one [[Pins.scope]], which releases every frame it
+    * caches on every exit, exceptions included. */
   def runBatch(
       spark: SparkSession,
       store: MasterStore,
@@ -139,26 +139,24 @@ object Pipeline {
     // a batch whose plan holds no rows (the sweeps' empty batch) is known
     // empty without a job
     val noMessages = updates.queryExecution.optimizedPlan.maxRows.contains(0L)
-    // the doomed set stays a Dataset end-to-end: anti-join for the row
-    // drop, distributed count to fire the sink deletes — a mass-deletion
-    // batch must never become a driver list or an isin literal (the same
-    // scale bug class the -n/--index_failed paths already fixed). A probe
-    // for one full delete comes first, so the usual batch, which has
-    // none, caches nothing and shuffles nothing for it
-    val doomed =
-      if (noMessages || updates.filter(isFullDelete).head(1).isEmpty) None
-      else Some(updates.filter(isFullDelete)
-        .select(col("bibcode")).distinct().as[String].cache())
-    // the forced full sweep (run.py -f over the whole table, the
-    // rebuild-collection loop) with no messages and no metrics store: the
-    // snapshot write is the only reader of the index pass
-    val oneAction = force && restrictTo.isEmpty && !keyLocal && !keyedPublish &&
-      noMessages && metricsStore.isEmpty
-    // every frame this batch caches is released on every exit: a batch
-    // that throws in a long-lived driver (`Cli --consume`) must not leave
-    // its working set in executor storage
-    var held: Option[DataFrame] = None
-    try {
+    // a batch that throws in a long-lived driver (`Cli --consume`) leaves
+    // no working set in executor storage
+    Pins.scope("runBatch") {
+      // the doomed set stays a Dataset end-to-end: anti-join for the row
+      // drop, distributed count to fire the sink deletes — a mass-deletion
+      // batch must never become a driver list or an isin literal (the same
+      // scale bug class the -n/--index_failed paths already fixed). A probe
+      // for one full delete comes first, so the usual batch, which has
+      // none, caches nothing and shuffles nothing for it
+      val doomed =
+        if (noMessages || updates.filter(isFullDelete).head(1).isEmpty) None
+        else Some(Pins.cache(updates.filter(isFullDelete)
+          .select(col("bibcode")).distinct().as[String], "runBatch.doomed"))
+      // the forced full sweep (run.py -f over the whole table, the
+      // rebuild-collection loop) with no messages and no metrics store: the
+      // snapshot write is the only reader of the index pass
+      val oneAction = force && restrictTo.isEmpty && !keyLocal && !keyedPublish &&
+        noMessages && metricsStore.isEmpty
       // M1 merge, P1-P3 gate and the index pass over one read of the master
       def indexPass(baseMaster: DataFrame): (MergeEngine.UpsertResult, DataFrame) = {
         val merged = MergeEngine.upsert(baseMaster, updates.filter(!isFullDelete))
@@ -278,8 +276,7 @@ object Pipeline {
       // recomputes and re-sends (the idempotent sinks above); a strict
       // once-only guarantee would require persisting the pass to durable
       // storage first
-      val pass = uncached.cache()
-      held = Some(pass)
+      val pass = Pins.cache(uncached, "runBatch.pass")
       val stamped = pass.select(MergeEngine.masterColumns.map(col): _*)
       // the counts in one aggregation over the pass, run first: it fires
       // the transports and fills the cache that every later read uses
@@ -400,24 +397,22 @@ object Pipeline {
             store.writeMergeKeyed(spark, stampKeys, _ =>
               stamped.join(stampKeys.distinct(), Seq("bibcode"), "left_semi"))
           else {
-            val sk = stampKeys.distinct().cache()
+            val sk = Pins.cache(stampKeys.distinct(), "runBatch.stampKeys")
             val nKeys = sk.count()
-            try {
-              if (!keyedPublish && nKeys > 0 && nKeys * 2 >= counts("merged"))
-                // sweep-shaped: the touched set IS most of the table, so a
-                // delta layer would trip the size-triggered fold and write
-                // the table TWICE (layer + compaction). One CAS whole-table
-                // merge writes it once and still rebases the batch's rows
-                // onto the live snapshot — concurrent key-local writers'
-                // other keys survive a lost race (their changes re-apply
-                // under writeMerge's re-resolve)
-                store.writeMerge(spark, cur =>
-                  cur.join(sk, Seq("bibcode"), "left_anti")
-                    .unionByName(stamped.join(sk, Seq("bibcode"), "left_semi")))
-              else
-                store.writeMergeKeyed(spark, sk, _ =>
-                  stamped.join(sk, Seq("bibcode"), "left_semi"))
-            } finally sk.unpersist(blocking = false)
+            if (!keyedPublish && nKeys > 0 && nKeys * 2 >= counts("merged"))
+              // sweep-shaped: the touched set IS most of the table, so a
+              // delta layer would trip the size-triggered fold and write
+              // the table TWICE (layer + compaction). One CAS whole-table
+              // merge writes it once and still rebases the batch's rows
+              // onto the live snapshot — concurrent key-local writers'
+              // other keys survive a lost race (their changes re-apply
+              // under writeMerge's re-resolve)
+              store.writeMerge(spark, cur =>
+                cur.join(sk, Seq("bibcode"), "left_anti")
+                  .unionByName(stamped.join(sk, Seq("bibcode"), "left_semi")))
+            else
+              store.writeMergeKeyed(spark, sk, _ =>
+                stamped.join(sk, Seq("bibcode"), "left_semi"))
           }
         }
       // the change log's rows: the upserts' pre-images and, for full
@@ -430,9 +425,6 @@ object Pipeline {
           lit(false).as("permanent"), lit(now).as("ts")))
       finish(version, counts, deleteLog.foldLeft(merged.changeLog)(_ unionByName _),
         boost, augment)
-    } finally {
-      held.foreach(_.unpersist())
-      doomed.foreach(_.unpersist())
     }
   }
 
@@ -679,51 +671,50 @@ object Pipeline {
       outRoot: String, now: Timestamp,
       siteKeys: Seq[String] = Sitemap.Sites.keys.toSeq.sorted,
       maxPerFile: Int = Sitemap.MaxRecordsPerSitemap,
-      memberIndex: Option[SitemapMembers] = None): (Long, SitemapCadence.Summary) = {
-    val today = new java.text.SimpleDateFormat("yyyy-MM-dd").format(now)
-    val state0 = stateStore.read(spark).cache()
-    val work = SitemapState.renderable(state0, today).cache()
-    val files = work.select(col("sitemap_filename")).distinct()
-      .collect().map(_.getString(0)) // bounded: ≤ corpus / maxPerFile names
-    for (key <- siteKeys) {
-      val site = Sitemap.Sites(key)
-      Sitemap.writeFiles(Sitemap.renderFiles(work, site), s"$outRoot/$key")
+      memberIndex: Option[SitemapMembers] = None): (Long, SitemapCadence.Summary) =
+    Pins.scope("runManagedSitemaps") {
+      val today = new java.text.SimpleDateFormat("yyyy-MM-dd").format(now)
+      val state0 = Pins.cache(stateStore.read(spark), "sitemaps.state")
+      val work = Pins.cache(SitemapState.renderable(state0, today), "sitemaps.work")
+      val files = work.select(col("sitemap_filename")).distinct()
+        .collect().map(_.getString(0)) // bounded: ≤ corpus / maxPerFile names
+      for (key <- siteKeys) {
+        val site = Sitemap.Sites(key)
+        Sitemap.writeFiles(Sitemap.renderFiles(work, site), s"$outRoot/$key")
+      }
+      // index entries for EVERY file in the table (tasks.py:888-899), not
+      // just the regenerated ones; one tiny aggregation — the same pass
+      // yields the cadence summary's per-file stats and fill cursor
+      val (summary0, _) = SitemapCadence.rebuild(state0, 0L, maxPerFile)
+      writeSiteMeta(spark, outRoot, siteKeys, summary0, today)
+      import spark.implicits._
+      // generated-flag clears are key-local (exactly the rendered files'
+      // member rows), and the stamped rows are PRECOMPUTED from the cached
+      // state0 — the same rows the render read — so the store's internal
+      // keyed reconcile never evaluates (one fewer table scan per
+      // regeneration). The closure ignoring `cur` makes this publish
+      // SINGLE-WRITER by contract: a row another writer removed or
+      // re-flagged between the render and this stamp would be overwritten
+      // with the snapshot's version. That contract is enforced by the CLI's
+      // shared sitemap cron lease (CronLease — every sitemap-state-writing
+      // action takes it), not merely assumed; raw API users running
+      // concurrent mutations must keep the `cur =>` rebase form instead
+      val touchedRows = Sitemap.filesNeedingUpdate(state0)
+      stateStore.writeMergeKeyed(spark, work.select(col("bibcode")),
+        _ => SitemapState.markGenerated(touchedRows,
+          files.toSeq.toDF("sitemap_filename"), now))
+      // the full render already holds the whole table — rebuild the member
+      // index in the same pass (the post-merge table IS state0 with the
+      // rendered files' rows stamped), so the NEXT keyed cadence starts
+      // with a fresh mirror instead of paying its own resync scan
+      memberIndex.foreach { mi =>
+        mi.store.write(SitemapState.markGenerated(state0,
+          files.toSeq.toDF("sitemap_filename"), now))
+        mi.commit(stateStore.currentVersion.getOrElse(0L))
+      }
+      (files.length.toLong,
+        summary0.copy(generation = stateStore.currentVersion.getOrElse(0L)))
     }
-    // index entries for EVERY file in the table (tasks.py:888-899), not
-    // just the regenerated ones; one tiny aggregation — the same pass
-    // yields the cadence summary's per-file stats and fill cursor
-    val (summary0, _) = SitemapCadence.rebuild(state0, 0L, maxPerFile)
-    writeSiteMeta(spark, outRoot, siteKeys, summary0, today)
-    import spark.implicits._
-    // generated-flag clears are key-local (exactly the rendered files'
-    // member rows), and the stamped rows are PRECOMPUTED from the cached
-    // state0 — the same rows the render read — so the store's internal
-    // keyed reconcile never evaluates (one fewer table scan per
-    // regeneration). The closure ignoring `cur` makes this publish
-    // SINGLE-WRITER by contract: a row another writer removed or
-    // re-flagged between the render and this stamp would be overwritten
-    // with the snapshot's version. That contract is enforced by the CLI's
-    // shared sitemap cron lease (CronLease — every sitemap-state-writing
-    // action takes it), not merely assumed; raw API users running
-    // concurrent mutations must keep the `cur =>` rebase form instead
-    val touchedRows = Sitemap.filesNeedingUpdate(state0)
-    stateStore.writeMergeKeyed(spark, work.select(col("bibcode")),
-      _ => SitemapState.markGenerated(touchedRows,
-        files.toSeq.toDF("sitemap_filename"), now))
-    // the full render already holds the whole table — rebuild the member
-    // index in the same pass (the post-merge table IS state0 with the
-    // rendered files' rows stamped), so the NEXT keyed cadence starts
-    // with a fresh mirror instead of paying its own resync scan
-    memberIndex.foreach { mi =>
-      mi.store.write(SitemapState.markGenerated(state0,
-        files.toSeq.toDF("sitemap_filename"), now))
-      mi.commit(stateStore.currentVersion.getOrElse(0L))
-    }
-    work.unpersist(); state0.unpersist()
-    Pins.release(Sitemap.OrdinalPins)
-    (files.length.toLong,
-      summary0.copy(generation = stateStore.currentVersion.getOrElse(0L)))
-  }
 
   /** Per-site static sitemap + index + robots, shared by the full and the
     * keyed regeneration paths — the index lists only files physically
@@ -827,11 +818,11 @@ object Pipeline {
     // the cadence needs (flag anti-join, new-assignment count, the
     // post-merge rows) derives from this frame and the merge's own output,
     // never from re-reading the store
-    val preRows = stateStore.lookupFrame(spark, dueKeys,
-      maxDriverKeys = CadenceLookupMaxDriverKeys).cache()
-    val due = dueKeys.join(preRows.filter(col("update_flag")).select(col("bibcode")),
-      Seq("bibcode"), "left_anti").cache()
-    try {
+    Pins.scope("runSitemapCadenceKeyed") {
+      val preRows = Pins.cache(stateStore.lookupFrame(spark, dueKeys,
+        maxDriverKeys = CadenceLookupMaxDriverKeys), "cadence.preRows")
+      val due = Pins.cache(dueKeys.join(preRows.filter(col("update_flag"))
+        .select(col("bibcode")), Seq("bibcode"), "left_anti"), "cadence.due")
       val newCnt = SitemapState.countNewAssignments(dueMaster, due, preRows)
       phase("lookup+newcnt")
       val fill = summary.fill
@@ -842,8 +833,8 @@ object Pipeline {
       // the publish costs the layer write alone — the same
       // precomputed-rows publish contract runBatch's stamp publish uses,
       // under the same single-cron-writer assumption
-      val newRows = SitemapState.addKeyed(dueRows, dueMaster, due, fill,
-        maxPerFile, force).cache()
+      val newRows = Pins.cache(SitemapState.addKeyed(dueRows, dueMaster, due, fill,
+        maxPerFile, force), "cadence.newRows")
       val nextFill = SitemapState.advanceFill(fill, newCnt, maxPerFile)
       // the merge output IS the post-merge state of the due keys. TWO
       // file sets fall out: the RENDER set (files holding a flagged due
@@ -869,7 +860,6 @@ object Pipeline {
         // it on both stores (less feed noise than r15's empty merge,
         // identical live state); the per-site static/index/robots still
         // refresh, as the full path's would
-        newRows.unpersist(blocking = false)
         writeSiteMeta(spark, outRoot, siteKeys, summary, today)
         memberIndex.foreach(_.commit(stateStore.currentVersion.getOrElse(0L)))
         return (0L, summary.copy(
@@ -888,17 +878,17 @@ object Pipeline {
       // end, to each store): overlay this run's newRows for the due keys
       // — both frames are in hand, ∝ delta — so the view equals the
       // post-publish state exactly
-      def overlay(base: DataFrame): DataFrame = base
+      def overlay(base: DataFrame): DataFrame = Pins.cache(base
         .join(due, Seq("bibcode"), "left_anti")
-        .unionByName(newRows.filter(col("sitemap_filename").isin(statSet: _*)))
-        .cache()
+        .unionByName(newRows.filter(col("sitemap_filename").isin(statSet: _*))),
+        "cadence.members")
       val members = memberIndex match {
         case Some(mi) => overlay(mi.membersOf(spark, statSet))
         case None => overlay(stateStore.read(spark)
           .filter(col("sitemap_filename").isin(statSet: _*)))
       }
-      val renderMembers = members
-        .filter(col("sitemap_filename").isin(renderSet: _*)).cache()
+      val renderMembers = Pins.cache(members
+        .filter(col("sitemap_filename").isin(renderSet: _*)), "cadence.renderMembers")
       if (trace) { members.count(); phase("members-materialize") }
       phase("members-read")
       val work = renderMembers.select(col("record_id").as("id"), col("bibcode"),
@@ -961,14 +951,8 @@ object Pipeline {
         mi.commit(stateStore.currentVersion.getOrElse(0L))
       }
       phase("publish-index")
-      newRows.unpersist(blocking = false)
-      renderMembers.unpersist(); members.unpersist()
-      Pins.release(Sitemap.OrdinalPins)
       (renderSet.size.toLong,
         next.copy(generation = stateStore.currentVersion.getOrElse(0L)))
-    } finally {
-      preRows.unpersist(blocking = false)
-      due.unpersist(blocking = false)
     }
   }
 
@@ -984,23 +968,23 @@ object Pipeline {
   def runSitemaps(spark: SparkSession, store: MasterStore, outDir: String,
       siteKey: String = "ads", maxPerFile: Int = Sitemap.MaxRecordsPerSitemap): Long = {
     val site = Sitemap.Sites(siteKey)
-    val included = store.read(spark)
-      .filter(Sitemap.shouldInclude)
-      .select(col("id"), col("bibcode"),
-        date_format(coalesce(col("bib_data_updated"), col("updated")), "yyyy-MM-dd").as("lastmod"))
-    val assigned = Sitemap.assignFilenames(included, maxPerFile)
-    val rendered = Sitemap.renderFiles(assigned, site).cache()
-    Sitemap.writeFiles(rendered, outDir)
-    // (filename, lastmod) pairs for the index: renderFiles carries
-    // max(lastmod) per file, the analog of the reference's per-file mtime
-    // (tasks.py:932-941) — an untouched file keeps its index lastmod, so
-    // crawlers don't refetch files that didn't change
-    val files = rendered.select(col("sitemap_filename"), col("file_lastmod")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).sortBy(_._1)
-    rendered.unpersist()
-    // writeFiles + the collect above fully materialized the ordinal frame,
-    // so the partition-pinning cache inside withGlobalOrdinal is releasable
-    Pins.release(Sitemap.OrdinalPins)
+    // the ordinal and rendered pins are released once the files are
+    // written and their index entries collected
+    val files = Pins.scope("runSitemaps") {
+      val included = store.read(spark)
+        .filter(Sitemap.shouldInclude)
+        .select(col("id"), col("bibcode"),
+          date_format(coalesce(col("bib_data_updated"), col("updated")), "yyyy-MM-dd").as("lastmod"))
+      val assigned = Sitemap.assignFilenames(included, maxPerFile)
+      val rendered = Pins.cache(Sitemap.renderFiles(assigned, site), "runSitemaps.rendered")
+      Sitemap.writeFiles(rendered, outDir)
+      // (filename, lastmod) pairs for the index: renderFiles carries
+      // max(lastmod) per file, the analog of the reference's per-file mtime
+      // (tasks.py:932-941) — an untouched file keeps its index lastmod, so
+      // crawlers don't refetch files that didn't change
+      rendered.select(col("sitemap_filename"), col("file_lastmod")).collect()
+        .map(r => r.getString(0) -> r.getString(1)).sortBy(_._1)
+    }
     val today = java.time.LocalDate.now.toString
     // driver-side writes go through the same Hadoop FileSystem as the
     // distributed bib files — outDir may be HDFS/S3, and an empty corpus

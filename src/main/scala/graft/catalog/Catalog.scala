@@ -21,9 +21,10 @@ trait Catalog {
 }
 
 object Catalog {
-  /** Release every pin ([[graft.Pins.releaseAll]]: partition caches,
-    * checkpoints, memoized components) and every `.cache()`d relation in
-    * the session (`spark.catalog.clearCache`). Unlike a cache, a released
+  /** Release every pin ([[graft.Pins.releaseAll]]: the queries' caches,
+    * which each take under its query's or helper's name, their
+    * checkpoints and memoized components) and whatever else the session
+    * has cached (`spark.catalog.clearCache`). Unlike a cache, a released
     * checkpoint cannot be recomputed: a frame planned over one fails when
     * evaluated, so call this only between queries, never while a result
     * frame is still to be read. Bench and Verify call it after each query

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.PortableHash._
 
 /** Deduplication operators for a training-data pipeline: exact content
@@ -90,11 +90,10 @@ object DedupCatalog extends Catalog {
       col("setsize") - ceil(lit(beta) * col("setsize")) + 2, lit(1L))
     // cached: the candidate self-join reads the postings twice. rn and
     // setsize ride along for the positional filter below
-    val postings = ranked
+    val postings = Pins.cache(ranked
       .filter(col("rn") <= prefixLen &&
         (col("df") <= dfCap || col("rn") <= keepRarest))
-      .select(col("doc_id"), col("bucket"), col("s"), col("rn"), col("setsize"))
-      .cache()
+      .select(col("doc_id"), col("bucket"), col("s"), col("rn"), col("setsize")), "lenbandJaccard")
     // ppjoin positional + symmetric length filters, both exact:
     //  - J ≥ t forces min ≥ t·max on set sizes (I ≤ min, U ≥ max);
     //  - the global (df, s) rank order is shared by every doc, so a pair's
@@ -214,11 +213,10 @@ object DedupCatalog extends Catalog {
     // missed duplicate.
     val prefixLen = floor(lit(1.0 - threshold) * col("setsize")) + 2
     // cached: the candidate join reads the ranked postings twice
-    val kept = ranked
+    val kept = Pins.cache(ranked
       .filter(col("df") <= dfCap || col("rn") <= prefixLen)
       .select(col("doc_id"), col("setsize"), col("s"), col("rn"),
-        (col("rn") <= prefixLen).as("__inPrefix"))
-      .cache()
+        (col("rn") <= prefixLen).as("__inPrefix")), "containmentPairs")
     val probe = kept.filter(col("__inPrefix"))
       .select(col("doc_id").as("doc_a"), col("setsize").as("size_a"),
         col("s"), col("rn").as("ra"))
@@ -264,9 +262,8 @@ object DedupCatalog extends Catalog {
     // built on the same modality-slice helper as the Hamming families so
     // the slice predicate lives in one place; fp here is the frame-hash
     // ARRAY, exploded into the inverted (doc, frame-hash) index
-    val fh = mediaFps(s, d, 2, graft.operators.Multimodal.frameHashesUdf)
-      .select(col("doc_id"), explode(col("fp")).as("fh"))
-      .cache()
+    val fh = Pins.cache(mediaFps(s, d, 2, graft.operators.Multimodal.frameHashesUdf)
+      .select(col("doc_id"), explode(col("fp")).as("fh")), "videoSharedPairs")
     val nf = fh.groupBy(col("doc_id")).agg(count(lit(1)).as("nf"))
     val shared = fh.as("a").join(fh.as("b"),
         col("a.fh") === col("b.fh") && col("a.doc_id") < col("b.doc_id"))
@@ -291,14 +288,14 @@ object DedupCatalog extends Catalog {
     * ~1000× the cost of the join probe, so it must evaluate once per doc,
     * not once per join side per reference. */
   private[graft] def bandedHammingPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
-    val base = fps
+    val base = Pins.cache(fps
       .select(col("doc_id"), col("fp"),
         explode(array((0 until 4).map(k => struct(
           lit(k).as("band_idx"),
           (expr(s"fp div ${1L << (15 * k)}") % 32768L).as("band_val"))): _*)).as("band"))
       .select(col("doc_id"), col("fp"),
-        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
-      .cache()
+        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val")),
+      "bandedHammingPairs")
     base.as("a").join(base.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
@@ -484,9 +481,8 @@ object DedupCatalog extends Catalog {
     // computed once, not re-derived per join side (at cluster scale this
     // is a persisted fingerprint table — the standard LSH shape).
     "dd_minhash_lsh" -> ((s, d) => {
-      val base = shingled(s, d)
-        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text")))
-        .cache()
+      val base = Pins.cache(shingled(s, d)
+        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text"))), "dd_minhash_lsh")
       // candidate generation joins ONLY (doc_id, band) — the shingle and
       // minhash arrays stay out of the exploded band traffic and come back
       // from a broadcast dim for the verify step
@@ -546,9 +542,9 @@ object DedupCatalog extends Catalog {
     // doubles are exact cross-engine (correctly-rounded division); only
     // the decile AVGs are sum-order-sensitive, and round(6) absorbs that.
     "dd_minhash_calibration" -> ((s, d) => {
-      val base = shingled(s, d)
-        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text")))
-        .cache()
+      val base = Pins.cache(shingled(s, d)
+        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text"))),
+        "dd_minhash_calibration")
       val bands = base.select(col("doc_id"),
         explode(array((0 until 4).map(k => struct(
           lit(k).as("band_idx"),
@@ -603,11 +599,10 @@ object DedupCatalog extends Catalog {
     // pipelines (tx_span_dup_frac, dd_exact_substring) use. The oracle
     // hashes identically, so values stay engine-exact. ──
     "dd_lenband_jaccard" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
+      val docs = Pins.cache(Tables.documents(s, d)
         .select(col("doc_id"),
           graft.functions.TextHashes.windowHashesUdf(3, distinct = true)(col("text")).as("sh"),
-          expr("n_chars div 64").as("bucket"))
-        .cache()
+          expr("n_chars div 64").as("bucket")), "dd_lenband_jaccard")
       val dfCap = math.max(100L, docs.count() / 50) // ~2% of the corpus
       lenbandJaccard(docs, threshold = 0.5, dfCap = dfCap)
         .orderBy(col("doc_a"), col("doc_b"))
@@ -657,10 +652,10 @@ object DedupCatalog extends Catalog {
     // posting lists never meet the probe fan-out at all instead of
     // being left to AQE skew handling. ──
     "dd_containment" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
+      val docs = Pins.cache(Tables.documents(s, d)
         .select(col("doc_id"),
-          graft.functions.TextHashes.windowHashesUdf(3, distinct = true)(col("text")).as("sh"))
-        .cache()
+          graft.functions.TextHashes.windowHashesUdf(3, distinct = true)(col("text")).as("sh")),
+        "dd_containment")
       val dfCap = math.max(100L, docs.count() / 50) // ~2% of the corpus
       containmentPairs(docs, threshold = 0.8, dfCap = dfCap)
         .orderBy(col("doc_a"), col("doc_b"))
@@ -919,9 +914,8 @@ object DedupCatalog extends Catalog {
     // batch here is doc_id % 10 == 7, standing in for today's crawl. New
     // docs matching no corpus doc pass through with dup_of = NULL. ──
     "dd_incremental" -> ((s, d) => {
-      val base = shingled(s, d)
-        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text")))
-        .cache()
+      val base = Pins.cache(shingled(s, d)
+        .withColumn("mh", graft.functions.TextHashes.minhashesUdf(8)(col("text"))), "dd_incremental")
       def bands(df: DataFrame) = df.select(col("doc_id"),
         explode(array((0 until 4).map(k => struct(
           lit(k).as("band_idx"),
@@ -972,7 +966,7 @@ object DedupCatalog extends Catalog {
         .select(col("doc_id"), hash64(col("text")).as("content_hash"))
       val isNew = col("doc_id") % 10 === 7
       val batch = docs.filter(isNew)
-      val corpus = docs.filter(!isNew).cache()
+      val corpus = Pins.cache(docs.filter(!isNew), "dd_bloom_incremental")
       // an EMPTY corpus has no bloom aggregate to read (stat.bloomFilter
       // NPEs deserializing the null byte[] the empty aggregate returns) —
       // and semantically nothing can be a dup of nothing, so the filter
@@ -1094,11 +1088,10 @@ object DedupCatalog extends Catalog {
     // MAE grows by the predicted √((1+J)(1−J))-ish factor; the per-pair
     // cost is one XOR + popcount instead of 16 comparisons. ──
     "dd_minhash_bbit" -> ((s, d) => {
-      val base = shingled(s, d)
+      val base = Pins.cache(shingled(s, d)
         .withColumn("mh", graft.functions.TextHashes.minhashesUdf(16)(col("text")))
         .withColumn("sig", (0 until 16).map(i =>
-          (element_at(col("mh"), i + 1) % 2) * lit(1L << i)).reduce(_ + _))
-        .cache()
+          (element_at(col("mh"), i + 1) % 2) * lit(1L << i)).reduce(_ + _)), "dd_minhash_bbit")
       val bands = base.select(col("doc_id"),
         explode(array((0 until 4).map(k => struct(
           lit(k).as("band_idx"),

@@ -124,10 +124,9 @@ object PrepPipelineCatalog extends Catalog {
     // carried the full document text for nothing (guide §2.3: project
     // before the exchange). grams stay: the contamination branch needs
     // them.
-    val withCanon = flagged.drop("clean_text")
+    val withCanon = Pins.cache(flagged.drop("clean_text")
       .withColumn("canonical",
-        col("doc_id") === min(col("doc_id")).over(wHash))
-      .cache()
+        col("doc_id") === min(col("doc_id")).over(wHash)), "funnelFlags")
     val overlap = withCanon
       .select(col("doc_id"), explode(col("grams")).as("ng"))
       .join(broadcast(evalGrams), Seq("ng"))
@@ -185,7 +184,7 @@ object PrepPipelineCatalog extends Catalog {
         .filter(col("pass_filter") && col("canonical") &&
           !col("contaminated") && col("clf_keep"))
         .select(col("doc_id"), col("lang"), col("n_words")), "pl_train_manifest")
-      val counts = kept.groupBy(col("lang")).agg(count(lit(1)).as("cnt")).cache()
+      val counts = Pins.cache(kept.groupBy(col("lang")).agg(count(lit(1)).as("cnt")), "pl_train_manifest")
       val withShare = counts
         .crossJoin(counts.agg(sum(col("cnt")).as("total")))
         .withColumn("share", col("cnt").cast("double") / col("total").cast("double"))

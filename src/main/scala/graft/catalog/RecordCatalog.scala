@@ -339,10 +339,9 @@ object RecordCatalog extends Catalog {
       }
       // cached: nine sink counts read this frame — without the cache each
       // count action re-runs the whole merge pipeline
-      val master = MergeEngine.upsert(MergeEngine.emptyMaster(s),
+      val master = Pins.cache(MergeEngine.upsert(MergeEngine.emptyMaster(s),
         s.createDataset(fixtureUpdates(24) ++ linksMsgs)).master.as[MasterRecord]
-        .filter(IndexJob.eligible(None, force = false))
-        .cache()
+        .filter(IndexJob.eligible(None, force = false)), "p9_mode_projection")
       // r16: the nine sink counts were nine separate .count() driver
       // actions (nine jobs over the cached 24-record master); they now
       // union into ONE counting aggregation, left-joined onto the 9

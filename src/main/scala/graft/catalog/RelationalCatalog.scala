@@ -3,7 +3,7 @@ package graft.catalog
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{Pins, Tables}
 
 /** Relational operator catalog: the predicate / join / aggregate / set-op /
   * sort / window inventory of SURVEY.md §2.2–§2.7, §2.9, each demonstrated on
@@ -426,9 +426,8 @@ object RelationalCatalog extends Catalog {
       // rows_matched probe reads it again: 5 executions of the scan+
       // arithmetic collapse into one compute + cached reads. The cached
       // frame is the narrow decision proxy (guide §8), never the payload.
-      val dims = li.crossJoin(broadcast(mx))
-        .withColumn("pk12", expr("l_partkey * 4096L DIV (maxpk + 1)"))
-        .cache()
+      val dims = Pins.cache(li.crossJoin(broadcast(mx))
+        .withColumn("pk12", expr("l_partkey * 4096L DIV (maxpk + 1)")), "w3_zorder_prune")
       val z = (0 until 12).map { j =>
         shiftright(col("day"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j)) +
           shiftright(col("pk12"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j + 1))

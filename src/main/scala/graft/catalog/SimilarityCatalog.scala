@@ -59,10 +59,9 @@ object SimilarityCatalog extends Catalog {
     // The scale path when no cell assignment exists: one equi-join on the
     // signature, work ∝ bucket occupancy, identical math in the oracle. ──
     "sim_ann_lsh" -> ((s, d) => {
-      val corpus = vecs(s, d)
+      val corpus = Pins.cache(vecs(s, d)
         .withColumn("norm", graft.functions.VectorOps.normUdf(col("v")))
-        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v")))
-        .cache()
+        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v"))), "sim_ann_lsh")
       val qs = corpus.filter(col("vec_id") >= 20 && col("vec_id") < 25)
         .select(col("vec_id").as("query_id"), col("sig").as("qsig"),
           col("v").as("qv"), col("norm").as("qnorm"))
@@ -86,10 +85,9 @@ object SimilarityCatalog extends Catalog {
     // keeps one signature row each, so corpus-side work stays ∝ bucket
     // occupancy and nothing re-fingerprints. ──
     "sim_ann_multiprobe" -> ((s, d) => {
-      val corpus = vecs(s, d)
+      val corpus = Pins.cache(vecs(s, d)
         .withColumn("norm", graft.functions.VectorOps.normUdf(col("v")))
-        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v")))
-        .cache()
+        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v"))), "sim_ann_multiprobe")
       val probes = array(lit(0) +: (0 until 8).map(j => lit(1 << j)): _*)
       val qs = corpus.filter(col("vec_id") >= 20 && col("vec_id") < 25)
         .select(col("vec_id").as("query_id"), col("sig").as("qsig"),
@@ -123,10 +121,9 @@ object SimilarityCatalog extends Catalog {
     // filter must reach the candidate generator, which is what this row
     // pins. ──
     "sim_ann_filtered" -> ((s, d) => {
-      val corpus = vecs(s, d)
+      val corpus = Pins.cache(vecs(s, d)
         .withColumn("norm", graft.functions.VectorOps.normUdf(col("v")))
-        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v")))
-        .cache()
+        .withColumn("sig", graft.functions.VectorOps.lshSigUdf8(col("v"))), "sim_ann_filtered")
       val probes = array(lit(0) +: (0 until 8).map(j => lit(1 << j)): _*)
       val qs = corpus.filter(col("vec_id") >= 20 && col("vec_id") < 25)
         .select(col("vec_id").as("query_id"), col("sig").as("qsig"),
@@ -325,11 +322,10 @@ object SimilarityCatalog extends Catalog {
         .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
           s => s("m")).as("c"))
         .withColumn("cnorm", sqrt(org.apache.spark.sql.graftnative.NativeExpressions.dotCol(col("c"), col("c"))))
-      val withSim = e.join(broadcast(cent), Seq("label"))
+      val withSim = Pins.cache(e.join(broadcast(cent), Seq("label"))
         .select(col("vec_id"), col("label"), col("v"), col("norm"),
           round(org.apache.spark.sql.graftnative.NativeExpressions.dotCol(col("v"), col("c")) /
-            (col("norm") * col("cnorm")), 6).as("centroid_sim"))
-        .cache()
+            (col("norm") * col("cnorm")), 6).as("centroid_sim")), "dd_semdedup")
       // a vector drops iff some same-cell near-twin beats it: closer to
       // the centroid, or equally close with a lower id
       val beat = withSim.as("a").join(withSim.as("b"),
@@ -752,7 +748,8 @@ object SimilarityCatalog extends Catalog {
         .withColumn("cnorm2", dotCol(col("c"), col("c")))
         .agg(array_sort(collect_list(struct(col("clabel"), col("c"), col("cnorm2"))))
           .as("cents"))
-      val assigned = state
+      // read twice+: round stats, next round, trained search
+      val assigned = Pins.cache(state
         .withColumn("vnorm2", dotCol(col("v"), col("v")))
         .crossJoin(broadcast(cents))
         .withColumn("best", array_min(transform(col("cents"), cell =>
@@ -761,8 +758,7 @@ object SimilarityCatalog extends Catalog {
               cell("cnorm2"), 6).as("dist2"),
             cell("clabel").as("clabel")))))
         .select(col("vec_id"), col("v"), col("best.clabel").as("label"),
-          col("best.dist2").as("dist2"), col("label").as("old_label"))
-        .cache() // read twice+: round stats, next round, trained search
+          col("best.dist2").as("dist2"), col("label").as("old_label")), "lloydTrain")
       state = assigned.select(col("vec_id"), col("v"), col("label"))
       assigned.agg(round(sum(col("dist2")), 6).as("inertia"),
         sum(when(col("label") =!= col("old_label"), 1L).otherwise(0L))
@@ -817,7 +813,7 @@ object SimilarityCatalog extends Catalog {
       val mx = element_at(col("mxs"), i + 1)
       when(mx === mn, lit(1.0)).otherwise(mx - mn)
     }
-    vecs(s, d).crossJoin(broadcast(sq8Stats(s, d)))
+    Pins.cache(vecs(s, d).crossJoin(broadcast(sq8Stats(s, d)))
       .select(col("vec_id"), col("label"),
         transform(col("v"), (x, i) =>
           floor((x - element_at(col("mns"), i + 1)) / scaleAt(i) * 255.0)
@@ -826,8 +822,7 @@ object SimilarityCatalog extends Catalog {
       .select(col("vec_id"), col("label"), col("codes"),
         transform(col("codes"), (c, i) =>
           element_at(col("mns"), i + 1) +
-            c.cast("double") * scaleAt(i) / 255.0).as("rec"))
-      .cache()
+            c.cast("double") * scaleAt(i) / 255.0).as("rec")), "sq8Rec")
   }
 
   /** Squared euclidean distance between two equal-length double arrays
@@ -852,9 +847,8 @@ object SimilarityCatalog extends Catalog {
   private def subspaced(s: SparkSession, d: String) = {
     val sv = transform(sequence(lit(0), lit(7)),
       m => struct(m.cast("long").as("sub"), slice(col("v"), m * 8 + 1, lit(8)).as("sv")))
-    vecs(s, d).select(col("vec_id"), col("label"), explode(sv).as("s"))
-      .select(col("vec_id"), col("label"), col("s.sub").as("sub"), col("s.sv").as("sv"))
-      .cache()
+    Pins.cache(vecs(s, d).select(col("vec_id"), col("label"), explode(sv).as("s"))
+      .select(col("vec_id"), col("label"), col("s.sub").as("sub"), col("s.sv").as("sv")), "subspaced")
   }
 
   /** Deterministic data-derived codebook: the subvectors of vec_id 0..3

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Pins, Tables}
 import graft.functions.PortableHash
 
 /** Text-analysis operators for a large-scale training-data pipeline:
@@ -468,7 +468,8 @@ object TextCatalog extends Catalog {
       // ≤|langs|-row frame, so the corpus is aggregated exactly once (an
       // uncached counts frame is re-scanned by its own total) and the
       // share/adj arithmetic re-runs only over the tiny cached rows
-      val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("cnt")).cache()
+      val counts = Pins.cache(docs.groupBy(col("lang")).agg(count(lit(1)).as("cnt")),
+        "tx_temperature_sample")
       val withShare = counts
         .crossJoin(counts.agg(sum(col("cnt")).as("total")))
         .withColumn("share", col("cnt").cast("double") / col("total").cast("double"))
@@ -507,7 +508,7 @@ object TextCatalog extends Catalog {
       // cached: the vocab table feeds both the scoring join and the
       // total fold — one derivation, not two corpus scans (the same
       // persisted-LM-table reasoning as tx_bigram_logprob)
-      val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")).cache()
+      val uni = Pins.cache(toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")), "tx_unigram_logprob")
       val total = uni.agg(sum(col("cnt")).as("total"))
       val scored = toks.join(uni, Seq("w")).crossJoin(total)
         .select(col("doc_id"),
@@ -540,7 +541,7 @@ object TextCatalog extends Catalog {
       // cached: the vocab table feeds both the scoring join and the
       // total fold — one derivation, not two corpus scans (the same
       // persisted-LM-table reasoning as tx_bigram_logprob)
-      val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")).cache()
+      val uni = Pins.cache(toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")), "tx_minkprob")
       val total = uni.agg(sum(col("cnt")).as("total"))
       val lp = toks.join(uni, Seq("w")).crossJoin(total)
         .select(col("doc_id"),
@@ -577,7 +578,7 @@ object TextCatalog extends Catalog {
       // (c1 join, c2 join, the total fold) share one corpus derivation
       // instead of three full scans (session-scoped, the catalog-cache
       // discipline; at production scale this is the persisted LM table)
-      val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")).cache()
+      val uni = Pins.cache(toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")), "tx_bigram_logprob")
       val total = uni.agg(sum(col("cnt")).as("total"))
       // r16: split ONCE into a materialized array column — the previous
       // form re-ran `split(text, ' ')` inside the transform lambda (twice
@@ -790,11 +791,10 @@ object TextCatalog extends Catalog {
     // substrings again. Each iteration rescans the vocab-freq table
     // only; the corpus is never touched after the initial wordcount. ──
     "tx_bpe_apply" -> ((s, d) => {
-      val vocab = Tables.documents(s, d)
+      val vocab = Pins.cache(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-        .cache()
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")), "tx_bpe_apply")
       // ONE pair-count shape for both passes (a drifted copy would let
       // the step statistic and the applied-merge recount diverge): input
       // carries the symbol string in `w` plus any pass-through key cols
@@ -829,11 +829,10 @@ object TextCatalog extends Catalog {
     // (word → token count) in the tx_unigram_logprob shuffle family.
     // chars_per_token is the metric a tokenizer is actually graded by. ──
     "tx_bpe_encode" -> ((s, d) => {
-      val vocab = Tables.documents(s, d)
+      val vocab = Pins.cache(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(length(col("word")) > 0)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-        .cache()
+        .groupBy(col("word")).agg(count(lit(1)).as("freq")), "tx_bpe_encode")
       def pairCounts(df: org.apache.spark.sql.DataFrame) = df
         .filter(length(col("w")) > 1)
         .select(col("freq"),
@@ -848,10 +847,10 @@ object TextCatalog extends Catalog {
         // LEFT join against the 1-row winner: when the vocab runs out of
         // pairs before round 4, top1 is EMPTY and a cross join would
         // annihilate the vocabulary — the round must no-op instead
-        state = state.join(broadcast(top1), lit(true), "left_outer")
+        // two readers per round: next pair count + next rewrite
+        state = Pins.cache(state.join(broadcast(top1), lit(true), "left_outer")
           .withColumn("w", when(col("mp").isNull, col("w"))
-            .otherwise(expr(s"replace(w, mp, chr($k))"))).drop("mp")
-          .cache() // two readers per round: next pair count + next rewrite
+            .otherwise(expr(s"replace(w, mp, chr($k))"))).drop("mp"), "tx_bpe_encode")
       }
       val wordTokens = state
         .select(col("word"), length(col("w")).cast("long").as("n_tok"))
@@ -928,13 +927,12 @@ object TextCatalog extends Catalog {
       // identical per-gram source set with the distinct's exchange gone;
       // per-source distinct-gram counts fall out of the same cached sets
       // map-side (explode of ≤|sources| arrays + partial agg).
-      val bySets = Tables.documents(s, d)
+      val bySets = Pins.cache(Tables.documents(s, d)
         .select(col("source"),
           explode(graft.functions.TextHashes
             .windowHashesUdf(5, distinct = true)(col("text"))).as("g"))
         .groupBy(col("g"))
-        .agg(sort_array(collect_set(col("source"))).as("srcs"))
-        .cache()
+        .agg(sort_array(collect_set(col("source"))).as("srcs")), "tx_source_overlap")
       val sizes = bySets
         .select(explode(col("srcs")).as("source"))
         .groupBy(col("source")).agg(count(lit(1)).as("n"))
@@ -992,9 +990,8 @@ object TextCatalog extends Catalog {
       import org.apache.spark.sql.expressions.Window
       val toks = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      val tf = toks.groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-        .cache()
+      val tf = Pins.cache(toks.groupBy(col("doc_id"), col("term"))
+        .agg(count(lit(1)).as("tf")), "tx_tfidf_keywords")
       val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
       val scored = tf.join(df, Seq("term")).crossJoin(broadcast(n))
@@ -1082,14 +1079,13 @@ object TextCatalog extends Catalog {
       // keeps — so the target model, the raw model, and the per-doc
       // scoring all derive from it instead of each re-exploding the
       // corpus token stream (the tx_span_dup_frac / tfidf lesson)
-      val bt = Tables.documents(s, d)
+      val bt = Pins.cache(Tables.documents(s, d)
         .select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("w"))
         .withColumn("b", pmod(
           PortableHash.hash64(concat(lit("dsir:"), col("w"))), lit(B.toLong)))
         .groupBy(col("doc_id"), col("lang"), col("b"))
-        .agg(count(lit(1)).as("c"))
-        .cache()
+        .agg(count(lit(1)).as("c")), "tx_dsir_weight")
       val tgt = bt.filter(col("lang") === "en")
         .groupBy(col("b")).agg(sum(col("c")).as("ct"))
       val raw = bt.groupBy(col("b")).agg(sum(col("c")).as("cs"))
@@ -1140,7 +1136,7 @@ object TextCatalog extends Catalog {
       // cached: the vocab table feeds both the scoring join and the
       // total fold — one derivation, not two corpus scans (the same
       // persisted-LM-table reasoning as tx_bigram_logprob)
-      val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")).cache()
+      val uni = Pins.cache(toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")), "tx_ccnet_bucket")
       val total = uni.agg(sum(col("cnt")).as("total"))
       val perDoc = toks.join(uni, Seq("w")).crossJoin(broadcast(total))
         .groupBy(col("doc_id"), col("lang"))

@@ -29,9 +29,11 @@ import org.apache.spark.sql.types.LongType
   * checkpoint truncates lineage to the materialized blocks, making plan
   * size (and driver memory) constant per round. Every checkpoint is a
   * [[graft.Pins]] pin: each round's pin is released as soon as the next
-  * one is materialized, the edge pin with the cached edge partitioning at
-  * the end of the loop, and the last round's pin (the result) by the
-  * caller's release. On a multi-node cluster where executor loss
+  * one is materialized, the edge pin as soon as the partitioned edge pin
+  * holds its rows, that one at the end of the loop, and the last round's
+  * pin (the result) by the caller's release. The loop opens no
+  * [[graft.Pins.scope]]: the result pin escapes to its caller. On a
+  * multi-node cluster where executor loss
   * mid-algorithm must be survivable, set spark.graft.reliableCheckpoint=true
   * in the caller's session (plus a SparkContext.setCheckpointDir) and every
   * pin checkpoints to the reliable store instead of executor-local blocks;
@@ -172,11 +174,12 @@ object Components {
       import spark.implicits._
       return unionFind(rows).toDF("node", "cluster_id")
     }
-    // pinned hash partitioning on src, cached ONCE: the edge list is the
-    // largest frame in the algorithm and every round joins it on src — a
-    // plain cache would still re-exchange it per round, while the explicit
-    // repartition makes the cached blocks satisfy the join's distribution
-    // so only the (shrinking) label frame moves each round. The width is
+    // pinned hash partitioning on src, checkpointed ONCE: the edge list is
+    // the largest frame in the algorithm and every round joins it on src —
+    // a pin of the unpartitioned union would still re-exchange it per
+    // round, while the explicit repartition makes the pinned blocks satisfy
+    // the join's distribution so only the (shrinking) label frame moves
+    // each round. The width is
     // sized to the graph (~2M edges ≈ 32 MB per partition), capped at the
     // session's configured shuffle width: a near-dup graph of tens of
     // thousands of edges runs its rounds on a couple of partitions (each
@@ -192,10 +195,11 @@ object Components {
       math.min(confParts.toLong, (2 * m + 1999999) / 2000000)).toInt
     val loopSess = loopSessionFor(edges.sparkSession, parts)
     val eLoop = rebind(e, loopSess)
-    val bidir = eLoop
+    val bidir = graft.Pins.checkpoint(eLoop
       .union(eLoop.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(parts, col("src"))
-      .cache()
+      .repartition(parts, col("src")), "components.bidir")
+    // the eager checkpoint holds the edges' rows now
+    graft.Pins.release(e)
     // the seed aggregation is NOT separately checkpointed — round
     // 0's pin materializes seed + first propagation in one job (one less
     // checkpoint per run; the seed subtree appears twice in round 0's
@@ -264,9 +268,7 @@ object Components {
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds")
-    // together: a lost bidir block recomputes from the edge pin
-    bidir.unpersist(blocking = false)
-    graft.Pins.release(e)
+    graft.Pins.release(bidir)
     // re-anchor the (checkpoint-backed) result to the caller's session so
     // downstream plans use the caller's width and conf
     rebind(comp, edges.sparkSession)

@@ -55,10 +55,10 @@ object Sitemap {
     * materialized (the range partitioning is sampling-based, so an
     * uncached recompute could change partition boundaries between the
     * count job and the rank job), so only the CALLER can release it, once
-    * downstream consumption has forced the frame: `Pipeline.runSitemaps`
-    * releases the label after the rendered files are written, so a
-    * long-running multi-site driver does not grow executor storage by one
-    * cached frame per `assignFilenames` call. */
+    * downstream consumption has forced the frame: the pipeline's sitemap
+    * runs and the CLI take it inside a [[graft.Pins.scope]], whose exit
+    * releases it, so a long-running multi-site driver does not grow
+    * executor storage by one cached frame per `assignFilenames` call. */
   val OrdinalPins = "sitemap.ordinal"
 
   /** Distributed global ordinal (0-based) ordered by `orderCol`.

@@ -1078,8 +1078,8 @@ class MasterStore(val root: String, numBuckets: Int = 8,
   def writeMergeKeyed(spark: SparkSession, keys: DataFrame,
       applyDelta: DataFrame => DataFrame, maxRetries: Int = 64,
       onAttempts: Int => Unit = _ => ()): Long = {
-    val keyFrame = keys.select(col(keyCol)).distinct().cache()
-    try {
+    graft.Pins.scope("writeMergeKeyed") {
+      val keyFrame = graft.Pins.cache(keys.select(col(keyCol)).distinct(), "store.mergeKeys")
       if (keyFrame.head(1).isEmpty) return snapshot()._1
       var attempts = 0
       while (attempts <= maxRetries) {
@@ -1147,7 +1147,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
         }
       }
       failLoudly(attempts, "writeMergeKeyed")
-    } finally keyFrame.unpersist(blocking = false)
+    }
   }
 
   /** Fold thresholds: many small layers cost reconcile overhead, one huge

@@ -1120,6 +1120,28 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       Seq("--unregister-consumer", "reindex"), d) == 0)
     assert(store.consumerCursors.isEmpty)
   }
+
+  test("--ingest whose batch throws releases every frame the command cached " +
+    "and every pin it took") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_throw").toString
+    val (_, d) = deps(collection.mutable.Buffer.empty[String])
+    val f = java.nio.file.Paths.get(root, "queue.jsonl")
+    java.nio.file.Files.write(f, ("""{"type":"metadata","bibcode":"2024Thr......1A",""" +
+      """"timestamp":1700000000000,"payload":{"bibcode":"2024Thr......1A"}}""")
+      .getBytes("UTF-8"))
+    // a regular file where the change log's directory should be: the
+    // append after the batch's publish throws
+    val notADir = java.nio.file.Files.createTempFile("graft_cli_changelog", ".parquet")
+    spark.catalog.clearCache()
+    Pins.releaseAll()
+    val e = intercept[Exception](Cli.run(spark, Seq("--store", s"$root/master",
+      "--ingest", f.toString, "--changelog", notADir.toString), d))
+    assert(new graft.sources.MasterStore(s"$root/master").currentVersion.contains(1L),
+      s"the publish landed before the append threw: $e")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      s"--ingest threw ($e) with cached data left in the session")
+    assert(Pins.held.isEmpty, s"--ingest threw ($e) holding pins ${Pins.held}")
+  }
 }
 
 object CliSpec {

@@ -66,14 +66,38 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    // the bench and forensic mains manage their own caches
+    def benchMain(f: java.io.File): Boolean = f.getName.endsWith("Bench.scala") ||
+      Set("SlopeForensic.scala", "Profile.scala", "PlanDump.scala")(f.getName)
     val owners = for {
       f <- files(root) if f.getName != "Pins.scala"
       text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       marker <- Seq("localCheckpoint(", "ConcurrentLinkedQueue[DataFrame]",
-        "releasePinned", "clearMemos", "componentsCache")
+        "releasePinned", "clearMemos", "componentsCache") ++
+        (if (benchMain(f)) Nil
+         else Seq(".cache()", ".persist(", ".unpersist(", "Pins.release(Sitemap.OrdinalPins)"))
       if text.contains(marker)
     } yield s"${f.getPath}: $marker"
     assert(files(root).exists(_.getName == "Pins.scala"))
     assert(owners.isEmpty, owners.mkString("\n"))
+  }
+
+  test("four Components.assign loops in one session leave the shared " +
+    "listener bus as the first one left it") {
+    import org.apache.spark.graftprobe.ListenerProbe.listenerCount
+    val sess = spark.newSession()
+    sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import sess.implicits._
+    // with no broadcast threshold nothing is solved on the driver: each
+    // call runs the loop over this 200-node chain
+    val edges = (1L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
+    val counts = for (call <- 1 to 4) yield {
+      val labels = graft.operators.Components.assign(edges)
+      assert(labels.select("cluster_id").distinct().as[Long].collect().toSeq == Seq(1L),
+        s"call $call")
+      Catalog.unpersistAll(sess)
+      listenerCount(spark.sparkContext)
+    }
+    assert(counts.last == counts.head, s"listeners after each call: $counts")
   }
 }

@@ -211,4 +211,38 @@ class SitemapCadenceSpec extends AnyFunSuite with SparkSpec {
       "{not json".getBytes("UTF-8"))
     assert(SitemapCadence.load(spark, wm).isEmpty)
   }
+
+  test("a sitemap run that throws midway releases every frame it cached and " +
+    "every pin it took: the full render, the keyed cadence and runSitemaps") {
+    val maxPerFile = 3
+    val root = java.nio.file.Files.createTempDirectory("graft_smthrow").toString
+    // a regular file where the output tree should be: the first file write
+    // under it throws
+    val notADir = java.nio.file.Files.createTempFile("graft_smthrow", ".out").toString
+    val master = masterFrame((1L to 7L).map(i =>
+      (i, f"T$i%018d", Some("2024-01-01 00:00:00")))).localCheckpoint()
+    val store = new MasterStore(s"$root/master", numBuckets = 2)
+    store.write(master)
+    val sm = new MasterStore(s"$root/sm", empty = SitemapState.empty)
+    sm.writeMerge(spark, st => SitemapState.bootstrap(st, master, maxPerFile))
+    val now = ts("2024-02-01 00:00:00")
+    val summary = Pipeline.runManagedSitemapsWithSummary(spark, sm, s"$root/out", now,
+      maxPerFile = maxPerFile)._2
+    val newRows = masterFrame(Seq((8L, f"T${8}%018d", Some("2024-02-02 00:00:00"))))
+    val runs = Seq[(String, () => Any)](
+      "runManagedSitemapsWithSummary" -> (() => Pipeline.runManagedSitemapsWithSummary(
+        spark, sm, notADir, now, maxPerFile = maxPerFile)),
+      "runSitemapCadenceKeyed" -> (() => Pipeline.runSitemapCadenceKeyed(spark, sm,
+        notADir, now, newRows, summary, maxPerFile = maxPerFile)),
+      "runSitemaps" -> (() => Pipeline.runSitemaps(spark, store, notADir, "ads", maxPerFile)))
+    for ((name, run) <- runs) {
+      spark.catalog.clearCache()
+      Pins.releaseAll()
+      val e = intercept[Exception](run())
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$name threw ($e) with cached data left in the session")
+      assert(Pins.held.isEmpty, s"$name threw ($e) holding pins ${Pins.held}")
+    }
+    assert(sm.currentVersion.contains(summary.generation), "no run published")
+  }
 }
