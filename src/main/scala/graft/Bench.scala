@@ -18,10 +18,11 @@ object Bench {
     // Deterministic name order. `queries` is a HashMap whose iteration
     // order reshuffles whenever the catalog gains an entry, which moved
     // queries between rounds and made per-query timings incomparable
-    // (r1→r2 showed 3 phantom "regressions" — j4/t4/p7 — that were just
-    // position changes: each absorbed different JIT/codegen warmup at its
-    // new slot). Sorted order pins each query's position and neighbors
-    // across rounds so BENCH_rN diffs measure the code, not the map.
+    // (one catalog addition showed 3 phantom "regressions", j4/t4/p7,
+    // that were just position changes: each absorbed different
+    // JIT/codegen warmup at its new slot). Sorted order pins each
+    // query's position and neighbors across rounds so BENCH_rN diffs
+    // measure the code, not the map.
     // Optional comma-separated name filter for local iteration (slope
     // checks on one query without the 161-query sweep); unset = all.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -38,9 +39,9 @@ object Bench {
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
       cleanup()
     }
-    // cumulative JVM GC wall-clock — printed per pass to answer the r8
-    // drift question (uniform ~15-25% overlap drift smelled like heap
-    // pressure from the growing single-session catalog, not plan changes)
+    // cumulative JVM GC wall-clock, printed per pass to tell a uniform
+    // ~15-25% drift from heap pressure (the growing single-session
+    // catalog) apart from plan changes
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -65,7 +66,7 @@ object Bench {
     // The driver's parser reads the LAST lines, which stay unchanged.
     // Every pass's full per-query map ALSO lands in a standalone artifact:
     // the driver's tail-capture truncates the front of the long stdout
-    // lines (r4, r6, r9 — the first ~100 queries vanish from BENCH_rN),
+    // lines (the first ~100 queries can vanish from BENCH_rN),
     // so round-over-round diffs must not depend on stray /tmp logs. One
     // JSON object per pass, keyed by sf dir, atomically rewritten.
     val artifact = new scala.collection.mutable.LinkedHashMap[String, String]()
@@ -109,7 +110,7 @@ object Bench {
     println(line)
     record(sfDir, line)
     // second, SHORT line: the driver's tail-capture has truncated the
-    // front of the long per-query line in past rounds (r4, r6), losing
+    // front of the long per-query line, losing
     // the headline "metric":"total" field — a line this short always
     // survives whole
     println(s"""{"total":$total,"n_queries":${results.size},"sf":"$sfDir"}""")

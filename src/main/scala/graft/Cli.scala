@@ -565,8 +565,8 @@ object Cli {
       // state store: the keyed cadence's members read opens the touched
       // files' buckets instead of every state file, and any out-of-band
       // mutation is healed by one resync scan (stamp-validated).
-      // `--members-store off` disables it (the pre-r16 filename-pruned
-      // primary scan) — the A/B lever benches and operators can pull
+      // `--members-store off` disables it (a filename-pruned primary
+      // scan instead), the A/B lever for benches and operators
       val members: Option[graft.operators.SitemapMembers] =
         a.getOrElse("members-store",
           s"${a.getOrElse("sitemap-store", s"$storeRoot-sitemap")}-members") match {
@@ -618,7 +618,7 @@ object Cli {
       val behindHorizon = cursor.isDefined && feedDue.isEmpty
       val n: Long = feedDue match {
         case Some(dueMaster0) =>
-          // state access ∝ delta (the r14 residual): the due keys' flags
+          // state access ∝ delta: the due keys' flags
           // come from a bucket-pruned keyed lookup, the fill cursor and
           // the index lastmods from the persisted generation-validated
           // cadence summary — rebuilt in ONE scan whenever anything else

@@ -82,7 +82,8 @@ object Pipeline {
       keyedPublish: Boolean = false,
       stageTimer: (String, Double) => Unit = (_, _) => ()): RunReport = {
     import spark.implicits._
-    // bench-facing stage attribution (OpsBench's wave decomposition):
+    // stage attribution for callers that time the batch (perfbench's
+    // traced reindex, the `ops` scale scenario's wave decomposition):
     // wall time between this batch's ACTIONS — "merge_read" covers the
     // doomed-key probe and any sink deletes, "publish" the index pass
     // (merge, gate, transform, sinks and stamp in the one job its counts
@@ -747,11 +748,11 @@ object Pipeline {
   }
 
   /** The feed-driven sitemap cadence with STATE access ∝ delta — the
-    * companion of the feed-driven DISCOVERY: where the r14 cadence
-    * discovered its due set from the master change feed but still
-    * reconciled the full sitemap state every cron (the flag anti-join,
-    * the fill aggregation, the render worklist, the index lastmods), this
-    * path answers all four key-locally:
+    * companion of the feed-driven DISCOVERY: instead of reconciling the
+    * full sitemap state every cron (the flag anti-join, the fill
+    * aggregation, the render worklist, the index lastmods) after
+    * discovering the due set from the master change feed, this path
+    * answers all four key-locally:
     *
     *  - due keys' current flags/existence: one bucket-pruned
     *    [[MasterStore.lookupFrame]] (files of other buckets never open);
@@ -765,7 +766,7 @@ object Pipeline {
     *    is wired (IO ∝ touched files: only their buckets' files open,
     *    [[SitemapMembers.membersOf]]), else from a filename-pruned filter
     *    scan of the primary (predicate pushes, but every data file
-    *    opens — the pre-r16 shape, kept for index-less callers); either
+    *    opens — kept for index-less callers); either
     *    read is overlaid with this run's merged rows, and the whole
     *    cadence then publishes ONE keyed merge per store (identical
     *    key/row frames to both layouts) at the end;
@@ -793,8 +794,8 @@ object Pipeline {
       memberIndex: Option[SitemapMembers] = None): (Long, SitemapCadence.Summary) = {
     import spark.implicits._
     // phase tracing for the cadence (GRAFT_CADENCE_TRACE=1): stderr wall
-    // per phase — the instrument that found the r16 regressions; cheap
-    // enough to keep, silent by default
+    // per phase, to locate a slow phase without a profiler; cheap enough
+    // to keep, silent by default
     val trace = sys.env.get("GRAFT_CADENCE_TRACE").contains("1")
     var phaseT0 = System.nanoTime()
     def phase(name: String): Unit = if (trace) {
@@ -857,7 +858,7 @@ object Pipeline {
         // nothing moved: statSet empty means no due key HAS or GAINS a
         // state row, so the publish this run would make is pure
         // never-present-key tombstones — reconciled away on read. Skip
-        // it on both stores (less feed noise than r15's empty merge,
+        // it on both stores (less feed noise than an empty merge,
         // identical live state); the per-site static/index/robots still
         // refresh, as the full path's would
         writeSiteMeta(spark, outRoot, siteKeys, summary, today)
@@ -870,8 +871,7 @@ object Pipeline {
       // any member changed; output rows bounded by files touched ×
       // maxPerFile). With a member index this opens the touched files'
       // BUCKETS only — IO ∝ touched files, the reference's indexed member
-      // fetch (tasks.py:986-990). Without one it is the pre-r16 shape:
-      // the IN predicate pushes into the primary's scan but the
+      // fetch (tasks.py:986-990). Without one the IN predicate pushes into the primary's scan but the
       // bibcode-bucketed layout cannot file-prune a filename predicate,
       // so every data file opens — a ∝-corpus pass per cron
       // both reads are PRE-publish (the cadence publishes ONCE, at the

@@ -15,17 +15,17 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** r16: memoized logical frames per (session, dir, table). Every
+  /** Memoized logical frames per (session, dir, table). Every
     * `spark.read.parquet` call re-infers the schema from the file footer
     * and rebuilds the relation — paid per Tables call per query
     * construction, hundreds of times per bench pass. The memo reuses the
     * immutable plan tree; nothing is persisted or cached — every
     * execution still scans the parquet.
     *
-    * r17: the memo holds ONE session's frames at a time, keyed by the
-    * session object itself (reference equality — the r16 form keyed on
-    * System.identityHashCode, which can collide, and retained entries of
-    * stopped sessions forever). A load from a different session swaps the
+    * The memo holds ONE session's frames at a time, keyed by the session
+    * object itself (reference equality: System.identityHashCode can
+    * collide, and a map keyed on it would retain entries of stopped
+    * sessions forever). A load from a different session swaps the
     * whole map, so a long-lived driver cycling sessions holds at most the
     * live session's ≤ dirs×tables frames; the frames themselves reference
     * their session, so per-session maps in a weak-keyed registry would

@@ -116,11 +116,11 @@ object DedupCatalog extends Catalog {
       .distinct()
     // exact verify: re-attach each side's shingle-set ARRAY to the pair
     // and evaluate J with codegen'd Catalyst collection expressions.
-    // History: the r2 form carried string arrays per candidate (hundreds
-    // of MB of shuffle), the r3 fix exploded an inverted index so shuffles
-    // carried (ids, one shingle) — O(cand × doclen) narrow ROWS through
-    // two wide shuffles. With shingles pre-hashed to fixed-width longs the
-    // trade flips back: the same O(cand × doclen) bytes now move in
+    // String arrays per candidate would carry hundreds of MB of shuffle,
+    // and an exploded inverted index would push (ids, one shingle) —
+    // O(cand × doclen) narrow ROWS — through two wide shuffles. With
+    // shingles pre-hashed to fixed-width longs the same O(cand × doclen)
+    // bytes move in
     // O(cand) rows (8 B/element, no per-element string headers), the two
     // joins key on a single long each, and per-pair set intersection runs
     // as a per-row hash probe inside codegen instead of a 50×-row shuffle
@@ -136,8 +136,8 @@ object DedupCatalog extends Catalog {
   /** Content-defined (hash, len) chunk structs for one text column —
     * boundaries where the trailing 8-char window hash has its low 6 bits
     * zero (~64-char expected chunks). Shared by the dd_cdc_chunks catalog
-    * row and DedupBench's corpus-scale stage so the benched shape IS the
-    * shipped shape. Compiled (TextHashes.cdcChunks): the equivalent HOF
+    * row and the `dedup` scale scenario's corpus-scale stage, so the
+    * measured shape IS the shipped shape. Compiled (TextHashes.cdcChunks): the equivalent HOF
     * expression (`transform(sequence(1, n-7), i -> hash64(substr(text, i,
     * 8)))` + zip_with over the boundary list) evaluated one interpreted
     * md5 tree per CHARACTER and was the slowest map-side op in the
@@ -154,9 +154,9 @@ object DedupCatalog extends Catalog {
     * on the attached arrays (the lenband discipline — candidate rows
     * carry ids only until the final join-back).
     *
-    * Plan shape (r16 — MEASURED reversal of the r13 broadcast-hot-map
-    * form). The r13 form ordered each doc's sub-cap ("cold") shingles by
-    * VALUE (per-doc rarity was unavailable without a df join) so probes
+    * Plan shape, measured against a broadcast-hot-map form. That form
+    * ordered each doc's sub-cap ("cold") shingles by VALUE (per-doc
+    * rarity is unavailable without a df join), so probes
     * carried common-but-under-cap shingles, and since dfCap = corpus/50
     * GROWS with the corpus, candidate traffic grew ~quadratically: at
     * the sf1.0-class fixture the prefilter emitted 9.1M candidate pairs
@@ -166,19 +166,18 @@ object DedupCatalog extends Catalog {
     * filter — so probe shingles are each doc's rarest and fan out to
     * near-constant posting lists; the same measured wave dropped to
     * ~0.6M candidates and 6.8 s. The price is the df join-back + a
-    * per-doc rank window over the postings (the r8-era concern about
-    * sorting corpus×doclen posting rows); that exchange is LINEAR in the
+    * per-doc rank window over the postings (sorting corpus×doclen
+    * posting rows); that exchange is LINEAR in the
     * corpus and is the exact shape lenbandJaccard already pays, while
     * the candidate bomb is quadratic — at 100 TB the trade is not close.
     *
     * Ordering note: under (df asc, s asc), cold shingles (df ≤ dfCap)
-    * sort before hot ones automatically, so the r13 contract is
-    * unchanged:
+    * sort before hot ones automatically, so the contract is:
     *   prefix(A) = first ⌊(1−t)|A|⌋+2 of ordered(A)      (probe side)
     *   index(B)  = cold(B) ∪ (hot(B) ∩ prefix(B))        (container side,
     *               i.e. df ≤ dfCap OR rank ≤ prefixLen)
     *
-    * Recall argument (unchanged from r13). Pigeonhole: C(A,B) ≥ t means
+    * Recall argument. Pigeonhole: C(A,B) ≥ t means
     * B misses ≤ (1−t)|A| of A's shingles, so ANY ⌊(1−t)|A|⌋+2-subset of
     * A intersects B. Hence ≥1 s ∈ prefix(A) ∩ B always. If prefix(A) is
     * all cold, that s is cold and index(B) keeps ALL cold postings → the
@@ -189,7 +188,7 @@ object DedupCatalog extends Catalog {
     * global order). ContainmentPropSpec pins soundness, cap-off
     * exactness, and the bounded-loss condition on random hot corpora.
     *
-    * Positional bound (r16, ppjoin-style, exact): ranks come from ONE
+    * Positional bound (ppjoin-style, exact): ranks come from ONE
     * global total order, so a pair's common shingles all rank at or
     * after its earliest common shingle in both docs — overlap ≤
     * min(|A|−rnA, |B|−rnB)+1, which must reach t·|A|. A qualifying pair
@@ -998,9 +997,9 @@ object DedupCatalog extends Catalog {
     // judged against, and a gold standard only ever needs a query SAMPLE:
     // recall estimated on 200 uniform queries has a ±~3% CI at 95%, which
     // is the resolution any ANN tuning decision uses — sim_ann_recall
-    // already established this pattern. The r8/r9 form was all-pairs
-    // within label (exact for EVERY vector), measured slope 34.7× for 10×
-    // data — a cell-cartesian that is simply not runnable at 100×. This
+    // already established this pattern. All-pairs within label (exact
+    // for EVERY vector) was measured at slope 34.7× for 10× data: a
+    // cell-cartesian that is simply not runnable at 100×. This
     // form is |sample|·corpus: the sample is a global TakeOrdered (one
     // pass, 200 rows) broadcast to the corpus scan, so the corpus NEVER
     // shuffles and cost grows linearly with it; the per-query exact

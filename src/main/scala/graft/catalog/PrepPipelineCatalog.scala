@@ -53,8 +53,8 @@ object PrepPipelineCatalog extends Catalog {
     * (disjoint from the hash range ≥ 0) so they never enter the dedup
     * pool or absorb a survivor's canonical slot. */
   def admissionFlags(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // r17: one fused count+scrub invocation per document instead of six
-    // regex expressions (see TextCatalog.piiAdmitUdf — value parity pinned
+    // one fused count+scrub invocation per document, not six regex
+    // expressions (see TextCatalog.piiAdmitUdf — value parity pinned
     // by PiiParitySpec). The struct projects in a separate select so the
     // UDF evaluates once; CollapseProject keeps non-cheap expressions
     // un-inlined and subexpression elimination covers the codegen side.
@@ -118,10 +118,10 @@ object PrepPipelineCatalog extends Catalog {
     // production scale this cache IS the stage boundary a pipeline
     // persists between admission and contamination passes. Session-
     // scoped by the catalog-cache discipline (bench cleanup clears it).
-    // r16: drop clean_text BEFORE the canonical window — no funnel
-    // consumer reads it past admission, and keeping it meant the
+    // drop clean_text BEFORE the canonical window: no funnel consumer
+    // reads it past admission, and keeping it would make the
     // content_hash exchange, the window sort, and the cached stage all
-    // carried the full document text for nothing (guide §2.3: project
+    // carry the full document text for nothing (guide §2.3: project
     // before the exchange). grams stay: the contamination branch needs
     // them.
     val withCanon = Pins.cache(flagged.drop("clean_text")

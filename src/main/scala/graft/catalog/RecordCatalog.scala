@@ -159,7 +159,7 @@ object RecordCatalog extends Catalog {
         .orderBy("bibcode")
     }),
 
-    // ── r15 feed-cadence machinery under the oracle gate: bootstrap a
+    // ── the feed-cadence machinery under the oracle gate: bootstrap a
     // third of the corpus, clear flags (markGenerated), then TWO keyed add
     // waves where the second wave's fill cursor is carried ARITHMETICALLY
     // (SitemapState.advanceFill over the first wave's new-assignment
@@ -342,11 +342,10 @@ object RecordCatalog extends Catalog {
       val master = Pins.cache(MergeEngine.upsert(MergeEngine.emptyMaster(s),
         s.createDataset(fixtureUpdates(24) ++ linksMsgs)).master.as[MasterRecord]
         .filter(IndexJob.eligible(None, force = false)), "p9_mode_projection")
-      // r16: the nine sink counts were nine separate .count() driver
-      // actions (nine jobs over the cached 24-record master); they now
-      // union into ONE counting aggregation, left-joined onto the 9
-      // expected (run, sink) keys so empty sinks still report 0 — same
-      // rows, one job.
+      // the nine sink counts union into ONE counting aggregation (one
+      // job, not nine .count() actions over the cached 24-record
+      // master), left-joined onto the 9 expected (run, sink) keys so
+      // empty sinks still report 0.
       val runs = Seq(
         ("all", Set("solr", "metrics", "links")),
         ("solr_only", Set("solr")),

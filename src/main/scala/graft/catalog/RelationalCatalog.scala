@@ -385,9 +385,9 @@ object RelationalCatalog extends Catalog {
         shiftright(col("day"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j)) +
           shiftright(col("pk12"), j).bitwiseAND(lit(1L)) * lit(1L << (2 * j + 1))
       }.reduce(_ + _)
-      // r16: order by the numeric key columns directly instead of a
-      // zero-padded format_string composite — same total order (the
-      // string was fixed-width decimal of the same non-negative longs),
+      // order by the numeric key columns directly, not a zero-padded
+      // format_string composite: the same total order (such a string is
+      // fixed-width decimal of the same non-negative longs),
       // but the range sampler / exchange / sort compare 3 longs, not a
       // 20-byte string built per row per pass
       graft.operators.Sitemap.withGlobalOrdinalBy(dims.withColumn("z", z),
@@ -421,7 +421,7 @@ object RelationalCatalog extends Catalog {
           datediff(col("l_shipdate"), to_date(lit("1992-01-01"))).cast("long").as("day"))
       val mx = li.agg(max(col("day")).as("maxday"),
         max(col("l_partkey")).cast("long").as("maxpk"))
-      // r16: cache the 4-long-column dims proxy — the two layout sorts
+      // cache the 4-long-column dims proxy — the two layout sorts
       // each execute their input twice (range sampler + exchange) and the
       // rows_matched probe reads it again: 5 executions of the scan+
       // arithmetic collapse into one compute + cached reads. The cached

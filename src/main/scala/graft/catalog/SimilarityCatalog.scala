@@ -356,7 +356,7 @@ object SimilarityCatalog extends Catalog {
     // engines. At larger k the E-step cross product is restricted by the
     // IVF candidate join above instead of scored exhaustively. ──
     "sim_kmeans_step" -> ((s, d) => {
-      // r16: same map-side argmin as lloydTrain — the k cells pack into
+      // the same map-side argmin as lloydTrain — the k cells pack into
       // ONE broadcast row and array_min over (dist2, clabel) structs
       // replaces the crossJoin×k + row_number corpus shuffle; struct
       // ordering is the window's (dist2 asc, clabel asc) rank-1 rule.
@@ -723,13 +723,13 @@ object SimilarityCatalog extends Catalog {
     * row, and the trained-search consumers all read it. Ranking on the
     * ROUNDED distance keeps the argmin reproducible across engines.
     *
-    * r16 shape: the E-step argmin is MAP-SIDE — the k cells are packed
+    * Shape: the E-step argmin is MAP-SIDE — the k cells are packed
     * (clabel-sorted) into ONE broadcast row and each vector takes
     * `array_min` over per-cell (dist2, clabel) structs, whose struct
-    * ordering IS the old window's (dist2 asc, clabel asc) rank-1 rule.
-    * The previous form (crossJoin ×k + row_number over vec_id) shuffled
-    * and sorted the ×k-exploded corpus — vectors included — once per
-    * round; now no round moves a vector at all, and the only exchanges
+    * ordering IS a window's (dist2 asc, clabel asc) rank-1 rule. A
+    * crossJoin ×k + row_number over vec_id would shuffle and sort the
+    * ×k-exploded corpus, vectors included, once per round; this way no
+    * round moves a vector at all, and the only exchanges
     * left are the M-step's k·64-row partial aggregates. Same rounded
     * arithmetic (‖v‖²−2v·c+‖c‖², round 6, cnorm2 computed once per
     * cell), so the assignment is value-identical.

@@ -65,7 +65,7 @@ object TextCatalog extends Catalog {
     regexp_replace(regexp_replace(regexp_replace(c,
       PiiEmailRe, "[EMAIL]"), PiiIpRe, "[IP]"), PiiPhoneRe, "[PHONE]")
 
-  /** r17: the admission funnel's PII stage as ONE compiled invocation
+  /** The admission funnel's PII stage as ONE compiled invocation
     * returning (pii_total, clean_text) — value-identical to
     * `piiMatches ×3 + piiScrubbed` (pinned by PiiParitySpec and the pl_*
     * oracles), cheaper per row: the expression form ran six regex
@@ -339,9 +339,9 @@ object TextCatalog extends Catalog {
           size(split(col("text"), " ")).cast("long").as("n_tokens"))
         .withColumn("difficulty",
           round(col("n_chars").cast("double") / col("n_tokens"), 6))
-        // r16: order by the two non-negative longs directly — same total
-        // order as the old zero-padded "%012d%010d" string, without
-        // building/compare-ing a 22-byte string per row per sort pass
+        // order by the two non-negative longs directly: the same total
+        // order as a zero-padded "%012d%010d" string, without building
+        // and comparing a 22-byte string per row per sort pass
         .withColumn("__diff_key", expr("n_chars * 1000000L DIV n_tokens"))
       val total = scored.agg(count(lit(1)).as("__total"))
       graft.operators.Sitemap.withGlobalOrdinalBy(scored,
@@ -399,8 +399,8 @@ object TextCatalog extends Catalog {
     // streams map-side against it with no shuffle at all; overlap counts
     // then reduce with map-side partial aggregation. ──
     "tx_decontaminate" -> ((s, d) => {
-      // r16: materialize the split once (the tx_bigram_logprob lesson —
-      // slice(split(text)) inside the lambda re-split per gram)
+      // materialize the split once: slice(split(text)) inside the lambda
+      // would re-split per gram (no CSE across a lambda boundary)
       val words = col("ws")
       val grams = array_distinct(transform(
         sequence(lit(1), greatest(size(words) - 2, lit(1))),
@@ -430,7 +430,7 @@ object TextCatalog extends Catalog {
     // is the O(n log n) sorted-run maxMultiplicity, bounded by document
     // length, not corpus size. ──
     "tx_rep_quality" -> ((s, d) => {
-      // r16: materialize the split once (the tx_bigram_logprob lesson)
+      // materialize the split once: inside the lambda it would re-run per gram
       val words = col("ws")
       val nWords = size(words).cast("long")
       val bigrams = transform(
@@ -580,10 +580,10 @@ object TextCatalog extends Catalog {
       // discipline; at production scale this is the persisted LM table)
       val uni = Pins.cache(toks.groupBy(col("w")).agg(count(lit(1)).as("cnt")), "tx_bigram_logprob")
       val total = uni.agg(sum(col("cnt")).as("total"))
-      // r16: split ONCE into a materialized array column — the previous
-      // form re-ran `split(text, ' ')` inside the transform lambda (twice
-      // per transition element; no CSE across a lambda boundary), i.e.
-      // O(tokens²) string splitting per document. Same values.
+      // split ONCE into a materialized array column: `split(text, ' ')`
+      // inside the transform lambda would re-run twice per transition
+      // element (no CSE across a lambda boundary), i.e. O(tokens²)
+      // string splitting per document.
       val bg = docs
         .select(col("doc_id"), split(col("text"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
@@ -623,9 +623,8 @@ object TextCatalog extends Catalog {
     "tx_chunk_split" -> ((s, d) => {
       val ChunkLen = 64
       val Stride = 48
-      // r16: split ONCE into a materialized array column — the lambda
-      // previously re-ran split(text) per chunk slice (the
-      // tx_bigram_logprob lesson). Same values.
+      // split ONCE into a materialized array column: inside the lambda
+      // split(text) would re-run per chunk slice.
       val words = col("ws")
       val n = size(words).cast("long")
       val nChunks = greatest(
@@ -919,12 +918,11 @@ object TextCatalog extends Catalog {
     // counts are an equi-join on the gram hash; per-gram fan-out is
     // bounded by |sources|², independent of corpus size. ──
     "tx_source_overlap" -> ((s, d) => {
-      // r16: ONE corpus-wide exchange instead of two. The old form ran a
-      // standalone `.distinct()` on (source, gram) — a full shuffle —
-      // and THEN the per-gram set aggregation (a second full shuffle of
-      // the same rows). collect_set dedups inside the aggregation state,
-      // so grouping the raw exploded pairs by gram directly yields the
-      // identical per-gram source set with the distinct's exchange gone;
+      // ONE corpus-wide exchange: collect_set dedups inside the
+      // aggregation state, so grouping the raw exploded pairs by gram
+      // directly yields the per-gram source set that a `.distinct()` on
+      // (source, gram) followed by the set aggregation would, without the
+      // distinct's second full shuffle of the same rows;
       // per-source distinct-gram counts fall out of the same cached sets
       // map-side (explode of ≤|sources| arrays + partial agg).
       val bySets = Pins.cache(Tables.documents(s, d)
@@ -958,7 +956,7 @@ object TextCatalog extends Catalog {
 
     // ── Document fingerprint: min rolling-hash over 5-gram word shingles ──
     "tx_fingerprint" -> ((s, d) => {
-      // r16: materialize the split once (the tx_bigram_logprob lesson)
+      // materialize the split once: inside the lambda it would re-run per gram
       val words = col("ws")
       val shingles = transform(
         sequence(lit(1), greatest(size(words) - 4, lit(1))),

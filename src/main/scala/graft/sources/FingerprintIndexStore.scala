@@ -25,7 +25,7 @@ import java.nio.file.{Files, Path, Paths}
   * place (`Files.createLink` — link(2) fails with EEXIST if the name is
   * taken, the one true compare-and-swap a shared filesystem offers;
   * rename(2) silently replaces, so an atomic-move "swap" is last-writer-
-  * wins, the lost-update race the r9 review flagged). A writer that
+  * wins, a lost-update race). A writer that
   * loses the CAS re-reads the winner's manifest and retries on top of
   * it, so two interleaved appenders both land: neither can drop the
   * other's segment.

@@ -80,16 +80,16 @@ object MasterStore {
     * the pushed-IN plan grows per key AND is re-planned against every
     * delta-layer read, so the cost model is keys × (1 + live layers).
     * Measured boundaries: cron waves of ~2,500 keys over a low-layer
-    * store are cheap and row-group-skip (r15/r16 cadence + ops loop);
-    * 25k-key batches pay seconds of planner time per micro-batch (3-6×
-    * the batch wall, PipelineBench). Auto therefore caps at
+    * store are cheap and row-group-skip (the sitemap cadence and the
+    * ops loop); 25k-key batches pay seconds of planner time per
+    * micro-batch (3-6× the batch wall, the `pipeline` scale scenario). Auto therefore caps at
     * [[AutoInRegimeCap]] and discounts by layer count from this budget —
     * between the two measured points, deliberately closer to the good
     * one. */
   val InRegimePlannerBudget: Int = 30000
 
   /** Cap for the AUTO crossover (unmeasured territory above it — the
-    * conservative side of PipelineBench's 25k-key planner-tax reading). */
+    * conservative side of the 25k-key planner-tax reading). */
   val AutoInRegimeCap: Int = 10000
 
   /** Absolute cap on keys collected to the driver for the IN regime
@@ -695,9 +695,9 @@ class MasterStore(val root: String, numBuckets: Int = 8,
     * re-planned against every layer read, so the planner cost is
     * keys × (1 + live layers) — a 25k-key batch against a 16-layer
     * streaming store pays seconds of planner time per micro-batch (3-6×
-    * the whole batch wall, PipelineBench) while the same batch against a
-    * COMPACTED store is cheap and row-group-skips where the semi join
-    * would column-scan the table (the r15/r16 cadence-wave lesson). Auto
+    * the whole batch wall, the `pipeline` scale scenario) while the same
+    * batch against a COMPACTED store is cheap and row-group-skips where
+    * the semi join would column-scan the table (the cadence waves). Auto
     * resolves to max(2000, InRegimePlannerBudget / (1 + live layers))
     * capped at AutoInRegimeCap — a cron-wave-sized key set lands in the
     * pushed-IN regime exactly when the store's layer state makes that

@@ -48,7 +48,7 @@ object StreamingDedup {
   case class Admitted(doc_id: Long, content_hash: Long)
 
   /** `retention`: evict a content hash after this much processing time
-    * without a sighting (None = keep forever, the pre-r9 behavior). */
+    * without a sighting (None = keep forever). */
   def dedupStream(docs: Dataset[Doc],
       retention: Option[scala.concurrent.duration.FiniteDuration] = None)
       : Dataset[Admitted] = {

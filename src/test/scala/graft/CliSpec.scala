@@ -481,7 +481,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       assert(Cli.run(spark, argvBase ++ args, d) == 0, s"${args.mkString(" ")}: $log")
     }
     // standing corpus: 50 fully-processed records
-    store.write(TransformBench.fixture(spark, 50)
+    store.write(Fixtures.fullMaster(spark, 50)
       .withColumn("processed", lit(Timestamp.valueOf("2024-05-01 00:00:00")))
       .withColumn("status", lit("success")))
     ran("--manage-sitemap", "--action", "bootstrap")
@@ -503,7 +503,7 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       // arrival ts past the fixed watermark (deps' now = 2024-06-01, which
       // every cadence re-stamps): the wave must look NEWER than the last
       // sweep or the P1 gate correctly skips it
-      val m = PipelineBench.messages(spark, 1000L * c, 1000L * c + waveK,
+      val m = Fixtures.messages(spark, 1000L * c, 1000L * c + waveK,
         rev = c, tsBase = Timestamp.valueOf("2024-06-02 00:00:00").getTime + c * 60000L)
         .as[records.UpdateMessage]
       Pipeline.runBatch(spark, store, m, d.solrTransport, d.bulkTransport,

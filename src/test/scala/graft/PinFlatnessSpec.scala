@@ -61,25 +61,31 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("Pins is the only src/main code that checkpoints or keeps pins") {
-    val root = new java.io.File("src/main/scala")
+  private def mainSources: Seq[java.io.File] = {
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    // the bench and forensic mains manage their own caches
-    def benchMain(f: java.io.File): Boolean = f.getName.endsWith("Bench.scala") ||
-      Set("SlopeForensic.scala", "Profile.scala", "PlanDump.scala")(f.getName)
+    files(new java.io.File("src/main/scala"))
+  }
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("Pins is the only src/main code that checkpoints or keeps pins") {
     val owners = for {
-      f <- files(root) if f.getName != "Pins.scala"
-      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      f <- mainSources if f.getName != "Pins.scala"
       marker <- Seq("localCheckpoint(", "ConcurrentLinkedQueue[DataFrame]",
-        "releasePinned", "clearMemos", "componentsCache") ++
-        (if (benchMain(f)) Nil
-         else Seq(".cache()", ".persist(", ".unpersist(", "Pins.release(Sitemap.OrdinalPins)"))
-      if text.contains(marker)
+        "releasePinned", "clearMemos", "componentsCache", ".cache()", ".persist(",
+        ".unpersist(", "Pins.release(Sitemap.OrdinalPins)")
+      if text(f).contains(marker)
     } yield s"${f.getPath}: $marker"
-    assert(files(root).exists(_.getName == "Pins.scala"))
+    assert(mainSources.exists(_.getName == "Pins.scala"))
     assert(owners.isEmpty, owners.mkString("\n"))
+  }
+
+  test("src/main has no entry points besides Cli, Bench and Verify") {
+    val mains = mainSources.filter(f => text(f).contains("def main(")).map(_.getName).toSet
+    assert(mains == Set("Cli.scala", "Bench.scala", "Verify.scala"), mains)
   }
 
   test("four Components.assign loops in one session leave the shared " +

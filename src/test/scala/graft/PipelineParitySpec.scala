@@ -9,8 +9,8 @@ import graft.records.UpdateMessage
 import graft.sources.MasterStore
 
 /** Batch-boundary invariance + replay suppression — the two invariants
-  * `PipelineBench` measures at 1M messages, pinned here as a fast
-  * regression on `PipelineBench`'s own fixtures: the final store CONTENT
+  * the `pipeline` scale scenario measures at 1M messages, pinned here as a
+  * fast regression on the same `Fixtures`: the final store CONTENT
   * (payload slots, scix_id, sink checksums, status) is a function of the
   * message history alone, never of how that history is chopped into
   * batches; and redelivering the latest content with bumped arrival
@@ -23,7 +23,7 @@ import graft.sources.MasterStore
 class PipelineParitySpec extends AnyFunSuite with SparkSpec {
 
   private def digest(store: MasterStore) =
-    PipelineBench.contentDigest(store.read(spark))
+    Fixtures.contentDigest(store.read(spark))
 
   test("micro-batched and two-sweep runs digest-match on content; " +
     "bumped-ts redelivery is fully checksum-suppressed") {
@@ -40,10 +40,10 @@ class PipelineParitySpec extends AnyFunSuite with SparkSpec {
       val store = new MasterStore(root, numBuckets = 4)
       val reports = chop.zip(nows).map { case (parts, now) =>
         val msgs = parts.map { case (lo, hi, rev, ts) =>
-          PipelineBench.messages(spark, lo, hi, rev, ts)
+          Fixtures.messages(spark, lo, hi, rev, ts)
         }.reduce(_ unionByName _).as[UpdateMessage](enc)
         Pipeline.runBatch(spark, store, msgs,
-          PipelineBench.SolrTransport, PipelineBench.BulkTransport, now = now,
+          Fixtures.SolrTransport, Fixtures.BulkTransport, now = now,
           keyLocal = keyLocal)
       }
       (store, reports)

@@ -1,11 +1,11 @@
-package graft
+package graft.scale
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1.0-class fixture: scale every sf0.1 table by K with
   * key-consistent replication, so the correctness harness gets a third
-  * scale factor without touching the driver's read-only testdata.
+  * scale factor without touching the read-only source data.
   *
   * Replica r of a row shifts every key column by r·(maxKey+1) IN THE SAME
   * key domain, so FK joins (orders→customer, lineitem→orders/part/supplier)
@@ -21,22 +21,14 @@ import org.apache.spark.sql.functions._
   * Everything is pure column arithmetic on the source rows — re-runs are
   * byte-identical, nothing random, nothing collected.
   *
-  * Usage: runMain graft.ScaleFixture <srcDir> <dstDir> [K=10]
+  * Arguments: `<srcDir> <dstDir> [K]` (K default 10).
   */
-object ScaleFixture {
+object FixtureScenario {
 
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dst = args(1)
-    val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def run(r: Scale.Run): Seq[Scale.Record] = {
+    require(r.args.size >= 2, "usage: fixture <srcDir> <dstDir> [K]")
+    val (spark, src, dst) = (r.spark, r.args(0), r.args(1))
+    val k = r.arg(2, "10").toInt
 
     val reps = spark.range(k).toDF("__r")
     def rep(df: DataFrame): DataFrame = df.crossJoin(broadcast(reps))
@@ -101,13 +93,12 @@ object ScaleFixture {
         sequence(lit(0), size(col("embedding")) - 1),
         // Replica 0 is the UNTOUCHED source vector (mirrors the documents
         // handling) so the scaled fixture is a superset of the source and
-        // cross-SF sim_* comparisons stay anchored (r9 advice).
+        // cross-SF sim_* comparisons stay anchored.
         (x, i) => when(col("__r") === 0, x).otherwise(
           x + (pmod(col("__r") * 7 + i, lit(11)) - 5).cast("float")
             * lit(0.001f))).as("embedding"),
       col("label")), "embeddings", 2)
 
-    println(s"""{"fixture":"$dst","k":$k}""")
-    spark.stop()
+    Seq(Scale.record("fixture" -> dst, "k" -> k))
   }
 }
