@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Persisted MinHash fingerprint index with segment-append maintenance —
   * the table `dd_incremental` and `StreamingNearDup` assume as "the
@@ -129,8 +129,21 @@ class FingerprintIndexStore(val root: String, numBuckets: Int = 8) {
   }
 
   private def read(spark: SparkSession, names: Seq[String]): Option[DataFrame] =
-    names.map(n => spark.read.parquet(Paths.get(root, n).toString))
-      .reduceOption(_ unionAll _)
+    names.map { n =>
+      val p = Paths.get(root, n)
+      try spark.read.parquet(p.toString)
+      catch {
+        // a listed dir is written before it is published, so it always
+        // holds a part file: a schema-less dir that is gone by now was
+        // vacuumed after this reader resolved the manifest (Spark lists a
+        // root path that vanished after its existence check as empty).
+        // Raised as the vanished-input error readers retry on
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" && !Files.exists(p) =>
+          throw new java.io.FileNotFoundException(s"$p was vacuumed while being read")
+            .initCause(e)
+      }
+    }.reduceOption(_ unionAll _)
 
   private def indexOf(spark: SparkSession, entries: Seq[String]): DataFrame = {
     val segs = read(spark, entries.filter(_.startsWith("seg_")))
@@ -227,9 +240,18 @@ class FingerprintIndexStore(val root: String, numBuckets: Int = 8) {
     // vacuum: the folded inputs' dirs and superseded manifest generations
     // are unreferenced from here on; a crash mid-delete leaves orphans,
     // never a live reference to a missing dir. Carried (delta-published)
-    // entries stay live and untouched.
-    inputs.filterNot(n => n.startsWith("done_") || carried.contains(n))
-      .foreach(n => FsUtil.deleteTree(Paths.get(root, n)))
+    // entries stay live and untouched. Each dir leaves its listed name in
+    // one atomic rename before its files are deleted, so a reader still
+    // holding the old manifest lists the whole segment or finds no path
+    // (both fail loudly and re-resolve), never a half-deleted segment
+    // that would silently drop index rows.
+    inputs.filterNot(n => n.startsWith("done_") || carried.contains(n)).foreach { n =>
+      val trash = Paths.get(root, s"_vacuum_${n}_${java.util.UUID.randomUUID()}")
+      val moved =
+        try { Files.move(Paths.get(root, n), trash, StandardCopyOption.ATOMIC_MOVE); true }
+        catch { case _: java.nio.file.NoSuchFileException => false }
+      if (moved) FsUtil.deleteTree(trash)
+    }
     generations().filter(_._1 <= expected)
       .foreach { case (_, p) => Files.deleteIfExists(p) }
   }

@@ -2,9 +2,12 @@ package org.apache.spark.graftprobe
 
 import org.apache.spark.SparkContext
 
-/** Test-side view of the SparkContext's shared listener bus: how many
-  * listeners are registered on it. Lives under `org.apache.spark` because
-  * the bus is internal. */
+/** Test-side view of the SparkContext's shared listener bus: the
+  * listeners registered on it. Lives under `org.apache.spark` because the
+  * bus is internal. */
 object ListenerProbe {
-  def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size
+  def listeners(sc: SparkContext): Seq[AnyRef] = {
+    import scala.jdk.CollectionConverters._
+    sc.listenerBus.listeners.asScala.toSeq
+  }
 }
