@@ -3,6 +3,8 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.graftpins.KeptPartitioning
 import org.apache.spark.storage.StorageLevel
 
 /** The one owner of pinned frames. Iterative operators (the alias
@@ -16,6 +18,14 @@ import org.apache.spark.storage.StorageLevel
   *  - [[checkpoint]] pins lineage: an eager checkpoint, so later plans
   *    read materialized rows instead of re-planning (or, in a loop,
   *    geometrically growing) the subtree under them.
+  *
+  * A local checkpoint keeps the partitioning and ordering its rows were
+  * computed with ([[KeptPartitioning]]): a pin of `df.repartition(n, k)`
+  * satisfies a later join or aggregation on `k` without an exchange, and
+  * the other side of such a join is shuffled to `n` partitions, not to the
+  * session width. So an iterative operator sets its own width with one
+  * explicit repartition and keeps it across rounds, in its caller's
+  * session.
   *
   * Every pin is held here under a label until it is released by handle,
   * by label, by its [[scope]] or all at once. Releasing a cache unpersists
@@ -39,7 +49,9 @@ import org.apache.spark.storage.StorageLevel
   * a `SparkContext.setCheckpointDir`, each checkpoint is instead a parquet
   * round trip under the checkpoint dir, which survives executor loss;
   * releasing it deletes the directory. (RDD checkpoint files would only be
-  * reclaimed by the GC-driven cleaner, off by default.)
+  * reclaimed by the GC-driven cleaner, off by default.) A parquet pin
+  * keeps no partitioning: exchanges over it run at the session width, and
+  * results are the same.
   */
 object Pins {
   val ReliableCheckpoint = "spark.graft.reliableCheckpoint"
@@ -90,12 +102,28 @@ object Pins {
       hold(label, spark.read.parquet(dir.toString))(
         dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true))
     } else {
-      val pinned = df.localCheckpoint(true)
+      val pinned = KeptPartitioning(df, df.localCheckpoint(true))
       // the checkpointed RDD sits under the frame's LogicalRDD; clearing
       // the session's cache cannot reach its blocks
       val rdd = pinned.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
       hold(label, pinned)(rdd.unpersist(blocking = false))
     }
+  }
+
+  /** `df` checkpointed under `label`, and the number of its rows whose
+    * boolean column `flag` is true: one round of a loop that runs until no
+    * row changes. The count is a metric observed under `label` by the
+    * checkpoint's own job and read from its executed plan, so no listener
+    * is registered. A reliable pin is written by a command of its own, so
+    * there the count is a second job over the written rows. */
+  def checkpointCounting(df: DataFrame, flag: String, label: String): (DataFrame, Long) = {
+    val observed = df.observe(label, sum(when(col(flag), 1L).otherwise(0L)))
+    val pin = checkpoint(observed, label)
+    val n =
+      if (reliable(df.sparkSession)) pin.filter(col(flag)).count()
+      else observed.queryExecution.observedMetrics.get(label)
+        .flatMap(r => Option(r.get(0))).fold(0L)(_.asInstanceOf[Long]) // no rows: null
+    (pin, n)
   }
 
   /** The live pin labelled `label` in `spark`, else `build` cached under

@@ -12,8 +12,7 @@ import org.apache.spark.sql.types.LongType
   *
   * Scale design, above the driver-size rule (last paragraph): each round
   * pushes every node's label to its neighbors and unions in the own-label
-  * rows so one map-side-combined min aggregation both propagates and
-  * detects change, then compresses paths by re-pointing each node at
+  * rows so one min aggregation both propagates and detects change, then compresses paths by re-pointing each node at
   * its label's label (pointer doubling, so
   * chain-shaped components converge in O(log diameter) rounds instead of
   * O(diameter); near-dup graphs are mostly dense, but the
@@ -37,7 +36,15 @@ import org.apache.spark.sql.types.LongType
   * mid-algorithm must be survivable, set spark.graft.reliableCheckpoint=true
   * in the caller's session (plus a SparkContext.setCheckpointDir) and every
   * pin checkpoints to the reliable store instead of executor-local blocks;
-  * the algorithm is unchanged.
+  * the algorithm and its result are unchanged, but such pins keep no
+  * partitioning, so the rounds' exchanges run at the session width.
+  *
+  * The loop runs in the caller's session, under the caller's SQL conf
+  * (ANSI mode, time zone, adaptive execution), and changes none of it. Its
+  * shuffle width is not the session's: the partitioned edge pin and the
+  * one explicit repartition per round set it, and local pins keep the
+  * partitioning they were computed with, so every later exchange follows
+  * them.
   *
   * Convergence detection rides the propagation step only: when no node saw
   * a smaller neighbor label, every edge's endpoints already carry equal
@@ -54,36 +61,6 @@ import org.apache.spark.sql.types.LongType
   * milliseconds of compute.
   */
 object Components {
-
-  /** Loop sessions, one per (parent session, shuffle width, reliable
-    * checkpoints), reused across assign() calls: a session is cheap to
-    * create but registers an execution-listener bus on the shared
-    * SparkContext bus FOREVER, so a clone per call would accumulate
-    * listeners (every query event fans out to all of them — measured as a
-    * progressive ~20% drag on the CC family after a few dozen calls).
-    * Reused sessions are IMMUTABLE after creation (the width and the
-    * checkpoint mode are baked in), so nothing mutates shared state
-    * mid-query. Created under the lock, so no racing caller builds a
-    * session that is then dropped with its listener still registered.
-    * Single parent slot, same discipline as Tables.memo: a new parent
-    * session swaps the map wholesale. */
-  private var loopParent: org.apache.spark.sql.SparkSession = null
-  private val loopSessions =
-    scala.collection.mutable.Map.empty[(Int, Boolean), org.apache.spark.sql.SparkSession]
-
-  private def loopSessionFor(parent: org.apache.spark.sql.SparkSession,
-      parts: Int): org.apache.spark.sql.SparkSession = synchronized {
-    if (!(loopParent eq parent)) { loopSessions.clear(); loopParent = parent }
-    // the clone sees only SparkConf-level settings, not the caller's
-    // spark.conf.set values, so the checkpoint mode is carried over
-    val reliable = graft.Pins.reliable(parent)
-    loopSessions.getOrElseUpdate((parts, reliable), {
-      val sess = parent.newSession()
-      sess.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      if (reliable) sess.conf.set(graft.Pins.ReliableCheckpoint, "true")
-      sess
-    })
-  }
 
   /** The most rows of `df`'s columns an iterative operator may collect and
     * solve on the driver: the rows whose estimated size (Spark's per-row
@@ -122,43 +99,11 @@ object Components {
     * component). Nodes absent from `edges` are absent from the result —
     * callers left-join and coalesce to self for singletons. */
   def assign(edges: DataFrame, maxIters: Int = 50): DataFrame = {
-    val runId = java.util.UUID.randomUUID().toString.take(8)
-    // The WHOLE loop plans at the graph-derived width, but inside a
-    // CLONED session instead of by mutating the caller session's
-    // spark.sql.shuffle.partitions: session conf is shared across
-    // threads, so a concurrent query planned during a CC loop would
-    // silently plan at the graph's width. newSession() shares the
-    // SparkContext, the cache manager and the global-temp-view catalog,
-    // but has its own SQLConf — the width set below is invisible outside
-    // the loop, and the loop's plans are those of a mutated caller
-    // conf, byte for byte. The alternative (pinning only the join side
-    // with an explicit repartition and leaving the aggregation/self-join
-    // exchanges at the session width) was measured 2.0x SLOWER per round
-    // at the sf1.0-class fixture (17.9 s vs 8.9 s for dd_cluster_assign —
-    // a 32-wide AQE stage per exchange per round on a 1-partition graph
-    // is pure orchestration overhead), and an explicit repartition below
-    // each groupBy would forfeit map-side partial aggregation. Frames
-    // cross sessions via a global temp view (Dataset analysis is eager,
-    // so the registration is dropped as soon as the other side's Dataset
-    // exists).
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession): DataFrame = {
-      val name = s"graft_cc_xfer_$runId"
-      df.createOrReplaceGlobalTempView(name)
-      val out = to.table(s"global_temp.$name")
-      df.sparkSession.catalog.dropGlobalTempView(name)
-      out
-    }
-    // pin the directed edges first (eager checkpoint in the CALLER
-    // session, at the corpus width — the candidate pipeline is
-    // corpus-sized work and the loop width isn't known yet): the
-    // bidirectional union reads them twice, and when the caller's `edges`
-    // is itself a join pipeline (simhash band collisions, LSH candidates)
-    // an unpinned union would re-run that pipeline once per direction.
-    // A checkpoint rather than a cache because the loop session reads
-    // these rows THROUGH the view rebinding, and cross-session
-    // cached-plan substitution does not fire (measured: the candidate
-    // pipeline silently re-ran inside round 0, +1-3 s per CC query at
-    // the sf1.0 fixture) — checkpointed blocks need no substitution.
+    // pin the directed edges first: the bidirectional union reads them
+    // twice, and when the caller's `edges` is itself a join pipeline
+    // (simhash band collisions, LSH candidates) an unpinned union would
+    // re-run that pipeline once per direction
+    val spark = edges.sparkSession
     val tB = System.nanoTime()
     val e = graft.Pins.checkpoint(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")), "components.edges")
@@ -170,42 +115,40 @@ object Components {
     if (e.schema.forall(_.dataType == LongType) && m <= driverRows(e)) {
       val rows = e.collect().map(r => (r.getLong(0), r.getLong(1)))
       graft.Pins.release(e)
-      val spark = edges.sparkSession
       import spark.implicits._
       return unionFind(rows).toDF("node", "cluster_id")
     }
     // pinned hash partitioning on src, checkpointed ONCE: the edge list is
-    // the largest frame in the algorithm and every round joins it on src —
-    // a pin of the unpartitioned union would still re-exchange it per
-    // round, while the explicit repartition makes the pinned blocks satisfy
-    // the join's distribution so only the (shrinking) label frame moves
-    // each round. The width is
-    // sized to the graph (~2M edges ≈ 32 MB per partition), capped at the
-    // session's configured shuffle width: a near-dup graph of tens of
-    // thousands of edges runs its rounds on a couple of partitions (each
-    // round's cost is task-scheduling latency, not compute), while a
-    // trillion-edge graph uses everything the cluster is configured for.
-    // some managed runtimes set shuffle.partitions to a non-numeric value
-    // (e.g. "auto"); the sizing heuristic degrades to defaultParallelism
-    // there instead of crashing before any work
-    val confParts = scala.util.Try(
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(edges.sparkSession.sparkContext.defaultParallelism)
-    val parts = math.max(1L,
-      math.min(confParts.toLong, (2 * m + 1999999) / 2000000)).toInt
-    val loopSess = loopSessionFor(edges.sparkSession, parts)
-    val eLoop = rebind(e, loopSess)
-    val bidir = graft.Pins.checkpoint(eLoop
-      .union(eLoop.select(col("dst").as("src"), col("src").as("dst")))
+    // the largest frame in the algorithm and every round joins it on src.
+    // The pin keeps its partitioning (graft.Pins), so the round's join
+    // moves only the (shrinking) label frame, and moves it to the pin's
+    // width: every exchange of a round runs at `parts`, not at the
+    // session width, which is sized for corpus-wide work. A 32-wide stage
+    // per exchange per round on a graph of a few thousand edges is pure
+    // task-scheduling overhead. The width is sized to the graph (~2M
+    // edges ≈ 32 MB per partition), capped at the session's configured
+    // shuffle width: a near-dup graph of tens of thousands of edges runs
+    // its rounds on two partitions, while a trillion-edge graph uses
+    // everything the cluster is configured for. At least 2: a width of 1
+    // plans a single partition, which the other side of a join cannot be
+    // shuffled to match, so every join would fall back to the session
+    // width. Some managed runtimes set shuffle.partitions to a
+    // non-numeric value (e.g. "auto"); the sizing then starts from
+    // defaultParallelism instead of crashing before any work.
+    val confParts = scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val parts = math.min(confParts.toLong,
+      math.max(2L, (2 * m + 1999999) / 2000000)).toInt
+    val bidir = graft.Pins.checkpoint(e
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(parts, col("src")), "components.bidir")
     // the eager checkpoint holds the edges' rows now
     graft.Pins.release(e)
-    // the seed aggregation is NOT separately checkpointed — round
-    // 0's pin materializes seed + first propagation in one job (one less
-    // checkpoint per run; the seed subtree appears twice in round 0's
-    // plan but ends in an exchange, which ReusedExchange dedupes). Its
-    // output partitioning, hash(src, parts), matches bidir's, so the
-    // round-0 join adds no exchange either.
+    // the seed aggregation is NOT separately checkpointed: round 0's pin
+    // materializes seed + first propagation in one job (one less
+    // checkpoint per run). It reads bidir's pinned partitioning, so it
+    // plans no exchange, and its output, hash(node, parts), matches
+    // bidir's, so the round-0 join adds none either.
     var comp = bidir.groupBy(col("src"))
       .agg(min(col("dst")).as("__nbr"))
       .select(col("src").as("node"),
@@ -222,20 +165,24 @@ object Components {
       // the round runs 3 exchanges (comp→edge partitioning, the node agg,
       // the compress probe) where the join+agg+join form ran 6.
       // Every bidir node appears as src (the union is symmetric), so comp
-      // covers all of cand's nodes and the union loses nobody.
+      // covers all of cand's nodes and the union loses nobody. A union
+      // has no partitioning, so the aggregation's exchange is the one the
+      // pins cannot set: it is an explicit repartition to `parts`.
       val cand = comp.join(bidir, col("node") === col("src"))
         .select(col("dst").as("node"), col("cluster_id"),
           lit(null).cast("long").as("__old"))
       val own = comp.select(col("node"), col("cluster_id"),
         col("cluster_id").as("__old"))
       val stepped = cand.union(own)
+        .repartition(parts, col("node"))
         .groupBy(col("node"))
         .agg(min(col("cluster_id")).as("cluster_id"), max(col("__old")).as("__old"))
         .select(col("node"), col("cluster_id"),
           (col("cluster_id") < col("__old")).as("__changed"))
       // compress: node → label(label(node)); labels only shrink and always
       // name a node of the same component, so this is safe and halves the
-      // remaining chain depth
+      // remaining chain depth. The probe side keeps stepped's partitioning,
+      // so the other side is shuffled to `parts` as well.
       val flat = stepped.as("x")
         .join(stepped.select(col("node").as("__ln"),
           col("cluster_id").as("__lc")).as("y"),
@@ -243,22 +190,14 @@ object Components {
         .select(col("x.node").as("node"),
           coalesce(col("__lc"), col("x.cluster_id")).as("cluster_id"),
           col("x.__changed").as("__changed"))
-      // change detection rides the SAME job that materializes the round:
-      // an Observation on the checkpoint action counts changed nodes as
-      // the rows stream past, replacing the separate filter/limit probe
-      // job each round used to pay (observe is exact for batch actions)
+      // change detection rides the SAME job that materializes the round,
+      // counting changed nodes as the rows stream past
       val t0 = System.nanoTime()
-      val obs = new org.apache.spark.sql.Observation(s"cc-changed-$iters")
-      val next = graft.Pins.checkpoint(flat.observe(obs,
-        sum(when(col("__changed"), 1L).otherwise(0L)).as("n_changed")),
-        "components.round")
+      val (next, nChanged) =
+        graft.Pins.checkpointCounting(flat, "__changed", "components.round")
       // the previous round's rows live on only in `next`
       pinned.foreach(graft.Pins.release)
       pinned = Some(next)
-      val nChanged = obs.get("n_changed") match {
-        case null => 0L  // empty frame: no rows, no changes
-        case v    => v.asInstanceOf[Long]
-      }
       converged = nChanged == 0L
       if (sys.env.contains("GRAFT_CC_DEBUG"))
         println(f"[cc] round=$iters%d pin=${(System.nanoTime() - t0) / 1e9}%.3f changed=$nChanged%d parts=$parts%d edges=$m%d")
@@ -269,8 +208,6 @@ object Components {
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds")
     graft.Pins.release(bidir)
-    // re-anchor the (checkpoint-backed) result to the caller's session so
-    // downstream plans use the caller's width and conf
-    rebind(comp, edges.sparkSession)
+    comp
   }
 }

@@ -304,23 +304,17 @@ object MergeEngine {
           // must not count, or fixpoints would never be detected)
           (col("b.target").isNotNull && col("b.target") =!= col("a.target")).as("changed"))
       // the Components.assign round shape: convergence detection rides
-      // the SAME job that materializes the round — an Observation on the
-      // eager checkpoint counts moved rows as they stream past (exact for
-      // batch actions), so no separate probe job runs per round. The
-      // checkpoint also truncates lineage: a cached round keeps its whole
-      // plan, and each round's self-join DOUBLES it, so the caller's final
-      // plan would carry 2^rounds copies of the seed (~1,000 lines for
-      // m3_rename_alias's 5-row graph). Each round's pin is released once
-      // the next one holds its rows; the last one is the result.
-      val obs = new org.apache.spark.sql.Observation(s"alias-moved-$i")
-      val next = graft.Pins.checkpoint(step.observe(obs,
-        sum(when(col("changed"), 1L).otherwise(0L)).as("n_moved")), "alias.round")
+      // the SAME job that materializes the round (Pins.checkpointCounting
+      // counts moved rows as they stream past), so no separate probe job
+      // runs per round. The checkpoint also truncates lineage: a cached
+      // round keeps its whole plan, and each round's self-join DOUBLES it,
+      // so the caller's final plan would carry 2^rounds copies of the seed
+      // (~1,000 lines for m3_rename_alias's 5-row graph). Each round's pin
+      // is released once the next one holds its rows; the last one is the
+      // result.
+      val (next, moved) = graft.Pins.checkpointCounting(step, "changed", "alias.round")
       pinned.foreach(graft.Pins.release)
       pinned = Some(next)
-      val moved = obs.get("n_moved") match {
-        case null => 0L // empty frame: no rows, nothing moved
-        case v    => v.asInstanceOf[Long]
-      }
       current = next.drop("changed")
       converged = moved == 0
       i += 1

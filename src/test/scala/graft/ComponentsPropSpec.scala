@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -19,8 +21,8 @@ import graft.records.IdentifierAlias
   *
   * Both iterative operators solve graphs within the broadcast threshold on
   * the driver and run their Spark loop above it, so each property runs in
-  * the shared session (driver path) and in `noBroadcast`, a clone whose
-  * threshold of -1 sends every graph to the loop. */
+  * the shared session (driver path) and in `noBroadcast`, a child session
+  * whose threshold of -1 sends every graph to the loop. */
 class ComponentsPropSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val noBroadcast: SparkSession = {
@@ -260,5 +262,85 @@ class ComponentsPropSpec extends AnyFunSuite with SparkSpec {
       assert(out.filter("cluster_id <> 0").count() == 0L,
         s"$path: halving chain collapses to one component rooted at 0")
     }
+  }
+
+  /** `body`'s result and the executed plans of the local checkpoints it
+    * ran in `sess` (the loops' edge and round pins), seen by a listener on
+    * `sess`: a query run in another session is not seen. */
+  private def checkpointPlans[T](sess: SparkSession)(body: => T): (T, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sess.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.graftprobe.ListenerProbe.drain(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
+    } finally sess.listenerManager.unregister(listener)
+  }
+
+  test("every shuffle of the loop's rounds runs at the graph's width, in " +
+    "the caller's session, whose shuffle width is 32") {
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    wide.conf.set("spark.sql.shuffle.partitions", "32")
+    import wide.implicits._
+    val tree = (1L until 600L).map(i => (i, i / 2)).toDF("src", "dst")
+    val (labels, plans) = checkpointPlans(wide)(
+      Components.assign(tree).select("cluster_id").distinct().as[Long].collect().toSeq)
+    assert(labels == Seq(0L))
+    // the edge pin, the partitioned edge pin and at least two rounds
+    assert(plans.size >= 4, s"${plans.size} checkpoints seen in the caller's session")
+    val widths = plans.flatMap(shuffles).map(_.outputPartitioning.numPartitions)
+    assert(widths.nonEmpty && !widths.contains(32), s"shuffle widths $widths")
+  }
+
+  test("the loops run under the caller's runtime SQL conf (ANSI off, a " +
+    "non-UTC time zone, no partition coalescing) and return the driver " +
+    "path's labels") {
+    def session(threshold: Option[String]): SparkSession = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.ansi.enabled", "false")
+      s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      threshold.foreach(s.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      s
+    }
+    val sessions = Seq(session(None), session(Some("-1")))
+    val chain = (0L until 40L).map(i => (i + 1, i / 3)) ++ Seq((100L, 101L), (101L, 102L))
+    val aliasRows = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"), ("p", "q"), ("q", "p"))
+    val Seq((driverCC, driverAlias, _), (loopCC, loopAlias, loopPlans)) = sessions.map { sess =>
+      import sess.implicits._
+      val ((cc, roots), plans) = checkpointPlans(sess) {
+        // ids pass through conf-dependent expressions: a non-numeric
+        // string casts to null without ANSI (the row is dropped as a
+        // self-loop would be), and a local timestamp reads in the
+        // session's zone
+        val edges = (chain.map { case (a, b) => (a.toString, b.toString) } :+ (("bad", "1")))
+          .toDF("a", "b")
+          .selectExpr(
+            "cast(a as long) + unix_timestamp(timestamp'2024-01-01 00:00:00') - " +
+              "unix_timestamp(timestamp'2024-01-01 00:00:00') as src",
+            "cast(b as long) as dst")
+        val cc = Components.assign(edges)
+        val roots = MergeEngine.resolveAliases(aliasRows.map { case (k, t) =>
+          IdentifierAlias(k, t) }.toDS())
+        (cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+          roots.collect().map(r => r.getString(0) -> r.getString(1)).toSet)
+      }
+      assert(sess.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles")
+      (cc, roots, plans)
+    }
+    assert(loopCC == driverCC && driverCC.size == 44, s"$loopCC vs $driverCC")
+    assert(loopAlias == driverAlias, s"$loopAlias vs $driverAlias")
+    assert(loopPlans.nonEmpty, "the loops' pins ran in the caller's session")
+    import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
+    val coalesced = loopPlans.flatMap(planNodes)
+      .collect { case r: AQEShuffleReadExec if r.hasCoalescedPartition => r }
+    assert(coalesced.isEmpty, s"coalesced reads under a caller that turned them off: $coalesced")
   }
 }

@@ -10,4 +10,8 @@ object ListenerProbe {
     import scala.jdk.CollectionConverters._
     sc.listenerBus.listeners.asScala.toSeq
   }
+
+  /** Blocks until every event posted so far has reached its listeners,
+    * query-execution listeners included. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

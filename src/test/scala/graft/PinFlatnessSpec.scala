@@ -16,8 +16,8 @@ import graft.operators.{Packing, Sitemap}
   * cleaner. (Broadcast blocks of the queries' broadcast joins are not
   * pins; only the cleaner frees them, after a GC, so they are not
   * counted.) The cycles run in the shared session, where the small CC and
-  * alias graphs are solved on the driver, and again in a clone whose
-  * broadcast threshold of -1 sends them through their loops' round
+  * alias graphs are solved on the driver, and again in a child session
+  * whose broadcast threshold of -1 sends them through their loops' round
   * pins. */
 class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
 
@@ -83,6 +83,18 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
     assert(owners.isEmpty, owners.mkString("\n"))
   }
 
+  test("src/main clones no session and moves no frame through a global " +
+    "temp view, and only the forced-reindex report observes through an " +
+    "Observation") {
+    val found = for {
+      f <- mainSources
+      marker <- Seq("newSession(", "GlobalTempView") ++
+        (if (f.getName == "Pipeline.scala") Nil else Seq("Observation"))
+      if text(f).contains(marker)
+    } yield s"${f.getPath}: $marker"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("src/main has no entry points besides Cli, Bench and Verify") {
     val mains = mainSources.filter(f => text(f).contains("def main(")).map(_.getName).toSet
     assert(mains == Set("Cli.scala", "Bench.scala", "Verify.scala"), mains)
@@ -110,5 +122,39 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
     // listener the first call did not leave.
     val added = left.map(_.filterNot(l => left.head.exists(_ eq l)))
     assert(added.forall(_.isEmpty), s"listeners added after the first call: $added")
+  }
+
+  test("two parent sessions taking turns through the CC loop, the alias " +
+    "loop and a cache leave the shared listener bus as the second cycle " +
+    "left it") {
+    import org.apache.spark.graftprobe.ListenerProbe.listeners
+    import graft.operators.{Components, MergeEngine}
+    import graft.records.IdentifierAlias
+    val parents = Seq.fill(2) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s
+    }
+    val left = for (cycle <- 1 to 6) yield {
+      val sess = parents(cycle % 2)
+      import sess.implicits._
+      val edges = (1L until 120L).map(i => (i, i + 1)).toDF("src", "dst")
+      val labels = Components.assign(edges)
+      assert(labels.select("cluster_id").distinct().as[Long].collect().toSeq == Seq(1L),
+        s"cycle $cycle")
+      val roots = MergeEngine.resolveAliases(
+        Seq(IdentifierAlias("a", "b"), IdentifierAlias("b", "c")).toDS())
+      assert(roots.collect().map(_.getString(1)).toSet == Set("c"), s"cycle $cycle")
+      val cached = Pins.cache(edges.filter("src % 2 = 0"), "pin-flatness.cache")
+      assert(cached.count() == 59L)
+      Pins.release(cached)
+      Catalog.unpersistAll(sess)
+      listeners(spark.sparkContext)
+    }
+    // compared by identity, as in the case above; the first cycle builds
+    // each parent's own listener bus
+    val base = left(1)
+    val added = left.drop(1).map(_.filterNot(l => base.exists(_ eq l)))
+    assert(added.forall(_.isEmpty), s"listeners added after the second cycle: $added")
   }
 }

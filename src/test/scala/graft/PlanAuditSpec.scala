@@ -729,4 +729,32 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     assert(rows(0).getSeq[String](1) == Seq("P 1"))
     assert(rows(0).getInt(2) == 1)
   }
+
+  test("a local pin keeps its partitioning: a join on the pinned key " +
+    "shuffles only the unpinned side, to the pin's width, and an " +
+    "aggregation on the key shuffles nothing") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.functions.col
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.shuffle.partitions", "32")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    import s.implicits._
+    val pin = Pins.checkpoint((1L to 400L).map(i => (i % 50, i)).toDF("k", "v")
+      .repartition(4, col("k")), "plan-audit.kept")
+    try {
+      val joined = pin.join((1L to 100L).map(i => (i % 50, s"w$i")).toDF("k", "w"), "k")
+      assert(joined.count() == 800L)
+      joined.collect() // the final adaptive plan of the frame itself
+      val js = shuffles(joined.queryExecution.executedPlan)
+      assert(js.size == 1, s"one shuffle:\n${joined.queryExecution.executedPlan}")
+      assert(js.head.outputPartitioning.numPartitions == 4, js.head.toString)
+      assert(js.head.child.collectFirst { case l: LocalTableScanExec => l }.nonEmpty,
+        s"the shuffled side is the unpinned one:\n${js.head}")
+      val agg = pin.groupBy(col("k")).count()
+      assert(agg.collect().map(_.getLong(1)).sum == 400L)
+      assert(shuffles(agg.queryExecution.executedPlan).isEmpty,
+        agg.queryExecution.executedPlan.toString)
+    } finally Pins.release(pin)
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Shared local SparkSession for specs — one JVM-wide session so the suite
   * doesn't pay session startup per test class. */
@@ -16,6 +19,19 @@ object SparkSpec {
 
 trait SparkSpec {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Every node of an executed plan, descending into adaptive plans (their
+    * current plan: the final one once the query has run) and their query
+    * stages. A reused exchange is a leaf, so a shared stage appears once. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other.children.flatMap(planNodes)
+  })
+
+  /** The shuffle exchanges among [[planNodes]]. */
+  def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] =
+    planNodes(p).collect { case e: ShuffleExchangeExec => e }
 
   /** `body`'s result and the number of Spark jobs it started, counted by a
     * listener under a job group of its own. */
