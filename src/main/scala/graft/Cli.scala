@@ -178,7 +178,7 @@ object Cli {
     // --metrics-store <root>: maintain the metrics snapshot table (the
     // reference's metrics Postgres DB) alongside the sink deliveries;
     // absent, the index runs deliver to the bulk transport only
-    def metricsStoreOpt = a.get("metrics-store").map(r =>
+    val metricsStoreOpt = a.get("metrics-store").map(r =>
       new MasterStore(r, empty = graft.operators.MetricsTable.emptyTable))
     val now = deps.now()
 
@@ -578,20 +578,20 @@ object Cli {
       // dir could drop each other's keys on a race — per-consumer dirs
       // make the only writer of each dir that consumer's own cron
       val wmDir = a.getOrElse("watermark-dir", s"$storeRoot-sitemap-watermarks")
-      val smCursorKey = "last.sitemaps.generation"
-      val preGen = store.currentVersion.getOrElse(0L)
-      val cursor = graft.streaming.Watermark.readGen(spark, wmDir, smCursorKey)
-      if (cursor.exists(_ > preGen)) {
-        // same loud contract as runFeedSweep: a cursor AHEAD of the live
-        // store means the master was recreated under it — silently
-        // re-baselining to a 1-day scan would skip most of the new
-        // lineage AND regress the cursor. The operator re-baselines
-        // deliberately: clear the cursor dir (or pass a fresh
-        // --watermark-dir) and run a bootstrap/add over the new corpus
-        out(s"error: sitemap cursor ${cursor.get} is AHEAD of the live " +
-          s"master generation $preGen — the master store was recreated. " +
-          s"Clear $wmDir (or pass a fresh --watermark-dir) and re-baseline")
-        return 2
+      val cursor = try new Pipeline.FeedCursor(spark, store, Some(wmDir),
+        "last.sitemaps.generation", "sitemaps")
+      catch {
+        case e: MasterStore.CursorAheadException =>
+          // a cursor AHEAD of the live store means the master was recreated
+          // under it — silently re-baselining to a 1-day scan would skip
+          // most of the new lineage AND regress the cursor. The operator
+          // re-baselines deliberately: clear the cursor dir (or pass a
+          // fresh --watermark-dir) and run a bootstrap/add over the new
+          // corpus
+          out(s"error: sitemap cursor ${e.cursor} is AHEAD of the live " +
+            s"master generation ${e.live} — the master store was recreated. " +
+            s"Clear $wmDir (or pass a fresh --watermark-dir) and re-baseline")
+          return 2
       }
       // Feed mode applies NO time cutoff: the cursor already bounds
       // discovery to "changed since the last cadence", and per-key gating
@@ -602,10 +602,7 @@ object Cli {
       // from the scan shape is one-sided and deliberate: feed mode also
       // CATCHES a new record backfilled with an old bib_data_updated,
       // which the reference's lookback scan misses entirely.
-      val feedDue: Option[org.apache.spark.sql.DataFrame] = cursor.flatMap { c =>
-        try Some(store.changesSince(spark, c).filter(!col("_deleted")))
-        catch { case _: MasterStore.FeedHorizonException => None }
-      }
+      //
       // behind-horizon recovery scans WITHOUT the lookback cutoff: the
       // cursor proves a previous cadence ran, so changes may be
       // arbitrarily older than any --days-back window (the cron host was
@@ -615,8 +612,7 @@ object Cli {
       // own lastmoddate gating keeps repeat-adds from spuriously
       // regenerating files. Only the true first run (no cursor at all)
       // uses the reference's lookback shape.
-      val behindHorizon = cursor.isDefined && feedDue.isEmpty
-      val n: Long = feedDue match {
+      val n: Long = cursor.changes match {
         case Some(dueMaster0) =>
           // state access ∝ delta: the due keys' flags
           // come from a bucket-pruned keyed lookup, the fill cursor and
@@ -625,7 +621,7 @@ object Cli {
           // mutated the state since the last cron (surfacing stale flags
           // a crashed run left), instead of a full reconcile EVERY cron
           Pins.scope("sitemapCadence") {
-            val dueMaster = Pins.cache(dueMaster0.drop("_deleted", "_gen"), "cadence.dueMaster")
+            val dueMaster = Pins.cache(dueMaster0, "cadence.dueMaster")
             val smVer = sm.currentVersion.getOrElse(0L)
             val (summary, stale) =
               graft.operators.SitemapCadence.load(spark, wmDir)
@@ -638,8 +634,7 @@ object Cli {
             val (nf, next) = Pipeline.runSitemapCadenceKeyed(spark, sm,
               outRoot, now, dueMaster, summary, stale,
               memberIndex = members)
-            graft.streaming.Watermark.advanceGen(spark, wmDir, smCursorKey, preGen)
-            store.registerConsumerCursor("sitemaps", preGen)
+            cursor.advance()
             graft.operators.SitemapCadence.save(spark, wmDir, next)
             nf
           }
@@ -647,7 +642,7 @@ object Cli {
           sm.writeMerge(spark, { state =>
             val flagged = state.filter(col("update_flag")).select(col("bibcode"))
             val moved =
-              if (behindHorizon)
+              if (cursor.behindHorizon)
                 col("bib_data_updated").isNotNull || col("solr_processed").isNotNull
               else
                 col("bib_data_updated") >= lit(cutoff) ||
@@ -658,8 +653,7 @@ object Cli {
               .join(flagged, Seq("bibcode"), "left_anti")
             SitemapState.add(state, store.read(spark), due)
           })
-          graft.streaming.Watermark.advanceGen(spark, wmDir, smCursorKey, preGen)
-          store.registerConsumerCursor("sitemaps", preGen)
+          cursor.advance()
           // the full render also rebuilds + persists the summary AND the
           // member index, so the NEXT cadence (the steady state) runs
           // keyed end-to-end without its own resync scan
@@ -673,9 +667,9 @@ object Cli {
       // cutoff-free recovery in behind-horizon mode, the lookback only in
       // the true bootstrap scan
       val coverage =
-        if (feedDue.isDefined) s"cursor window (${cursor.get}, $preGen]"
-        else if (behindHorizon)
-          s"cursor ${cursor.get} behind feed horizon: full reconcile, no lookback"
+        if (cursor.changes.isDefined) s"cursor window (${cursor.from.get}, ${cursor.live}]"
+        else if (cursor.behindHorizon)
+          s"cursor ${cursor.from.get} behind feed horizon: full reconcile, no lookback"
         else s"lookback $daysBack d"
       // the files-opened accounting that PROVES the member-index prune:
       // parquet files the members read opened vs the index's total
@@ -683,7 +677,7 @@ object Cli {
         members.filter(_.lastFilesOpened >= 0)
           .map(mi => s"; members read ${mi.lastFilesOpened}/" +
             s"${mi.lastFilesTotal} index files").getOrElse("")
-      out(s"auto update (${if (feedDue.isDefined) "feed" else "table-scan"} " +
+      out(s"auto update (${if (cursor.changes.isDefined) "feed" else "table-scan"} " +
         s"discovery): regenerated $n files ($coverage$memberScan)")
       0
     }
@@ -965,19 +959,37 @@ object Cli {
       return if (report.solrFailed > 0) 1 else 0
     }
 
-    // One decode→quarantine→pipeline body shared by --ingest (one batch)
-    // and --consume (one call per spool micro-batch). Rejects land under
-    // a caller-chosen quarantine subdir with mode OVERWRITE, so a
-    // crash-replayed streaming batch rewrites its own rejects instead of
-    // appending duplicates — the quarantine analog of the P3/P4 replay
-    // suppression on the sink side. Returns (report, rejectCount).
+    // The decode→quarantine front of the queue body (Pipeline.queueBatch)
+    // for --ingest (one batch) and --consume (one call per spool
+    // micro-batch). Rejects land under a caller-chosen quarantine subdir
+    // with mode OVERWRITE, so a crash-replayed streaming batch rewrites its
+    // own rejects instead of appending duplicates — the quarantine analog
+    // of the P3/P4 replay suppression on the sink side. Returns (report,
+    // rejectCount).
     def ingestBatch(lines: org.apache.spark.sql.Dataset[String],
         nowB: Timestamp, quarantineDir: String): (Pipeline.RunReport, Long) = {
-      val (report, nRejects) = Pins.scope("ingestBatch") {
-        val decoded = Pins.cache(graft.streaming.QueueDecode.decode(lines, nowB), "ingest.decoded")
-        val messages = graft.streaming.QueueDecode.messages(decoded)
+      var nRejects = 0L
+      // ingest forwards a boost request per touched record, the queue
+      // topology's task_update_record → task_boost_request edge
+      // (tasks.py:104-111); --no-boost-requests turns it off. Affiliation
+      // augment is gated SEPARATELY (--no-augment-requests): the reference
+      // fires it on every metadata update regardless of the boost gate.
+      // The reference's ChangeLog lives beside the records table and is
+      // written by update_storage on every ingest mutation — same here: on
+      // by default for the ingest/consume front door, appended only after
+      // the batch's CAS publish lands (--no-changelog opts out,
+      // --changelog DIR relocates)
+      val report = Pipeline.queueBatch(spark, store,
+        graft.streaming.QueueDecode.decode(lines, nowB),
+        deps.solrTransport, deps.bulkTransport, nowB, metricsStoreOpt,
+        Set("solr", "metrics", "links"),
+        forwardBoostRequests = !a.contains("no-boost-requests"),
+        forwardAugmentRequests = !a.contains("no-augment-requests"),
+        changeLogDir =
+          if (a.contains("no-changelog")) None
+          else Some(a.getOrElse("changelog", s"$storeRoot-changelog"))) { decoded =>
         val rejects = graft.streaming.QueueDecode.rejects(decoded)
-        val nRejects = rejects.count()
+        nRejects = rejects.count()
         // Written unconditionally: a re-run of a since-corrected input must
         // CLEAR its previous rejects, not leave them misrepresenting the
         // latest run. nRejects == 0 deletes the subdir outright (an absent
@@ -990,46 +1002,7 @@ object Cli {
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)
         }
-        // ingest forwards a boost request per touched record, the queue
-        // topology's task_update_record → task_boost_request edge
-        // (tasks.py:104-111); --no-boost-requests turns it off. Affiliation
-        // augment is gated SEPARATELY (--no-augment-requests): the reference
-        // fires it on every metadata update regardless of the boost gate.
-        // Queue-batch shape: work, scans, and the published delta are all
-        // ∝ this batch's records
-        val rep = Pipeline.runBatch(spark, store, messages,
-          deps.solrTransport, deps.bulkTransport, now = nowB,
-          forwardBoostRequests = !a.contains("no-boost-requests"),
-          forwardAugmentRequests = !a.contains("no-augment-requests"),
-          metricsStore = metricsStoreOpt, keyLocal = true,
-          // the reference's ChangeLog lives beside the records table and is
-          // written by update_storage on every ingest mutation — same here:
-          // on by default for the ingest/consume front door, appended only
-          // after the batch's CAS publish lands (--no-changelog opts out,
-          // --changelog DIR relocates)
-          changeLogDir =
-            if (a.contains("no-changelog")) None
-            else Some(a.getOrElse("changelog", s"$storeRoot-changelog")))
-        (rep, nRejects)
-      }
-      // retention-driven maintenance on the batch cadence (same contract
-      // as runStream's): superseded generations beyond the retain window
-      // are dropped so a long-running consumer's disk is steady-state,
-      // while retain=2 keeps one superseded snapshot alive for slow
-      // overlapped readers. Driver-side file ops, zero Spark jobs.
-      // maintenance must never fail a LANDED batch — log and let the
-      // next batch's sweep retry (same discipline as runStream's)
-      try {
-        store.vacuum(alsoOrphans = true, retain = 2,
-          orphanGraceMs = MasterStore.CadenceOrphanGraceMs)
-        metricsStoreOpt.foreach(_.vacuum(alsoOrphans = true, retain = 2,
-          orphanGraceMs = MasterStore.CadenceOrphanGraceMs))
-      } catch {
-        // NonFatal only: an OOM or interrupt mid-maintenance must
-        // propagate, not be logged away
-        case scala.util.control.NonFatal(t) => System.err.println(
-          s"[cli] post-batch vacuum failed (the batch is safe; the next " +
-          s"batch re-runs maintenance): $t")
+        graft.streaming.QueueDecode.messages(decoded)
       }
       (report, nRejects)
     }
@@ -1122,8 +1095,8 @@ object Cli {
       // flags whose -r meaning this command CANNOT honor are rejected
       // loudly, not silently ignored: a targeted -b/-n run or a --since
       // window is table-scoped by definition, and the stampless debugging
-      // mode breaks feed discovery's state contract (runFeedSweep refuses
-      // it anyway — surface the refusal as a usage error, not a crash)
+      // mode breaks feed discovery's state contract (a feed sweep always
+      // stamps)
       val unsupported = Seq("no-update-processed", "since", "bibcodes",
         "filename").filter(a.contains)
       if (unsupported.nonEmpty) {

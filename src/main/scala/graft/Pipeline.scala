@@ -469,20 +469,28 @@ object Pipeline {
     * selection, and the SAME gate then filters both to the same rows.
     * Net-deleted keys are dropped (their sink deletes were fanned out by
     * the batch that deleted them; there is no master row left to index).
+    * The feed's rows ARE the working set's live rows (the newest change is
+    * the live version, and the horizon contract keeps every change past
+    * the cursor readable), so they go to runBatch as `workRows` and the
+    * keyed store lookup is skipped.
     *
-    * Fallbacks are loud where they must be and automatic where they may
-    * be: a cursor BEHIND the feed horizon (the consumer outslept the
-    * retention window) falls back to the table-wide watermark scan —
-    * exactly the run the reference always does — and the report says so;
-    * a cursor AHEAD of the live generation (a recreated store under a
-    * surviving cursor) propagates `changesSince`'s IllegalStateException,
-    * because silently full-scanning would hide that the cursor's lineage
-    * is gone.
+    * The cursor follows the [[FeedCursor]] protocol: AHEAD fails loudly,
+    * behind the feed horizon falls back to the table-wide watermark scan
+    * (exactly the run the reference always does) and the report says so.
+    * The fallback publishes keyed: a whole-table rewrite would reset the
+    * feed horizon and strand the cadence in fallback mode forever (see
+    * runBatch.keyedPublish).
     *
     * `force = true` deliberately bypasses feed discovery: a forced sweep
     * (run.py -f, the post-wipe full rebuild) means "the corpus", and
     * force widens the GATE — discovery must widen with it, or a forced
     * rebuild would silently re-send only the window's delta.
+    *
+    * Discovery is state-driven: a delivered row leaves the next window
+    * only because its stamp advanced `processed` past `updated`, so a
+    * sweep always stamps (the stampless run.py --update-processed mode is
+    * the table-wide runBatch's). A sweep has no messages, so it writes no
+    * change log.
     *
     * `fromGen = None` reads the persisted cursor from `watermarkDir`
     * under [[GenCursorKey]] (advanced here after every sweep) — the
@@ -499,90 +507,75 @@ object Pipeline {
       ignoreChecksums: Boolean = false,
       now: Timestamp = new Timestamp(0),
       metricsStore: Option[MasterStore] = None,
-      sinks: Set[String] = Set("solr", "metrics", "links"),
-      updateProcessed: Boolean = true,
-      changeLogDir: Option[String] = None): FeedSweepReport = {
+      sinks: Set[String] = Set("solr", "metrics", "links")): FeedSweepReport = {
     import spark.implicits._
-    // feed discovery is state-driven: a delivered row leaves the next
-    // window only because its stamp advanced `processed` past `updated`.
-    // The no-stamp debugging mode (run.py --update-processed) re-delivers
-    // forever under the table-wide scan by design; under feed discovery
-    // it would instead silently deliver once and vanish — refuse the
-    // combination rather than quietly change its meaning
-    require(updateProcessed,
-      "runFeedSweep needs processed-stamp tracking; use the table-wide " +
-        "runBatch for update_processed=False debugging runs")
-    val cursor = store.currentVersion.getOrElse(0L)
-    val from: Option[Long] = fromGen.orElse(
-      watermarkDir.flatMap(Watermark.readGen(spark, _, GenCursorKey)))
-    val feedRows: Option[DataFrame] = from match {
-      case None => None // no cursor yet: the bootstrap table-wide sweep
-      case Some(f) if f > cursor =>
-        // AHEAD failure raised HERE against OUR cursor read, not by
-        // re-calling changesSince (whose own snapshot could race a
-        // concurrent publish past f — turning the loud failure into a
-        // silent table-wide sweep that then REGRESSES the persisted
-        // cursor below f)
-        throw new MasterStore.CursorAheadException(
-          s"feed cursor $f is AHEAD of the live generation $cursor at " +
-            s"${store.root} — the store was recreated or the cursor " +
-            "belongs to another store. Re-baseline and reset the cursor")
-      case Some(_) if force =>
-        // a FORCED sweep's intent is the corpus (run.py -f): force widens
-        // the GATE, so discovery must widen with it — a feed-windowed
-        // force would silently re-send only the delta
-        None
-      case Some(f) =>
-        // the feed's rows ARE the working set's live rows (the newest
-        // change ≥ any retained change is the live version, and the
-        // horizon contract keeps every change > f readable), so the sweep
-        // hands them to runBatch as workRows and the gate runs directly
-        // on the feed frame — the keyed store lookup that was the
-        // sweep's second-largest stage disappears entirely
-        try Some(store.changesSince(spark, f)
-          .filter(!col("_deleted")).drop("_deleted", "_gen"))
-        // ONLY the typed behind-horizon condition falls back to the
-        // table-wide scan; any other IllegalStateException (including a
-        // racing AHEAD) propagates loudly
-        catch { case _: MasterStore.FeedHorizonException => None }
+    val cursor = new FeedCursor(spark, store, watermarkDir, GenCursorKey, "reindex", fromGen)
+    val feedRows = if (force) None else cursor.changes
+    val report = runBatch(spark, store, spark.emptyDataset[UpdateMessage],
+      solrTransport, bulkTransport, watermarkDir = watermarkDir, force = force,
+      ignoreChecksums = ignoreChecksums, now = now, metricsStore = metricsStore,
+      sinks = sinks, keyLocal = feedRows.isDefined, workRows = feedRows,
+      keyedPublish = feedRows.isEmpty)
+    cursor.advance()
+    FeedSweepReport(report, nextFromGen = cursor.live, usedFeed = feedRows.isDefined)
+  }
+
+  /** A change-feed consumer's cursor: the generation through which it has
+    * consumed the store's feed, persisted under `key` in the consumer's own
+    * watermark dir and registered with the store as `consumer`, so feed
+    * retention covers it when it runs slow (compaction keeps history for
+    * the oldest registered cursor up to the hard cap). The one protocol of
+    * every feed consumer (the feed sweep, the sitemap cron):
+    *
+    *  - `live`, the store's generation, is read first, before the feed and
+    *    before the consumer's own publishes, and is what [[advance]]
+    *    persists: changes landing mid-run are re-seen by the next run, not
+    *    skipped (at-least-once, deduped by the consumers' gates);
+    *  - `from` is the explicit cursor, else the persisted one;
+    *  - a cursor AHEAD of `live` (a recreated store under a surviving
+    *    cursor) raises CursorAheadException here, against `live`, not by
+    *    a second changesSince, whose own snapshot could race a concurrent
+    *    publish past the cursor and turn the loud failure into a silent
+    *    table-wide run that then REGRESSES the persisted cursor;
+    *  - [[changes]] falls back (None) only on the typed behind-horizon
+    *    condition ([[behindHorizon]]); any other failure propagates.
+    *
+    * Without a dir (a one-shot caller passing an explicit cursor) nothing
+    * is persisted or registered: such a caller is not a standing
+    * consumer. */
+  final class FeedCursor(spark: SparkSession, store: MasterStore, dir: Option[String],
+      key: String, consumer: String, explicit: Option[Long] = None) {
+    val live: Long = store.currentVersion.getOrElse(0L)
+    val from: Option[Long] = explicit.orElse(dir.flatMap(Watermark.readGen(spark, _, key)))
+    for (f <- from if f > live)
+      throw new MasterStore.CursorAheadException(f, live,
+        s"feed cursor $f is AHEAD of the live generation $live at " +
+          s"${store.root} — the store was recreated or the cursor " +
+          "belongs to another store. Re-baseline and reset the cursor")
+
+    /** The live rows (master columns) of the keys changed after `from`,
+      * net deletes dropped; None with no cursor or behind the horizon. */
+    lazy val changes: Option[DataFrame] = from.flatMap { f =>
+      try Some(store.changesSince(spark, f)
+        .filter(!col("_deleted")).drop("_deleted", "_gen"))
+      catch { case _: MasterStore.FeedHorizonException => None }
     }
-    val noUpdates = spark.emptyDataset[graft.records.UpdateMessage]
-    val report = feedRows match {
-      case Some(rows) =>
-        runBatch(spark, store, noUpdates, solrTransport, bulkTransport,
-          watermarkDir = watermarkDir, force = force,
-          ignoreChecksums = ignoreChecksums, now = now,
-          metricsStore = metricsStore, sinks = sinks,
-          updateProcessed = updateProcessed, keyLocal = true,
-          changeLogDir = changeLogDir, workRows = Some(rows))
-      case None =>
-        // table-wide fallback, but with the keyed publish: a whole-table
-        // rewrite here would reset the feed horizon and strand the
-        // cadence in fallback mode forever (see runBatch.keyedPublish)
-        runBatch(spark, store, noUpdates, solrTransport, bulkTransport,
-          watermarkDir = watermarkDir, force = force,
-          ignoreChecksums = ignoreChecksums, now = now,
-          metricsStore = metricsStore, sinks = sinks,
-          updateProcessed = updateProcessed, keyLocal = false,
-          changeLogDir = changeLogDir, keyedPublish = true)
+
+    def behindHorizon: Boolean = from.isDefined && changes.isEmpty
+
+    /** Persists `live` as the cursor and registers it with the store. */
+    def advance(): Unit = dir.foreach { d =>
+      Watermark.advanceGen(spark, d, key, live)
+      store.registerConsumerCursor(consumer, live)
     }
-    watermarkDir.foreach { dir =>
-      Watermark.advanceGen(spark, dir, GenCursorKey, cursor)
-      // persistent-cursor mode also registers with the store so feed
-      // retention covers this consumer when it runs slow (compact keeps
-      // history for the oldest registered cursor up to the hard cap);
-      // a one-shot fromGen caller is not a standing consumer and skips it
-      store.registerConsumerCursor("reindex", cursor)
-    }
-    FeedSweepReport(report, nextFromGen = cursor, usedFeed = feedRows.isDefined)
   }
 
   /** Continuous ingest (ST1 as Structured Streaming): every micro-batch of
-    * update messages runs the full merge → index → sink → stamp cycle
-    * against the snapshot store. The checkpoint gives at-least-once
-    * delivery; checksum suppression (P4) and the upsert merge make
-    * replayed batches no-ops (ST4), so end-to-end the pipeline is
-    * effectively exactly-once without coordination. */
+    * update messages runs the [[queueBatch]] body against the snapshot
+    * store. The checkpoint gives at-least-once delivery; checksum
+    * suppression (P4) and the upsert merge make replayed batches no-ops
+    * (ST4), so end-to-end the pipeline is effectively exactly-once without
+    * coordination. */
   def runStream(
       spark: SparkSession,
       store: MasterStore,
@@ -590,64 +583,77 @@ object Pipeline {
       solrTransport: Sinks.Transport,
       bulkTransport: Sinks.Transport,
       checkpointDir: String,
-      force: Boolean = false,
       forwardBoostRequests: Boolean = false,
       forwardAugmentRequests: Boolean = false,
       metricsStore: Option[MasterStore] = None,
       sinks: Set[String] = Set("solr", "metrics", "links"),
-      vacuumRetain: Int = 2,
       changeLogDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
     updates.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[UpdateMessage], batchId: Long) =>
-        val report = runBatch(spark, store, batch, solrTransport, bulkTransport,
-          watermarkDir = None, force = force,
-          now = new Timestamp(System.currentTimeMillis()),
-          forwardBoostRequests = forwardBoostRequests,
-          forwardAugmentRequests = forwardAugmentRequests,
-          metricsStore = metricsStore, sinks = sinks,
-          changeLogDir = changeLogDir,
-          // queue-consumer shape: the batch touches its own keys only —
-          // compute/scan/publish all ∝ batch (the table-wide sweep stays
-          // the CLI/cron's job, as in the reference)
-          keyLocal = true)
-        // retention-driven maintenance on the publish cadence: without it
-        // a 5-minute-cadence consumer accumulates one superseded
-        // generation per batch without bound (the reference's Postgres
-        // overwrites rows in place and never has this class of garbage).
-        // retain ≥ 2 keeps a window of superseded snapshots for slow
-        // in-flight readers — vacuum is file-granular, so base files
-        // carried forward by reference survive and an overlapped reader
-        // keeps working (MasterStoreSpec pins this); the rare reader
-        // beyond the window retries via the vanished-input class.
-        // Driver-side file ops only, zero Spark jobs.
-        // alsoOrphans with the cadence grace: crashed/CAS-losing attempt
-        // dirs older than an hour are swept too (otherwise they
-        // accumulate without bound under a 5-minute cadence); an
-        // in-flight writer's dir has fresh mtimes and survives.
-        // Maintenance must never fail a LANDED batch (the batch's merge
-        // and deliveries are already durable here — same discipline as
-        // writeMergeKeyed's post-publish compaction): a vacuum racing a
-        // concurrent writer's own cleanup is logged and retried next
-        // batch, not propagated into the StreamingQuery
-        if (vacuumRetain >= 1) try {
-          store.vacuum(alsoOrphans = true, retain = vacuumRetain,
-            orphanGraceMs = MasterStore.CadenceOrphanGraceMs)
-          metricsStore.foreach(_.vacuum(alsoOrphans = true,
-            retain = vacuumRetain,
-            orphanGraceMs = MasterStore.CadenceOrphanGraceMs))
-        } catch {
-          // NonFatal only: an OOM or interrupt mid-maintenance must fail
-          // the query, not be logged away
-          case scala.util.control.NonFatal(t) => System.err.println(
-            s"[pipeline] post-batch vacuum failed (batch $batchId is " +
-            s"safe; next batch re-runs maintenance): $t")
-        }
-        spark.sparkContext.setJobDescription(
-          s"graft micro-batch $batchId -> snapshot v${report.version}")
+      .foreachBatch { (batch: Dataset[UpdateMessage], _: Long) =>
+        queueBatch(spark, store, batch, solrTransport, bulkTransport,
+          new Timestamp(System.currentTimeMillis()), metricsStore, sinks,
+          forwardBoostRequests, forwardAugmentRequests, changeLogDir)(identity)
         ()
       }
       .start()
+
+  /** One queue micro-batch: the body of every queue consumer
+    * (`runStream`'s micro-batches, `Cli --ingest` and `--consume`), the
+    * reference's one worker (adsmp/tasks.py:32-46).
+    *
+    * The batch is pinned once and `messagesOf` turns the pin into the
+    * batch's update messages (a consumer that decodes raw envelopes
+    * quarantines its rejects there), so runBatch's legs read the pin and
+    * the source is read once. The batch runs key-local: it reads, gates
+    * and publishes only its own keys, so its cost is ∝ batch (the
+    * table-wide sweep stays the cron's job, as in the reference).
+    *
+    * Then the retention-driven maintenance of the publish cadence: without
+    * it a 5-minute-cadence consumer accumulates one superseded generation
+    * per batch without bound (the reference's Postgres overwrites rows in
+    * place and never has this class of garbage). retain = 2 keeps one
+    * superseded snapshot for slow in-flight readers — vacuum is
+    * file-granular, so base files carried forward by reference survive and
+    * an overlapped reader keeps working (MasterStoreSpec pins this); the
+    * rare reader beyond the window retries via the vanished-input class.
+    * The orphan sweep with the cadence grace removes crashed or CAS-losing
+    * attempt dirs older than an hour; an in-flight writer's dir has fresh
+    * mtimes and survives. Driver-side file ops only, zero Spark jobs.
+    * Maintenance never fails a LANDED batch (its merge and deliveries are
+    * already durable, the same discipline as writeMergeKeyed's
+    * post-publish compaction): a vacuum racing a concurrent writer's own
+    * cleanup is logged and retried by the next batch. NonFatal only: an
+    * OOM or interrupt mid-maintenance still fails the batch. */
+  private[graft] def queueBatch[T](
+      spark: SparkSession,
+      store: MasterStore,
+      batch: Dataset[T],
+      solrTransport: Sinks.Transport,
+      bulkTransport: Sinks.Transport,
+      now: Timestamp,
+      metricsStore: Option[MasterStore],
+      sinks: Set[String],
+      forwardBoostRequests: Boolean,
+      forwardAugmentRequests: Boolean,
+      changeLogDir: Option[String])(
+      messagesOf: Dataset[T] => Dataset[UpdateMessage]): RunReport = {
+    val report = Pins.scope("queueBatch") {
+      runBatch(spark, store, messagesOf(Pins.cache(batch, "queueBatch.batch")),
+        solrTransport, bulkTransport, now = now, metricsStore = metricsStore,
+        sinks = sinks, forwardBoostRequests = forwardBoostRequests,
+        forwardAugmentRequests = forwardAugmentRequests, keyLocal = true,
+        changeLogDir = changeLogDir)
+    }
+    try (store +: metricsStore.toSeq).foreach(_.vacuum(alsoOrphans = true, retain = 2,
+      orphanGraceMs = MasterStore.CadenceOrphanGraceMs))
+    catch {
+      case scala.util.control.NonFatal(t) => System.err.println(
+        "[pipeline] post-batch vacuum failed (the batch is safe; the next " +
+          s"batch re-runs maintenance): $t")
+    }
+    report
+  }
 
   /** State-driven sitemap regeneration (the reference's
     * task_update_sitemap_files → task_generate_single_sitemap →

@@ -117,8 +117,10 @@ object MasterStore {
     * operator condition, not a retryable read. Its own type (subclassing
     * IllegalStateException for source compatibility) so CLI handlers
     * dispatch on the CONDITION instead of matching message text, and so
-    * the behind-horizon fallback catches can never swallow it. */
-  final class CursorAheadException(msg: String) extends IllegalStateException(msg)
+    * the behind-horizon fallback catches can never swallow it. It carries
+    * the cursor and the live generation it was checked against. */
+  final class CursorAheadException(val cursor: Long, val live: Long, msg: String)
+      extends IllegalStateException(msg)
 
   /** A change-feed read fell BEHIND the retention horizon (history folded
     * and aged out) — the expected slow-consumer condition every caller
@@ -787,7 +789,7 @@ class MasterStore(val root: String, numBuckets: Int = 8,
       .withColumn(Deleted, lit(false)).withColumn("_gen", lit(0L)).limit(0)
     val (g, mOpt) = snapshot()
     if (fromGen > g)
-      throw new CursorAheadException(
+      throw new CursorAheadException(fromGen, g,
         s"MasterStore at $root: change-feed watermark $fromGen is AHEAD " +
           s"of the live generation $g — the store was recreated or the " +
           "watermark belongs to another store. Re-baseline with a full " +

@@ -292,6 +292,76 @@ class CliSpec extends AnyFunSuite with SparkSpec {
       "--vacuum", "--retain", "0"), d) == 2, "retain < 1 is a usage error")
   }
 
+  private def envelopes(bib: String, ts: Long): Seq[String] = Seq(
+    s"""{"type":"metadata","bibcode":"$bib","timestamp":$ts,""" +
+      s""""payload":{"bibcode":"$bib","title":["t $bib"],"aff":["Somewhere"]}}""",
+    s"""{"type":"nonbib_data","bibcode":"$bib","timestamp":${ts + 1},"payload":{"boost":0.5}}""",
+    s"""{"type":"orcid_claims","bibcode":"$bib","timestamp":${ts + 2},"payload":{"verified":[]}}""")
+
+  private def spoolFile(dir: String, name: String, lines: Seq[String]): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, name),
+      lines.mkString("\n").getBytes("UTF-8"))
+  }
+
+  test("--consume reads its spool once per batch: the micro-batch's source " +
+    "rows equal the messages it consumed") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_once").toString
+    val lines = (1 to 3).flatMap(i => envelopes(s"2024Once.....${i}A", 1700000000000L + i))
+    spoolFile(s"$root/spool", "f1.jsonl", lines)
+    // Spark's own count of the rows the micro-batch read from its source,
+    // summed over every job that read it
+    val sourceRows = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) sourceRows.add(e.progress.numInputRows)
+    }
+    val log = collection.mutable.Buffer.empty[String]
+    val (_, d) = deps(log)
+    spark.streams.addListener(listener)
+    try {
+      assert(Cli.run(spark, Seq("--store", s"$root/master", "--consume", s"$root/spool",
+        "--checkpoint", s"$root/ckpt"), d) == 0)
+      assert(log.exists(_.contains("consumed batches=1 merged=3 solrOk=3")), s"got: $log")
+      val deadline = System.currentTimeMillis() + 10000
+      while (sourceRows.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(sourceRows.asScala.toSeq == Seq(lines.size.toLong),
+        s"source rows read per batch, for ${lines.size} messages")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("--consume: a throwing post-batch vacuum never fails a landed batch — " +
+    "same report and exit code, one warning per batch, retried next batch") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_vac").toString
+    val unvacuumable = unvacuumableRoot()
+    val warning = "post-batch vacuum failed"
+    // one drain of `file` into the store tagged `tag`: its exit code, its
+    // report line without the checkpoint path, and its stderr
+    def drain(tag: String, metricsRoot: String, file: String, bib: String) = {
+      spoolFile(s"$root/$tag-spool", file, envelopes(bib, 1700000000000L))
+      val log = collection.mutable.Buffer.empty[String]
+      val (_, d) = deps(log)
+      val (rc, err) = capturingStderr(Cli.run(spark, Seq("--store", s"$root/$tag-master",
+        "--metrics-store", metricsRoot, "--consume", s"$root/$tag-spool",
+        "--checkpoint", s"$root/$tag-ckpt"), d))
+      val report = log.find(_.startsWith("consumed batches=")).getOrElse(s"no report in $log")
+      (rc, report.replaceAll(" checkpoint=.*", ""), err)
+    }
+    for ((file, bib) <- Seq("f1.jsonl" -> "2024Vac......1A", "f2.jsonl" -> "2024Vac......2B")) {
+      val (rcOk, reportOk, errOk) = drain("ok", s"$root/ok-metrics", file, bib)
+      val (rc, report, err) = drain("bad", unvacuumable, file, bib)
+      assert(rcOk == 0 && rc == 0, s"$file: exit codes $rcOk and $rc")
+      assert(report == reportOk && report.startsWith("consumed batches=1 merged=1 solrOk=1"),
+        s"$file: '$report' against the healthy store's '$reportOk'")
+      assert(occurrences(errOk, warning) == 0 && occurrences(err, warning) == 1,
+        s"$file logged: $err")
+    }
+    assert(new graft.sources.MasterStore(s"$root/bad-master").read(spark).count() == 2)
+  }
+
   test("cron surface: auto sitemap update, cleanup, delete_obsolete " +
     "(test_update_sitemaps_auto_with_records, " +
     "test_update_sitemaps_auto_with_solr_processed_updates, " +

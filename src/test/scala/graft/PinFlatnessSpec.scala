@@ -95,6 +95,31 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
+  test("each consumer mechanism has one body in src/main: the streaming " +
+    "queries, the post-batch vacuum and the feed-cursor steps") {
+    // where each marker may occur, as (file, owner): the owner is the
+    // nearest `def` or Cli verb (`a.contains("…")`) before the occurrence
+    val allowed = Map(
+      ".writeStream" -> Set("Pipeline.scala" -> "runStream", "Cli.scala" -> "consume"),
+      // the queue body's maintenance, and the --vacuum verb's sweep
+      ".vacuum(" -> Set("Pipeline.scala" -> "queueBatch", "Cli.scala" -> "sweep"),
+      "Watermark.advanceGen(" -> Set("Pipeline.scala" -> "advance"),
+      ".registerConsumerCursor(" -> Set("Pipeline.scala" -> "advance"))
+    val owner = raw"""def (\w+)|a\.contains\("([\w-]+)"\)""".r
+    val sites = for {
+      f <- mainSources
+      src = text(f)
+      marker <- allowed.keys
+      at <- Iterator.iterate(src.indexOf(marker))(i => src.indexOf(marker, i + 1))
+        .takeWhile(_ >= 0)
+    } yield marker -> (f.getName -> owner.findAllMatchIn(src.substring(0, at)).toSeq
+      .lastOption.map(m => Option(m.group(1)).getOrElse(m.group(2))).getOrElse(""))
+    val bySite = sites.groupBy(_._1).map { case (m, ss) => m -> ss.map(_._2) }
+    for ((marker, want) <- allowed)
+      assert(bySite.getOrElse(marker, Nil).sorted == want.toSeq.sorted,
+        s"$marker occurs at ${bySite.getOrElse(marker, Nil)}; only at $want")
+  }
+
   test("src/main has no entry points besides Cli, Bench and Verify") {
     val mains = mainSources.filter(f => text(f).contains("def main(")).map(_.getName).toSet
     assert(mains == Set("Cli.scala", "Bench.scala", "Verify.scala"), mains)

@@ -49,6 +49,68 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     } finally query.stop()
   }
 
+  test("a queue consumer reads its source once per batch: runStream pins " +
+    "the micro-batch before runBatch's legs read it") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val store = new MasterStore(
+      java.nio.file.Files.createTempDirectory("graft_store_once").toString, numBuckets = 2)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_once").toString
+    val evaluated = spark.sparkContext.longAccumulator("source rows evaluated")
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[UpdateMessage]
+    val counted = input.toDS().map { m => evaluated.add(1L); m }
+    // every leg that reads the batch runs: the full-delete probe and its
+    // sink deletes, the keyed lookup, the merge, the boost and augment
+    // requests and the publish's key set
+    val query = Pipeline.runStream(spark, store, counted, okTransport, okTransport, ckpt,
+      forwardBoostRequests = true, forwardAugmentRequests = true)
+    try {
+      val first = msgs("once1", "2024-01-01 00:00:00") ++ msgs("once2", "2024-01-01 00:00:00")
+      input.addData(first: _*)
+      query.processAllAvailable()
+      assert(evaluated.value == first.size, s"${evaluated.value} source rows for ${first.size}")
+      val second = msgs("once3", "2024-01-02 00:00:00") :+ UpdateMessage("once1", "metadata",
+        "", ts("2024-01-02 00:00:00"), status = Some("deleted"))
+      input.addData(second: _*)
+      query.processAllAvailable()
+      assert(store.read(spark).select("bibcode").as[String].collect().toSet ==
+        Set("once2", "once3"), "the second batch's delete and upsert landed")
+      assert(evaluated.value == first.size + second.size,
+        s"${evaluated.value} source rows for ${first.size + second.size}")
+    } finally query.stop()
+  }
+
+  test("maintenance never fails a landed batch: runStream logs a throwing " +
+    "post-batch vacuum once per batch and the next batch runs it again") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val store = new MasterStore(
+      java.nio.file.Files.createTempDirectory("graft_store_vac").toString, numBuckets = 2)
+    val metrics = new MasterStore(unvacuumableRoot(),
+      empty = graft.operators.MetricsTable.emptyTable)
+    intercept[java.io.IOException](metrics.vacuum(alsoOrphans = true, retain = 2))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_vac").toString
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[UpdateMessage]
+    // no metrics sink: the batch never writes the metrics store, only its
+    // maintenance touches it
+    val query = Pipeline.runStream(spark, store, input.toDS(), okTransport, okTransport, ckpt,
+      metricsStore = Some(metrics), sinks = Set("solr", "links"))
+    val warning = "post-batch vacuum failed"
+    try {
+      for ((bib, gen) <- Seq("vac1" -> 1L, "vac2" -> 2L)) {
+        val (_, err) = capturingStderr {
+          input.addData(msgs(bib, "2024-01-01 00:00:00"): _*)
+          query.processAllAvailable()
+        }
+        assert(query.isActive && query.exception.isEmpty, s"batch $gen failed the query")
+        assert(store.currentVersion.contains(gen), s"batch $gen landed")
+        assert(store.read(spark).filter($"bibcode" === bib).select("status").as[String]
+          .collect().toSeq == Seq("success"))
+        assert(occurrences(err, warning) == 1, s"batch $gen logged: $err")
+      }
+    } finally query.stop()
+  }
+
   test("restricting to a bibcode the store does not have indexes nothing " +
     "and fails nothing (test_tasks.py:442 test_task_index_records_no_such_bibcode)") {
     import spark.implicits._

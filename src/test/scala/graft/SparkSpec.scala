@@ -60,4 +60,27 @@ trait SparkSpec {
       (result, groups.asScala.count(_ == group))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and what it printed to `System.err`, from any thread
+    * (a streaming query's micro-batches run on their own). */
+  def capturingStderr[T](body: => T): (T, String) = {
+    val buf = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val result = try body finally System.setErr(saved)
+    (result, buf.toString("UTF-8"))
+  }
+
+  /** A store root whose only generation pointer is a directory: reads of
+    * the store's pointers fail, so its `vacuum` throws on every call,
+    * while a batch that never writes to the store is unaffected. */
+  def unvacuumableRoot(): String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_unvacuumable")
+    java.nio.file.Files.createDirectories(root.resolve("gen_000000000001"))
+    root.toString
+  }
+
+  /** The number of times `marker` occurs in `text`. */
+  def occurrences(text: String, marker: String): Int =
+    text.sliding(marker.length).count(_ == marker)
 }
