@@ -69,7 +69,12 @@ import graft.streaming.Watermark
   *                                  master change feed once its persisted
   *                                  cursor exists (table-scan bootstrap
   *                                  otherwise), and the state write is
-  *                                  then a key-local delta layer
+  *                                  then a key-local delta layer; the
+  *                                  member rows of touched files come
+  *                                  from the file-ordinal member index at
+  *                                  <sitemap-store>-members, which one
+  *                                  scan resyncs after any out-of-band
+  *                                  change to the state
   *   --lease-ttl-min N              cron lease TTL (default 120): the
   *                                  sitemap-writing actions share one
   *                                  single-writer lease, --index-from-feed
@@ -99,6 +104,9 @@ import graft.streaming.Watermark
   *                                  (concurrency-safe; cadence paths
   *                                  use 60)
   * }}}
+  *
+  * A numeric or timestamp flag with a bad value ([[checkValues]]) is a
+  * usage error: exit 2, no store touched.
   *
   * All effects go through the injectable [[Deps]] so the whole surface is
   * spec-testable end-to-end against temp stores; `main` wires stdout
@@ -164,16 +172,15 @@ object Cli {
 
   private def dispatch(spark: SparkSession, argv: Seq[String], deps: Deps): Int = {
     import deps.out
-    val a = parse(argv) match {
+    val a = parse(argv).flatMap(checkValues) match {
       case Right(v) => v
       case Left(err) => out(s"error: $err"); return 2
     }
     val storeRoot = a.getOrElse("store",
       { out("error: --store <root> is required"); return 2 })
     val store = new MasterStore(storeRoot)
-    def sitemapStore = new MasterStore(
-      a.getOrElse("sitemap-store", s"$storeRoot-sitemap"),
-      empty = SitemapState.empty)
+    val sitemapRoot = a.getOrElse("sitemap-store", s"$storeRoot-sitemap")
+    def sitemapStore = new MasterStore(sitemapRoot, empty = SitemapState.empty)
     def outRoot = a.getOrElse("out", s"$storeRoot-sitemaps")
     // --metrics-store <root>: maintain the metrics snapshot table (the
     // reference's metrics Postgres DB) alongside the sink deliveries;
@@ -192,11 +199,9 @@ object Cli {
     // cursor dir's non-CAS swap). A crashed holder's lease expires after
     // --lease-ttl-min (default 120); a live one fails the second cron
     // loudly, naming the holder, with state untouched.
-    def leaseTtlMs: Long =
-      a.get("lease-ttl-min").flatMap(_.toLongOption).getOrElse(120L) * 60000L
     def withLease(root: String, file: String, owner: String)(body: => Int): Int = {
-      val lease = new graft.sources.CronLease(
-        java.nio.file.Paths.get(root, file), leaseTtlMs)
+      val lease = new graft.sources.CronLease(java.nio.file.Paths.get(root, file),
+        a.get("lease-ttl-min").fold(120L)(_.toLong) * 60000L)
       lease.tryAcquire(owner) match {
         case Left(held) =>
           out(s"error: another cron holds the lease: ${held.describe}. " +
@@ -207,8 +212,16 @@ object Cli {
       }
     }
     def withSitemapLease(owner: String)(body: => Int): Int =
-      withLease(a.getOrElse("sitemap-store", s"$storeRoot-sitemap"),
-        "cron.lease", owner)(body)
+      withLease(sitemapRoot, "cron.lease", owner)(body)
+
+    // delete files the state no longer lists from every site tree
+    // (tasks.py:639-641): --action remove and --cleanup-invalid-sitemaps
+    def deleteFromSiteTrees(files: Seq[String]): Unit =
+      for (f <- files; site <- Sitemap.Sites.keys) {
+        val p = new org.apache.hadoop.fs.Path(s"$outRoot/$site/$f")
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(p)) fs.delete(p, false)
+      }
 
     def namedBibcodes(): Seq[String] = {
       val fromList = a.get("bibcodes").toSeq.flatMap(_.split("\\s+")).filter(_.nonEmpty)
@@ -319,9 +332,7 @@ object Cli {
       // watermark selection, which pay an indexed table scan instead).
       // Behind the compaction horizon the verb fails loudly with the
       // first readable generation — re-baseline with a full export.
-      val fromGen = a("changes-since").toLongOption.getOrElse {
-        out("error: --changes-since needs a generation number"); return 2
-      }
+      val fromGen = a("changes-since").toLong
       val dest = a.getOrElse("report-out", s"$storeRoot-reports/changes")
       try {
         val feed = store.changesSince(spark, fromGen)
@@ -352,14 +363,9 @@ object Cli {
       // --orphan-grace-min N makes the sweep concurrency-safe: only
       // orphans whose newest mtime is older than N minutes are deleted
       // (the cadence paths use 60).
-      val retain = a.get("retain").map(_.toIntOption.getOrElse {
-        out("error: --retain needs a number"); return 2
-      }).getOrElse(2)
-      if (retain < 1) { out("error: --retain must be >= 1"); return 2 }
+      val retain = a.get("retain").fold(2)(_.toInt)
       val orphans = a.contains("orphans")
-      val graceMs = a.get("orphan-grace-min").map(_.toLongOption.getOrElse {
-        out("error: --orphan-grace-min needs a number of minutes"); return 2
-      } * 60000L).getOrElse(0L)
+      val graceMs = a.get("orphan-grace-min").fold(0L)(_.toLong * 60000L)
       def sweep(name: String, s: MasterStore): Unit = {
         val before = s.versions
         s.vacuum(alsoOrphans = orphans, retain = retain, orphanGraceMs = graceMs)
@@ -459,13 +465,7 @@ object Cli {
             removeFiles = res.filesToDelete
             res.state
           })
-          // delete now-empty files from every site tree (tasks.py:639-641)
-          val conf = spark.sparkContext.hadoopConfiguration
-          for (f <- removeFiles; site <- Sitemap.Sites.keys) {
-            val p = new org.apache.hadoop.fs.Path(s"$outRoot/$site/$f")
-            val fs = p.getFileSystem(conf)
-            if (fs.exists(p)) fs.delete(p, false)
-          }
+          deleteFromSiteTrees(removeFiles)
           out(s"removed ${bibs.length} bibcodes; " +
             s"deleted files: ${removeFiles.mkString(",")}")
         case "delete-table" =>
@@ -504,7 +504,7 @@ object Cli {
       }
       // modifying actions chain the file regeneration (run.py:500-510)
       if (Set("add", "force-update", "remove", "bootstrap")(action)) {
-        val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)
+        val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)._1
         out(s"manage-sitemap $action done; regenerated $n files")
       }
       0
@@ -512,7 +512,7 @@ object Cli {
 
     if (a.contains("update-sitemap-files")) return withSitemapLease(
         "update-sitemap-files") {
-      val n = Pipeline.runManagedSitemaps(spark, sitemapStore, outRoot, now)
+      val n = Pipeline.runManagedSitemaps(spark, sitemapStore, outRoot, now)._1
       out(s"regenerated $n sitemap files")
       0
     }
@@ -528,13 +528,8 @@ object Cli {
         cleanupFiles = res.filesToDelete
         res.state
       })
-      val conf = spark.sparkContext.hadoopConfiguration
-      for (f <- cleanupFiles; site <- Sitemap.Sites.keys) {
-        val p = new org.apache.hadoop.fs.Path(s"$outRoot/$site/$f")
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) fs.delete(p, false)
-      }
-      val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)
+      deleteFromSiteTrees(cleanupFiles)
+      val n = Pipeline.runManagedSitemaps(spark, sm, outRoot, now)._1
       out(s"cleanup removed entries; deleted files: ${cleanupFiles.mkString(",")}; " +
         s"regenerated $n files")
       0
@@ -556,23 +551,14 @@ object Cli {
       // behind the feed retention horizon, falls back to the reference's
       // full-scan shape — and the first run persists the cursor so every
       // later cadence is ∝ delta.
-      val daysBack = a.get("days-back").map(_.toIntOption.filter(_ >= 1).getOrElse {
-        out("error: --days-back needs a positive integer"); return 2
-      }).getOrElse(1)
+      val daysBack = a.get("days-back").fold(1)(_.toInt)
       val cutoff = new Timestamp(now.getTime - daysBack * 86400000L)
       val sm = sitemapStore
       // the file-ordinal member index (SitemapMembers) rides beside the
       // state store: the keyed cadence's members read opens the touched
       // files' buckets instead of every state file, and any out-of-band
-      // mutation is healed by one resync scan (stamp-validated).
-      // `--members-store off` disables it (a filename-pruned primary
-      // scan instead), the A/B lever for benches and operators
-      val members: Option[graft.operators.SitemapMembers] =
-        a.getOrElse("members-store",
-          s"${a.getOrElse("sitemap-store", s"$storeRoot-sitemap")}-members") match {
-          case "off" => None
-          case r => Some(new graft.operators.SitemapMembers(r))
-        }
+      // mutation is healed by one resync scan (stamp-validated)
+      val members = new graft.operators.SitemapMembers(s"$sitemapRoot-members")
       // the cursor lives in its OWN dir: Watermark.advance is a whole-dir
       // read-modify-swap with no CAS, so two maintenance crons sharing a
       // dir could drop each other's keys on a race — per-consumer dirs
@@ -632,8 +618,7 @@ object Cli {
                     sm.read(spark), smVer)
               }
             val (nf, next) = Pipeline.runSitemapCadenceKeyed(spark, sm,
-              outRoot, now, dueMaster, summary, stale,
-              memberIndex = members)
+              outRoot, now, dueMaster, summary, members, stale)
             cursor.advance()
             graft.operators.SitemapCadence.save(spark, wmDir, next)
             nf
@@ -657,8 +642,8 @@ object Cli {
           // the full render also rebuilds + persists the summary AND the
           // member index, so the NEXT cadence (the steady state) runs
           // keyed end-to-end without its own resync scan
-          val (nf, next) = Pipeline.runManagedSitemapsWithSummary(
-            spark, sm, outRoot, now, memberIndex = members)
+          val (nf, next) = Pipeline.runManagedSitemaps(
+            spark, sm, outRoot, now, memberIndex = Some(members))
           graft.operators.SitemapCadence.save(spark, wmDir, next)
           nf
       }
@@ -674,9 +659,8 @@ object Cli {
       // the files-opened accounting that PROVES the member-index prune:
       // parquet files the members read opened vs the index's total
       val memberScan =
-        members.filter(_.lastFilesOpened >= 0)
-          .map(mi => s"; members read ${mi.lastFilesOpened}/" +
-            s"${mi.lastFilesTotal} index files").getOrElse("")
+        if (members.lastFilesOpened < 0) ""
+        else s"; members read ${members.lastFilesOpened}/${members.lastFilesTotal} index files"
       out(s"auto update (${if (cursor.changes.isDefined) "feed" else "table-scan"} " +
         s"discovery): regenerated $n files ($coverage$memberScan)")
       0
@@ -1188,9 +1172,9 @@ object Cli {
 
   /** Shared sweep-flag parsing for -r and --index-from-feed — ONE place
     * for the sink-letter set, the reference's -f coupling (force +
-    * ignore_checksums together, run.py:82-86), and the validated
-    * --priority (ST8 fair-scheduler pool), so a flag added to one sweep
-    * command cannot silently diverge from the other. Left = usage-error
+    * ignore_checksums together, run.py:82-86), and the --priority (ST8
+    * fair-scheduler pool, range-checked by [[checkValues]]), so a flag
+    * added to one sweep command cannot silently diverge from the other. Left = usage-error
     * message (caller prefixes its command name and exits 2). */
   private def sweepFlags(a: Map[String, String], letters: String)
       : Either[String, (Set[String], Boolean, Boolean, Int)] = {
@@ -1201,10 +1185,7 @@ object Cli {
     if (sinks.isEmpty) return Left("needs at least one of s/m/l")
     val force = a.contains("force_indexing") || a.contains("force_processing")
     val ignoreChecksums = a.contains("force_indexing") || a.contains("ignore_checksums")
-    a.get("priority").map(_.toIntOption) match {
-      case Some(None) => Left("--priority needs an integer")
-      case p => Right((sinks, force, ignoreChecksums, p.flatten.getOrElse(0)))
-    }
+    Right((sinks, force, ignoreChecksums, a.get("priority").fold(0)(_.toInt)))
   }
 
   /** Tiny flag parser: `--key value`, `--key` (boolean), plus the short
@@ -1220,8 +1201,7 @@ object Cli {
       "scix-id-flag", "ingest", "consume", "checkpoint", "metrics-store",
       "batch_size", "solr-collection", "classifier_batch",
       "report-docs", "report-out", "retain", "orphan-grace-min",
-      "changelog", "changes-since", "lease-ttl-min", "members-store",
-      "unregister-consumer")
+      "changelog", "changes-since", "lease-ttl-min", "unregister-consumer")
     // -r's letters are optional (nargs='?'): a following token that is not
     // a flag is its value, otherwise the default applies
     val optionalValued = Set("index", "index-from-feed")
@@ -1247,4 +1227,30 @@ object Cli {
     }
     Right(m)
   }
+
+  /** The numeric and timestamp flags with their legal values, as (flag,
+    * what it needs, check). */
+  private val ValueChecks: Seq[(String, String, String => Boolean)] = {
+    def int(min: Int)(v: String) = v.toIntOption.exists(_ >= min)
+    def long(min: Long)(v: String) = v.toLongOption.exists(_ >= min)
+    Seq(
+      ("batch_size", "a positive integer", int(1)),
+      ("classifier_batch", "a positive integer", int(1)),
+      ("retain", "a positive integer", int(1)),
+      ("days-back", "a positive integer", int(1)),
+      ("priority", "an integer", int(Int.MinValue)),
+      ("changes-since", "a generation number", long(0)),
+      ("lease-ttl-min", "a positive number of minutes", long(1)),
+      ("orphan-grace-min", "a non-negative number of minutes", long(0)),
+      ("since", "a timestamp yyyy-mm-dd hh:mm:ss[.f]",
+        v => scala.util.Try(Timestamp.valueOf(v)).isSuccess))
+  }
+
+  /** The one reader of [[ValueChecks]], run on the parsed flags before
+    * any command: a bad value is a usage error (exit 2) that touches no
+    * store, and every call site converts its flag without re-checking. */
+  private def checkValues(a: Map[String, String]): Either[String, Map[String, String]] =
+    ValueChecks.collectFirst { case (k, need, ok) if a.get(k).exists(!ok(_)) =>
+      s"--$k needs $need, got '${a(k)}'"
+    }.toLeft(a)
 }

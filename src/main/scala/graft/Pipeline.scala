@@ -663,20 +663,13 @@ object Pipeline {
     * (filename_lastmoddate = now, flag cleared) and advance the state
     * store. The per-site index lists ALL files in the state with
     * lastmod = max member bib_data_updated, so untouched files keep
-    * their index entry and lastmod. Returns the regenerated file count. */
+    * their index entry and lastmod. Returns the regenerated file count
+    * and the [[SitemapCadence]] summary of the post-run state, derived
+    * from the SAME per-file aggregation the site indexes already need —
+    * the cron persists it so the next feed-driven cadence skips the
+    * table-wide state reads entirely ([[runSitemapCadenceKeyed]]). */
   def runManagedSitemaps(spark: SparkSession, stateStore: MasterStore,
       outRoot: String, now: Timestamp,
-      siteKeys: Seq[String] = Sitemap.Sites.keys.toSeq.sorted): Long =
-    runManagedSitemapsWithSummary(spark, stateStore, outRoot, now, siteKeys)._1
-
-  /** [[runManagedSitemaps]] that also returns the [[SitemapCadence]]
-    * summary of the post-run state, derived from the SAME per-file
-    * aggregation the site indexes already needed — the cadence caller
-    * persists it so the next feed-driven cron skips the table-wide state
-    * reads entirely ([[runSitemapCadenceKeyed]]). */
-  def runManagedSitemapsWithSummary(spark: SparkSession, stateStore: MasterStore,
-      outRoot: String, now: Timestamp,
-      siteKeys: Seq[String] = Sitemap.Sites.keys.toSeq.sorted,
       maxPerFile: Int = Sitemap.MaxRecordsPerSitemap,
       memberIndex: Option[SitemapMembers] = None): (Long, SitemapCadence.Summary) =
     Pins.scope("runManagedSitemaps") {
@@ -685,15 +678,13 @@ object Pipeline {
       val work = Pins.cache(SitemapState.renderable(state0, today), "sitemaps.work")
       val files = work.select(col("sitemap_filename")).distinct()
         .collect().map(_.getString(0)) // bounded: ≤ corpus / maxPerFile names
-      for (key <- siteKeys) {
-        val site = Sitemap.Sites(key)
+      for ((key, site) <- Sitemap.Sites)
         Sitemap.writeFiles(Sitemap.renderFiles(work, site), s"$outRoot/$key")
-      }
       // index entries for EVERY file in the table (tasks.py:888-899), not
       // just the regenerated ones; one tiny aggregation — the same pass
       // yields the cadence summary's per-file stats and fill cursor
       val (summary0, _) = SitemapCadence.rebuild(state0, 0L, maxPerFile)
-      writeSiteMeta(spark, outRoot, siteKeys, summary0, today)
+      writeSiteMeta(spark, outRoot, summary0, today)
       import spark.implicits._
       // generated-flag clears are key-local (exactly the rendered files'
       // member rows), and the stamped rows are PRECOMPUTED from the cached
@@ -731,12 +722,10 @@ object Pipeline {
     * sequential driver RPCs per regeneration cycle on HDFS/object
     * stores. */
   private def writeSiteMeta(spark: SparkSession, outRoot: String,
-      siteKeys: Seq[String], summary: SitemapCadence.Summary,
-      today: String): Unit = {
+      summary: SitemapCadence.Summary, today: String): Unit = {
     val allFiles = summary.files
       .map(f => f.name -> summary.lastmodOf(f, today)).sortBy(_._1)
-    for (key <- siteKeys) {
-      val site = Sitemap.Sites(key)
+    for ((key, site) <- Sitemap.Sites) {
       val dir = new org.apache.hadoop.fs.Path(s"$outRoot/$key")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(dir)
@@ -768,14 +757,11 @@ object Pipeline {
     *  - the render worklist: affected files = files holding a flagged due
     *    row (from the addKeyed output already in hand) plus any
     *    stale-flagged files the summary rebuild surfaced — their member
-    *    rows come from the [[SitemapMembers]] file-ordinal index when one
-    *    is wired (IO ∝ touched files: only their buckets' files open,
-    *    [[SitemapMembers.membersOf]]), else from a filename-pruned filter
-    *    scan of the primary (predicate pushes, but every data file
-    *    opens — kept for index-less callers); either
-    *    read is overlaid with this run's merged rows, and the whole
-    *    cadence then publishes ONE keyed merge per store (identical
-    *    key/row frames to both layouts) at the end;
+    *    rows come from the [[SitemapMembers]] file-ordinal index (IO ∝
+    *    touched files: only their buckets' files open,
+    *    [[SitemapMembers.membersOf]]), overlaid with this run's merged
+    *    rows, and the whole cadence then publishes ONE keyed merge per
+    *    store (identical key/row frames to both layouts) at the end;
     *  - the index lastmods: untouched files keep their summary stats
     *    (valid by the generation check), affected files recompute EXACTLY
     *    from the member rows the render already has in hand.
@@ -793,29 +779,17 @@ object Pipeline {
       now: Timestamp,
       dueMaster: DataFrame,
       summary: SitemapCadence.Summary,
+      memberIndex: SitemapMembers,
       staleFlaggedFiles: Seq[String] = Nil,
-      maxPerFile: Int = Sitemap.MaxRecordsPerSitemap,
-      siteKeys: Seq[String] = Sitemap.Sites.keys.toSeq.sorted,
-      force: Boolean = false,
-      memberIndex: Option[SitemapMembers] = None): (Long, SitemapCadence.Summary) = {
+      maxPerFile: Int = Sitemap.MaxRecordsPerSitemap): (Long, SitemapCadence.Summary) = {
     import spark.implicits._
-    // phase tracing for the cadence (GRAFT_CADENCE_TRACE=1): stderr wall
-    // per phase, to locate a slow phase without a profiler; cheap enough
-    // to keep, silent by default
-    val trace = sys.env.get("GRAFT_CADENCE_TRACE").contains("1")
-    var phaseT0 = System.nanoTime()
-    def phase(name: String): Unit = if (trace) {
-      System.err.println(f"[cadence] $name ${(System.nanoTime() - phaseT0) / 1e9}%.2f s")
-      phaseT0 = System.nanoTime()
-    }
     val today = new java.text.SimpleDateFormat("yyyy-MM-dd").format(now)
     // the member index mirrors the primary ∝ delta below; a stale mirror
     // (out-of-band mutation, crash between the primary publish and the
     // stamp, or a brand-new index) pays ONE resync scan HERE — before any
     // of this run's writes — and is exact from then on
-    memberIndex.filterNot(_.isFresh(stateStore.currentVersion.getOrElse(0L)))
-      .foreach(_.resync(spark, stateStore))
-    phase("resync-check")
+    if (!memberIndex.isFresh(stateStore.currentVersion.getOrElse(0L)))
+      memberIndex.resync(spark, stateStore)
     val dueKeys = dueMaster.select(col("bibcode")).distinct()
     // THE one keyed state read of the cadence: the due keys' current rows,
     // all columns, with the crossover raised so a cadence-sized wave stays
@@ -831,7 +805,6 @@ object Pipeline {
       val due = Pins.cache(dueKeys.join(preRows.filter(col("update_flag"))
         .select(col("bibcode")), Seq("bibcode"), "left_anti"), "cadence.due")
       val newCnt = SitemapState.countNewAssignments(dueMaster, due, preRows)
-      phase("lookup+newcnt")
       val fill = summary.fill
       val dueRows = preRows.join(due, Seq("bibcode"), "left_semi")
       // the merged rows are computed ONCE, from the rows already in hand,
@@ -841,7 +814,7 @@ object Pipeline {
       // precomputed-rows publish contract runBatch's stamp publish uses,
       // under the same single-cron-writer assumption
       val newRows = Pins.cache(SitemapState.addKeyed(dueRows, dueMaster, due, fill,
-        maxPerFile, force), "cadence.newRows")
+        maxPerFile), "cadence.newRows")
       val nextFill = SitemapState.advanceFill(fill, newCnt, maxPerFile)
       // the merge output IS the post-merge state of the due keys. TWO
       // file sets fall out: the RENDER set (files holding a flagged due
@@ -857,7 +830,6 @@ object Pipeline {
       val dueFiles = newRows.filter(col("sitemap_filename").isNotNull)
         .select(col("sitemap_filename")).distinct()
         .collect().map(_.getString(0)).toSeq
-      phase("file-sets")
       val renderSet = (flaggedFiles ++ staleFlaggedFiles).distinct.sorted
       val statSet = (dueFiles ++ staleFlaggedFiles).distinct.sorted
       if (statSet.isEmpty) {
@@ -867,45 +839,33 @@ object Pipeline {
         // it on both stores (less feed noise than an empty merge,
         // identical live state); the per-site static/index/robots still
         // refresh, as the full path's would
-        writeSiteMeta(spark, outRoot, siteKeys, summary, today)
-        memberIndex.foreach(_.commit(stateStore.currentVersion.getOrElse(0L)))
+        writeSiteMeta(spark, outRoot, summary, today)
+        memberIndex.commit(stateStore.currentVersion.getOrElse(0L))
         return (0L, summary.copy(
           generation = stateStore.currentVersion.getOrElse(0L),
           fillIndex = nextFill.index, fillCount = nextFill.count))
       }
       // member rows of the touched files (a whole file regenerates when
       // any member changed; output rows bounded by files touched ×
-      // maxPerFile). With a member index this opens the touched files'
-      // BUCKETS only — IO ∝ touched files, the reference's indexed member
-      // fetch (tasks.py:986-990). Without one the IN predicate pushes into the primary's scan but the
-      // bibcode-bucketed layout cannot file-prune a filename predicate,
-      // so every data file opens — a ∝-corpus pass per cron
-      // both reads are PRE-publish (the cadence publishes ONCE, at the
-      // end, to each store): overlay this run's newRows for the due keys
-      // — both frames are in hand, ∝ delta — so the view equals the
-      // post-publish state exactly
-      def overlay(base: DataFrame): DataFrame = Pins.cache(base
+      // maxPerFile): the member index opens the touched files' BUCKETS
+      // only — IO ∝ touched files, the reference's indexed member fetch
+      // (tasks.py:986-990). The read is PRE-publish (the cadence
+      // publishes ONCE, at the end, to each store): overlay this run's
+      // newRows for the due keys — both frames are in hand, ∝ delta — so
+      // the view equals the post-publish state exactly
+      val members = Pins.cache(memberIndex.membersOf(spark, statSet)
         .join(due, Seq("bibcode"), "left_anti")
         .unionByName(newRows.filter(col("sitemap_filename").isin(statSet: _*))),
         "cadence.members")
-      val members = memberIndex match {
-        case Some(mi) => overlay(mi.membersOf(spark, statSet))
-        case None => overlay(stateStore.read(spark)
-          .filter(col("sitemap_filename").isin(statSet: _*)))
-      }
       val renderMembers = Pins.cache(members
         .filter(col("sitemap_filename").isin(renderSet: _*)), "cadence.renderMembers")
-      if (trace) { members.count(); phase("members-materialize") }
-      phase("members-read")
       val work = renderMembers.select(col("record_id").as("id"), col("bibcode"),
         col("sitemap_filename"),
         coalesce(date_format(col("bib_data_updated"), "yyyy-MM-dd"), lit(today))
           .as("lastmod"))
       if (renderSet.nonEmpty)
-        for (key <- siteKeys)
-          Sitemap.writeFiles(Sitemap.renderFiles(work, Sitemap.Sites(key)),
-            s"$outRoot/$key")
-      phase("render")
+        for ((key, site) <- Sitemap.Sites)
+          Sitemap.writeFiles(Sitemap.renderFiles(work, site), s"$outRoot/$key")
       // exact per-file stats of every touched file from the members
       // already in hand; untouched files keep their summary stats (valid
       // by the generation check — nothing else wrote the state)
@@ -914,15 +874,13 @@ object Pipeline {
           max(when(col("bib_data_updated").isNull, 1).otherwise(0)).as("nulls"))
         .collect().map(r => SitemapCadence.FileStat(r.getString(0),
           Option(r.getString(1)), r.getInt(2) > 0)).toSeq
-      phase("touched-stats")
       val statNames = statSet.toSet
       // a stale-flagged file emptied out-of-band (all members removed)
       // renders nothing and drops from the stats
       val files2 = (summary.files.filterNot(f => statNames(f.name)) ++ touchedStats)
         .sortBy(_.name)
       val next = SitemapCadence.Summary(0L, nextFill.index, nextFill.count, files2)
-      writeSiteMeta(spark, outRoot, siteKeys, next, today)
-      phase("site-meta")
+      writeSiteMeta(spark, outRoot, next, today)
       // ONE publish per store for the whole cadence, identical (keys,
       // rows) on both: the due keys' post rows — stamped where their
       // file was rendered, newRows' version elsewhere (every flagged row
@@ -951,65 +909,10 @@ object Pipeline {
         case None => (due.select(col("bibcode")), newRows)
       }
       stateStore.writeMergeKeyed(spark, pubKeys, _ => pubRows)
-      phase("publish-primary")
-      memberIndex.foreach { mi =>
-        mi.merge(spark, pubKeys, pubRows)
-        mi.commit(stateStore.currentVersion.getOrElse(0L))
-      }
-      phase("publish-index")
+      memberIndex.merge(spark, pubKeys, pubRows)
+      memberIndex.commit(stateStore.currentVersion.getOrElse(0L))
       (renderSet.size.toLong,
         next.copy(generation = stateStore.currentVersion.getOrElse(0L)))
     }
-  }
-
-  /** Multi-site sitemap generation (the reference renders one output tree
-    * per configured site, tasks.py:969-1055): one subdirectory per site
-    * key, each with its bib files, static sitemap, index, and robots. */
-  def runSitemapsAllSites(spark: SparkSession, store: MasterStore, outRoot: String,
-      siteKeys: Seq[String] = Sitemap.Sites.keys.toSeq.sorted): Map[String, Long] =
-    siteKeys.map(k => k -> runSitemaps(spark, store, s"$outRoot/$k", k)).toMap
-
-  /** Sitemap generation over the live snapshot (SURVEY.md §3.3):
-    * P7 include → W1 bucket → render → write files + index + robots. */
-  def runSitemaps(spark: SparkSession, store: MasterStore, outDir: String,
-      siteKey: String = "ads", maxPerFile: Int = Sitemap.MaxRecordsPerSitemap): Long = {
-    val site = Sitemap.Sites(siteKey)
-    // the ordinal and rendered pins are released once the files are
-    // written and their index entries collected
-    val files = Pins.scope("runSitemaps") {
-      val included = store.read(spark)
-        .filter(Sitemap.shouldInclude)
-        .select(col("id"), col("bibcode"),
-          date_format(coalesce(col("bib_data_updated"), col("updated")), "yyyy-MM-dd").as("lastmod"))
-      val assigned = Sitemap.assignFilenames(included, maxPerFile)
-      val rendered = Pins.cache(Sitemap.renderFiles(assigned, site), "runSitemaps.rendered")
-      Sitemap.writeFiles(rendered, outDir)
-      // (filename, lastmod) pairs for the index: renderFiles carries
-      // max(lastmod) per file, the analog of the reference's per-file mtime
-      // (tasks.py:932-941) — an untouched file keeps its index lastmod, so
-      // crawlers don't refetch files that didn't change
-      rendered.select(col("sitemap_filename"), col("file_lastmod")).collect()
-        .map(r => r.getString(0) -> r.getString(1)).sortBy(_._1)
-    }
-    val today = java.time.LocalDate.now.toString
-    // driver-side writes go through the same Hadoop FileSystem as the
-    // distributed bib files — outDir may be HDFS/S3, and an empty corpus
-    // (zero partitions, so writeFiles never ran mkdirs) must still get
-    // its static/index/robots files (the reference generates empty
-    // indexes too)
-    val dir = new org.apache.hadoop.fs.Path(outDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dir)
-    def put(name: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    // static page sitemap precedes the bib files in the index; only the
-    // static entry is stamped with the current date (tasks.py:916-928)
-    put("sitemap_static.xml", Sitemap.renderStaticSitemap(site))
-    put("sitemap_index.xml", Sitemap.renderIndex(site, files.toSeq,
-      staticFirst = Seq("sitemap_static.xml" -> today)))
-    put("robots.txt", Sitemap.renderRobots(site))
-    files.length.toLong
   }
 }

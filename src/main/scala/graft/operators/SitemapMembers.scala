@@ -15,14 +15,13 @@ import graft.sources.MasterStore
   * Why it exists: the primary state store is bucketed by hash(bibcode) —
   * the right layout for the cadence's due-key reads and keyed merges —
   * but "every member row of these k touched files" is keyed by
-  * sitemap_filename, whose 50k members hash into EVERY bucket. That read
-  * was the keyed cadence's one remaining ∝-corpus pass: the filename-IN
-  * predicate pushes into the scan but nothing file-prunes it, so every
-  * data file opens every cron. This store holds the SAME rows laid out by
-  * `pmod(file ordinal, n)` ([[MasterStore.Layout]]): members of one file
-  * live in one bucket, so the members read opens the touched files'
-  * buckets (plus the tombstone bucket) — IO ∝ touched files, the exact
-  * shape of the reference's indexed fetch, at 100 TB as at 28.8M.
+  * sitemap_filename, whose 50k members hash into EVERY bucket, so no
+  * primary read of them can file-prune. This store holds the SAME rows
+  * laid out by `pmod(file ordinal, n)` ([[MasterStore.Layout]]): members
+  * of one file live in one bucket, so the keyed cadence's one members
+  * read ([[membersOf]]) opens the touched files' buckets (plus the
+  * tombstone bucket) — IO ∝ touched files, the exact shape of the
+  * reference's indexed fetch, at 100 TB as at 28.8M.
   *
   * Consistency contract (same class as [[SitemapCadence]]'s summary): the
   * index is a MIRROR, stamped (sibling `mirror.json`, temp+rename) with
@@ -117,8 +116,8 @@ final class SitemapMembers(val root: String, val numBuckets: Int = 64) {
 
   /** Accounting for the last [[membersOf]]: parquet files the pruned plan
     * reads vs the store's base file count — the files-opened proof that
-    * the members read is ∝ touched files, not ∝ corpus. Bench-facing
-    * only; correctness never reads these. */
+    * the members read is ∝ touched files, not ∝ corpus (the sitemap
+    * cron prints them); correctness never reads these. */
   @volatile var lastFilesOpened: Int = -1
   @volatile var lastFilesTotal: Int = -1
 }

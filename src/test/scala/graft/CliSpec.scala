@@ -1191,6 +1191,91 @@ class CliSpec extends AnyFunSuite with SparkSpec {
     assert(store.consumerCursors.isEmpty)
   }
 
+  test("a bad numeric or timestamp flag value exits 2 with an error line " +
+    "and touches no store or sink") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_vals").toString
+    val store = new graft.sources.MasterStore(s"$root/master")
+    val log = collection.mutable.Buffer.empty[String]
+    val (_, d) = deps(log)
+    val argvBase = Seq("--store", s"$root/master",
+      "--sitemap-store", s"$root/smstate", "--out", s"$root/sitemaps")
+    Pipeline.runBatch(spark, store, Seq(records.UpdateMessage("2024Val......1A",
+      "metadata", """{"title": ["one"]}""", Timestamp.valueOf("2024-05-30 00:00:00"))).toDS(),
+      d.solrTransport, d.bulkTransport, now = Timestamp.valueOf("2024-05-31 00:00:00"))
+    assert(Cli.run(spark, argvBase ++ Seq("--manage-sitemap", "--action", "bootstrap"), d) == 0)
+    val csv = java.nio.file.Paths.get(root, "manual.csv")
+    java.nio.file.Files.write(csv, "bibcode,title\n2024Val......1A,one\n".getBytes("UTF-8"))
+    def tree(): Map[String, (Long, Long)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => p.toString -> (p.toFile.length, p.toFile.lastModified)).toMap
+      finally walk.close()
+    }
+    val before = tree()
+    val sent = CliSpec.batches.get
+    val bad = Seq(
+      Seq("--boost-all", "-e", "abc"),
+      Seq("--boost-all", "--batch_size", "0"),
+      Seq("--classify", "--manual", "-n", csv.toString, "--classifier_batch", "abc"),
+      Seq("-r", "-s", "2024-01-01"),
+      Seq("--delete_obsolete", "--since", "2024-01-01"),
+      Seq("--update-sitemap-files", "--lease-ttl-min", "abc"),
+      Seq("--vacuum", "--orphans", "--orphan-grace-min", "-5"),
+      // the member index is always on: the old switch is no flag at all
+      Seq("--update-sitemaps-auto", "--members-store", "off"))
+    for (args <- bad) {
+      log.clear()
+      assert(Cli.run(spark, argvBase ++ args, d) == 2, s"$args: $log")
+      assert(log.exists(_.startsWith("error:")), s"$args: $log")
+      assert(tree() == before, s"$args touched the stores")
+    }
+    assert(CliSpec.batches.get == sent, "no sink saw a delivery")
+  }
+
+  test("an out-of-band sitemap action between two crons leaves the member " +
+    "index stale: the next --update-sitemaps-auto resyncs it exactly once, " +
+    "the cron after it resyncs nothing, and the index mirrors the state") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cli_smidx").toString
+    val store = new graft.sources.MasterStore(s"$root/master")
+    val log = collection.mutable.Buffer.empty[String]
+    val (_, d) = deps(log)
+    val argvBase = Seq("--store", s"$root/master",
+      "--sitemap-store", s"$root/smstate", "--out", s"$root/sitemaps")
+    def ingest(bib: String, t: String): Unit =
+      Pipeline.runBatch(spark, store, Seq(records.UpdateMessage(bib, "metadata",
+        s"""{"title": ["$bib"]}""", Timestamp.valueOf(t))).toDS(),
+        d.solrTransport, d.bulkTransport,
+        now = Timestamp.valueOf("2024-05-31 00:00:00"), keyLocal = true)
+    // one cron; returns how many resync lines it wrote to stderr
+    def cron(): Int = {
+      log.clear()
+      val (rc, err) = capturingStderr(Cli.run(spark, argvBase ++
+        Seq("--update-sitemaps-auto", "--days-back", "7"), d))
+      assert(rc == 0, s"$log")
+      err.linesIterator.count(l => l.contains("[sitemap-members]") && l.contains("resyncing"))
+    }
+    ingest("2024Idx......1A", "2024-05-30 00:00:00")
+    cron() // table-scan bootstrap: the full render builds the index
+    ingest("2024Idx......2B", "2024-05-30 06:00:00")
+    assert(Cli.run(spark, argvBase ++
+      Seq("--manage-sitemap", "--action", "add", "-b", "2024Idx......2B"), d) == 0)
+    ingest("2024Idx......3C", "2024-05-30 12:00:00")
+    assert(cron() == 1, "the stale index resyncs once")
+    assert(log.exists(_.contains("feed discovery")), s"got $log")
+    ingest("2024Idx......4D", "2024-05-30 18:00:00")
+    assert(cron() == 0, "a fresh index never resyncs")
+    assert(log.exists(_.contains("members read")), s"got $log")
+    def rows(s: graft.sources.MasterStore): Set[String] =
+      s.read(spark).collect().map(_.mkString("|")).toSet
+    val state = new graft.sources.MasterStore(s"$root/smstate",
+      empty = graft.operators.SitemapState.empty)
+    val index = new graft.operators.SitemapMembers(s"$root/smstate-members")
+    assert(rows(state).size == 4)
+    assert(rows(index.store) == rows(state), "the index mirrors the primary state")
+  }
+
   test("--ingest whose batch throws releases every frame the command cached " +
     "and every pin it took") {
     val root = java.nio.file.Files.createTempDirectory("graft_cli_throw").toString

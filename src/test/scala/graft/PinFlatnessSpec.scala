@@ -120,6 +120,27 @@ class PinFlatnessSpec extends AnyFunSuite with SparkSpec {
         s"$marker occurs at ${bySite.getOrElse(marker, Nil)}; only at $want")
   }
 
+  test("src/main reads only allow-listed environment variables: the " +
+    "SPARK_GRAFT_* harness knobs in Cli, Bench and Verify, and GRAFT_CC_DEBUG " +
+    "in Components") {
+    def allowed(file: String, name: String): Boolean =
+      (Set("Cli.scala", "Bench.scala", "Verify.scala")(file) &&
+        name.startsWith("SPARK_GRAFT_")) ||
+        (file == "Components.scala" && name == "GRAFT_CC_DEBUG")
+    // every env access must name its variable, so an unnamed read fails too
+    val access = raw"sys\.env|System\.getenv".r
+    val namedRead =
+      raw"""(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\("(\w+)"""".r
+    val found = for {
+      f <- mainSources
+      src = text(f)
+      m <- access.findAllMatchIn(src).toSeq
+      name = namedRead.findPrefixMatchOf(src.substring(m.start)).map(_.group(1))
+      if !name.exists(allowed(f.getName, _))
+    } yield s"${f.getName}: ${src.substring(m.start).takeWhile(_ != '\n')}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
   test("src/main has no entry points besides Cli, Bench and Verify") {
     val mains = mainSources.filter(f => text(f).contains("def main(")).map(_.getName).toSet
     assert(mains == Set("Cli.scala", "Bench.scala", "Verify.scala"), mains)

@@ -484,10 +484,18 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     store.vacuum()
     assert(store.versions == Seq(2L))
 
-    // sitemaps over the live snapshot (p1, p2 have bib_data; p3 too)
-    val smDir = java.nio.file.Files.createTempDirectory("graft_sm_out").toString
-    val nFiles = Pipeline.runSitemaps(spark, store, smDir, "ads", maxPerFile = 2)
+    // sitemaps over the live snapshot (p1, p2 have bib_data; p3 too):
+    // bootstrap the state from it, then one full render of every site
+    val smState = new MasterStore(
+      java.nio.file.Files.createTempDirectory("graft_sm_state").toString,
+      empty = graft.operators.SitemapState.empty)
+    smState.writeMerge(spark, st =>
+      graft.operators.SitemapState.bootstrap(st, store.read(spark), maxPerFile = 2))
+    val smRoot = java.nio.file.Files.createTempDirectory("graft_sm_out").toString
+    val (nFiles, _) = Pipeline.runManagedSitemaps(spark, smState, smRoot,
+      ts("2024-01-05 00:00:00"), maxPerFile = 2)
     assert(nFiles >= 1)
+    val smDir = s"$smRoot/ads"
     assert(new java.io.File(smDir, "sitemap_index.xml").exists)
     assert(new java.io.File(smDir, "robots.txt").exists)
     val first = new String(java.nio.file.Files.readAllBytes(
@@ -495,13 +503,12 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     assert(first.contains("/abs/") && first.startsWith("<?xml"))
 
     // multi-site: one tree per site, each with its own URL pattern
-    val multiDir = java.nio.file.Files.createTempDirectory("graft_sm_multi").toString
-    val perSite = Pipeline.runSitemapsAllSites(spark, store, multiDir)
-    assert(perSite.keySet == Set("ads", "scix"))
+    val perSite = new java.io.File(smRoot).list().toSet
+    assert(perSite == Set("ads", "scix"))
     val adsXml = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(s"$multiDir/ads", "sitemap_bib_1.xml").toPath), "UTF-8")
+      new java.io.File(s"$smRoot/ads", "sitemap_bib_1.xml").toPath), "UTF-8")
     val scixXml = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(s"$multiDir/scix", "sitemap_bib_1.xml").toPath), "UTF-8")
+      new java.io.File(s"$smRoot/scix", "sitemap_bib_1.xml").toPath), "UTF-8")
     assert(adsXml.contains("ui.adsabs.harvard.edu") && scixXml.contains("scixplorer.org"))
   }
 

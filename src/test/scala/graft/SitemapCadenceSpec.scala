@@ -99,9 +99,9 @@ class SitemapCadenceSpec extends AnyFunSuite with SparkSpec {
     // seed both: bootstrap + full render; A keeps the summary from it
     smA.writeMerge(spark, st => SitemapState.bootstrap(st, master, maxPerFile))
     smB.writeMerge(spark, st => SitemapState.bootstrap(st, master, maxPerFile))
-    var summary = Pipeline.runManagedSitemapsWithSummary(spark, smA, outA, now,
+    var summary = Pipeline.runManagedSitemaps(spark, smA, outA, now,
       maxPerFile = maxPerFile)._2
-    Pipeline.runManagedSitemapsWithSummary(spark, smB, outB, now,
+    Pipeline.runManagedSitemaps(spark, smB, outB, now,
       maxPerFile = maxPerFile)
     def check(tag: String): Unit = {
       assert(stateRows(smA) == stateRows(smB), s"$tag: state diverged")
@@ -120,7 +120,7 @@ class SitemapCadenceSpec extends AnyFunSuite with SparkSpec {
         else SitemapCadence.rebuild(smA.read(spark), smVer, maxPerFile)
       val dueMaster = master.join(due, Seq("bibcode"), "left_semi")
       summary = Pipeline.runSitemapCadenceKeyed(spark, smA, outA, now,
-        dueMaster, sum2, stale, maxPerFile, memberIndex = Some(miA))._2
+        dueMaster, sum2, miA, stale, maxPerFile)._2
       // the member index mirrors the primary exactly after every wave
       // (same rows, different physical layout)
       assert(miA.store.read(spark).collect().map(_.mkString("|")).toSet ==
@@ -133,7 +133,7 @@ class SitemapCadenceSpec extends AnyFunSuite with SparkSpec {
         SitemapState.add(st, master,
           due.join(flagged, Seq("bibcode"), "left_anti"), maxPerFile)
       })
-      Pipeline.runManagedSitemapsWithSummary(spark, smB, outB, now,
+      Pipeline.runManagedSitemaps(spark, smB, outB, now,
         maxPerFile = maxPerFile)
       check(tag)
     }
@@ -221,20 +221,18 @@ class SitemapCadenceSpec extends AnyFunSuite with SparkSpec {
     val notADir = java.nio.file.Files.createTempFile("graft_smthrow", ".out").toString
     val master = masterFrame((1L to 7L).map(i =>
       (i, f"T$i%018d", Some("2024-01-01 00:00:00")))).localCheckpoint()
-    val store = new MasterStore(s"$root/master", numBuckets = 2)
-    store.write(master)
     val sm = new MasterStore(s"$root/sm", empty = SitemapState.empty)
     sm.writeMerge(spark, st => SitemapState.bootstrap(st, master, maxPerFile))
     val now = ts("2024-02-01 00:00:00")
-    val summary = Pipeline.runManagedSitemapsWithSummary(spark, sm, s"$root/out", now,
+    val summary = Pipeline.runManagedSitemaps(spark, sm, s"$root/out", now,
       maxPerFile = maxPerFile)._2
     val newRows = masterFrame(Seq((8L, f"T${8}%018d", Some("2024-02-02 00:00:00"))))
     val runs = Seq[(String, () => Any)](
-      "runManagedSitemapsWithSummary" -> (() => Pipeline.runManagedSitemapsWithSummary(
+      "runManagedSitemaps" -> (() => Pipeline.runManagedSitemaps(
         spark, sm, notADir, now, maxPerFile = maxPerFile)),
       "runSitemapCadenceKeyed" -> (() => Pipeline.runSitemapCadenceKeyed(spark, sm,
-        notADir, now, newRows, summary, maxPerFile = maxPerFile)),
-      "runSitemaps" -> (() => Pipeline.runSitemaps(spark, store, notADir, "ads", maxPerFile)))
+        notADir, now, newRows, summary, new SitemapMembers(s"$root/sm-members",
+          numBuckets = 2), maxPerFile = maxPerFile)))
     for ((name, run) <- runs) {
       spark.catalog.clearCache()
       Pins.releaseAll()

@@ -247,7 +247,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
       (3L, "2023MultiFile2A", "sitemap_bib_2.xml", true),
       (4L, "2023MultiFile2B", "sitemap_bib_2.xml", true))))
     val n = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-01 00:00:00"))
+      ts("2024-06-01 00:00:00"))._1
     assert(n == 2, "both flagged files regenerated")
     def read(f: String) = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/out/ads/$f")), "UTF-8")
@@ -273,7 +273,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_seq_empty").toString
     val stateStore = new MasterStore(s"$root/smstate", empty = SitemapState.empty)
     val n = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-01 00:00:00"))
+      ts("2024-06-01 00:00:00"))._1
     assert(n == 0, "nothing to regenerate")
     for (site <- Seq("ads", "scix")) {
       val p = java.nio.file.Paths.get(s"$root/out/$site/sitemap_index.xml")
@@ -295,7 +295,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
     stateStore.write(stateOf(Seq(
       (1L, "2023Missing..1..1A", "sitemap_bib_missing.xml", false))))
     val n = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-01 00:00:00"))
+      ts("2024-06-01 00:00:00"))._1
     assert(n == 0)
     val idx = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/out/ads/sitemap_index.xml")), "UTF-8")
@@ -344,7 +344,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
     stateStore.write(SitemapState.bootstrap(SitemapState.empty(spark), master0,
       maxPerFile = 3))
     val n = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-01 00:00:00"))
+      ts("2024-06-01 00:00:00"))._1
     assert(n == 3, "three files regenerate")
 
     def read(site: String, f: String) = new String(java.nio.file.Files.readAllBytes(
@@ -394,7 +394,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
     assert(mid.filter(_._2._2).keySet == Set("2023Multi..4..10X", "2023Multi..4..11X"),
       "only the new rows are flagged")
     val n2 = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-02 00:00:00"))
+      ts("2024-06-02 00:00:00"))._1
     assert(n2 == 1, "only file 4 regenerates")
     for (site <- Seq("ads", "scix")) {
       val c4 = read(site, "sitemap_bib_4.xml")
@@ -517,7 +517,7 @@ class SitemapSequenceSpec extends AnyFunSuite with SparkSpec {
     assert(flagged == Set("2023DelTest..1..1A"),
       "exactly the min-record_id survivor is flagged")
     val n = Pipeline.runManagedSitemaps(spark, stateStore, s"$root/out",
-      ts("2024-06-02 00:00:00"))
+      ts("2024-06-02 00:00:00"))._1
     assert(n == 1)
     val c = content()
     assert(!c.contains("2023DelTest..1..2A"), "deleted record's URL is gone")
